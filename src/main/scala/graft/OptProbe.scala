@@ -89,7 +89,7 @@ object OptProbe {
           f"maxTask=${maxTaskMs.get / 1000.0}%.2f s --")
         if (verbose) println(df.queryExecution.executedPlan.toString)
       } catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           println(s"-- FAILED: ${e.getClass.getSimpleName}: " +
             s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString} --")
       }

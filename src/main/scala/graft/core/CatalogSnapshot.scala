@@ -1,0 +1,247 @@
+package graft.core
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import java.util.concurrent.ConcurrentHashMap
+
+/** Process-local, per-(store, tenant) snapshot of the persisted locator
+  * catalog (`<store>/metric_catalog`, written by
+  * [[graft.streaming.IngestStream]]) — the facade's analog of the
+  * reference's in-memory locator cache in front of its discovery index.
+  * A dashboard refresh resolves the same globs against a catalog that has
+  * not changed since the last refresh; with the snapshot, glob resolution,
+  * the O2 batch cap, per-metric default stats, family routing and browse
+  * all run driver-side with ZERO Spark jobs once a tenant is loaded.
+  *
+  * Content: one row per distinct (metric_name, family) with the max
+  * ingested unit — exactly `IngestStream.metricCatalog`'s aggregate —
+  * sorted by name then family in Spark's string order (unsigned UTF-8
+  * bytes, [[compareUtf8]]). The `storeCatalog` view (one row per name,
+  * `max(unit)`, `min(family)`) is derived per name from consecutive rows.
+  *
+  * Generation: the catalog's FENCE is the set of `src=<s>/batch_id=<n>` leaf
+  * dirs with their mtimes plus the `_complete` and `_version` files'
+  * mtimes — stat'd on EVERY request (one glob + two stats, the listing a
+  * `hasParquetData(metric_catalog)` probe already makes). Any catalog
+  * write adds a leaf dir or rewrites one (moving its mtime); compaction
+  * and rebuild add and delete leaves; rebuild also rewrites `_version`.
+  * So an append, compaction or rebuild by ANY process — through the
+  * facade's lock or not — is visible at the next request. A fence change
+  * starts a new generation whose tenants load lazily: the first request
+  * for a tenant runs one tenant-filtered Spark read. `SnapshotStore`'s
+  * staleness TTL is the backstop for a same-millisecond in-place rewrite.
+  *
+  * A store without a `_complete` catalog holding parquet data has no
+  * snapshot ([[tenant]] returns None): callers keep deriving locators
+  * from the raw tables, as `IngestStream.metricCatalog` does. */
+object CatalogSnapshot {
+
+  /** One resolved locator as discovery and the read path see it. */
+  final case class Locator(name: String, unit: String, family: String)
+
+  /** Spark's string order — unsigned UTF-8 bytes, i.e. code point order —
+    * without encoding. Java's `String.compareTo` compares UTF-16 code
+    * units, where surrogates (astral code points) sort BELOW
+    * U+E000..U+FFFF; shifting both ranges restores code point order.
+    * Exact for well-formed strings, which every string Spark hands back
+    * is (it stores UTF-8). */
+  private[graft] def compareUtf8(a: String, b: String): Int = {
+    def cp(c: Char): Int =
+      if (c < 0xD800) c else if (c >= 0xE000) c - 0x800 else c + 0x2000
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n) {
+      val x = a.charAt(i)
+      val y = b.charAt(i)
+      if (x != y) return cp(x) - cp(y)
+      i += 1
+    }
+    a.length - b.length
+  }
+
+  /** Spark's `max` over a string column: nulls ignored, UTF-8 order. */
+  private def maxUtf8(a: String, b: String): String =
+    if (a == null) b else if (b == null || compareUtf8(a, b) >= 0) a else b
+
+  /** A tenant's catalog rows, sorted by (name, family) in UTF-8 order. */
+  final class Tenant private[CatalogSnapshot] (names: Array[String],
+      families: Array[String], units: Array[String]) {
+
+    def size: Int = names.length
+
+    /** Index of the first row whose name is not below `name`. */
+    private def lowerBound(name: String): Int = {
+      var lo = 0
+      var hi = names.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (compareUtf8(names(mid), name) < 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    /** Spark's `rlike`: an unanchored `find` of the anchored regex. */
+    private def matcher(glob: String): String => Boolean = {
+      val re = java.util.regex.Pattern.compile(GlobPattern.toAnchoredRegex(glob))
+      s => re.matcher(s).find()
+    }
+
+    /** Names matching `glob`, in name order, at most `limit` of them.
+      * `family = None` is the `storeCatalog` view — one locator per name
+      * with `max(unit)` and `min(family)`; `Some(f)` keeps only the
+      * names cataloged under `f`, with that family's unit. Equals
+      * `Discovery.globSearch(storeCatalog(...))` row for row. */
+    def search(glob: String, limit: Int = Int.MaxValue,
+        family: Option[String] = None): IndexedSeq[Locator] = {
+      val hit = matcher(glob)
+      val out = IndexedSeq.newBuilder[Locator]
+      var n = 0
+      var i = 0
+      // one linear pass over the sorted names, stopping at `limit` matches;
+      // a name's rows are consecutive: group them, then match once
+      while (i < names.length && n < limit) {
+        var j = i + 1
+        while (j < names.length && names(j) == names(i)) j += 1
+        if (hit(names(i))) {
+          val loc = family match {
+            case None =>
+              Some(Locator(names(i), (i until j).map(units(_)).reduce(maxUtf8),
+                families(i)))
+            case Some(f) =>
+              (i until j).find(families(_) == f)
+                .map(k => Locator(names(i), units(k), f))
+          }
+          loc.foreach { l => out += l; n += 1 }
+        }
+        i = j
+      }
+      out.result()
+    }
+
+    /** Every family `name` is cataloged under. */
+    def familiesOf(name: String): Set[String] = {
+      val from = lowerBound(name)
+      (from until names.length).takeWhile(names(_) == name)
+        .map(families(_)).toSet
+    }
+
+    /** Next-level browse — `Discovery.metricNameBrowse`'s rows: the
+      * distinct (first baseLevel+1 tokens, is that the whole name) pairs
+      * whose token prefix matches `query`, ordered by name (then
+      * incomplete before complete). */
+    def browse(query: String): IndexedSeq[(String, Boolean)] = {
+      val level = query.count(_ == '.') + 1
+      val hit = matcher(query)
+      val seen = scala.collection.mutable.HashSet.empty[(String, Boolean)]
+      names.indices.foreach { i =>
+        if (i == 0 || names(i) != names(i - 1)) {
+          val parts = names(i).split("\\.", -1)
+          if (parts.length >= level) {
+            val prefix = parts.iterator.take(level).mkString(".")
+            if (hit(prefix)) seen += (prefix -> (parts.length == level))
+          }
+        }
+      }
+      seen.toIndexedSeq.sortWith { case ((a, x), (b, y)) =>
+        val c = compareUtf8(a, b)
+        c < 0 || (c == 0 && !x && y)
+      }
+    }
+  }
+
+  private val CatalogSchema = StructType(Seq("tenant_id", "metric_name",
+    "family", "unit").map(StructField(_, StringType)))
+
+  /** One catalog generation: the fence it was taken at and its tenants,
+    * each loaded on first use. `servable = false` marks a store whose
+    * catalog lacks coverage or data — no tenant ever loads. */
+  private final class Generation(val fence: Seq[(String, Long)],
+      val atMillis: Long, val servable: Boolean) {
+    val tenants = new ConcurrentHashMap[String, Tenant]()
+  }
+  private val generations = new ConcurrentHashMap[String, Generation]()
+
+  /** The catalog's fence: every `src=<s>/batch_id=<n>` leaf dir and the
+    * `_complete` / `_version` files, each with its mtime (absent files
+    * are simply missing from the list). */
+  private def fenceOf(fs: FileSystem, root: Path): Seq[(String, Long)] = {
+    val leaves = Option(fs.globStatus(new Path(root, "src=*/batch_id=*")))
+      .getOrElse(Array.empty).toSeq
+      .map(s => s.getPath.toString -> s.getModificationTime)
+    val marks = Seq("_complete", "_version").flatMap { f =>
+      try Some(f -> fs.getFileStatus(new Path(root, f)).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+    leaves.sorted ++ marks
+  }
+
+  /** The tenant's snapshot of `storeDir`'s catalog, or None when the
+    * store has no complete catalog. Validates the fence first, so the
+    * result reflects every catalog write committed before this call. */
+  def tenant(spark: SparkSession, storeDir: String,
+      tenantId: String): Option[Tenant] = {
+    val root0 = new Path(s"$storeDir/metric_catalog")
+    val fs = root0.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(root0)
+    val key = root.toString
+    val fence = fenceOf(fs, root)
+    val now = System.currentTimeMillis()
+    val gen = Option(generations.get(key))
+      .filter(g => g.fence == fence &&
+        now - g.atMillis < SnapshotStore.cacheTtlMs)
+      .getOrElse {
+        val g = new Generation(fence, now,
+          fence.exists(_._1 == "_complete") &&
+            SnapshotStore.hasVisibleParquet(fs, root))
+        generations.put(key, g)
+        g
+      }
+    if (!gen.servable) return None
+    Option(gen.tenants.get(tenantId)) match {
+      case Some(t) =>
+        Instrumentation.global.inc("store.catalog.cache_hits")
+        Some(t)
+      case None =>
+        // computed outside the map: a racing request may load the same
+        // tenant twice, never block other tenants behind a Spark read
+        val t = load(spark, key, tenantId)
+        Instrumentation.global.inc("store.catalog.resolutions")
+        Some(Option(gen.tenants.putIfAbsent(tenantId, t)).getOrElse(t))
+    }
+  }
+
+  /** One tenant-filtered read of the catalog (the explicit schema skips
+    * the schema-inference job), aggregated driver-side exactly as
+    * `metricCatalog` does: `max(unit)` per (name, family). */
+  private def load(spark: SparkSession, root: String,
+      tenantId: String): Tenant = {
+    val rows = spark.read.schema(CatalogSchema).parquet(root)
+      .filter(col("tenant_id") === tenantId && col("metric_name").isNotNull)
+      .select("metric_name", "family", "unit")
+      .collect()
+    // share one String per distinct family/unit value across rows
+    val pool = new java.util.HashMap[String, String]()
+    def intern(s: String): String =
+      if (s == null) null else { val p = pool.putIfAbsent(s, s); if (p == null) s else p }
+    val byKey = new java.util.HashMap[(String, String), String]()
+    rows.foreach { r =>
+      val k = (r.getString(0), intern(r.getString(1)))
+      byKey.put(k, maxUtf8(byKey.get(k), intern(r.getString(2))))
+    }
+    val keys = new Array[(String, String)](byKey.size)
+    byKey.keySet.toArray(keys)
+    java.util.Arrays.sort(keys, (a: (String, String), b: (String, String)) => {
+      // a null family sorts last, so a name's first row carries Spark's
+      // min(family), which skips nulls
+      val c = compareUtf8(a._1, b._1)
+      if (c != 0) c
+      else if (a._2 == null) (if (b._2 == null) 0 else 1)
+      else if (b._2 == null) -1
+      else compareUtf8(a._2, b._2)
+    })
+    new Tenant(keys.map(_._1), keys.map(_._2), keys.map(byKey.get))
+  }
+}

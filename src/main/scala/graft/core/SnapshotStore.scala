@@ -100,7 +100,7 @@ object SnapshotStore {
     sys.env.get("SPARK_GRAFT_SNAPSHOT_GRACE_MS").map(_.toLong)
       .getOrElse(15L * 60 * 1000)
 
-  private def cacheTtlMs: Long =
+  private[graft] def cacheTtlMs: Long =
     sys.env.get("SPARK_GRAFT_SNAPSHOT_TTL_MS").map(_.toLong)
       .getOrElse(30000L)
 
@@ -131,8 +131,10 @@ object SnapshotStore {
     Option(resolutionCounts.get(rootKey(root))).map(_.get()).getOrElse(0L)
 
   private sealed trait State
-  /** Plain (never-published) layout: ordinary discovery read. */
-  private case object Plain extends State
+  /** Plain (never-published) layout: ordinary discovery read; `days` are
+    * the `ts_day=` dirs holding data files (empty when the table is not
+    * day-partitioned). */
+  private final case class Plain(days: Set[Long]) extends State
   /** No data files at all. */
   private case object Absent extends State
   /** Winning generation dir per day (dayName → leaf dir path). */
@@ -212,6 +214,22 @@ object SnapshotStore {
   private def hasParquetFile(fs: FileSystem, dir: Path): Boolean =
     fs.listStatus(dir).exists(f =>
       f.isFile && f.getPath.getName.endsWith(".parquet"))
+
+  /** Whether `root` holds a parquet file Spark's discovery would read, up
+    * to two partition levels down. Hadoop globs MATCH dot-dirs while
+    * Spark's discovery ignores them, so a file under a hidden (`.`/`_`)
+    * component BELOW the root — a `.staging-*` leaked by a crashed or
+    * lease-rejected publish — does not count. Globs return qualified
+    * paths, so the root's own components are stripped in QUALIFIED form:
+    * a store under a `_`-prefixed ancestor still has data. */
+  private[graft] def hasVisibleParquet(fs: FileSystem, root: Path): Boolean = {
+    val rootStr = fs.makeQualified(root).toString
+    Seq("*.parquet", "*/*.parquet", "*/*/*.parquet").exists(g =>
+      Option(fs.globStatus(new Path(root, g))).exists(_.exists { st =>
+        !st.getPath.toString.stripPrefix(rootStr).split("/").exists(c =>
+          c.startsWith(".") || c.startsWith("_"))
+      }))
+  }
 
   /** Wrap any plain (pre-generation) day dirs into `gen=0` so the table
     * never mixes layouts (partition discovery cannot span depths). Loose
@@ -365,18 +383,10 @@ object SnapshotStore {
     val all = dayDirs(fs, rootPath)
     if (all.isEmpty) {
       // not day-partitioned (or empty): one ordinary discovery read,
-      // guarded against parquet-less husks. Hadoop globs MATCH dot-dirs
-      // while Spark's discovery ignores them, so a file under a hidden
-      // component (a `.staging-*` leaked by a crashed or lease-rejected
-      // publish) must not flip an otherwise-empty table to Plain — the
-      // read would fail schema inference on zero visible files
-      val rootStr = rootPath.toString
-      val anyFile = Seq("*.parquet", "*/*.parquet", "*/*/*.parquet").exists(g =>
-        Option(fs.globStatus(new Path(rootPath, g))).exists(_.exists { st =>
-          !st.getPath.toString.stripPrefix(rootStr).split("/").exists(c =>
-            c.startsWith(".") || c.startsWith("_"))
-        }))
-      return if (anyFile) Plain else Absent
+      // guarded against parquet-less husks — a hidden leaked staging dir
+      // must not flip an otherwise-empty table to Plain, or the read
+      // would fail schema inference on zero visible files
+      return if (hasVisibleParquet(fs, rootPath)) Plain(Set.empty) else Absent
     }
     val selected = days match {
       case None => all
@@ -396,7 +406,9 @@ object SnapshotStore {
         !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
     }
     if (genned.isEmpty)
-      return if (plainDays.nonEmpty) Plain else Absent
+      return if (plainDays.isEmpty) Absent
+        else Plain(plainDays.flatMap(_._1.getName.stripPrefix("ts_day=")
+          .toLongOption).toSet)
     require(plainDays.isEmpty,
       s"mixed plain/generation day layout under $rootPath — the first " +
         "snapshot publish migrates a plain table; rerun it with serving " +
@@ -415,7 +427,7 @@ object SnapshotStore {
   private def buildDf(spark: SparkSession, root: String, state: State,
       days: Option[Set[Long]]): Option[DataFrame] = state match {
     case Absent => None
-    case Plain => Some(spark.read.parquet(root))
+    case Plain(_) => Some(spark.read.parquet(root))
     case Winners(byDay) =>
       val kept = days match {
         case None => byDay
@@ -443,14 +455,34 @@ object SnapshotStore {
     * process should opt in — the Serve deployment's facade does. */
   def read(spark: SparkSession, root: String,
       days: Option[Seq[Long]] = None,
-      useCache: Boolean = false): Option[DataFrame] = {
+      useCache: Boolean = false): Option[DataFrame] =
+    readCovered(spark, root, days, useCache).map(_._1)
+
+  /** [[read]] plus the DAYS the returned frame covers, taken from the
+    * resolution's own listing — the winning generations' day dirs, or a
+    * Plain table's `ts_day=` dirs holding data files — restricted to
+    * `days` when given. A caller learns a tier's coverage without a Spark
+    * job over its partition column. */
+  def readCovered(spark: SparkSession, root: String,
+      days: Option[Seq[Long]] = None,
+      useCache: Boolean = false): Option[(DataFrame, Set[Long])] = {
     val rootPath = new Path(root)
     val fs = fsOf(spark, rootPath)
     if (!fs.exists(rootPath)) return None
     val daySet = days.map(_.toSet)
+    def covered(state: State): Set[Long] = {
+      val all = state match {
+        case Winners(byDay) =>
+          byDay.flatMap(_._1.stripPrefix("ts_day=").toLongOption).toSet
+        case Plain(ds) => ds
+        case Absent => Set.empty[Long]
+      }
+      daySet.fold(all)(all.intersect)
+    }
     if (!useCache) {
       countResolution(rootKey(root))
-      return buildDf(spark, root, resolve(fs, rootPath, daySet), None)
+      val state = resolve(fs, rootPath, daySet)
+      return buildDf(spark, root, state, None).map(_ -> covered(state))
     }
     val k = rootKey(root)
     val v = version(root)
@@ -490,8 +522,8 @@ object SnapshotStore {
         }
         Some(daySet.fold(full)(ds =>
           full.filter(org.apache.spark.sql.functions.col("ts_day")
-            .isin(ds.toSeq: _*))))
-      case other => buildDf(spark, root, other, daySet)
+            .isin(ds.toSeq: _*))) -> covered(entry.state))
+      case other => buildDf(spark, root, other, daySet).map(_ -> covered(other))
     }
   }
 }

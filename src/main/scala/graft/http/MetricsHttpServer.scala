@@ -1,7 +1,7 @@
 package graft.http
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.core.Granularity
+import graft.core.{CatalogSnapshot, Granularity}
 import graft.operators.Discovery
 import graft.query.MetricsQueryApi
 import graft.streaming.IngestStream
@@ -390,19 +390,6 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       ex
     }
 
-  /** (tenant, metric) → family, the facade's analog of the reference's
-    * rollup_type metadata cache (MetadataCache in the ingest/read path):
-    * views routing stays O(1) per request between writes instead of
-    * re-scanning the stores. Families are NOT assumed immutable — every
-    * ingest through this server clears the cache AND bumps
-    * [[storeGeneration]] (both inside [[writeLock]]); a probe only caches
-    * its result if the generation is unchanged under the lock, so a probe
-    * that read the pre-ingest store can never re-insert a stale entry
-    * after the clear. External writers feeding the same store should
-    * bounce the facade or accept eventual re-probe on its next ingest. */
-  private val familyCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Per-request uniquifier for the EVENTS route's batch ids (metrics
     * routes stay body-hashed: their overwrite is value-idempotent, events
     * are append-only annotations the reference stores once per POST).
@@ -414,11 +401,6 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
   private val eventNonce = new AtomicLong(0L)
   private val lifetimeToken: String =
     s"${ProcessHandle.current.pid}:${System.nanoTime()}"
-
-  /** Bumped (under [[writeLock]]) by every ingest that can change what a
-    * store probe would observe — the cache-coherence fence for
-    * [[routeKind]]'s probe-then-put. */
-  private val storeGeneration = new AtomicLong(0L)
 
   /** Monotone fact cache for the ingest hot path: once this facade has
     * PERSISTED a batch with valid rows, the store provably holds locator
@@ -672,8 +654,6 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
             onDirtyDaysHook(days)
           })
         if (res.errors.length.toLong < res.nTotal) storeKnownNonVirgin = true
-        familyCache.clear() // new data may give a locator its first family
-        storeGeneration.incrementAndGet()
        }
       }
       if (res.nTotal == 0) {
@@ -739,8 +719,6 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
             onDirtyDaysHook(days)
           })
         if (res.rejects.length.toLong < res.nTotal) storeKnownNonVirgin = true
-        familyCache.clear()
-        storeGeneration.incrementAndGet()
        }
       }
       if (res.nTotal == 0) {
@@ -831,16 +809,18 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     val p = MetricsQueryApi.Params(tenant, glob, from, to, points,
       resolution, select)
     val now = nowMs()
-    val kind = routeKind(tenant, names)
+    val snap = catalogSnapshot(tenant)
+    val kind = routeKind(snap, tenant, names)
     val frame = kind match {
       case "string" =>
-        MetricsQueryApi.getStringPoints(spark, storeDir, p, now)
+        MetricsQueryApi.getStringPoints(spark, storeDir, p, now,
+          snapshot = snap)
       case "basic" =>
         MetricsQueryApi.getRollupsStored(spark, storeDir, p, now,
-          dirtyDays = pendingBasic)
+          dirtyDays = pendingBasic, snapshot = snap)
       case k =>
         MetricsQueryApi.getPreaggStored(spark, storeDir, p, k, now,
-          dirtyDays = pendingPreagg)
+          dirtyDays = pendingPreagg, snapshot = snap)
     }
     sendJson(ex, 200, MetricsQueryApi.toJsonResponse(frame))
   }
@@ -942,7 +922,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
         throw new IllegalArgumentException(s"$k must be an integer, got '$v'")))
     // "agg" treats :metric as a glob; every other panel fn is per-series
     // and takes a literal name. Family routing for the glob case goes
-    // through the SAME routeKind cache/ambiguity machinery, on the
+    // through the SAME routeKind ambiguity machinery, on the
     // discovery-resolved names (so a family-mixing glob fails loud instead
     // of aggregating counters into gauges).
     val isGlob = fn == "agg"
@@ -2800,26 +2780,26 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     * plane of the series panel and the `/render` surface. `isGlob=false`
     * escapes the name to a literal locator (the per-series panel fns);
     * `isGlob=true` resolves through the discovery catalog with the O2
-    * batch cap enforced BEFORE collecting (a '*' glob on a
-    * million-locator store must 400 on the limit, not pull the catalog
-    * into the facade heap — limit+1 distinguishes at-the-cap from over).
-    * Family routing uses the routeKind cache/ambiguity machinery; each
-    * family serves its OWN per-bucket value (hardcoding "average" would
-    * read an all-NULL padding column for gauge/counter/set and silently
-    * render a populated series as an empty panel). String metrics 400. */
+    * batch cap enforced WHILE resolving (a '*' glob on a million-locator
+    * store must 400 on the limit without materializing every match —
+    * limit+1 distinguishes at-the-cap from over). Family routing uses the
+    * routeKind ambiguity machinery; each family serves its OWN per-bucket
+    * value (hardcoding "average" would read an all-NULL padding column for
+    * gauge/counter/set and silently render a populated series as an empty
+    * panel). String metrics 400. */
   private def numericPoints(tenant: String, name: String, isGlob: Boolean,
       from: String, to: String, points: Option[Int],
       resolution: Option[Granularity], now: Long): DataFrame = {
+    val snap = catalogSnapshot(tenant)
     val kind =
       if (isGlob) {
         val cap = MetricsQueryApi.MaxMetricsPerBatchQuery
-        val resolved = graft.operators.Discovery.globSearch(
-            MetricsQueryApi.storeCatalog(spark, storeDir), tenant, name)
-          .limit(cap + 1).collect().map(_.getString(0)).toSeq
+        val resolved = MetricsQueryApi.searchCatalog(spark, storeDir, snap,
+          tenant, name, cap + 1).map(_._1)
         require(resolved.length <= cap,
           s"batch query resolves > $cap metrics")
-        routeKind(tenant, resolved)
-      } else routeKind(tenant, Seq(name))
+        routeKind(snap, tenant, resolved)
+      } else routeKind(snap, tenant, Seq(name))
     require(kind != "string",
       s"series functions require a numeric metric; '$name' is a string metric")
     val (statName, valueCol) = kind match {
@@ -2833,9 +2813,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       from, to, points, resolution, Seq(statName))
     val frame = kind match {
       case "basic" => MetricsQueryApi.getRollupsStored(spark, storeDir, p, now,
-        dirtyDays = pendingBasic)
+        dirtyDays = pendingBasic, snapshot = snap)
       case k => MetricsQueryApi.getPreaggStored(spark, storeDir, p, k, now,
-        dirtyDays = pendingPreagg)
+        dirtyDays = pendingPreagg, snapshot = snap)
     }
     frame.select(col("tenant_id"), col("metric_name"),
         col("bucket_ms").cast("long").as("ts_ms"),
@@ -2880,39 +2860,23 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
   }
 
   /** The family a views read routes to — the facade's analog of the
-    * reference's rollup_type metadata cache: a locator's family resolves
-    * by store probe ONCE and is cached (families are immutable once
-    * ingested). A request mixing families fails loud — the reference
-    * serves each locator from its own column family; a single library
-    * call cannot, and silently dropping the minority family would be a
-    * lying 200. */
-  private def routeKind(tenant: String, names: Seq[String]): String = {
-    val cached = names.flatMap(n =>
-      Option(familyCache.get((tenant, n))).map(n -> _)).toMap
-    val missing = names.filterNot(cached.contains)
-    // snapshot BEFORE probing: results only cache if no ingest bumped the
-    // generation between the probe's store read and the put (checked under
-    // writeLock, where every bump happens) — a stale probe finishing after
-    // an ingest's clear must not re-insert what it observed pre-ingest
-    val genAtProbe = storeGeneration.get()
-    val probed = if (missing.isEmpty) Map.empty[String, Set[String]]
-      else probeFamilies(tenant, missing)
-    // a locator living in MORE THAN ONE store is ambiguous — serving one
-    // family's rows with a 200 would silently hide the others'
-    probed.collectFirst { case (n, fs) if fs.size > 1 =>
+    * reference's rollup_type metadata cache: families come from the
+    * store's [[graft.core.CatalogSnapshot]] (validated against the
+    * catalog's fence on every request, so an ingest by this or any other
+    * process routes correctly at the next request). A locator living in
+    * MORE THAN ONE family, or a request mixing families, fails loud — the
+    * reference serves each locator from its own column family; a single
+    * library call cannot, and silently dropping the minority family would
+    * be a lying 200. */
+  private def routeKind(snap: Option[CatalogSnapshot.Tenant], tenant: String,
+      names: Seq[String]): String = {
+    val known = probeFamilies(snap, tenant, names)
+    known.collectFirst { case (n, fs) if fs.size > 1 =>
       throw new IllegalArgumentException(
         s"metric '$n' has data in multiple families (${fs.mkString(", ")})" +
           "; resolve the ingest conflict before querying")
     }
-    val fresh = probed.collect { case (n, fs) if fs.size == 1 => n -> fs.head }
-    // only KNOWN single-family locators cache (a never-ingested name may
-    // arrive later under any family); the generation re-check closes the
-    // probe/clear race the plain clear-on-ingest protocol left open
-    if (fresh.nonEmpty) writeLock.synchronized {
-      if (storeGeneration.get() == genAtProbe)
-        fresh.foreach { case (n, f) => familyCache.put((tenant, n), f) }
-    }
-    val fams = (cached.values ++ fresh.values).toSeq.distinct
+    val fams = known.values.flatten.toSeq.distinct
     if (fams.size > 1) throw new IllegalArgumentException(
       s"metrics span families (${fams.mkString(", ")}); query them separately")
     // unknown locators ride along with the known family (they serve empty
@@ -2920,26 +2884,27 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     fams.headOption.getOrElse("basic")
   }
 
-  /** ONE batched probe for all uncached locators, against the persisted
-    * catalog dimension the ingest path maintains ([[IngestStream
-    * .metricCatalog]] — the reference's metrics_metadata CF): a metadata
-    * read of O(distinct locators) rows, never a data-table scan, returning
-    * EVERY family each name is known under — multi-membership is the
-    * caller's ambiguity signal, not silently collapsed. Stores predating
-    * the catalog fall back to probing the raw tables themselves (isin
+  /** The tenant's catalog snapshot, fence-checked once per request and
+    * passed to every catalog lookup the request makes; None for a store
+    * without a complete catalog. */
+  private def catalogSnapshot(tenant: String): Option[CatalogSnapshot.Tenant] =
+    CatalogSnapshot.tenant(spark, storeDir, tenant)
+
+  /** Every family each of `names` is known under (unknown names absent) —
+    * multi-membership is the caller's ambiguity signal, not silently
+    * collapsed. Served from the catalog snapshot; stores predating the
+    * catalog fall back to probing the raw tables themselves (isin
     * pushdown over preagg_raw / metrics_string / metrics_full — correct,
     * but three table scans at 100 TB, which is exactly why the catalog
     * exists). */
-  private def probeFamilies(tenant: String,
-      names: Seq[String]): Map[String, Set[String]] = {
-    val nameCol = col("metric_name").isin(names: _*) &&
-      col("tenant_id") === tenant
-    IngestStream.metricCatalog(spark, storeDir) match {
-      case Some(catalog) =>
-        catalog.filter(nameCol).select("metric_name", "family")
-          .collect().map(r => r.getString(0) -> r.getString(1))
-          .groupBy(_._1).map { case (n, fs) => n -> fs.map(_._2).toSet }
+  private def probeFamilies(snap: Option[CatalogSnapshot.Tenant],
+      tenant: String, names: Seq[String]): Map[String, Set[String]] =
+    snap match {
+      case Some(snap) =>
+        names.map(n => n -> snap.familiesOf(n)).filter(_._2.nonEmpty).toMap
       case None =>
+        val nameCol = col("metric_name").isin(names: _*) &&
+          col("tenant_id") === tenant
         def hits(table: String, famCol: org.apache.spark.sql.Column) =
           if (!IngestStream.hasParquetData(spark, s"$storeDir/$table")) Nil
           else spark.read.parquet(s"$storeDir/$table").filter(nameCol)
@@ -2950,19 +2915,17 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
           hits("metrics_full", lit("basic"))
         all.groupBy(_._1).map { case (n, fs) => n -> fs.map(_._2).toSet }
     }
-  }
 
   private def metricsSearch(ex: HttpExchange, tenant: String): Unit = {
     val q = queryParams(ex).get("query") match {
       case Some(v) => v
       case None => sendJson(ex, 400, errJson("query= is required")); return
     }
-    val rows = Discovery.globSearch(
-        MetricsQueryApi.storeCatalog(spark, storeDir), tenant, q)
-      .collect()
-    val body = rows.map(r =>
-      s"""{"metric": ${jStr(r.getString(0))}, "unit": ${jStr(
-        Option(r.getString(1)).getOrElse("unknown"))}}""").mkString("[", ", ", "]")
+    val rows = MetricsQueryApi.searchCatalog(spark, storeDir,
+      catalogSnapshot(tenant), tenant, q)
+    val body = rows.map { case (name, unit) =>
+      s"""{"metric": ${jStr(name)}, "unit": ${jStr(
+        Option(unit).getOrElse("unknown"))}}""" }.mkString("[", ", ", "]")
     sendJson(ex, 200, body)
   }
 
@@ -2971,11 +2934,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       case Some(v) => v
       case None => sendJson(ex, 400, errJson("query= is required")); return
     }
-    val rows = Discovery.metricNameBrowse(
-        MetricsQueryApi.storeCatalog(spark, storeDir), tenant, q)
-      .collect()
-    val body = rows.map(r =>
-      s"""{${jStr(r.getString(0))}: ${r.getBoolean(1)}}""")
+    val body = MetricsQueryApi.browseCatalog(spark, storeDir,
+        catalogSnapshot(tenant), tenant, q)
+      .map { case (name, complete) => s"""{${jStr(name)}: $complete}""" }
       .mkString("[", ", ", "]")
     sendJson(ex, 200, body)
   }
@@ -3114,9 +3075,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     * the picker). One level per call, exactly graphite-web's contract:
     * entries are the next-level nodes under the query, `leaf`/`expandable`
     * merged per node (a prefix can be BOTH a complete name and a parent).
-    * Backed by [[Discovery.metricNameBrowse]] — the same relational
-    * browse the v2.0 `metric_name/search` route serves, re-shaped to
-    * Graphite treejson. */
+    * Backed by [[MetricsQueryApi.browseCatalog]] — the same browse the
+    * v2.0 `metric_name/search` route serves, re-shaped to Graphite
+    * treejson. */
   private def metricsFind(ex: HttpExchange): Unit = {
     val q = queryParams(ex)
     val tenant = q.getOrElse("tenant",
@@ -3126,16 +3087,14 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     // row-capped like every other facade collect (limit pushed into the
     // query): a '*'-ish browse level on a million-locator store must 400
     // on the budget, not pull the level into the facade heap
-    val rows = Discovery.metricNameBrowse(
-        MetricsQueryApi.storeCatalog(spark, storeDir), tenant, query)
-      .limit(MaxSeriesPanelPoints + 1).collect()
+    val rows = MetricsQueryApi.browseCatalog(spark, storeDir,
+      catalogSnapshot(tenant), tenant, query, MaxSeriesPanelPoints + 1)
     require(rows.length <= MaxSeriesPanelPoints,
       s"browse level exceeds $MaxSeriesPanelPoints nodes — narrow the query")
     // merge the (name, is_complete) pairs: leaf = any complete,
     // expandable = any incomplete — preserving name order
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, (Boolean, Boolean)]
-    rows.foreach { r =>
-      val (name, complete) = (r.getString(0), r.getBoolean(1))
+    rows.foreach { case (name, complete) =>
       val (l, e) = merged.getOrElse(name, (false, false))
       merged(name) = (l || complete, e || !complete)
     }

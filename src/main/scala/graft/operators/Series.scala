@@ -101,8 +101,11 @@ object Series {
     // The target series is PER TENANT and the correlation join is
     // tenant-scoped (P4): pooling raw points across tenants that share a
     // target name would leak every tenant's data into every correlation.
+    // distinct target names: a duplicated target row would duplicate its
+    // bucket rows in the join below and inflate n_common
     val t = b
-      .join(broadcast(targets.select(col("metric_name").as("tgt_name"))),
+      .join(broadcast(targets.select(col("metric_name").as("tgt_name"))
+          .distinct()),
         col("metric_name") === col("tgt_name"))
       .select(col("tenant_id"), col("tgt_name"), col("bucket_ms"),
         col("bx").as("ty"))
@@ -1102,21 +1105,21 @@ object Series {
     val ser = Seq("tenant_id", "metric_name")
     val wSer = Window.partitionBy(ser.map(col): _*)
     val wv = wSer.orderBy(col("value"), col("ts_ms"))
-    val atMedianRank = (c: Column) =>
-      max(when(col("rn") === expr("(n + 1L) div 2L"), c)).over(wSer)
+    // the value at median rank `rank` (each selection names its own rank
+    // column: rn_v ranks by value, rn_d by absolute deviation)
+    val atMedianRank = (c: Column, rank: String) =>
+      max(when(col(rank) === expr("(n + 1L) div 2L"), c)).over(wSer)
     val ranked = points
       .select(ser.map(col) ++ Seq(col("ts_ms"), col("value")): _*)
-      .withColumn("rn", row_number().over(wv))
+      .withColumn("rn_v", row_number().over(wv))
       .withColumn("n", count(lit(1)).over(wSer))
     val dev = ranked
-      .withColumn("med", atMedianRank(col("value")))
+      .withColumn("med", atMedianRank(col("value"), "rn_v"))
       .withColumn("adev", abs(col("value") - col("med")))
     val wd = wSer.orderBy(col("adev"), col("ts_ms"))
     dev
-      // REPLACES the value-rank rn: atMedianRank resolves "rn" lazily, so
-      // the mad selection below ranks by adev, not by the consumed value rank
-      .withColumn("rn", row_number().over(wd))
-      .withColumn("mad", atMedianRank(col("adev")))
+      .withColumn("rn_d", row_number().over(wd))
+      .withColumn("mad", atMedianRank(col("adev"), "rn_d"))
       .withColumn("is_outlier", col("mad") > 0.0 && col("adev") > col("mad") * k)
       .select(ser.map(col) ++ Seq(col("ts_ms"), col("value"), col("med"),
         col("mad"), col("adev"), col("is_outlier")): _*)

@@ -1,7 +1,7 @@
 package graft.query
 
-import graft.core.{DateTimeParser, Granularity, GlobPattern, Tables}
-import graft.operators.Rollups
+import graft.core.{CatalogSnapshot, DateTimeParser, Granularity, GlobPattern, Tables}
+import graft.operators.{Discovery, Rollups}
 import graft.streaming.IngestStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,7 +83,7 @@ object MetricsQueryApi {
       maxBatch: Int = MaxMetricsPerBatchQuery,
       catalogOverride: Option[DataFrame] = None): DataFrame = {
     val r = resolveQuery(spark, p, nowMillis, maxBatch,
-      catalogOverride.getOrElse(Tables.catalog(spark, dir)))
+      frameResolver(catalogOverride.getOrElse(Tables.catalog(spark, dir)), p))
     if (r.g.isFull) {
       // FULL serves the RAW SAMPLES themselves, not buckets (reference:
       // RollupType.classOf → SimpleNumber at FULL, RollupType.java:73-88;
@@ -128,8 +128,37 @@ object MetricsQueryApi {
       fromMs: Long, toMs: Long, g: Granularity,
       names: DataFrame, select: Seq[String], perMetricDefaults: Boolean)
 
+  /** Glob → at most `n` cataloged (name, unit, rollup_type) rows of the
+    * query's tenant. */
+  private type Resolver = Int => Seq[(String, String, String)]
+
+  /** Resolution over a catalog frame (tenant_id, metric_name, unit,
+    * rollup_type): one filtered, limited collect. */
+  private def frameResolver(catalog: DataFrame, p: Params): Resolver = n =>
+    catalog
+      .filter(col("tenant_id") === p.tenantId &&
+        col("metric_name").rlike(GlobPattern.toAnchoredRegex(p.metricGlob)))
+      .limit(n)
+      .collect().toSeq
+      .map(r => (r.getAs[String]("metric_name"), r.getAs[String]("unit"),
+        r.getAs[String]("rollup_type")))
+
+  /** Resolution over the store's catalog snapshot when it has a complete
+    * catalog (zero Spark jobs once the tenant is loaded), else over
+    * `fallback`. `snapshot` is the one the caller already took for this
+    * request, if any; `family` narrows to one family's locators (its name
+    * is their rollup_type); `unit` replaces the cataloged unit. */
+  private def storeResolver(spark: SparkSession, storeDir: String, p: Params,
+      snapshot: Option[CatalogSnapshot.Tenant], family: Option[String] = None,
+      unit: Option[String] = None)(fallback: => DataFrame): Resolver =
+    snapshot.orElse(CatalogSnapshot.tenant(spark, storeDir, p.tenantId)) match {
+      case Some(snap) => n => snap.search(p.metricGlob, n, family)
+        .map(l => (l.name, unit.getOrElse(l.unit), l.family))
+      case None => frameResolver(fallback, p)
+    }
+
   private def resolveQuery(spark: SparkSession, p: Params, nowMillis: Long,
-      maxBatch: Int, catalog: DataFrame): ResolvedQuery = {
+      maxBatch: Int, resolve: Resolver): ResolvedQuery = {
     require(p.points.isDefined ^ p.resolution.isDefined,
       "exactly one of points= or resolution= required")
     // fail loud on unknown stat names: silently dropping a typo'd
@@ -146,20 +175,15 @@ object MetricsQueryApi {
         nowMillis = nowMillis))
 
     // resolve locators via discovery, then guard the batch width (O2).
-    // One scan: the guard caps the set at maxBatch rows, so collect once and
-    // rebuild a local broadcast side instead of re-running the
-    // catalog-derivation pipeline for count/type-lookup/join.
-    val resolved = catalog
-      .filter(col("tenant_id") === p.tenantId &&
-        col("metric_name").rlike(GlobPattern.toAnchoredRegex(p.metricGlob)))
-      .limit(maxBatch + 1)
-      .collect()
+    // The guard caps the set at maxBatch rows, so resolve once and build a
+    // local broadcast side instead of re-running the catalog-derivation
+    // pipeline for count/type-lookup/join.
+    val resolved = resolve(maxBatch + 1)
     require(resolved.length <= maxBatch,
       s"batch query resolves > $maxBatch metrics")
     import spark.implicits._
-    val names = resolved.toSeq
-      .map(r => (r.getAs[String]("tenant_id"), r.getAs[String]("metric_name"),
-        r.getAs[String]("unit"), r.getAs[String]("rollup_type")))
+    val names = resolved
+      .map { case (n, unit, rollupType) => (p.tenantId, n, unit, rollupType) }
       .toDF("tenant_id", "metric_name", "unit", "rollup_type")
 
     // select= given → one uniform stat set; absent → per-metric defaults
@@ -167,8 +191,7 @@ object MetricsQueryApi {
     val perMetricDefaults = p.select.isEmpty
     val select =
       if (!perMetricDefaults) p.select
-      else resolved.toSeq
-        .map(r => r.getAs[String]("rollup_type")).distinct
+      else resolved.map(_._3).distinct
         .flatMap(t => defaultStats.getOrElse(t, defaultStats("basic")))
         .distinct match {
           case Nil => defaultStats("basic")
@@ -239,6 +262,36 @@ object MetricsQueryApi {
           min(col("family")).as("rollup_type")))
       .getOrElse(catalogFromRaw(spark.read.parquet(s"$storeDir/metrics_full")))
 
+  /** `Discovery.globSearch` over [[storeCatalog]] — (metric_name, unit)
+    * in name order, at most `limit` rows — served from `snapshot`, the
+    * tenant's [[CatalogSnapshot]], when the store has a complete catalog
+    * (None derives it from the raw tables). */
+  def searchCatalog(spark: SparkSession, storeDir: String,
+      snapshot: Option[CatalogSnapshot.Tenant], tenant: String, glob: String,
+      limit: Int = Int.MaxValue): Seq[(String, String)] =
+    snapshot match {
+      case Some(snap) => snap.search(glob, limit).map(l => (l.name, l.unit))
+      case None => collectUpTo(Discovery.globSearch(
+          storeCatalog(spark, storeDir), tenant, glob), limit)
+        .map(r => (r.getString(0), r.getString(1)))
+    }
+
+  /** `Discovery.metricNameBrowse` over [[storeCatalog]] — (name,
+    * is_complete_name) in name order, at most `limit` rows — served from
+    * `snapshot` as [[searchCatalog]] is. */
+  def browseCatalog(spark: SparkSession, storeDir: String,
+      snapshot: Option[CatalogSnapshot.Tenant], tenant: String, query: String,
+      limit: Int = Int.MaxValue): Seq[(String, Boolean)] =
+    snapshot match {
+      case Some(snap) => snap.browse(query).take(limit)
+      case None => collectUpTo(Discovery.metricNameBrowse(
+          storeCatalog(spark, storeDir), tenant, query), limit)
+        .map(r => (r.getString(0), r.getBoolean(1)))
+    }
+
+  private def collectUpTo(df: DataFrame, limit: Int): Seq[org.apache.spark.sql.Row] =
+    (if (limit < Int.MaxValue) df.limit(limit) else df).collect().toSeq
+
   private def catalogFromRaw(raw: DataFrame): DataFrame = {
     val unitCol =
       if (raw.columns.contains("unit")) max(col("unit")) else max(lit("unknown"))
@@ -262,8 +315,9 @@ object MetricsQueryApi {
     *    Coverage is day-atomic by construction: the ingest path recomputes
     *    whole dirty days (dynamic partition overwrite, [[IngestStream
     *    .processBatch]]), so a `ts_day` present in a tier is fully rolled —
-    *    the gap test is a cheap distinct over the tier's partition column,
-    *    never a per-bucket anti-join against a full raw scan;
+    *    the gap test is the tier's day set as the snapshot resolution
+    *    listed it (no Spark job), never a per-bucket anti-join against a
+    *    full raw scan;
     *  - the tail PARTIAL bucket when `to` is not bucket-aligned: a stored
     *    bucket covers its whole window, so serving it would include points
     *    past `to`; it is recomputed from raw instead (the reference serves
@@ -294,11 +348,14 @@ object MetricsQueryApi {
       catalogOverride: Option[DataFrame] = None,
       rollupFromRaw: (DataFrame, Granularity) => DataFrame = Rollups.basicFromRaw,
       rawOverride: Option[DataFrame] = None,
-      dirtyDays: Set[Long] = Set.empty): DataFrame = {
+      dirtyDays: Set[Long] = Set.empty,
+      snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     graft.core.Instrumentation.global.inc("query.reads.basic")
     val r = resolveQuery(spark, p, nowMillis, maxBatch,
-      catalogOverride.getOrElse(rawOverride.map(catalogFromRaw)
-        .getOrElse(storeCatalog(spark, storeDir))))
+      catalogOverride.orElse(rawOverride.map(catalogFromRaw))
+        .map(frameResolver(_, p))
+        .getOrElse(storeResolver(spark, storeDir, p, snapshot)(
+          catalogFromRaw(spark.read.parquet(s"$storeDir/metrics_full")))))
     if (r.g.isFull) {
       // FULL reads the full-resolution store itself — raw samples with
       // their own timestamps (the reference's FULL read targets the
@@ -344,23 +401,19 @@ object MetricsQueryApi {
     // publish rewrites, so a foreign publish is visible at this reader's
     // NEXT request — the 30 s TTL remains only as the backstop for
     // writers that bypass SnapshotStore.publish entirely
+    // dirty (pending re-roll) days are excluded from BOTH the covered set
+    // and the served slice: they fall into missingDays below and recompute
+    // from raw — the repair that keeps deferred-rollup serving exact. The
+    // covered set comes from the resolution's own listing: no Spark job
+    val servedDays = rangeDays.filterNot(dirtyDays)
     val (coveredDays, stored) =
-      graft.core.SnapshotStore.read(spark, tierPath,
-          days = Some(rangeDays.filterNot(dirtyDays)), useCache = true) match {
+      graft.core.SnapshotStore.readCovered(spark, tierPath,
+          days = Some(servedDays), useCache = true) match {
         case None => (Set.empty[Long], None)
-        case Some(tier0) =>
-        // dirty (pending re-roll) days are excluded from BOTH the covered
-        // set and the served slice: they fall into missingDays below and
-        // recompute from raw — the repair that keeps deferred-rollup
-        // serving exact
-        val tier = tier0
-          .filter(col("ts_day").isin(rangeDays.filterNot(dirtyDays): _*))
-        // tiny collect: one long per day in range (partition-pruned scan of
-        // the partition column only)
-        val covered = tier.select("ts_day").distinct()
-          .collect().map(_.getLong(0)).toSet
-        val slice = tier
-          .filter(col("bucket_ms") >= snappedFrom &&
+        case Some((tier0, covered)) =>
+        val slice = tier0
+          .filter(col("ts_day").isin(servedDays: _*) &&
+            col("bucket_ms") >= snappedFrom &&
             col("bucket_ms") < tailStart &&
             col("tenant_id") === p.tenantId)
           .join(broadcast(nameKeys), Seq("tenant_id", "metric_name"), "left_semi")
@@ -455,7 +508,8 @@ object MetricsQueryApi {
   def getStringPoints(spark: SparkSession, storeDir: String, p: Params,
       nowMillis: Long = System.currentTimeMillis(),
       maxBatch: Int = MaxMetricsPerBatchQuery,
-      catalogOverride: Option[DataFrame] = None): DataFrame = {
+      catalogOverride: Option[DataFrame] = None,
+      snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     graft.core.Instrumentation.global.inc("query.reads.string")
     val path = s"$storeDir/metrics_string"
     if (!IngestStream.hasParquetData(spark, path)) {
@@ -467,17 +521,14 @@ object MetricsQueryApi {
           "is_bool")
     }
     val store = spark.read.parquet(path)
-    // persisted catalog first (metadata read), table-derivation fallback —
-    // same discipline as storeCatalog/preaggStoreCatalog
-    val catalog = catalogOverride.getOrElse(
-      graft.streaming.IngestStream.metricCatalog(spark, storeDir)
-        .map(_.filter(col("family") === "string")
-          .select(col("tenant_id"), col("metric_name"), col("unit"))
-          .withColumn("rollup_type", lit("string")))
-        .getOrElse(store.groupBy(col("tenant_id"), col("metric_name"))
-          .agg(max(col("unit")).as("unit"))
-          .withColumn("rollup_type", lit("string"))))
-    val r = resolveQuery(spark, p, nowMillis, maxBatch, catalog)
+    // persisted catalog first (the snapshot), table-derivation fallback —
+    // same discipline as the stored numeric reads
+    val r = resolveQuery(spark, p, nowMillis, maxBatch,
+      catalogOverride.map(frameResolver(_, p)).getOrElse(
+        storeResolver(spark, storeDir, p, snapshot, Some("string"))(
+          store.groupBy(col("tenant_id"), col("metric_name"))
+            .agg(max(col("unit")).as("unit"))
+            .withColumn("rollup_type", lit("string")))))
     store
       .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs &&
         col("tenant_id") === p.tenantId)
@@ -488,26 +539,6 @@ object MetricsQueryApi {
         col("ts_ms").as("bucket_ms"), col("value_str"), col("is_bool"))
       .orderBy("metric_name", "bucket_ms")
   }
-
-  /** Locator catalog for one pre-aggregated family: served from the
-    * PERSISTED catalog dimension when the store carries a complete one
-    * ([[graft.streaming.IngestStream.metricCatalog]] records every kind as
-    * its family — an O(locators) metadata read), falling back to deriving
-    * from the parsed-flush store. The fallback reads EMPTY once retention
-    * prunes `preagg_raw` (finest-tier TTL) — the coarser kind tiers can
-    * outlive it by years, and their locators must stay resolvable. Statsd
-    * payloads carry no unit; rollup_type is the family itself (the
-    * reference's metrics_metadata records the same discriminator). */
-  def preaggStoreCatalog(spark: SparkSession, storeDir: String,
-      kind: String): DataFrame =
-    graft.streaming.IngestStream.metricCatalog(spark, storeDir)
-      .map(_.filter(col("family") === kind)
-        .select("tenant_id", "metric_name"))
-      .getOrElse(preaggRawOrEmpty(spark, storeDir)
-        .filter(col("kind") === kind)
-        .select("tenant_id", "metric_name").distinct())
-      .withColumn("unit", lit("unknown"))
-      .withColumn("rollup_type", lit(kind))
 
   // single source of truth with the cascade's dispatch — see
   // Preaggregated.merges (gap repair must agree with what the cascade
@@ -575,12 +606,22 @@ object MetricsQueryApi {
       nowMillis: Long = System.currentTimeMillis(),
       maxBatch: Int = MaxMetricsPerBatchQuery,
       catalogOverride: Option[DataFrame] = None,
-      dirtyDays: Set[Long] = Set.empty): DataFrame = {
+      dirtyDays: Set[Long] = Set.empty,
+      snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     require(preaggMerges.contains(kind),
       s"unknown pre-aggregated kind '$kind' (one of ${preaggMerges.keys.mkString(", ")})")
     graft.core.Instrumentation.global.inc(s"query.reads.$kind")
     val r = resolveQuery(spark, p, nowMillis, maxBatch,
-      catalogOverride.getOrElse(preaggStoreCatalog(spark, storeDir, kind)))
+      catalogOverride.map(frameResolver(_, p)).getOrElse(
+        // pre-catalog stores derive the kind's locators from the parsed
+        // flushes (statsd payloads carry no unit); that reads EMPTY once
+        // retention prunes preagg_raw, while the coarser kind tiers can
+        // outlive it by years — why the persisted catalog comes first
+        storeResolver(spark, storeDir, p, snapshot, Some(kind), Some("unknown"))(
+          preaggRawOrEmpty(spark, storeDir).filter(col("kind") === kind)
+            .select("tenant_id", "metric_name").distinct()
+            .withColumn("unit", lit("unknown"))
+            .withColumn("rollup_type", lit(kind)))))
     if (r.g.isFull) {
       // FULL serves each ingested flush as its own point (the reference's
       // RollupType.classOf returns the preagg rollup class itself at FULL —
@@ -611,19 +652,17 @@ object MetricsQueryApi {
     val tierPath = s"$storeDir/preagg_${kind}_${gEff.name}"
     // snapshot-resolved read — the getRollupsStored reader-isolation,
     // range-pruning and memoization notes all apply
+    // dirty (pending re-roll) days recompute from preagg_raw — see the
+    // getRollupsStored deferred-rollup and coverage notes
+    val servedDays = rangeDays.filterNot(dirtyDays)
     val (coveredDays, stored) =
-      graft.core.SnapshotStore.read(spark, tierPath,
-          days = Some(rangeDays.filterNot(dirtyDays)), useCache = true) match {
+      graft.core.SnapshotStore.readCovered(spark, tierPath,
+          days = Some(servedDays), useCache = true) match {
         case None => (Set.empty[Long], None)
-        case Some(tier0) =>
-        // dirty (pending re-roll) days recompute from preagg_raw — see
-        // the getRollupsStored deferred-rollup note
-        val tier = tier0
-          .filter(col("ts_day").isin(rangeDays.filterNot(dirtyDays): _*))
-        val covered = tier.select("ts_day").distinct()
-          .collect().map(_.getLong(0)).toSet
-        val slice = tier
-          .filter(col("bucket_ms") >= snappedFrom &&
+        case Some((tier0, covered)) =>
+        val slice = tier0
+          .filter(col("ts_day").isin(servedDays: _*) &&
+            col("bucket_ms") >= snappedFrom &&
             col("bucket_ms") < tailStart &&
             col("tenant_id") === p.tenantId)
           .join(broadcast(nameKeys), Seq("tenant_id", "metric_name"), "left_semi")

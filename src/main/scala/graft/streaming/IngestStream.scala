@@ -562,23 +562,14 @@ object IngestStream {
   /** Replicates [[writeCatalog]]'s distinct-locator aggregate
     * (groupBy(tenant, name, family).agg(max(unit))) over driver-held
     * (tenant, name, unit) triples — catalog content is bit-identical to
-    * the relational path for ANY unit string: Spark's string max orders
+    * the relational path for any unit string the triples carry (they come
+    * out of Spark, so they are well-formed): Spark's string max orders
     * by unsigned UTF-8 bytes (code-point order), while Java's String
     * ordering compares UTF-16 code units (surrogates sort BELOW
-    * U+E000..U+FFFF), so the winner is picked by explicit UTF-8 byte
-    * comparison, never String.max. */
-  private def utf8Max(a: String, b: String): String = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return if (c > 0) a else b
-      i += 1
-    }
-    if (x.length >= y.length) a else b
-  }
+    * U+E000..U+FFFF), so the winner is picked in code point order
+    * ([[graft.core.CatalogSnapshot.compareUtf8]]), never String.max. */
+  private def utf8Max(a: String, b: String): String =
+    if (graft.core.CatalogSnapshot.compareUtf8(a, b) >= 0) a else b
 
   private def dedupLocators(family: String,
       locs: Iterable[(String, String, String)])
@@ -1326,19 +1317,12 @@ object IngestStream {
   private[graft] def hasParquetData(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pStr = p.toString
-    // Hadoop globs MATCH dot-dirs while Spark's discovery ignores them: a
-    // file under a hidden component (a crashed POST's leaked `.staging-*`)
-    // must not make an otherwise-empty table read as "has data" — the
-    // guarded read would fail schema inference on zero visible files, and
-    // the virgin probe would skip the catalog coverage marker (the
-    // SnapshotStore.resolve husk-guard rule, applied here too)
-    fs.exists(p) && Seq("*.parquet", "*/*.parquet", "*/*/*.parquet").exists(g =>
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(p, g)))
-        .exists(_.exists { st =>
-          !st.getPath.toString.stripPrefix(pStr).split("/").exists(c =>
-            c.startsWith(".") || c.startsWith("_"))
-        }))
+    // a file under a hidden component (a crashed POST's leaked
+    // `.staging-*`) must not make an otherwise-empty table read as "has
+    // data" — the guarded read would fail schema inference on zero
+    // visible files, and the virgin probe would skip the catalog coverage
+    // marker (the SnapshotStore.resolve husk-guard rule, shared)
+    fs.exists(p) && graft.core.SnapshotStore.hasVisibleParquet(fs, p)
   }
 
   /** Kinds actually present in a parsed statsd frame — real statsd traffic

@@ -1861,4 +1861,137 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
       assert(get(s"$base/v1.0/acme/whatever").statusCode() === 404)
     } finally srv.stop()
   }
+
+  /** The Spark jobs `body` launches, as their stage-name traces, counted
+    * by a SparkListener (events drain asynchronously, hence the settle
+    * sleeps — SteadyJobCountSpec's idiom). */
+  private def jobsDuring(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        sites.add(js.stageInfos.map(_.name.takeWhile(_ != '\n').take(60))
+          .mkString("[", ";", "]"))
+        ()
+      }
+    }
+    Thread.sleep(300)
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
+
+  /** One counter's value as `/metrics` exposes it. */
+  private def counter(base: String, name: String): Long = {
+    val m = get(s"$base/metrics")
+    assert(m.statusCode() === 200)
+    ("\"" + java.util.regex.Pattern.quote(name) + "\": (\\d+)").r
+      .findFirstMatchIn(m.body()).map(_.group(1).toLong).getOrElse(0L)
+  }
+
+  private def ingestBody(points: Seq[(String, Long)]): String =
+    points.map { case (n, ts) =>
+      s"""{"metricName": "$n", "metricValue": 1.5, "collectionTime": $ts,
+         | "unit": "req"}""".stripMargin
+    }.mkString("[", ", ", "]")
+
+  test("warm catalog reads launch no catalog or coverage job: FULL glob " +
+    "render, points= views and /metrics/find job counts are pinned") {
+    val day = 86400000L
+    val srv = new MetricsHttpServer(spark,
+      java.nio.file.Files.createTempDirectory("graft_http").toString,
+      nowMs = () => now, maxAgeMs = 3 * day)
+    srv.start()
+    val base = s"http://127.0.0.1:${srv.boundPort}"
+    try {
+      // two days of points: the views read covers both from the 5m tier
+      val pts = for (n <- Seq("app.a.x", "app.a.y", "app.b.z");
+                     ts <- Seq(now - day - 3600000L, now - 600000L)) yield (n, ts)
+      assert(post(s"$base/v2.0/acme/ingest", ingestBody(pts))
+        .statusCode() === 200)
+      val range = s"from=${(now - 2 * day) / 1000}"
+      val render = s"$base/render?tenant=acme&target=app.a.*&$range" +
+        s"&until=${now / 1000}"
+      val views = s"$base/v2.0/acme/views/app.a.x?$range&to=${now / 1000}" +
+        "&points=100"
+      val find = s"$base/metrics/find?tenant=acme&query=app.*"
+      // warm-up: loads the tenant's catalog snapshot and the tier memos
+      Seq(render, views, find).foreach(u =>
+        assert(get(u).statusCode() === 200, u))
+      val loads0 = counter(base, "store.catalog.resolutions")
+      val hits0 = counter(base, "store.catalog.cache_hits")
+      var body = ""
+      val renderJobs = jobsDuring { body = get(render).body() }
+      assert(body.contains(""""target": "app.a.x"""") &&
+        body.contains(""""target": "app.a.y"""") && !body.contains("app.b"),
+        body)
+      val viewsJobs = jobsDuring { body = get(views).body() }
+      assert(body.contains(""""metric": "app.a.x""""), body)
+      val findJobs = jobsDuring { body = get(find).body() }
+      assert(body.contains(""""id": "app.a"""") &&
+        body.contains(""""id": "app.b""""), body)
+      info(s"warm jobs: render ${renderJobs.mkString(" | ")}; views " +
+        s"${viewsJobs.mkString(" | ")}; find ${findJobs.mkString(" | ")}")
+      // every job left is data plane: FULL render = the raw table's
+      // schema inference, the names broadcast and the collect; points=
+      // views = the raw schema inference for the tail-bucket repair, the
+      // tier and raw scans' broadcasts and the collect; find = none. The
+      // catalog resolution and the tier's day coverage run no job
+      assert((renderJobs.size, viewsJobs.size, findJobs.size) === ((3, 7, 0)),
+        s"render: $renderJobs; views: $viewsJobs; find: $findJobs")
+      // no warm request reloaded the catalog; each one took the snapshot
+      // exactly once (one fence check per request, shared by its lookups)
+      assert(counter(base, "store.catalog.resolutions") === loads0)
+      assert(counter(base, "store.catalog.cache_hits") - hits0 === 3)
+    } finally srv.stop()
+  }
+
+  test("catalog snapshot freshness: a facade POST, and a foreign " +
+    "processBatch, compactCatalog and rebuildCatalog are each visible at " +
+    "the next request") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val (srv, base, store) = startServer()
+    try {
+      val t0 = now - 600000L
+      val find = s"$base/metrics/find?tenant=acme&query=app.*"
+      assert(post(s"$base/v2.0/acme/ingest",
+        ingestBody(Seq("app.a.x" -> t0))).statusCode() === 200)
+      assert(get(find).body().contains(""""id": "app.a""""))
+      // a facade POST adding a locator: the next glob read resolves it
+      assert(post(s"$base/v2.0/acme/ingest",
+        ingestBody(Seq("app.c.new" -> t0))).statusCode() === 200)
+      val r = get(s"$base/render?tenant=acme&target=app.c.*" +
+        s"&from=${t0 / 1000 - 10}&until=${now / 1000}")
+      assert(r.body().contains(""""target": "app.c.new""""), r.body())
+      // a foreign writer (not through the facade's lock)
+      val batch = Seq(("acme", "app.d.foreign", t0, 2.0)).toDF(
+          "tenant_id", "metric_name", "ts_ms", "value")
+        .withColumn("ttl_seconds", lit(null).cast("int"))
+        .withColumn("unit", lit("req"))
+      graft.streaming.IngestStream.processBatch(
+        graft.streaming.IngestStream.withValidity(batch, 0L, Long.MaxValue),
+        store, batchId = 777L)
+      assert(get(find).body().contains(""""id": "app.d""""))
+      // a foreign compaction: same view, served from a reloaded snapshot
+      val before = get(find).body()
+      val loads = counter(base, "store.catalog.resolutions")
+      assert(graft.streaming.IngestStream.compactCatalog(spark, store,
+        assumeQuiesced = true).nonEmpty)
+      assert(get(find).body() === before)
+      assert(counter(base, "store.catalog.resolutions") === loads + 1)
+      // a foreign catalog-only (stale) entry shows up, and a foreign
+      // rebuild, which derives from the data tables, drops it
+      Seq(("acme", "app.e.ghost", "basic", "req"))
+        .toDF("tenant_id", "metric_name", "family", "unit").coalesce(1)
+        .write.parquet(s"$store/metric_catalog/src=numeric/batch_id=999")
+      assert(get(find).body().contains(""""id": "app.e""""))
+      graft.streaming.IngestStream.rebuildCatalog(spark, store)
+      val after = get(find).body()
+      assert(!after.contains("app.e") && after.contains(""""id": "app.d""""),
+        after)
+    } finally srv.stop()
+  }
 }

@@ -65,6 +65,25 @@ class CatalogSpec extends AnyFunSuite with SparkSuite {
     assert(IngestStream.hasParquetData(spark, s"$store/metrics_full"))
   }
 
+  test("a store under a `_`-prefixed ancestor, named by an unqualified " +
+    "path, is not empty: its reads and its catalog serve") {
+    val parent = java.nio.file.Files.createTempDirectory("_graft_hidden")
+    val store = parent.resolve("store").toString
+    assert(!store.contains(":") && parent.getFileName.toString.startsWith("_"))
+    ingestNumeric(store, 0L, "app.req", day0 + 60000L)
+    assert(IngestStream.hasParquetData(spark, s"$store/metrics_full"))
+    assert(graft.core.SnapshotStore.read(spark, s"$store/metrics_full")
+      .map(_.count()) === Some(1L))
+    assert(catalogRows(store) === Seq(("app.req", "basic", "req")))
+    val full = graft.query.MetricsQueryApi.getRollupsStored(spark, store,
+      graft.query.MetricsQueryApi.Params("t1", "app.*",
+        s"${day0 / 1000}", s"${(day0 + 3600000L) / 1000}",
+        resolution = Some(graft.core.Granularity.FULL)),
+      nowMillis = day0 + 3600000L)
+    assert(full.collect().map(_.getAs[String]("metric_name")).toSeq ===
+      Seq("app.req"))
+  }
+
   test("cross-process memo fence: a foreign rebuild that bumped " +
     "metric_catalog/_version invalidates THIS process's seen-locator " +
     "memo — a re-ingested dropped locator re-writes its catalog row " +

@@ -21,19 +21,17 @@ object IngestBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def tmp() = java.nio.file.Files.createTempDirectory("graft_ingest_bench").toString
-    val batch = graft.streaming.IngestStream.withValidity(
-      graft.core.Tables.metrics(spark, sfDir)
+    def points(s: SparkSession) = graft.streaming.IngestStream.withValidity(
+      graft.core.Tables.metrics(s, sfDir)
         .withColumn("ttl_seconds", lit(86400)).withColumn("unit", lit("ms")),
       0L, Long.MaxValue)
+    val batch = points(spark)
     // numerator = points actually persisted (invalid rows are filtered
     // before the measured write)
     val n = batch.filter(col("valid")).count()
-    // warm the write/codegen path against a throwaway store — BOTH plan
-    // shapes (classic and fused-observe), so neither timed arm pays cold
-    // codegen/planning for its own shape
+    // warm the write/codegen path against a throwaway store, so the timed
+    // arms don't pay cold codegen/planning
     graft.streaming.IngestStream.processBatch(batch, tmp(), batchId = 0L)
-    graft.streaming.IngestStream.processBatch(batch, tmp(), batchId = 0L,
-      fuseObserve = true)
     // ingest-only (validate + day-partitioned raw write, the production
     // write path) — the surface the reference's 15.4k/s HTTP+Cassandra
     // number covers (rollup is background there). Fresh store so the
@@ -58,10 +56,16 @@ object IngestBench {
       .groupBy((col("ts_ms") - pmod(col("ts_ms"), lit(dayMs))).as("d"))
       .count().orderBy(desc("count")).head()
     val (steadyDay, steadyN) = (busiestDay.getLong(0), busiestDay.getLong(1))
-    val daySlice = batch.filter(col("valid") &&
+    // the micro-batch is request-sized, so it plans on a request-sized
+    // session (AQE off, one shuffle partition) — the facade's ingest floor
+    val daySlice = points(graft.streaming.IngestStream.newIngestSession(spark))
+      .filter(col("valid") &&
         col("ts_ms") >= steadyDay && col("ts_ms") < steadyDay + dayMs)
       .persist()
     daySlice.count() // materialize outside the timed window
+    // warm the steady shape's plans on the ingest session (its AQE-off
+    // plans share no generated code with the bulk arms above)
+    graft.streaming.IngestStream.processBatch(daySlice, tmp(), batchId = 1L)
     // SPARK_GRAFT_BENCH_DEBUG=1 → per-job timeline of the steady arm on
     // stderr (job count is the steady-state latency lever; this shows
     // where the milliseconds sit when tuning it)
@@ -86,13 +90,12 @@ object IngestBench {
       spark.sparkContext.addSparkListener(l); l
     }
     val t1b = System.nanoTime()
-    // fuseObserve: the request-sized micro-batch contract — accounting +
-    // catalog locators ride the raw write as observed metrics; the 5m
-    // tier re-roll runs as its own second action (the measured 2-action
-    // steady-state floor, docs/SCALE.md — concurrent tier staging was
-    // measured slower and dropped)
+    // accounting + catalog locators ride the raw write as observed
+    // metrics; the 5m tier re-roll runs as its own second action (the
+    // measured 2-action steady-state floor, docs/SCALE.md — concurrent
+    // tier staging was measured slower and dropped)
     graft.streaming.IngestStream.processBatch(daySlice, steadyStore,
-      batchId = 1L, fuseObserve = true)
+      batchId = 1L)
     val steadySecs = (System.nanoTime() - t1b) / 1e9
     dbgListener.foreach(spark.sparkContext.removeSparkListener)
     daySlice.unpersist()
@@ -193,7 +196,7 @@ object IngestBench {
     // its own measured arm: the same corpus points POSTed as gauge
     // payloads (12.5k points per request) to a deferred facade on a
     // fresh store; each clean POST is one Spark job
-    // (processAggregatedBatchFused).
+    // (processAggregatedBatch).
     val gaugeChunks = rows.grouped(12500).map { chunk =>
       val ts = chunk.head.getLong(2)
       chunk.map(r =>

@@ -86,7 +86,7 @@ object Maintain {
     val droppedErr =
       Retention.enforceErrorSinks(spark, storeDir, errorSinkNowMillis)
 
-    // crashed fused-ingest attempts leak hidden .staging-* dirs a same-id
+    // crashed ingest attempts leak hidden .staging-* dirs a same-id
     // retry would reclaim; sweep the ones no retry ever came for (wall
     // clock, same reasoning as the error-sink sweep)
     rawTables.foreach(t =>

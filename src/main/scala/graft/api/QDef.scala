@@ -21,6 +21,4 @@ final case class QDef(
 object QDef {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QDef =
     QDef(name, fn, Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QDef =
-    QDef(name, fn, None)
 }

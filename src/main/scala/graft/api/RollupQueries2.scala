@@ -426,7 +426,7 @@ object RollupQueries2 {
     * one third numeric, one third strings (`lvl_N`), the rest booleans —
     * pushed through the real typed parse
     * ([[graft.streaming.IngestStream.parseJsonTyped]] /
-    * `processTypedBatch`), which must route numerics into the rollup
+    * `processTypedBatchFused`), which must route numerics into the rollup
     * pipeline and ONLY the string/boolean rows into `metrics_string`; the
     * facade ([[graft.query.MetricsQueryApi.getStringPoints]]) then serves
     * them raw. The oracle restates the classification straight off the
@@ -470,7 +470,7 @@ object RollupQueries2 {
           .unionByName(jsonLines(
             m.filter(col("m") % 3 =!= 0 && col("m") % 3 =!= 1),
             col("m") % 2 === 0))
-        graft.streaming.IngestStream.processTypedBatch(
+        graft.streaming.IngestStream.processTypedBatchFused(
           graft.streaming.IngestStream.parseJsonTyped(lines), buildDir)
       }
       graft.query.MetricsQueryApi.getStringPoints(s, store,

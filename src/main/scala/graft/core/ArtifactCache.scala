@@ -53,7 +53,7 @@ object ArtifactCache {
         walk(root)
         newest
       }
-    } catch { case _: Throwable => 0L }
+    } catch { case scala.util.control.NonFatal(_) => 0L }
   }
 
   private def token(sourceFile: String): String = {

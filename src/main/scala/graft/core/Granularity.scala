@@ -25,13 +25,6 @@ sealed abstract class Granularity(
     * bucket start (reference: Granularity.java:130-133 snapMillis). */
   def snap(ts: Long): Long = if (isFull) ts else ts - math.floorMod(ts, millis)
 
-  /** Window-duration string for Spark's `window(ts, d)` (rollup tiers
-    * only — FULL has no window width). */
-  def windowDuration: String = {
-    require(!isFull, "FULL has no window duration")
-    s"${millis / 60000} minutes"
-  }
-
   def retentionMillis: Long = retentionDays * 86400000L
 
   def coarser: Option[Granularity] = {
@@ -64,9 +57,6 @@ object Granularity {
   val rollupTiers: Seq[Granularity] = all.tail
 
   val LAST: Granularity = MIN_1440
-
-  def byName(n: String): Granularity =
-    all.find(_.name == n).getOrElse(throw new IllegalArgumentException(s"no granularity $n"))
 
   /** Default interval assumed for FULL-resolution data when estimating point
     * counts (reference: Granularity.java GET_BY_POINTS_ASSUME_INTERVAL,

@@ -86,12 +86,15 @@ object Instrumentation {
     /** Fire-and-forget: a throwing listener must not fail the ingest that
       * emitted the event (the reference's emitter executes handlers on a
       * separate thread pool for the same isolation; here emission is
-      * synchronous but exception-isolated). */
+      * synchronous but exception-isolated). Fatal errors (VM errors,
+      * linkage errors, interrupts) propagate. */
     def emitRollup(e: RollupEvent): Unit = {
       inc(s"rollup.events.${e.family}.${e.granularity.name}")
       listeners.forEach { l =>
         try l(e)
-        catch { case _: Throwable => inc("rollup.listener.errors") }
+        catch {
+          case scala.util.control.NonFatal(_) => inc("rollup.listener.errors")
+        }
       }
     }
 

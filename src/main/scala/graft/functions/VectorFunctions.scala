@@ -13,8 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * dominates O(n²) similarity joins. */
 object VectorFunctions {
 
-  def toDoubleArr(v: Column): Column = transform(v, _.cast("double"))
-
   /** Left-to-right dot product in double precision (native codegen). */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(

@@ -20,7 +20,7 @@ import java.util.concurrent.atomic.AtomicLong
   * route table `HttpMetricDataQueryServer.java:70-86`) re-expressed as a
   * thin JDK `HttpServer` in front of the LIBRARY API. Deliberately a
   * facade: every data operation is the same call the gate queries prove —
-  * [[IngestStream.parseJsonTyped]]/[[IngestStream.processTypedBatch]] for
+  * [[IngestStream.parseJsonTyped]]/[[IngestStream.processTypedBatchFused]] for
   * writes, [[MetricsQueryApi]] stored reads (kind-routed exactly like the
   * reference's rollup_type dispatch, `MetricsRWDelegator.java:79-113`),
   * [[Discovery]] for search — so HTTP adds routing, per-record error
@@ -194,20 +194,18 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
   /** Dedicated request-sized ingest session (same SparkContext, own
     * SQLConf, AQE off + 1 shuffle partition pinned for life —
     * [[IngestStream.newIngestSession]]): every ingest body parses and
-    * every fused write plans HERE, so concurrent reads and the deferred
-    * drain — which use the shared `spark` — always plan with the session
-    * defaults. Before this, the fused paths set/restored the confs on the
-    * shared session, silently collapsing any read planned during an
-    * in-flight POST to one reducer with no AQE. */
+    * every ingest write plans HERE, so concurrent reads — which use the
+    * shared `spark` — always plan with the session defaults. The writers
+    * themselves set no conf. */
   private val ingestSpark = IngestStream.newIngestSession(spark)
 
   /** Test seam: invoked INSIDE [[writeLock]] while an ingest POST is in
-    * flight, before its fused write — IsolatedIngestSessionSpec plans a
+    * flight, before its write — IsolatedIngestSessionSpec plans a
     * concurrent-read-shaped query on the shared session here and asserts
     * it sees the session defaults (AQE on, default shuffle partitions). */
   private[graft] var midIngestProbe: () => Unit = () => ()
 
-  /** Test seam: fired inside the fused paths' `onDirtyDays` callback
+  /** Test seam: fired inside the writers' `onDirtyDays` callback
     * AFTER the durable marker and the in-memory pend, i.e. strictly
     * BEFORE the batch's commit rename — DeferredRollupSpec asserts the
     * pend-before-visibility ordering through it. */
@@ -404,7 +402,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
 
   /** Monotone fact cache for the ingest hot path: once this facade has
     * PERSISTED a batch with valid rows, the store provably holds locator
-    * data, so later requests skip processTypedBatch's ~30-table virgin
+    * data, so later requests skip the writer's ~30-table virgin
     * glob probe (a driver-metadata cost paid per synchronous POST).
     * Never reset — "has data" cannot become false while serving (TTL
     * drops whole aged days, never the day just written). Set only under
@@ -591,7 +589,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     val body = readBody(ex)
     val lines =
       try {
-        // parsed on the DEDICATED ingest session: the whole fused write
+        // parsed on the DEDICATED ingest session: the whole write
         // (and the sync-mode re-roll) plans on pinned request-sized confs
         // without ever touching the readers' session
         import ingestSpark.implicits._
@@ -628,12 +626,12 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       // (processTypedBatchFused); the durable dirty-day markers land via
       // the onDirtyDays callback BEFORE the batch becomes visible, and
       // always before the 200
-      var res: IngestStream.FusedIngestResult = null
+      var res: IngestStream.IngestResult = null
       writeLock.synchronized {
        graft.core.WriterLease.withLease(writerLease) {
         midIngestProbe()
-        // a failed batch needs no compensation here: inside the fused
-        // path the durable marker write is ordered BEFORE the data
+        // a failed batch needs no compensation here: inside the
+        // writer the durable marker write is ordered BEFORE the data
         // commit, so a crash/throw leaves at worst a marker that
         // over-approximates — the next drain/restart reconciles
         res = IngestStream.processTypedBatchFused(parsed, storeDir,
@@ -687,8 +685,11 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       case Some(ls) if ls.nonEmpty => ls
       case _ => sendJson(ex, 400, errJson("Cannot parse content")); return
     }
+    // one partition per request, whatever the payload count: the writer
+    // follows its input's partitioning, and a multi-payload body would
+    // otherwise scatter into one task and one file per payload
     val parsed = graft.operators.Preaggregated
-      .fromAggregatedJson(lines.toDF("value"))
+      .fromAggregatedJson(lines.toDF("value").coalesce(1))
       // the single-tenant route scopes every record to the path tenant
       .withColumn("tenant_id",
         if (multi) coalesce(col("tenant_id"), lit(tenant)) else lit(tenant))
@@ -697,15 +698,15 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       val now = nowMs()
       val (lo, hi) = IngestStream.batchBounds(0L, Long.MaxValue,
         Some(maxAgeMs), Some(maxFutureMs), now)
-      // ONE Spark job per clean statsd POST — the typed route's fused
-      // discipline (processAggregatedBatchFused): accounting + rejects +
+      // ONE Spark job per clean statsd POST — the typed route's
+      // discipline (processAggregatedBatch): accounting + rejects +
       // dirty days + per-kind catalog locators ride the staged
       // preagg_raw write; durable markers land before visibility
-      var res: IngestStream.FusedPreaggResult = null
+      var res: IngestStream.PreaggResult = null
       writeLock.synchronized {
        graft.core.WriterLease.withLease(writerLease) {
         midIngestProbe()
-        res = IngestStream.processAggregatedBatchFused(parsed, storeDir,
+        res = IngestStream.processAggregatedBatch(parsed, storeDir,
           requestBatchId(tenant, "aggregated", body), cascade = true, lo, hi,
           rollup = !deferRollups,
           virginHint = if (storeKnownNonVirgin) Some(false) else None,
@@ -758,7 +759,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     val validated = IngestStream.withEventValidity(parsed, lo, hi)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE Spark job (the other routes' fused discipline): the validity
+      // ONE Spark job (the other routes' discipline): the validity
       // counts ride the staged events write; any invalid event discards
       // the hidden staging — the all-or-nothing 400 contract unchanged
       var counts: (Long, Long) = null

@@ -24,12 +24,6 @@ object Dedup {
     docs.groupBy(key.as("dedup_key"))
       .agg(min(col("doc_id")).as("keeper_doc_id"), count(lit(1)).as("n_copies"))
 
-  /** Drop-duplicates form: keep the minimum doc_id per key. */
-  def dedupKeepFirst(docs: DataFrame, key: Column): DataFrame =
-    docs.withColumn("dedup_key", key)
-      .groupBy(col("dedup_key"))
-      .agg(min(col("doc_id")).as("doc_id"))
-
   /** SPAN-level exact dedup, the C4 policy at word-tile granularity:
     * "discard all but one of any [span] occurring more than once in the
     * data set" (Raffel et al., JMLR 2020 §2.2 — C4 uses three-sentence

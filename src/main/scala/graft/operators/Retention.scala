@@ -31,8 +31,9 @@ object Retention {
     * the basic ladder plus the per-kind pre-aggregated ladders (the
     * reference applies the same per-gran TTLs to its preaggregated column
     * families, CassandraModel.java:61-72). `preagg_raw` — the parsed-flush
-    * store that [[graft.streaming.IngestStream.processAggregatedBatch]]
-    * recomputes tier 1 from — ages with the finest stored tier's TTL: once
+    * store the statsd writer ([[graft.streaming.IngestStream
+    * .processAggregatedBatch]]) commits each batch into and re-rolls tier 1
+    * from — ages with the finest stored tier's TTL: once
     * a day can no longer appear in any 5m tier, its raw flushes are dead
     * weight (without this it grows without bound while everything derived
     * from it ages out). */
@@ -212,7 +213,7 @@ object Retention {
     * strays are left untouched). */
   /** Delete crashed ingest attempts' hidden `.staging-*` dirs under a
     * batch-dir table once older than `graceMs` (default 24 h by dir
-    * mtime against wall time). The fused ingest paths commit a staged
+    * mtime against wall time). The ingest writers commit a staged
     * write by one rename ([[graft.streaming.IngestStream
     * .processTypedBatchFused]]) and a retried batch id reclaims its own
     * leak; this sweeps the leaks whose request never retried. Invisible

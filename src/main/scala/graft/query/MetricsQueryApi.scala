@@ -312,9 +312,10 @@ object MetricsQueryApi {
     * tier the ingest cascade maintains, touching `metrics_full` only for:
     *
     *  - days ABSENT from the tier (never rolled, or deliberately dropped).
-    *    Coverage is day-atomic by construction: the ingest path recomputes
-    *    whole dirty days (dynamic partition overwrite, [[IngestStream
-    *    .processBatch]]), so a `ts_day` present in a tier is fully rolled —
+    *    Coverage is day-atomic by construction: the ingest writer
+    *    recomputes whole dirty days and publishes each as one snapshot day
+    *    swap ([[IngestStream.processBatch]], [[graft.core.SnapshotStore]]),
+    *    so a `ts_day` present in a tier is fully rolled —
     *    the gap test is the tier's day set as the snapshot resolution
     *    listed it (no Spark job), never a per-bucket anti-join against a
     *    full raw scan;
@@ -473,7 +474,9 @@ object MetricsQueryApi {
     * to tiers-only service instead of PATH_NOT_FOUND. */
   private def rawStoreOrEmpty(spark: SparkSession, storeDir: String): DataFrame =
     if (IngestStream.hasParquetData(spark, s"$storeDir/metrics_full"))
-      spark.read.parquet(s"$storeDir/metrics_full")
+      // the writer's own layout: no footer-sampling schema-inference job
+      spark.read.schema(IngestStream.rawStoreSchema)
+        .parquet(s"$storeDir/metrics_full")
     else {
       import spark.implicits._
       Seq.empty[(String, String, Long, Double)]
@@ -486,7 +489,8 @@ object MetricsQueryApi {
     * [[rawStoreOrEmpty]]. */
   private def preaggRawOrEmpty(spark: SparkSession, storeDir: String): DataFrame =
     if (IngestStream.hasParquetData(spark, s"$storeDir/preagg_raw"))
-      spark.read.parquet(s"$storeDir/preagg_raw")
+      spark.read.schema(IngestStream.preaggRawSchema)
+        .parquet(s"$storeDir/preagg_raw")
     else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         graft.operators.Preaggregated.preaggSchema)
@@ -598,7 +602,7 @@ object MetricsQueryApi {
     * tail partial bucket from the `preagg_raw` parsed-flush store via the
     * SAME ladder algebra the cascade used ([[preaggLadder]]). Day-atomic
     * coverage holds for the preagg tiers exactly as for the basic ones
-    * (dirty-day dynamic overwrite, [[IngestStream.processAggregatedBatch]]).
+    * (dirty-day snapshot swap, [[IngestStream.processAggregatedBatch]]).
     * This serves `latest` (gauge family) — the stat [[getRollupsStored]]
     * refuses because BasicRollup does not carry it. */
   def getPreaggStored(spark: SparkSession, storeDir: String, p: Params,

@@ -1,10 +1,12 @@
 package graft.streaming
 
 import graft.core.{Granularity, Instrumentation, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Structured-Streaming ingest: the Spark-native replacement for the
   * reference's ingest service + shard/slot rollup scheduling
@@ -15,34 +17,35 @@ import org.apache.spark.sql.types._
   *  - JSON batches stream in, are validated (the P3 predicate set:
   *    non-empty name, epoch bounds, TTL range — reference
   *    JSONMetric.java:28-39), split valid/invalid;
-  *  - valid points append to the full-resolution store, partitioned by day;
-  *  - each micro-batch recomputes the 5m rollup for exactly the day
-  *    partitions the batch touched, overwriting them (dynamic partition
-  *    overwrite). Recompute-from-source is the reference's own idempotent
-  *    re-roll discipline (rollups never read-modify-write — SURVEY §7.4#3),
-  *    and it makes late data a non-event: a late point simply makes its day
-  *    dirty again. This replaces the entire delayed-locator/re-roll state
-  *    machine (ShardStateManager, ScheduleContext) with checkpointed
-  *    streaming offsets + partition overwrite.
+  *  - valid points commit to the full-resolution store, partitioned by
+  *    day, through ONE writer per family ([[processBatch]] /
+  *    [[processTypedBatchFused]], [[processAggregatedBatch]]) whatever the
+  *    caller — facade request, stream micro-batch or bulk load;
+  *  - each batch recomputes the 5m rollup for exactly the day partitions
+  *    it touched and swaps them in as a snapshot
+  *    ([[graft.core.SnapshotStore]]). Recompute-from-source is the
+  *    reference's own idempotent re-roll discipline (rollups never
+  *    read-modify-write — SURVEY §7.4#3), and it makes late data a
+  *    non-event: a late point simply makes its day dirty again. This
+  *    replaces the entire delayed-locator/re-roll state machine
+  *    (ShardStateManager, ScheduleContext) with checkpointed streaming
+  *    offsets + day swaps.
   *  - coarser tiers (20m…1440m) roll from the 5m table in the same
   *    incremental-batch fashion via [[rollupCascadeFor]].
   */
 object IngestStream {
 
-  /** Marker conf naming a session as a DEDICATED request-sized ingest
-    * session: its planning confs are pinned for life, so the fused paths
-    * never mutate it (and never mutate anything shared). */
-  private val IngestSessionMarker = "spark.graft.ingest.session"
-
-  /** A dedicated session for REQUEST-SIZED fused ingest writes — same
+  /** A dedicated session for REQUEST-SIZED ingest writes — same
     * SparkContext/catalog as `parent`, its OWN SQLConf, with the
     * request-sized planning confs pinned for life: AQE off (each query-
     * stage materialization is a full extra scheduling round, ~100-300 ms
     * on request-scale data) and ONE shuffle partition. The facade binds
     * one of these at construction and parses every ingest body into it,
     * so concurrent readers and the deferred drain — which share the
-    * PARENT session — always plan with the session defaults (the r12
-    * set/restore dance made read plans a function of ingest duty cycle).
+    * PARENT session — always plan with the session defaults. The writers
+    * never touch a session's confs: size policy belongs to the caller's
+    * session and frame (a bulk caller keeps its parallelism, a request-
+    * sized caller plans here).
     *
     * `newSession()` starts from builder-time options only, dropping
     * post-hoc `conf.set` values, so the parent's MODIFIABLE runtime confs
@@ -62,14 +65,8 @@ object IngestStream {
     // raw-store read. Request-scale stores list faster on the driver.
     s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
       "4096")
-    s.conf.set(IngestSessionMarker, "true")
     s
   }
-
-  /** Whether `spark` is a [[newIngestSession]] product (pinned for life —
-    * the fused paths skip their set/restore fallback on it). */
-  private def isPinnedIngestSession(spark: SparkSession): Boolean =
-    spark.conf.get(IngestSessionMarker, "false") == "true"
 
   val inputSchema: StructType = StructType(Seq(
     StructField("tenant_id", StringType),
@@ -81,11 +78,9 @@ object IngestStream {
 
   /** Ingest validation (reference: JSONMetric.java:28-39,
     * EpochRangeValidator; epoch window of ±3h around processing time by
-    * default in the reference — here parameterized). */
-  /** The validity predicate over an explicit value column — shared by
-    * [[withValidity]] and the facade's fused accounting aggregate, so the
-    * engine's valid/errors split and a caller-computed stats hint can
-    * never disagree. */
+    * default in the reference — here parameterized): the predicate over an
+    * explicit value column, shared by [[withValidity]] and both arms of
+    * [[processTypedBatchFused]]. */
   private[graft] def validExpr(value: org.apache.spark.sql.Column,
       minTs: Long, maxTs: Long): org.apache.spark.sql.Column =
     // coalesce: a NULL field (e.g. missing ts_ms) must yield valid=false,
@@ -111,8 +106,8 @@ object IngestStream {
     * (Metric.java:38-61 takes Object; the serializer renders String/Boolean
     * points at JSONBasicRollupsOutputSerializer.java:107-112). `from_json`
     * coerces JSON numbers/booleans to their literal text, so one parse
-    * serves all three; [[processTypedBatch]] routes on the original JSON
-    * type recovered by [[parseJsonTyped]]'s variant reading. */
+    * serves all three; [[processTypedBatchFused]] routes on the original
+    * JSON type recovered by [[parseJsonTyped]]'s variant reading. */
   val typedInputSchema: StructType = StructType(Seq(
     StructField("tenant_id", StringType),
     StructField("metric_name", StringType),
@@ -144,279 +139,256 @@ object IngestStream {
       .withColumn("is_bool", coalesce(col("vtype") === "BOOLEAN", lit(false)))
       .drop("vtype")
 
-  /** One mixed-type micro-batch, routed by value type exactly as the
-    * reference splits the basic CFs from metrics_string
-    * (ABasicMetricsRW.java:19 — "metrics_{granularity} & metrics_string
-    * column families"): numeric values take the FULL rollup pipeline
-    * ([[processBatch]]: raw write + dirty-day re-roll + errors sink);
-    * string/boolean values append to the day-partitioned `metrics_string`
-    * store — never rolled (the reference computes no rollups for strings;
-    * they serve at full resolution only, see
-    * [[graft.query.MetricsQueryApi.getStringPoints]]). Invalid string
-    * records (empty name, out-of-window ts) land in the shared errors
-    * sink like their numeric siblings. */
-  def processTypedBatch(batch: DataFrame, storeDir: String, batchId: Long = 0L,
-      minTs: Long = 0L, maxTs: Long = Long.MaxValue,
-      rollup: Boolean = true,
-      virginHint: Option[Boolean] = None,
-      accounting: Option[TypedAccounting] = None): Seq[Long] = {
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // a caller-supplied accounting (the facade's fused aggregate, which
-      // already materialized the cache) answers emptiness without a job
-      if (accounting.fold(cached.isEmpty)(a =>
-          a.numericStats.isEmpty && a.stringStats.isEmpty)) return Nil
-      // probed BEFORE any of this batch's writes: a first batch on an
-      // empty store makes the catalog complete-from-birth. The hint lets
-      // a caller that KNOWS the store state (the facade after its first
-      // persisted batch) skip the ~30-table glob probe per request.
-      val virgin = virginHint.getOrElse(!storeHasData(cached.sparkSession, storeDir))
-      // metered here, not in the numeric arm: a string-only batch would
-      // otherwise vanish from the batch counter (processBatch returns
-      // before its meter on an empty numeric split)
-      Instrumentation.global.inc("ingest.batches")
-      val isStringKind = col("is_string_typed") || col("is_bool")
-      // numeric arm: everything NOT string/boolean-typed — a numeric-typed
-      // but uncastable value arrives with value null and fails validity
-      // into the errors sink rather than vanishing
-      val numeric = cached.filter(!isStringKind)
-        .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-          col("value_num").as("value"), col("ttl_seconds"), col("unit"))
-      val dirtyDays = processBatch(
-        withValidity(numeric, minTs, maxTs), storeDir, batchId,
-        meterBatch = false, virginHint = Some(virgin), rollup = rollup,
-        statsHint = accounting.map(_.numericStats),
-        locatorsHint = accounting.flatMap(_.numericLocators)
-          .map(dedupLocators("basic", _)))
-      // a fused accounting also covers the string arm: an all-numeric
-      // batch skips the string accounting job entirely
-      if (accounting.exists(_.stringStats.values.sum == 0L)) return dirtyDays
-      val strings = withValidity(
-        cached.filter(isStringKind)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value"), col("ttl_seconds"), col("unit"), col("is_bool")),
-        minTs, maxTs)
-        .withColumnRenamed("value", "value_str")
-      // one accounting aggregate for the string arm too (see processBatch)
-      val sstats = accounting.map(_.stringStats).getOrElse(
-        strings.groupBy(col("valid")).count().collect()
-          .map(r => (r.getBoolean(0), r.getLong(1))).toMap)
-      if (sstats.isEmpty) return dirtyDays
-      val nBadStrings = sstats.getOrElse(false, 0L)
-      if (nBadStrings > 0) {
-        Instrumentation.global.inc("ingest.rows.errors.string", nBadStrings)
-        strings.filter(!col("valid")).drop("valid")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/metrics_string_errors/batch_id=$batchId")
-      }
-      val goodStrings = strings.filter(col("valid")).drop("valid")
-      val nGoodStrings = sstats.getOrElse(true, 0L)
-      if (nGoodStrings == 0) return dirtyDays
-      Instrumentation.global.inc("ingest.rows.metrics_string", nGoodStrings)
-      // catalog before data (see processBatch's crash-ordering note)
-      writeCatalog(goodStrings, storeDir, batchId, src = "string",
-        familyCol = lit("string"), markComplete = virgin,
-        rowCountHint = Some(nGoodStrings),
-        locatorsHint = accounting.flatMap(_.stringLocators)
-          .map(dedupLocators("string", _)))
-      goodStrings.withColumn("ts_day", dayOf(col("ts_ms")))
-        .write.mode("overwrite").partitionBy("ts_day")
-        .parquet(s"$storeDir/metrics_string/batch_id=$batchId")
-      dirtyDays
-    } finally cached.unpersist()
-  }
+  private def dayOf(c: Column) = c - pmod(c, lit(86400000L))
 
-  private def dayOf(c: org.apache.spark.sql.Column) = c - pmod(c, lit(86400000L))
-
-  /** Everything a synchronous ingest request needs back from
-    * [[processTypedBatchFused]]: the dirty days, the per-record error
-    * rows (tenant, name, failing source field, ts — the reference's
-    * bean-validation array, ErrorResponse.java), and the batch total. */
-  final case class FusedIngestResult(
+  /** What a numeric/typed ingest call hands back: the dirty days, the
+    * per-record error rows (tenant, name, failing source field, ts — the
+    * reference's bean-validation array, ErrorResponse.java), and the batch
+    * total. */
+  final case class IngestResult(
       dirtyDays: Seq[Long],
       errors: Array[(String, String, String, Option[Long])],
       nTotal: Long)
 
-  /** ONE-JOB typed ingest — the request-sized HTTP POST path taken to its
-    * floor: the WHOLE per-request accounting (batch total, per-arm
-    * valid/invalid splits, dirty-day set, catalog locator sets, AND the
-    * per-record error rows) rides the staged numeric raw write as
-    * `Dataset.observe` metrics, so a clean numeric POST costs exactly one
-    * Spark action in deferred mode (plus the dirty-day re-roll in
-    * synchronous mode). Additional actions run only when their data
-    * exists: an errors-sink write per arm with rejects, the
-    * `metrics_string` writes when the POST carries string/bool values, a
-    * tiny catalog write when the memo sees new locators.
-    *
-    * Ordering (the crash contract, strictly stronger than the classic
-    * path's): staged write (hidden) → `onDirtyDays` callback (the
-    * facade's durable marker write) → catalog commit → ONE atomic rename
-    * unhides the batch → re-roll. A crash anywhere leaves either nothing
-    * visible, or markers/catalog that over-approximate — never visible
-    * data without its marker or catalog.
-    *
-    * The error rows here and the errors sinks are derived from the SAME
-    * validity predicates, so the response and the audit trail cannot
-    * disagree (the documented facade contract). */
+  /** One mixed-type batch, routed by value type exactly as the reference
+    * splits the basic CFs from metrics_string (ABasicMetricsRW.java:19 —
+    * "metrics_{granularity} & metrics_string column families"): numeric
+    * values take the rollup pipeline (staged raw write + dirty-day re-roll
+    * + errors sink); string/boolean values append to the day-partitioned
+    * `metrics_string` store — never rolled (the reference computes no
+    * rollups for strings; they serve at full resolution only, see
+    * [[graft.query.MetricsQueryApi.getStringPoints]]). Validity is
+    * [[validExpr]] over `[minTs, maxTs]` per arm; invalid records of
+    * either arm land in that arm's errors sink, and the returned error
+    * rows name each record's first failing constraint in the reference's
+    * bean-validation order (JSONMetric.java:24-41). Both derive from the
+    * SAME predicates, so the response and the audit trail cannot
+    * disagree. The write protocol is [[writeBatch]]'s. */
   def processTypedBatchFused(batch: DataFrame, storeDir: String,
-      batchId: Long, minTs: Long, maxTs: Long,
+      batchId: Long = 0L, minTs: Long = 0L, maxTs: Long = Long.MaxValue,
       rollup: Boolean = true,
       virginHint: Option[Boolean] = None,
-      onDirtyDays: Seq[Long] => Unit = _ => ()): FusedIngestResult = {
+      onDirtyDays: Seq[Long] => Unit = _ => ()): IngestResult = {
+    val isStr = coalesce(col("is_string_typed") || col("is_bool"), lit(false))
+    val reason = when(col("metric_name").isNull ||
+        length(col("metric_name")) === 0, lit("metricName"))
+      .when(col("value").isNull ||
+        (!isStr && col("value_num").isNull), lit("metricValue"))
+      .when(col("ts_ms").isNull || !col("ts_ms").between(minTs, maxTs),
+        lit("collectionTime"))
+      .when(col("ttl_seconds").isNotNull && col("ttl_seconds") <= 0,
+        lit("ttlInSeconds"))
+    writeBatch(batch, storeDir, batchId, isStr = isStr,
+      numValue = col("value_num"),
+      validNum = validExpr(col("value_num"), minTs, maxTs),
+      validStr = validExpr(col("value"), minTs, maxTs),
+      reason = Some(reason), rollup = rollup, virginHint = virginHint,
+      onDirtyDays = onDirtyDays)
+  }
+
+  /** One numeric micro-batch whose validity the caller already decided
+    * (a `valid` column, e.g. from [[withValidity]]): the same protocol as
+    * [[processTypedBatchFused]] with every row in the numeric arm and no
+    * per-record error rows. Returns the valid dirty-day list.
+    *
+    * Idempotent under foreachBatch's at-least-once retries: the raw batch
+    * commits into a batch-id dir that a replay replaces rather than
+    * duplicates, and the re-roll (which always recomputes from the store)
+    * converges to the same state.
+    *
+    * `rollup = false` DEFERS the dirty-day re-roll (the reference's
+    * ROLLUP_DELAY shape, CoreConfig.java:222: ingest writes raw fast,
+    * rollups run on a background cadence): only raw + catalog + errors
+    * are written. A deferring caller owns running [[rollDirtyDaysNow]]
+    * for the returned days later and serving them via the raw-recompute
+    * repair meanwhile ([[graft.query.MetricsQueryApi.getRollupsStored]]
+    * `dirtyDays`). */
+  def processBatch(batch: DataFrame, storeDir: String, batchId: Long = 0L,
+      rollup: Boolean = true,
+      virginHint: Option[Boolean] = None): Seq[Long] =
+    writeBatch(batch, storeDir, batchId, isStr = lit(false),
+      numValue = col("value"), validNum = col("valid"), validStr = lit(false),
+      reason = None, rollup = rollup, virginHint = virginHint,
+      onDirtyDays = _ => ()).dirtyDays
+
+  /** The one numeric ingest protocol. The whole per-batch accounting —
+    * batch total, per-arm valid/invalid splits, dirty-day set, catalog
+    * locator sets and (when `reason` is given) the per-record error rows —
+    * rides the staged raw write as `Dataset.observe` metrics, so a clean
+    * numeric batch costs ONE Spark action plus the dirty-day re-roll
+    * (none when deferred). Additional actions run only when their data
+    * exists: an errors-sink write per arm with rejects, the
+    * `metrics_string` write when the batch carries string/bool values, a
+    * tiny catalog write when the memo sees new locators — or, for a bulk
+    * batch past [[locatorsFitDriver]], the executor-side catalog
+    * aggregate in place of the observed locator sets.
+    *
+    * Ordering (the crash contract): staged raw write into a hidden
+    * `metrics_full/.staging-<id>` dir → `onDirtyDays` (the facade's
+    * durable marker write) → catalog commit → ONE atomic rename unhides
+    * the batch → re-roll. A crash anywhere leaves either nothing visible,
+    * or markers/catalog that over-approximate — never visible data
+    * without its marker or catalog. A crashed attempt's leaked staging
+    * dir is invisible and is reclaimed by the next retry of the same
+    * batch id (the facade's body-hashed ids and streaming's checkpoint
+    * ids both replay stably).
+    *
+    * The writer sets no conf and forces no partitioning: output files
+    * follow the caller's frame (the facade parses each body into one
+    * partition on its [[newIngestSession]]; a bulk load keeps its full
+    * parallelism). */
+  private def writeBatch(batch: DataFrame, storeDir: String, batchId: Long,
+      isStr: Column, numValue: Column, validNum: Column, validStr: Column,
+      reason: Option[Column], rollup: Boolean,
+      virginHint: Option[Boolean],
+      onDirtyDays: Seq[Long] => Unit): IngestResult = {
     val spark = batch.sparkSession
+    // probed BEFORE any write: a first batch on an empty store makes the
+    // catalog complete-from-birth. The hint lets a caller that KNOWS the
+    // store state (the facade after its first persisted batch) skip the
+    // ~30-table glob probe per request.
     val virgin = virginHint.getOrElse(!storeHasData(spark, storeDir))
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // request-sized planning confs: the facade routes through a dedicated
-    // pinned session (newIngestSession) so nothing reader-shared is ever
-    // mutated; the set/restore fallback remains ONLY for callers whose
-    // batch is bound to a session they own end-to-end (streaming
-    // foreachBatch micro-batch frames)
-    val pinned = isPinnedIngestSession(spark)
-    val aqeBefore =
-      if (pinned) null else spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufBefore =
-      if (pinned) null else spark.conf.get("spark.sql.shuffle.partitions")
-    val discBefore = if (pinned) null else spark.conf.get(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-    if (!pinned) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-    }
+    val (cached, owned) = cachedFor(batch)
     try {
-      val isStr = coalesce(col("is_string_typed") || col("is_bool"), lit(false))
-      val vn = validExpr(col("value_num"), minTs, maxTs)
-      val vs = validExpr(col("value"), minTs, maxTs)
-      // first failing constraint per record — the reference's
-      // bean-validation order (JSONMetric.java:24-41)
-      val src = when(col("metric_name").isNull ||
-          length(col("metric_name")) === 0, lit("metricName"))
-        .when(col("value").isNull ||
-          (!isStr && col("value_num").isNull), lit("metricValue"))
-        .when(col("ts_ms").isNull || !col("ts_ms").between(minTs, maxTs),
-          lit("collectionTime"))
-        .when(col("ttl_seconds").isNotNull && col("ttl_seconds") <= 0,
-          lit("ttlInSeconds"))
       val unitCol = if (cached.columns.contains("unit")) col("unit")
                     else lit(null).cast("string")
-      val obs = org.apache.spark.sql.Observation(
-        s"typed_${batchId}_${java.util.UUID.randomUUID()}")
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$storeDir/metrics_full/.staging-$batchId")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val targetPath = new org.apache.hadoop.fs.Path(
-        s"$storeDir/metrics_full/batch_id=$batchId")
-      val isReplay = fs.exists(targetPath)
-      cached.observe(obs,
-          count(lit(1)).as("n_total"),
-          count(when(!isStr && vn, lit(1))).as("n_valid_num"),
-          count(when(!isStr && !vn, lit(1))).as("n_invalid_num"),
-          count(when(isStr && vs, lit(1))).as("n_valid_str"),
-          count(when(isStr && !vs, lit(1))).as("n_invalid_str"),
-          collect_set(when(!isStr && vn, dayOf(col("ts_ms")))).as("days"),
-          collect_set(when(!isStr && vn, struct(col("tenant_id"),
-            col("metric_name"), unitCol.as("unit")))).as("num_locs"),
-          collect_set(when(isStr && vs, struct(col("tenant_id"),
-            col("metric_name"), unitCol.as("unit")))).as("str_locs"),
-          collect_list(when(src.isNotNull, struct(col("tenant_id"),
-            col("metric_name"), src.as("src"), col("ts_ms")))).as("errs"))
-        .filter(!isStr && vn)
-        .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-          col("value_num").as("value"), col("ttl_seconds"), col("unit"))
-        .coalesce(1)
-        .withColumn("ts_day", dayOf(col("ts_ms")))
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("ts_day").parquet(stage.toString)
+      val locator = struct(col("tenant_id"), col("metric_name"),
+        unitCol.as("unit"))
+      val isNum = !isStr
+      val numericRows = Seq(col("tenant_id"), col("metric_name"),
+        col("ts_ms"), numValue.as("value"), col("ttl_seconds"),
+        unitCol.as("unit"))
+      val stringRows = Seq(col("tenant_id"), col("metric_name"),
+        col("ts_ms"), col("value").as("value_str"), col("ttl_seconds"),
+        unitCol.as("unit"), col("is_bool"))
+      val observeLocators = locatorsFitDriver(cached)
+      val obs = Observation(s"ingest_${batchId}_${java.util.UUID.randomUUID()}")
+      val accounting = Seq(
+        count(when(isNum && validNum, lit(1))).as("n_valid_num"),
+        count(when(isNum && !validNum, lit(1))).as("n_invalid_num"),
+        count(when(isStr && validStr, lit(1))).as("n_valid_str"),
+        count(when(isStr && !validStr, lit(1))).as("n_invalid_str"),
+        collect_set(when(isNum && validNum, dayOf(col("ts_ms")))).as("days")) ++
+        (if (!observeLocators) Nil else Seq(
+          collect_set(when(isNum && validNum, locator)).as("num_locs"),
+          collect_set(when(isStr && validStr, locator)).as("str_locs"))) ++
+        reason.map(r => collect_list(when(r.isNotNull, struct(
+          col("tenant_id"), col("metric_name"), r.as("src"),
+          col("ts_ms")))).as("errs"))
+      val stage = new Stage(spark, storeDir, "metrics_full", batchId)
+      stage.write(cached.observe(obs, count(lit(1)).as("n_total"),
+          accounting: _*)
+        .filter(isNum && validNum).select(numericRows: _*))
       val m = obs.get
       def n(k: String) = m(k).asInstanceOf[Long]
-      def locsOf(k: String) = m(k).asInstanceOf[scala.collection.Seq[Any]]
-        .map { a =>
-          val r = a.asInstanceOf[org.apache.spark.sql.Row]
-          (r.getString(0), r.getString(1),
-            if (r.isNullAt(2)) null else r.getString(2))
-        }
+      def rows(k: String) = m(k).asInstanceOf[scala.collection.Seq[Row]]
+      // one arm's catalog upsert, from its observed locators when they
+      // fit the driver, else from the arm's rows
+      def armCatalog(src: String, k: String, family: String, arm: Column,
+          markComplete: Boolean) = writeCatalog(storeDir, batchId, src,
+        if (!observeLocators) None
+        else Some(dedupLocators(family, rows(k).map(r => (r.getString(0),
+          r.getString(1), if (r.isNullAt(2)) null else r.getString(2))))),
+        cached.filter(arm).select(col("tenant_id"), col("metric_name"),
+          lit(family).as("family"), unitCol.as("unit")),
+        markComplete)
       val nTotal = n("n_total")
-      def discardStage(): Unit = {
-        fs.delete(stage, true)
-        val parent = stage.getParent
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-        ()
+      if (nTotal == 0) {
+        stage.discard(); return IngestResult(Nil, Array.empty, 0L)
       }
-      if (nTotal == 0) { discardStage(); return FusedIngestResult(Nil, Array.empty, 0L) }
       Instrumentation.global.inc("ingest.batches")
-      val errors = m("errs").asInstanceOf[scala.collection.Seq[Any]].map { a =>
-        val r = a.asInstanceOf[org.apache.spark.sql.Row]
-        (Option(r.getString(0)).getOrElse(""),
+      val errors = reason.fold(
+          Array.empty[(String, String, String, Option[Long])])(_ =>
+        rows("errs").map(r => (Option(r.getString(0)).getOrElse(""),
           Option(r.getString(1)).getOrElse(""), r.getString(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)))
-      }.toArray
-      // errors sinks per arm, written only when rejects exist (empty
-      // parquet dirs would break the sinks' schema inference)
+          if (r.isNullAt(3)) None else Some(r.getLong(3)))).toArray)
+      // errors sinks per arm, written only when rejects exist (an empty
+      // parquet dir per healthy batch would break the sinks' schema
+      // inference)
       if (n("n_invalid_num") > 0) {
         Instrumentation.global.inc("ingest.rows.errors", n("n_invalid_num"))
-        cached.filter(!isStr && !vn)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value_num").as("value"), col("ttl_seconds"), col("unit"))
+        cached.filter(isNum && !validNum).select(numericRows: _*)
           .write.mode("overwrite")
           .parquet(s"$storeDir/metrics_errors/batch_id=$batchId")
       }
       if (n("n_invalid_str") > 0) {
         Instrumentation.global.inc("ingest.rows.errors.string",
           n("n_invalid_str"))
-        cached.filter(isStr && !vs)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value").as("value_str"), col("ttl_seconds"), col("unit"),
-            col("is_bool"))
+        cached.filter(isStr && !validStr).select(stringRows: _*)
           .write.mode("overwrite")
           .parquet(s"$storeDir/metrics_string_errors/batch_id=$batchId")
       }
-      // string arm (rare on metric POSTs): catalog-before-data, same as
-      // the classic path
+      // string arm (rare on metric POSTs): catalog before data
       if (n("n_valid_str") > 0) {
         Instrumentation.global.inc("ingest.rows.metrics_string",
           n("n_valid_str"))
-        writeCatalogLocators(spark, storeDir, batchId, "string",
-          dedupLocators("string", locsOf("str_locs")), markComplete = virgin)
-        cached.filter(isStr && vs)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value").as("value_str"), col("ttl_seconds"), col("unit"),
-            col("is_bool"))
-          .coalesce(1)
+        armCatalog("string", "str_locs", "string", isStr && validStr,
+          markComplete = virgin)
+        cached.filter(isStr && validStr).select(stringRows: _*)
           .withColumn("ts_day", dayOf(col("ts_ms")))
           .write.mode("overwrite").partitionBy("ts_day")
           .parquet(s"$storeDir/metrics_string/batch_id=$batchId")
       }
-      val days = m("days").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Long]).toSeq
+      // an all-invalid (or all-string) batch writes no raw data: an empty
+      // batch_id partition would be dead weight
       if (n("n_valid_num") == 0) {
-        discardStage()
-        return FusedIngestResult(Nil, errors, nTotal)
+        stage.discard(); return IngestResult(Nil, errors, nTotal)
       }
+      val days = m("days").asInstanceOf[scala.collection.Seq[Long]].toSeq
       // durable dirty-day markers BEFORE anything becomes visible
       onDirtyDays(days)
-      // catalog BEFORE the data unhides; the string arm (when present)
-      // already wrote the coverage marker for a virgin store
-      writeCatalogLocators(spark, storeDir, batchId, "numeric",
-        dedupLocators("basic", locsOf("num_locs")),
+      // catalog BEFORE the data unhides: a crash between the two leaves a
+      // stale-but-safe catalog superset, never a _complete-marked catalog
+      // missing a live locator. The string arm (when present) already
+      // wrote the coverage marker for a virgin store.
+      armCatalog("numeric", "num_locs", "basic", isNum && validNum,
         markComplete = virgin && n("n_valid_str") == 0)
-      if (isReplay) fs.delete(targetPath, true)
-      require(fs.rename(stage, targetPath),
-        s"raw batch commit rename failed for $targetPath")
+      stage.commit()
       Instrumentation.global.inc("ingest.rows.metrics_full", n("n_valid_num"))
       if (rollup) rollDirtyDays(spark, storeDir, days.toArray)
-      FusedIngestResult(days, errors, nTotal)
-    } finally {
-      if (!pinned) {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        spark.conf.set("spark.sql.shuffle.partitions", shufBefore)
-        spark.conf.set(
-          "spark.sql.sources.parallelPartitionDiscovery.threshold", discBefore)
-      }
-      cached.unpersist()
+      IngestResult(days, errors, nTotal)
+    } finally if (owned) cached.unpersist()
+  }
+
+  /** The batch cached for a writer's passes, and whether the writer owns
+    * that cache: a frame the caller already cached is used as it is and
+    * stays cached (a writer never drops a cache it did not make). */
+  private def cachedFor(batch: DataFrame): (DataFrame, Boolean) =
+    if (batch.storageLevel != StorageLevel.NONE) (batch, false)
+    else (batch.persist(StorageLevel.MEMORY_AND_DISK), true)
+
+  /** One batch's staged commit into `storeDir/table`: [[write]] lands the
+    * rows day-partitioned in a hidden `.staging-<id>` dir (invisible to
+    * every reader — the dot prefix), with committer v2 and no `_SUCCESS`
+    * (the SnapshotStore.stageOnly discipline); [[commit]] unhides it with
+    * ONE atomic rename, a replayed batch id first reclaiming its previous
+    * dir (replace, never duplicate); [[discard]] drops a stage that must
+    * not publish, and the table dir too when the staging write created
+    * it (an empty or all-invalid batch leaves NO trace in the table). */
+  private final class Stage(spark: SparkSession, storeDir: String,
+      table: String, batchId: Long) {
+    private val stage = new Path(s"$storeDir/$table/.staging-$batchId")
+    private val target = new Path(s"$storeDir/$table/batch_id=$batchId")
+    private val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    def write(rows: DataFrame): Unit =
+      rows.withColumn("ts_day", dayOf(col("ts_ms")))
+        .write.mode("overwrite")
+        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy("ts_day").parquet(stage.toString)
+
+    def commit(): Unit = {
+      if (fs.exists(target)) fs.delete(target, true)
+      require(fs.rename(stage, target),
+        s"$table batch commit rename failed for $target")
+    }
+
+    def discard(): Unit = {
+      fs.delete(stage, true)
+      val parent = stage.getParent
+      if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
+        fs.delete(parent, false)
       ()
     }
   }
@@ -428,8 +400,9 @@ object IngestStream {
     * per (source, batch) holding the batch's DISTINCT
     * (tenant_id, metric_name, family, unit) rows. At 100 TB this is what
     * makes "which family/unit is this locator" a metadata read instead of
-    * three raw-table scans; per batch it costs one map-side-combined
-    * aggregate over rows already cached in memory. The `src=` level keeps
+    * three raw-table scans; per batch it costs nothing beyond the distinct
+    * locator set the writer's observed accounting already collects (and a
+    * tiny write when that set holds new locators). The `src=` level keeps
     * concurrently running typed/preagg streams' batch ids from colliding.
     * Like the reference's locator index, entries outlive retention-pruned
     * data (a name stays discoverable until the catalog is rebuilt). */
@@ -441,11 +414,10 @@ object IngestStream {
     * locators are written (the catalog is a union of batch dirs, readers
     * dedup). Entries are recorded AFTER their write commits, so a crash
     * can only under-record (extra writes, never a missing locator).
-    * Bounded: past [[CatalogMemoCap]] entries the memo stops admitting
-    * (all-new batches keep writing normally); batches larger than
-    * [[CatalogMemoBatchCap]] rows (bulk streaming, e.g. the 10⁶-locator
-    * stress shape) bypass the collect and take the plain write path. A
-    * catalog REBUILD drops what retention aged out — it must
+    * Bounded: at [[CatalogMemoCap]] entries the memo stops admitting
+    * (all-new batches keep writing normally); batches past
+    * [[CatalogMemoBatchCap]] rows bypass it (see [[locatorsFitDriver]]).
+    * A catalog REBUILD drops what retention aged out — it must
     * [[invalidateCatalogMemo]] so a re-ingested locator is re-written. */
   private val catalogSeen = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.Set[(String, String, String, String)]]()
@@ -488,49 +460,48 @@ object IngestStream {
       out.close()
     } catch { case _: java.io.IOException => }
 
-  private def writeCatalog(rows: DataFrame, storeDir: String, batchId: Long,
-      src: String, familyCol: org.apache.spark.sql.Column,
-      markComplete: Boolean = false,
-      rowCountHint: Option[Long] = None,
-      locatorsHint: Option[Array[(String, String, String, String)]] = None)
-      : Unit = {
-    val spark = rows.sparkSession
-    // a caller that already holds the batch's distinct locators (the
-    // facade's fused accounting / the observe-on-write path) skips the
-    // per-batch catalog aggregate entirely — zero Spark jobs unless fresh
-    // locators actually need writing
-    locatorsHint match {
-      case Some(locs) =>
-        writeCatalogLocators(spark, storeDir, batchId, src, locs, markComplete)
-        return
-      case None =>
-    }
-    val unitCol = if (rows.columns.contains("unit")) col("unit")
-                  else lit(null).cast("string")
-    val distinctLoc = rows.select(col("tenant_id"), col("metric_name"),
-        familyCol.as("family"), unitCol.as("unit"))
-      .groupBy("tenant_id", "metric_name", "family")
-      .agg(max("unit").as("unit"))
-    val memoPath = rowCountHint.exists(_ <= CatalogMemoBatchCap)
-    if (memoPath) {
-      // batch-bounded collect (the same aggregate the plain path writes)
-      val locs = distinctLoc.collect().map(r => (r.getString(0),
-        r.getString(1), r.getString(2), Option(r.getString(3)).orNull))
-      writeCatalogLocators(spark, storeDir, batchId, src, locs,
-        markComplete = false)
-    } else {
-      distinctLoc
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"$storeDir/metric_catalog/src=$src/batch_id=$batchId")
-    }
-    if (markComplete) markCatalogComplete(spark, storeDir)
+  /** Whether a batch's distinct locators may travel to the driver as
+    * observed metrics: at most [[CatalogMemoBatchCap]] rows, read off the
+    * optimized plan's statistics without a Spark job — the row count when
+    * the plan knows it (a materialized cache, a local relation), else its
+    * size over the row width (a plan with no size estimate reads as
+    * bulk). A bulk batch past the cap (the 10⁶-locator stress shape) keeps
+    * its locators on the executors instead: collecting and re-
+    * parallelizing a million locator rows through the driver doubled that
+    * batch's whole ingest time (docs/SCALE.md). */
+  private def locatorsFitDriver(batch: DataFrame): Boolean = {
+    val plan = batch.queryExecution.optimizedPlan
+    val stats = plan.stats
+    stats.rowCount.getOrElse(stats.sizeInBytes /
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+        .EstimationUtils.getSizePerRow(plan.output)) <= CatalogMemoBatchCap
   }
 
-  /** Memo-filtered catalog upsert from driver-held locator rows
-    * (tenant, name, family, unit) — the tail of [[writeCatalog]]'s memo
-    * path, callable directly when the batch's distinct locators were
-    * already collected by a fused aggregate. */
+  /** The per-batch catalog upsert: the batch's observed distinct
+    * locators (tenant, name, family, unit), when [[locatorsFitDriver]]
+    * held, go through the memo ([[writeCatalogLocators]], usually no write
+    * at all); otherwise its (tenant, name, family, unit) `rows` aggregate
+    * to their distinct locators on the executors and land whole in the
+    * batch's catalog dir. */
+  private def writeCatalog(storeDir: String, batchId: Long, src: String,
+      observed: Option[Array[(String, String, String, String)]],
+      rows: DataFrame, markComplete: Boolean): Unit = {
+    val spark = rows.sparkSession
+    observed match {
+      case Some(locs) =>
+        writeCatalogLocators(spark, storeDir, batchId, src, locs, markComplete)
+      case None =>
+        rows.groupBy("tenant_id", "metric_name", "family")
+          .agg(max("unit").as("unit"))
+          .coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$storeDir/metric_catalog/src=$src/batch_id=$batchId")
+        if (markComplete) markCatalogComplete(spark, storeDir)
+    }
+  }
+
+  /** Memo-filtered catalog upsert from the batch's driver-held distinct
+    * locator rows (tenant, name, family, unit). */
   private def writeCatalogLocators(spark: SparkSession, storeDir: String,
       batchId: Long, src: String,
       locs: Array[(String, String, String, String)],
@@ -553,17 +524,18 @@ object IngestStream {
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(s"$storeDir/metric_catalog/src=$src/batch_id=$batchId")
-      // record ONLY after the commit; stop admitting past the cap
-      if (seen.size() < CatalogMemoCap) fresh.foreach(seen.add)
+      // record ONLY after the commit; stop admitting at the cap
+      fresh.iterator.takeWhile(_ => seen.size() < CatalogMemoCap)
+        .foreach(seen.add)
     }
     if (markComplete) markCatalogComplete(spark, storeDir)
   }
 
-  /** Replicates [[writeCatalog]]'s distinct-locator aggregate
-    * (groupBy(tenant, name, family).agg(max(unit))) over driver-held
-    * (tenant, name, unit) triples — catalog content is bit-identical to
-    * the relational path for any unit string the triples carry (they come
-    * out of Spark, so they are well-formed): Spark's string max orders
+  /** The catalog's distinct-locator aggregate (groupBy(tenant, name,
+    * family).agg(max(unit)), the one [[metricCatalog]] applies on read)
+    * over driver-held (tenant, name, unit) triples — content is identical
+    * to the relational form for any unit string the triples carry (they
+    * come out of Spark, so they are well-formed): Spark's string max orders
     * by unsigned UTF-8 bytes (code-point order), while Java's String
     * ordering compares UTF-16 code units (surrogates sort BELOW
     * U+E000..U+FFFF), so the winner is picked in code point order
@@ -799,248 +771,6 @@ object IngestStream {
     bumpCatalogFence(spark, storeDir)
   }
 
-  /** One micro-batch: append raw, then recompute 5m rollups for the days
-    * this batch touched. Pure DataFrame ops; executors do all data work
-    * (the only driver-side collect is the small dirty-day list).
-    *
-    * Idempotent under foreachBatch's at-least-once retries: the raw write
-    * goes to a batch-id partition with overwrite, so a replayed batch
-    * replaces rather than duplicates its own rows, and the re-roll (which
-    * always recomputes from the store) converges to the same state.
-    *
-    * `rollup = false` DEFERS the dirty-day re-roll (the reference's
-    * ROLLUP_DELAY shape, CoreConfig.java:222: ingest writes raw fast,
-    * rollups run on a background cadence): only raw + catalog + errors
-    * are written. Returns the valid dirty-day list either way — a
-    * deferring caller owns running [[rollDirtyDaysNow]] for them later
-    * and serving those days via the raw-recompute repair meanwhile
-    * ([[graft.query.MetricsQueryApi.getRollupsStored]] `dirtyDays`). */
-  def processBatch(batch: DataFrame, storeDir: String, batchId: Long = 0L,
-      meterBatch: Boolean = true, virginHint: Option[Boolean] = None,
-      rollup: Boolean = true,
-      statsHint: Option[Array[(Boolean, Option[Long], Long)]] = None,
-      locatorsHint: Option[Array[(String, String, String, String)]] = None,
-      fuseObserve: Boolean = false)
-      : Seq[Long] = {
-    val spark = batch.sparkSession
-    if (fuseObserve && statsHint.isEmpty)
-      return processBatchFused(batch, storeDir, batchId, meterBatch,
-        virginHint, rollup)
-    // probed BEFORE any write (see processTypedBatch): first-batch-on-
-    // empty-store means the catalog covers the store from birth. The hint
-    // saves re-globbing when processTypedBatch already probed this batch.
-    val virgin = virginHint.getOrElse(!storeHasData(spark, storeDir))
-    // persist the parsed+validated batch once; both splits derive from it
-    // (otherwise the source is re-read and re-parsed per split)
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE accounting aggregate answers emptiness, the invalid total, the
-      // valid rows-written meter, AND the dirty-day list — each used to be
-      // its own job (isEmpty, count, isEmpty, groupBy), and per-batch job
-      // count is the latency floor of a synchronous ingest request. An
-      // invalid row can carry a null ts_ms — its day groups as null, read
-      // via isNullAt.
-      val stats = statsHint.getOrElse(cached
-        .groupBy(col("valid"), dayOf(col("ts_ms")).as("ts_day")).count()
-        .collect()
-        .map(r => (r.getBoolean(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2))))
-      if (stats.isEmpty) return Nil
-      // meterBatch=false when processTypedBatch already counted this batch
-      // (a string-only batch never reaches this arm's counter otherwise)
-      if (meterBatch) Instrumentation.global.inc("ingest.batches")
-      // invalid records go to an errors sink instead of vanishing — the
-      // reference returns per-record errors to the client
-      // (HttpMetricsIngestionHandler error responses, ErrorResponse.java).
-      // Only written when non-empty: an empty parquet dir per healthy batch
-      // would break schema inference for readers of the sink.
-      val nInvalid = stats.collect { case (false, _, n) => n }.sum
-      if (nInvalid > 0) {
-        Instrumentation.global.inc("ingest.rows.errors", nInvalid)
-        cached.filter(!col("valid")).drop("valid")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/metrics_errors/batch_id=$batchId")
-      }
-      // an all-invalid batch writes nothing: an empty batch_id partition
-      // would be dead weight (and an all-empty store breaks schema inference)
-      val dayCounts = stats.collect { case (true, Some(day), n) => (day, n) }
-      if (dayCounts.isEmpty) return Nil
-      val valid = cached.filter(col("valid")).drop("valid")
-      // catalog FIRST: a crash between the two writes must leave a
-      // stale-but-safe catalog superset, never a _complete-marked catalog
-      // missing a live locator (readers dedup; routeKind would misroute)
-      writeCatalog(valid, storeDir, batchId, src = "numeric",
-        familyCol = lit("basic"), markComplete = virgin,
-        rowCountHint = Some(dayCounts.map(_._2).sum),
-        locatorsHint = locatorsHint)
-      writeRaw(valid, storeDir, batchId)
-      Instrumentation.global.inc("ingest.rows.metrics_full",
-        dayCounts.map(_._2).sum)
-      if (rollup) rollDirtyDays(spark, storeDir, dayCounts.map(_._1))
-      dayCounts.map(_._1).toSeq
-    } finally cached.unpersist()
-  }
-
-  /** Pre-computed per-batch accounting (the facade's fused aggregate):
-    * `numericStats` = (valid, day, count) rows over the NUMERIC arm —
-    * exactly what [[processBatch]]'s own aggregate would produce (valid
-    * per [[validExpr]] over `value_num`; day null for a null ts_ms) —
-    * and `stringStats` = valid→count over the string/bool arm. Supplying
-    * it removes two accounting jobs from every synchronous ingest
-    * request; correctness requires the producer to use [[validExpr]]
-    * with the SAME bounds it passes to [[processTypedBatch]].
-    *
-    * `numericLocators`/`stringLocators`: the VALID rows' distinct
-    * (tenant, name, unit) triples per arm, when the producer's aggregate
-    * also collected them — supplying these removes the per-arm catalog
-    * collect job too (the catalog upsert becomes pure driver-side memo
-    * arithmetic plus, rarely, a tiny write of fresh locators). */
-  final case class TypedAccounting(
-      numericStats: Array[(Boolean, Option[Long], Long)],
-      stringStats: Map[Boolean, Long],
-      numericLocators: Option[Array[(String, String, String)]] = None,
-      stringLocators: Option[Array[(String, String, String)]] = None)
-
-  /** Observe-fused batch processing — the whole per-batch accounting
-    * (valid/invalid counts, dirty-day set, distinct catalog locators)
-    * piggybacks as `Dataset.observe` metrics ON the raw write itself, so
-    * a clean request-sized micro-batch costs exactly TWO Spark jobs:
-    * the staged raw write and the dirty-day 5m re-roll. Per-batch job
-    * count is the latency floor on the steady-state path (~300 ms fixed
-    * per job on local[32], docs/SCALE.md) — the classic path pays 4
-    * (stats aggregate, catalog collect, raw write, re-roll).
-    *
-    * The catalog-before-data crash ordering is preserved by a staging
-    * rename: the raw batch lands fully in a hidden
-    * `metrics_full/.staging-<id>` dir (invisible to every reader — the
-    * dot prefix), the catalog upsert commits, and ONE atomic directory
-    * rename unhides the batch. A crash leaves either nothing visible or
-    * a catalog superset — never data without catalog. A crashed
-    * attempt's leaked staging dir is invisible and is reclaimed by the
-    * next retry of the same batch id (the facade's body-hashed ids and
-    * streaming's checkpoint ids both replay stably).
-    *
-    * Callers opt in per batch (`fuseObserve = true`) as a contract that
-    * the batch is REQUEST-SIZED: the observed locator set is collected
-    * through task-completion metrics, so a bulk backfill batch with
-    * millions of distinct locators should keep the classic path (whose
-    * memo bypass caps driver collects). */
-  private def processBatchFused(batch: DataFrame, storeDir: String,
-      batchId: Long, meterBatch: Boolean, virginHint: Option[Boolean],
-      rollup: Boolean): Seq[Long] = {
-    val spark = batch.sparkSession
-    val virgin = virginHint.getOrElse(!storeHasData(spark, storeDir))
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // AQE OFF for this batch's actions (restored in the finally, the
-    // BucketedStore.overwriteDays session-conf pattern): on request-sized
-    // data every AQE query-stage materialization is a full extra
-    // scheduling round (~100-300 ms measured), and the whole point of the
-    // fused path is the round count — the tier merge chain ran FIVE
-    // sequential rounds under AQE vs two without. Runtime re-planning has
-    // nothing to adapt on a few thousand rows.
-    // (a 32-way exchange is 32 scheduled tasks per stage for a few
-    // thousand rows — one reducer keeps every stage a single task and
-    // every staged write a single file; pinned-session guard as in
-    // processTypedBatchFused)
-    val pinned = isPinnedIngestSession(spark)
-    val aqeBefore =
-      if (pinned) null else spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufBefore =
-      if (pinned) null else spark.conf.get("spark.sql.shuffle.partitions")
-    val discBefore = if (pinned) null else spark.conf.get(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-    if (!pinned) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-    }
-    try {
-      val unitCol = if (cached.columns.contains("unit")) col("unit")
-                    else lit(null).cast("string")
-      val obs = org.apache.spark.sql.Observation(
-        s"ingest_${batchId}_${java.util.UUID.randomUUID()}")
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$storeDir/metrics_full/.staging-$batchId")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val targetPath = new org.apache.hadoop.fs.Path(
-        s"$storeDir/metrics_full/batch_id=$batchId")
-      val isReplay = fs.exists(targetPath)
-      cached.observe(obs,
-          count(when(col("valid"), lit(1))).as("n_valid"),
-          count(when(!col("valid"), lit(1))).as("n_invalid"),
-          collect_set(when(col("valid"), dayOf(col("ts_ms")))).as("days"),
-          collect_set(when(col("valid"), struct(col("tenant_id"),
-            col("metric_name"), unitCol.as("unit")))).as("locs"))
-        .filter(col("valid")).drop("valid")
-        // request-sized contract: one output file per day beats 32 shards
-        // of ~100 rows each, for both the commit and every later read
-        .coalesce(1)
-        .withColumn("ts_day", dayOf(col("ts_ms")))
-        // rename-committed staging: committer v2 + no _SUCCESS (see
-        // SnapshotStore.stageOnly — same one-rename discipline)
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("ts_day").parquet(stage.toString)
-      val m = obs.get
-      val nValid = m("n_valid").asInstanceOf[Long]
-      val nInvalid = m("n_invalid").asInstanceOf[Long]
-      // discarding a dataless stage also removes a metrics_full dir the
-      // staging write itself created (classic-path parity: an empty or
-      // all-invalid batch leaves NO trace in the data table)
-      def discardStage(): Unit = {
-        fs.delete(stage, true)
-        val parent = stage.getParent
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-        ()
-      }
-      if (nValid == 0 && nInvalid == 0) { discardStage(); return Nil }
-      if (meterBatch) Instrumentation.global.inc("ingest.batches")
-      if (nInvalid > 0) {
-        Instrumentation.global.inc("ingest.rows.errors", nInvalid)
-        cached.filter(!col("valid")).drop("valid")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/metrics_errors/batch_id=$batchId")
-      }
-      // an all-invalid batch writes no data (same contract as the classic
-      // path: an empty batch_id partition would be dead weight)
-      if (nValid == 0) { discardStage(); return Nil }
-      val days = m("days").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Long]).toSeq
-      val locs = m("locs").asInstanceOf[scala.collection.Seq[Any]]
-        .map { a =>
-          val r = a.asInstanceOf[org.apache.spark.sql.Row]
-          (r.getString(0), r.getString(1),
-            if (r.isNullAt(2)) null else r.getString(2))
-        }
-      // catalog BEFORE the data becomes visible (staging is hidden)
-      writeCatalogLocators(spark, storeDir, batchId, "numeric",
-        dedupLocators("basic", locs), markComplete = virgin)
-      // COMMIT POINT: one atomic rename unhides the batch (a retried
-      // batch id reclaims its previous dir first — replace-not-duplicate)
-      if (isReplay) fs.delete(targetPath, true)
-      require(fs.rename(stage, targetPath),
-        s"raw batch commit rename failed for $targetPath")
-      Instrumentation.global.inc("ingest.rows.metrics_full", nValid)
-      // dirty-day recompute AFTER the raw batch is visible (replay-safe
-      // by construction, and the scoped AQE-off/one-reducer confs above
-      // keep it a single two-stage job)
-      if (rollup) rollDirtyDays(spark, storeDir, days.toArray)
-      days
-    } finally {
-      if (!pinned) {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        spark.conf.set("spark.sql.shuffle.partitions", shufBefore)
-        spark.conf.set(
-          "spark.sql.sources.parallelPartitionDiscovery.threshold", discBefore)
-      }
-      cached.unpersist()
-      ()
-    }
-  }
-
   /** The raw-store write: day-partitioned parquet under an overwrite
     * batch-id partition (shared by processBatch and IngestBench so the
     * benchmark measures the production write path). */
@@ -1065,7 +795,7 @@ object IngestStream {
     * fixed by [[writeRaw]]/[[processTypedBatchFused]] (the two path
     * levels `batch_id`/`ts_day` included; parquet files missing `unit`
     * read as null, which the re-roll never touches). */
-  private val rawStoreSchema = StructType(Seq(
+  private[graft] val rawStoreSchema = StructType(Seq(
     StructField("tenant_id", StringType),
     StructField("metric_name", StringType),
     StructField("ts_ms", LongType),
@@ -1107,24 +837,20 @@ object IngestStream {
   /** Start the ingest stream over a source of JSON lines (file/socket/Kafka
     * — anything exposing a `value` column). `maxAgeMs`/`maxFutureMs` bound
     * record timestamps RELATIVE to each batch's processing time (see
-    * [[batchBounds]]); `nowMs` is injectable for tests. */
+    * [[batchBounds]]); `nowMs` is injectable for tests. Each micro-batch
+    * goes through [[processBatch]], planned on the stream's own session
+    * and partitioning. */
   def start(lines: DataFrame, storeDir: String, checkpointDir: String,
       minTs: Long = 0L, maxTs: Long = Long.MaxValue,
       maxAgeMs: Option[Long] = None, maxFutureMs: Option[Long] = None,
-      nowMs: () => Long = () => System.currentTimeMillis(),
-      fuseObserve: Boolean = false): StreamingQuery =
+      nowMs: () => Long = () => System.currentTimeMillis()): StreamingQuery =
     parseJson(lines)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val (lo, hi) = batchBounds(minTs, maxTs, maxAgeMs, maxFutureMs, nowMs())
-        // fuseObserve (steady-state deployments whose micro-batches are
-        // request-sized): per-batch accounting+catalog ride the raw write
-        // — 2 jobs/batch instead of 4 (see processBatchFused); bulk
-        // backfill streams should keep the classic path
-        processBatch(withValidity(batch, lo, hi), storeDir, id,
-          fuseObserve = fuseObserve)
+        processBatch(withValidity(batch, lo, hi), storeDir, id)
         ()
       }
       .start()
@@ -1179,91 +905,45 @@ object IngestStream {
           col("ts_ms").between(minTs, maxTs),
         lit(false)))
 
-  /** One events micro-batch — the same idempotence discipline as
-    * [[processBatch]]: day-partitioned parquet under an overwrite batch-id
-    * partition, so a replayed batch replaces rather than duplicates its own
-    * rows; invalid records go to an errors sink instead of vanishing.
-    * Events are immutable annotations with no rollup ladder, so ingest is
-    * append-only — no re-roll step, which is what makes this path trivial
-    * by design next to the metrics one. */
   /** ONE-JOB events ingest for the facade's all-or-nothing contract
     * (HttpEventsIngestionHandler rejects the whole POST on any invalid
     * event): the validity counts ride the staged events write as
     * observed metrics; any invalid row (or an empty parse) discards the
-    * hidden staging and nothing becomes visible — exactly the classic
-    * pre-check-then-write behavior, minus its two extra jobs. Returns
-    * (total, invalid) for the response decision. */
+    * hidden stage and nothing becomes visible. Returns (total, invalid)
+    * for the response decision. */
   def processEventsBatchFused(batch: DataFrame, storeDir: String,
       batchId: Long): (Long, Long) = {
-    val spark = batch.sparkSession
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // request-sized planning confs: the facade routes through a dedicated
-    // pinned session (newIngestSession) so nothing reader-shared is ever
-    // mutated; the set/restore fallback remains ONLY for callers whose
-    // batch is bound to a session they own end-to-end (streaming
-    // foreachBatch micro-batch frames)
-    val pinned = isPinnedIngestSession(spark)
-    val aqeBefore =
-      if (pinned) null else spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufBefore =
-      if (pinned) null else spark.conf.get("spark.sql.shuffle.partitions")
-    val discBefore = if (pinned) null else spark.conf.get(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-    if (!pinned) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-    }
+    val (cached, owned) = cachedFor(batch)
     try {
-      val obs = org.apache.spark.sql.Observation(
-        s"events_${batchId}_${java.util.UUID.randomUUID()}")
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$storeDir/events/.staging-$batchId")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val targetPath = new org.apache.hadoop.fs.Path(
-        s"$storeDir/events/batch_id=$batchId")
-      cached.observe(obs,
+      val obs = Observation(s"events_${batchId}_${java.util.UUID.randomUUID()}")
+      val stage = new Stage(batch.sparkSession, storeDir, "events", batchId)
+      stage.write(cached.observe(obs,
           count(lit(1)).as("n_total"),
           count(when(!col("valid"), lit(1))).as("n_invalid"))
-        .filter(col("valid")).drop("valid")
-        .coalesce(1)
-        .withColumn("ts_day", dayOf(col("ts_ms")))
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("ts_day").parquet(stage.toString)
+        .filter(col("valid")).drop("valid"))
       val m = obs.get
       val nTotal = m("n_total").asInstanceOf[Long]
       val nInvalid = m("n_invalid").asInstanceOf[Long]
       if (nTotal == 0 || nInvalid > 0) {
-        fs.delete(stage, true)
-        val parent = stage.getParent
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-        return (nTotal, nInvalid)
+        stage.discard(); return (nTotal, nInvalid)
       }
-      if (fs.exists(targetPath)) fs.delete(targetPath, true)
-      require(fs.rename(stage, targetPath),
-        s"events batch commit rename failed for $targetPath")
+      stage.commit()
       Instrumentation.global.inc("ingest.rows.events", nTotal)
       (nTotal, 0L)
-    } finally {
-      if (!pinned) {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        spark.conf.set("spark.sql.shuffle.partitions", shufBefore)
-        spark.conf.set(
-          "spark.sql.sources.parallelPartitionDiscovery.threshold", discBefore)
-      }
-      cached.unpersist()
-      ()
-    }
+    } finally if (owned) cached.unpersist()
   }
 
+  /** One events micro-batch — the same idempotence discipline as
+    * [[processBatch]]: day-partitioned parquet under an overwrite batch-id
+    * partition, so a replayed batch replaces rather than duplicates its own
+    * rows; invalid records go to an errors sink instead of vanishing (the
+    * streaming contract accepts partially, unlike the facade's
+    * [[processEventsBatchFused]]). Events are immutable annotations with
+    * no rollup ladder, so ingest is append-only — no re-roll step. */
   def processEventsBatch(batch: DataFrame, storeDir: String, batchId: Long = 0L): Unit = {
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (cached, owned) = cachedFor(batch)
     try {
-      // one accounting aggregate, emptiness included (see processBatch)
+      // one accounting aggregate, emptiness included
       val estats = cached.groupBy(col("valid")).count().collect()
         .map(r => (r.getBoolean(0), r.getLong(1))).toMap
       if (estats.isEmpty) return
@@ -1281,7 +961,7 @@ object IngestStream {
       valid.withColumn("ts_day", dayOf(col("ts_ms")))
         .write.mode("overwrite").partitionBy("ts_day")
         .parquet(s"$storeDir/events/batch_id=$batchId")
-    } finally cached.unpersist()
+    } finally if (owned) cached.unpersist()
   }
 
   /** Start the events ingest stream over a source of JSON lines. Epoch
@@ -1422,174 +1102,80 @@ object IngestStream {
       }
   }
 
-  /** One statsd micro-batch, same discipline as [[processBatch]]:
-    * (1) append the PARSED payload rows to `preagg_raw` under an
-    * overwrite batch-id partition (idempotent under foreachBatch replays);
-    * (2) recompute the per-kind 5m tier for exactly the touched days from
-    * the FULL parsed store — recompute-from-source, never
-    * read-modify-write, so a late flush simply re-dirties its day;
-    * (3) optionally roll the coarser kind ladders for the same dirty days.
-    * This is the stored-cascade analog of the reference's
-    * /ingest/aggregated → preaggregated CF → per-slot rollup pipeline.
+  /** What a statsd ingest call hands back: dirty days, the rejected
+    * records (tenant, name, ts — the aggregated route's only constraint
+    * is the collection-time window), and the batch total. */
+  final case class PreaggResult(
+      dirtyDays: Seq[Long],
+      rejects: Array[(String, String, Option[Long])],
+      nTotal: Long)
+
+  /** One statsd batch — the numeric writer's protocol ([[writeBatch]]) on
+    * the preagg route: the PARSED payload rows stage into a hidden
+    * `preagg_raw/.staging-<id>` dir with the accounting (total, reject
+    * rows, dirty days, per-kind catalog locators) riding the write as
+    * observed metrics; the rejects sink runs only when rejects exist;
+    * `onDirtyDays` (the facade's durable marker) lands before the catalog
+    * and the commit rename; then the per-kind 5m tier recomputes for
+    * exactly the touched days from the FULL parsed store —
+    * recompute-from-source, never read-modify-write, so a late flush
+    * simply re-dirties its day — and, with `cascade`, the coarser kind
+    * ladders roll for the same days. `rollup = false` defers both to the
+    * caller's drain ([[rollPreaggDirtyDaysNow]]). This is the stored-
+    * cascade analog of the reference's /ingest/aggregated → preaggregated
+    * CF → per-slot rollup pipeline.
     *
     * `[minTs, maxTs]` bounds the accepted flush timestamps — the epoch
-    * validation the basic path gets from [[withValidity]] (reference:
+    * validation the basic path gets from [[validExpr]] (reference:
     * JSONMetric.java:28-39 bean validation applies to the aggregated
     * handler's payloads too). Without it a flush carrying a stale ts_ms
     * older than the preagg_raw TTL horizon re-dirties a retention-pruned
     * day: the recompute rebuilds that day's 5m tier from ONLY the late
-    * flush and the cascade dynamic-overwrites the day in the 20m-1440m
-    * tiers, silently destroying history their longer TTLs were meant to
-    * keep. Streaming callers get this bound from [[startAggregated]]'s
+    * flush and the cascade overwrites the day in the 20m-1440m tiers,
+    * silently destroying history their longer TTLs were meant to keep.
+    * Streaming callers get this bound from [[startAggregated]]'s
     * `maxAgeMs` (re-evaluated per batch); direct batch callers pass
     * `minTs = now - Granularity.MIN_5.retentionMillis` (the preagg_raw TTL
-    * horizon) computed at call time. Rejects land in `preagg_errors`, like
-    * the basic path's invalid sink. */
+    * horizon) computed at call time. Rejects land in `preagg_errors`. */
   def processAggregatedBatch(parsed: DataFrame, storeDir: String,
       batchId: Long = 0L, cascade: Boolean = true,
       minTs: Long = 0L, maxTs: Long = Long.MaxValue,
       rollup: Boolean = true,
       virginHint: Option[Boolean] = None,
-      statsHint: Option[Array[(Boolean, Option[Long], Long)]] = None)
-      : Seq[Long] = {
+      onDirtyDays: Seq[Long] => Unit = _ => ()): PreaggResult = {
     val spark = parsed.sparkSession
-    // probed BEFORE any write (see processTypedBatch's catalog marker)
+    // probed BEFORE any write (see writeBatch's catalog marker)
     val virgin = virginHint.getOrElse(!storeHasData(spark, storeDir))
-    val cached0 = parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (cached, owned) = cachedFor(parsed)
     try {
-      // 3VL-safe: a null ts_ms must read as out-of-window, not NULL (which
-      // would vanish from both the store and the errors sink). ONE
-      // accounting aggregate for emptiness + reject total + dirty days +
-      // rows-written meter — the same per-batch job-count discipline as
-      // processBatch (a null ts_ms groups under a null day in the
-      // rejected arm).
+      // 3VL-safe: a null ts_ms reads as out-of-window, never NULL (which
+      // would vanish from both the store and the errors sink)
       val inWindow = coalesce(col("ts_ms").between(minTs, maxTs), lit(false))
-      val stats = statsHint.getOrElse(cached0
-        .groupBy(inWindow.as("ok"), dayOf(col("ts_ms")).as("ts_day")).count()
-        .collect()
-        .map(r => (r.getBoolean(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2))))
-      if (stats.isEmpty) return Nil
-      Instrumentation.global.inc("ingest.batches.preagg")
-      val nRejected = stats.collect { case (false, _, n) => n }.sum
-      if (nRejected > 0) {
-        Instrumentation.global.inc("ingest.rows.errors.preagg", nRejected)
-        cached0.filter(!inWindow).write.mode("overwrite")
-          .parquet(s"$storeDir/preagg_errors/batch_id=$batchId")
-      }
-      val cached = cached0.filter(inWindow)
-      val dayCounts = stats.collect { case (true, Some(day), n) => (day, n) }
-      if (dayCounts.isEmpty) return Nil
-      // catalog before data (see processBatch's crash-ordering note)
-      writeCatalog(cached, storeDir, batchId, src = "preagg",
-        familyCol = col("kind"), markComplete = virgin,
-        rowCountHint = Some(dayCounts.map(_._2).sum))
-      cached.withColumn("ts_day", dayOf(col("ts_ms")))
-        .write.mode("overwrite").partitionBy("ts_day")
-        .parquet(s"$storeDir/preagg_raw/batch_id=$batchId")
-      Instrumentation.global.inc("ingest.rows.preagg_raw",
-        dayCounts.map(_._2).sum)
-      val dirtyDays = dayCounts.map(_._1).toSeq
-      if (rollup)
-        rollPreaggDirtyDaysNow(spark, storeDir, dirtyDays, cascade)
-      dirtyDays
-    } finally cached0.unpersist()
-  }
-
-  /** Re-roll the per-kind 5m preagg tiers (and optionally the coarser
-    * ladders) for `days` from the parsed-flush store — the preagg twin of
-    * [[rollDirtyDaysNow]], both the synchronous tail of
-    * [[processAggregatedBatch]] and the background arm of its deferred
-    * mode (`rollup = false`). */
-  /** [[FusedIngestResult]]'s preagg twin: dirty days, the rejected
-    * records (tenant, name, ts — the aggregated route's only constraint
-    * is the collection-time window), and the batch total. */
-  final case class FusedPreaggResult(
-      dirtyDays: Seq[Long],
-      rejects: Array[(String, String, Option[Long])],
-      nTotal: Long)
-
-  /** ONE-JOB aggregated (statsd) ingest — [[processTypedBatchFused]]'s
-    * discipline on the preagg route: the accounting (total, reject rows,
-    * dirty days, per-kind catalog locators) rides the staged `preagg_raw`
-    * write as observed metrics; the rejects sink runs only when rejects
-    * exist; the durable dirty-day marker lands between the hidden staged
-    * write and the commit rename; tiers roll after the rename
-    * (synchronous mode) or on the caller's drain (deferred). */
-  def processAggregatedBatchFused(parsed: DataFrame, storeDir: String,
-      batchId: Long, cascade: Boolean = true,
-      minTs: Long = 0L, maxTs: Long = Long.MaxValue,
-      rollup: Boolean = true,
-      virginHint: Option[Boolean] = None,
-      onDirtyDays: Seq[Long] => Unit = _ => ()): FusedPreaggResult = {
-    val spark = parsed.sparkSession
-    val virgin = virginHint.getOrElse(!storeHasData(spark, storeDir))
-    val cached = parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // request-sized planning confs: the facade routes through a dedicated
-    // pinned session (newIngestSession) so nothing reader-shared is ever
-    // mutated; the set/restore fallback remains ONLY for callers whose
-    // batch is bound to a session they own end-to-end (streaming
-    // foreachBatch micro-batch frames)
-    val pinned = isPinnedIngestSession(spark)
-    val aqeBefore =
-      if (pinned) null else spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufBefore =
-      if (pinned) null else spark.conf.get("spark.sql.shuffle.partitions")
-    val discBefore = if (pinned) null else spark.conf.get(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-    if (!pinned) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
-    }
-    try {
-      // 3VL-safe: a null ts_ms reads as out-of-window, never NULL
-      val inWindow = coalesce(col("ts_ms").between(minTs, maxTs), lit(false))
-      val obs = org.apache.spark.sql.Observation(
-        s"preagg_${batchId}_${java.util.UUID.randomUUID()}")
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$storeDir/preagg_raw/.staging-$batchId")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val targetPath = new org.apache.hadoop.fs.Path(
-        s"$storeDir/preagg_raw/batch_id=$batchId")
-      val isReplay = fs.exists(targetPath)
-      cached.observe(obs,
-          count(lit(1)).as("n_total"),
+      val observeLocators = locatorsFitDriver(cached)
+      val obs = Observation(s"preagg_${batchId}_${java.util.UUID.randomUUID()}")
+      val stage = new Stage(spark, storeDir, "preagg_raw", batchId)
+      stage.write(cached.observe(obs,
+          count(lit(1)).as("n_total"), Seq(
           count(when(inWindow, lit(1))).as("n_ok"),
           collect_set(when(inWindow, dayOf(col("ts_ms")))).as("days"),
-          collect_set(when(inWindow, struct(col("tenant_id"),
-            col("metric_name"), col("kind")))).as("locs"),
           collect_list(when(!inWindow, struct(col("tenant_id"),
-            col("metric_name"), col("ts_ms")))).as("rejects"))
-        .filter(inWindow)
-        .coalesce(1)
-        .withColumn("ts_day", dayOf(col("ts_ms")))
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("ts_day").parquet(stage.toString)
+            col("metric_name"), col("ts_ms")))).as("rejects")) ++
+          (if (!observeLocators) Nil else Seq(
+            collect_set(when(inWindow, struct(col("tenant_id"),
+              col("metric_name"), col("kind")))).as("locs"))): _*)
+        .filter(inWindow))
       val m = obs.get
+      def rows(k: String) = m(k).asInstanceOf[scala.collection.Seq[Row]]
       val nTotal = m("n_total").asInstanceOf[Long]
       val nOk = m("n_ok").asInstanceOf[Long]
-      def discardStage(): Unit = {
-        fs.delete(stage, true)
-        val parent = stage.getParent
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-        ()
-      }
       if (nTotal == 0) {
-        discardStage(); return FusedPreaggResult(Nil, Array.empty, 0L)
+        stage.discard(); return PreaggResult(Nil, Array.empty, 0L)
       }
       Instrumentation.global.inc("ingest.batches.preagg")
-      val rejects = m("rejects").asInstanceOf[scala.collection.Seq[Any]]
-        .map { a =>
-          val r = a.asInstanceOf[org.apache.spark.sql.Row]
-          (Option(r.getString(0)).getOrElse(""),
-            Option(r.getString(1)).getOrElse(""),
-            if (r.isNullAt(2)) None else Some(r.getLong(2)))
-        }.toArray
+      val rejects = rows("rejects").map(r =>
+        (Option(r.getString(0)).getOrElse(""),
+          Option(r.getString(1)).getOrElse(""),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)))).toArray
       if (rejects.nonEmpty) {
         Instrumentation.global.inc("ingest.rows.errors.preagg",
           rejects.length.toLong)
@@ -1597,45 +1183,32 @@ object IngestStream {
           .parquet(s"$storeDir/preagg_errors/batch_id=$batchId")
       }
       if (nOk == 0) {
-        discardStage(); return FusedPreaggResult(Nil, rejects, nTotal)
+        stage.discard(); return PreaggResult(Nil, rejects, nTotal)
       }
-      val days = m("days").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Long]).toSeq
+      val days = m("days").asInstanceOf[scala.collection.Seq[Long]].toSeq
       onDirtyDays(days)
       // catalog BEFORE the data unhides; per-row kind IS the family, and
-      // the aggregated wire shape carries no unit (the classic path's
-      // max(unit) over all-null is null — identical content)
-      val locs = m("locs").asInstanceOf[scala.collection.Seq[Any]]
-        .map { a =>
-          val r = a.asInstanceOf[org.apache.spark.sql.Row]
-          (r.getString(0), r.getString(1), r.getString(2),
-            null: String)
-        }.distinct.toArray
-      writeCatalogLocators(spark, storeDir, batchId, "preagg", locs,
+      // the aggregated wire shape carries no unit (max(unit) over all-null
+      // is null)
+      writeCatalog(storeDir, batchId, "preagg",
+        if (!observeLocators) None
+        else Some(rows("locs").map(r => (r.getString(0), r.getString(1),
+          r.getString(2), null: String)).toArray),
+        cached.filter(inWindow).select(col("tenant_id"), col("metric_name"),
+          col("kind").as("family"), lit(null).cast("string").as("unit")),
         markComplete = virgin)
-      if (isReplay) fs.delete(targetPath, true)
-      require(fs.rename(stage, targetPath),
-        s"preagg batch commit rename failed for $targetPath")
+      stage.commit()
       Instrumentation.global.inc("ingest.rows.preagg_raw", nOk)
       if (rollup) rollPreaggDirtyDaysNow(spark, storeDir, days, cascade)
-      FusedPreaggResult(days, rejects, nTotal)
-    } finally {
-      if (!pinned) {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        spark.conf.set("spark.sql.shuffle.partitions", shufBefore)
-        spark.conf.set(
-          "spark.sql.sources.parallelPartitionDiscovery.threshold", discBefore)
-      }
-      cached.unpersist()
-      ()
-    }
+      PreaggResult(days, rejects, nTotal)
+    } finally if (owned) cached.unpersist()
   }
 
   /** `preagg_raw`'s on-disk schema, explicit for the same reason as
     * [[rawStoreSchema]]: the drain's read must not pay a footer-sampling
     * job per re-roll. Fixed by [[graft.operators.Preaggregated]]'s parsed
     * shape. */
-  private val preaggRawSchema = StructType(Seq(
+  private[graft] val preaggRawSchema = StructType(Seq(
     StructField("tenant_id", StringType),
     StructField("metric_name", StringType),
     StructField("ts_ms", LongType),
@@ -1654,6 +1227,11 @@ object IngestStream {
     StructField("batch_id", LongType),
     StructField("ts_day", LongType)))
 
+  /** Re-roll the per-kind 5m preagg tiers (and optionally the coarser
+    * ladders) for `days` from the parsed-flush store — the preagg twin of
+    * [[rollDirtyDaysNow]], both the synchronous tail of
+    * [[processAggregatedBatch]] and the background arm of its deferred
+    * mode (`rollup = false`). */
   def rollPreaggDirtyDaysNow(spark: SparkSession, storeDir: String,
       days: Seq[Long], cascade: Boolean = true): Unit = {
     if (days.isEmpty) return

@@ -43,6 +43,19 @@ class InstrumentationSpec extends AnyFunSuite with SparkSuite {
     assert(js.contains("\"a.b\": 5"))
   }
 
+  test("emitRollup isolates a listener's ordinary exception but lets a " +
+    "fatal error propagate") {
+    val r = new Instrumentation.Registry
+    val ev = Instrumentation.RollupEvent("s", "basic", Granularity.MIN_5,
+      Seq(0L))
+    r.addRollupListener(_ => throw new RuntimeException("boom"))
+    r.addRollupListener(_ => throw new LinkageError("fatal"))
+    val thrown = intercept[LinkageError](r.emitRollup(ev))
+    assert(thrown.getMessage === "fatal")
+    // the ordinary failure of the first listener was still counted
+    assert(r.count("rollup.listener.errors") === 1L)
+  }
+
   test("ingest meters batches/rows/rejects; re-rolls emit events with the " +
     "exact dirty days; the catalog answers family+unit lookups") {
     Instrumentation.global.reset()
@@ -105,7 +118,7 @@ class InstrumentationSpec extends AnyFunSuite with SparkSuite {
            | "ts_ms": ${day0 + 1000}, "value": "active"}""".stripMargin
           .replaceAll("\n", ""))
         .toDF("value")
-      IngestStream.processTypedBatch(IngestStream.parseJsonTyped(lines), store)
+      IngestStream.processTypedBatchFused(IngestStream.parseJsonTyped(lines), store)
       assert(Instrumentation.global.count("ingest.batches") === 1L,
         "string-only batches must not vanish from the batch counter")
       assert(Instrumentation.global.count("ingest.rows.metrics_string") === 1L)

@@ -1934,12 +1934,12 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
         body.contains(""""id": "app.b""""), body)
       info(s"warm jobs: render ${renderJobs.mkString(" | ")}; views " +
         s"${viewsJobs.mkString(" | ")}; find ${findJobs.mkString(" | ")}")
-      // every job left is data plane: FULL render = the raw table's
-      // schema inference, the names broadcast and the collect; points=
-      // views = the raw schema inference for the tail-bucket repair, the
-      // tier and raw scans' broadcasts and the collect; find = none. The
-      // catalog resolution and the tier's day coverage run no job
-      assert((renderJobs.size, viewsJobs.size, findJobs.size) === ((3, 7, 0)),
+      // every job left is data plane: FULL render = the names broadcast
+      // and the collect; points= views = the tier and raw scans'
+      // broadcasts and the collect; find = none. The raw store reads with
+      // the writer's schema (no inference job), and the catalog
+      // resolution and the tier's day coverage run no job
+      assert((renderJobs.size, viewsJobs.size, findJobs.size) === ((2, 6, 0)),
         s"render: $renderJobs; views: $viewsJobs; find: $findJobs")
       // no warm request reloaded the catalog; each one took the snapshot
       // exactly once (one fence check per request, shared by its lookups)

@@ -155,7 +155,7 @@ class IngestStreamSpec extends AnyFunSuite with SparkSuite {
       line("boolmetric", "true"),     // boolean → metrics_string, is_bool
       line("late_str", "\"x\"").replace(s""""ts_ms":$t""", s""""ts_ms":${t - 100L * 86400000L}"""))
       .toDF("value")
-    IngestStream.processTypedBatch(IngestStream.parseJsonTyped(lines), store,
+    IngestStream.processTypedBatchFused(IngestStream.parseJsonTyped(lines), store,
       minTs = t - 86400000L, maxTs = t + 86400000L)
     val full = spark.read.parquet(s"$store/metrics_full")
     assert(full.select("metric_name").as[String].collect().toSet === Set("num"))

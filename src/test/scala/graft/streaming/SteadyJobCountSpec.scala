@@ -10,18 +10,17 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Pins the steady-state micro-batch's Spark JOB COUNT — the measured
   * latency floor on local[32] is ~300 ms fixed per job (docs/SCALE.md), so
-  * the fused observe-on-write path's whole point is the count: staged raw
-  * write (with the accounting riding as observed metrics) + the dirty-day
-  * 5m re-roll publish, and nothing else on a warm store. The classic path
-  * pays two more (stats aggregate + catalog collect). */
+  * the ingest writer's whole point is the count: staged raw write (with
+  * the accounting riding as observed metrics) + the dirty-day 5m re-roll
+  * publish, and nothing else on a warm store. */
 class SteadyJobCountSpec extends AnyFunSuite with SparkSuite {
-  import spark.implicits._
-
   private val base = 1704067200000L
 
-  private def mkBatch(n: Int, shift: Long) = IngestStream.withValidity(
-    (0 until n).map(i => ("t1", s"m${i % 8}", base + shift + i * 1000L,
-      i.toDouble, 86400, "ms"))
+  /** A request-sized batch planned on `session`. */
+  private def mkBatch(session: org.apache.spark.sql.SparkSession, n: Int,
+      shift: Long) = IngestStream.withValidity(
+    session.createDataFrame((0 until n).map(i => ("t1", s"m${i % 8}",
+        base + shift + i * 1000L, i.toDouble, 86400, "ms")))
       .toDF("tenant_id", "metric_name", "ts_ms", "value",
         "ttl_seconds", "unit"),
     1L, Long.MaxValue)
@@ -45,29 +44,23 @@ class SteadyJobCountSpec extends AnyFunSuite with SparkSuite {
     sites.asScala.toSeq
   }
 
-  test("fused steady batch issues NO driver collect job (accounting and " +
-    "catalog ride the write); classic pays the collect") {
+  test("a steady processBatch on the request-sized ingest session runs " +
+    "NO driver collect job: the staged raw write and the 5m re-roll only") {
     val store = Files.createTempDirectory("graft_sjc").toString
+    val ingest = IngestStream.newIngestSession(spark)
     // warm: first batch seeds store + catalog memo (cost not under test)
-    IngestStream.processBatch(mkBatch(64, 0L), store, batchId = 0L)
-    val fused = jobSites {
-      IngestStream.processBatch(mkBatch(64, 600000L), store, batchId = 1L,
-        fuseObserve = true)
+    IngestStream.processBatch(mkBatch(ingest, 64, 0L), store, batchId = 0L)
+    val jobs = jobSites {
+      IngestStream.processBatch(mkBatch(ingest, 64, 600000L), store,
+        batchId = 1L)
     }
-    val classic = jobSites {
-      IngestStream.processBatch(mkBatch(64, 1200000L), store, batchId = 2L)
-    }
-    info(s"fused jobs: ${fused.mkString(" | ")}")
-    info(s"classic jobs: ${classic.mkString(" | ")}")
-    // the fusion pin: no stats/catalog collect job anywhere in the fused
-    // trace (the only actions are the two staged writes + their AQE
-    // materializations); the classic path pays the collect
-    assert(!fused.exists(_.contains("collect at")),
-      s"fused path ran a driver collect: ${fused.mkString(" | ")}")
-    assert(classic.exists(_.contains("collect at")),
-      "classic path lost its accounting collect — spec shape outdated")
-    assert(fused.size <= classic.size,
-      s"fused (${fused.size}) ran more jobs than classic (${classic.size})")
+    info(s"steady jobs: ${jobs.mkString(" | ")}")
+    // no stats/catalog collect anywhere: the accounting and the catalog
+    // locators ride the staged write
+    assert(!jobs.exists(_.contains("collect at")),
+      s"steady batch ran a driver collect: ${jobs.mkString(" | ")}")
+    assert(jobs.size === 2,
+      s"steady batch ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
   }
 
   test("a repeat clean deferred HTTP POST costs exactly ONE Spark job " +

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -24,7 +25,7 @@ object Bench {
     try {
       SparkEntry.queries.get("q_rollup_basic_5m").foreach(_(spark, sfDir).count())
       SparkEntry.queries.get("q_tpch_q5").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b → time just those queries (local A/B
     // iteration on a regression; driver leaves it unset → full suite).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -43,15 +44,23 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
       .foreach { n =>
         try SparkEntry.queries.get(n).foreach(_(spark, sfDir).count())
-        catch { case _: Throwable => }
+        catch { case NonFatal(_) => }
       }
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n)))
+    // a query that throws keeps its timed sample (the existing keys stay
+    // as they were) and is named in "failed": its time is not a valid
+    // measurement. Fatal errors end the run.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val samples: Map[String, Seq[Double]] = (1 to runs).flatMap { _ =>
       names.map { name =>
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+        }
         name -> (System.nanoTime() - t0) / 1e9
       }
     }.groupBy(_._1).map { case (n, ts) => n -> ts.map(_._2) }
@@ -69,7 +78,8 @@ object Bench {
       if (runs <= 1) ""
       else "," + names.map(n => s"\"" + n + "\":[" + samples(n).mkString(",") + "]")
         .mkString("\"samples\":{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs$sampleJson}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs$sampleJson,"failed":$failedJson}"""
     // The driver parses stdout for this line; sbt's logger can prefix or
     // swallow it (BENCH_r01 "parsed": null), so emit it on a bare line AND
     // persist it to a file (overridable via SPARK_GRAFT_BENCH_OUT).
@@ -78,7 +88,7 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     spark.stop()
   }
 }

@@ -12,7 +12,7 @@ import java.util.concurrent.atomic.LongAdder
   * (`blueflood-core/.../eventemitter/RollupEventEmitter.java:16-60`). Here
   * the same two capabilities are a dependency-free registry:
   *
-  *  - **Counters/timers** keyed by dotted name (`ingest.rows.metrics_full`,
+  *  - **Counters** keyed by dotted name (`ingest.rows.metrics_full`,
   *    `query.reads.basic`, `http.responses.200`), incremented from the
   *    ingest/query/HTTP paths. [[LongAdder]]-backed so hot-path increments
   *    are wait-free under the server's worker pool; zero cost to Spark
@@ -44,35 +44,19 @@ object Instrumentation {
 
   final class Registry {
     private val counters = new ConcurrentHashMap[String, LongAdder]()
-    private val timerNanos = new ConcurrentHashMap[String, LongAdder]()
     private val listeners =
       new java.util.concurrent.CopyOnWriteArrayList[RollupEvent => Unit]()
 
     def inc(name: String, delta: Long = 1L): Unit =
       counters.computeIfAbsent(name, _ => new LongAdder).add(delta)
 
-    /** Time a block into `<name>.calls` + `<name>.nanos` — the registry's
-      * analog of the reference's per-CF read/write `Timer`s. */
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      try f
-      finally {
-        timerNanos.computeIfAbsent(name, _ => new LongAdder)
-          .add(System.nanoTime() - t0)
-        inc(s"$name.calls")
-      }
-    }
-
     def count(name: String): Long =
       Option(counters.get(name)).map(_.sum()).getOrElse(0L)
 
-    /** Point-in-time snapshot of every counter plus `<timer>.nanos` sums —
-      * sorted for stable output. */
+    /** Point-in-time snapshot of every counter. */
     def snapshot(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
-      val c = counters.asScala.map { case (k, v) => k -> v.sum() }
-      val t = timerNanos.asScala.map { case (k, v) => s"$k.nanos" -> v.sum() }
-      (c ++ t).toMap
+      counters.asScala.map { case (k, v) => k -> v.sum() }.toMap
     }
 
     def snapshotJson(): String =
@@ -100,7 +84,7 @@ object Instrumentation {
 
     /** Test isolation: drop all counts and listeners. */
     def reset(): Unit = {
-      counters.clear(); timerNanos.clear(); listeners.clear()
+      counters.clear(); listeners.clear()
     }
   }
 

@@ -53,7 +53,9 @@ object Tables {
     * exchange-free scan-rooted plans — every call site's shape — the
     * partition count is read off the UNEXECUTED physical plan's file scans,
     * which costs a plan, not a job; (3) only plans with exchanges or
-    * non-file leaves fall back to the `.rdd` probe. Streaming inputs (where
+    * non-file leaves fall back to the `.rdd` probe, counted as
+    * `tables.spread_cpu.rdd_probes` (no production call site takes it;
+    * QueriesSpec pins that). Streaming inputs (where
     * `.rdd` throws) return unchanged. */
   def spreadCpu(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
@@ -65,7 +67,13 @@ object Tables {
     }
     if (callerDistributed) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (staticPartitionCount(df).getOrElse(df.rdd.getNumPartitions) < target)
+    val n = staticPartitionCount(df).getOrElse {
+      // the probe may run the input's lineage as jobs: counted, so a call
+      // site that slips off the job-free path shows in the registry
+      Instrumentation.global.inc("tables.spread_cpu.rdd_probes")
+      df.rdd.getNumPartitions
+    }
+    if (n < target)
       df.repartition(target)
     else df
   }

@@ -3,14 +3,14 @@ package graft.query
 import graft.core.{CatalogSnapshot, DateTimeParser, Granularity, GlobPattern, Tables}
 import graft.operators.{Discovery, Rollups}
 import graft.streaming.IngestStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The user-facing query API — the §3.1 lifecycle as one facade
   * (reference: HttpRollupsQueryHandler.java:115-161 +
   * HttpMultiRollupsQueryHandler + RollupHandler.getRollupByGranularity):
   * parse graphite-style from/to, resolve the metric set by glob, pick the
-  * resolution (points-mode or explicit), aggregate the range, join units,
+  * resolution (points-mode or explicit), aggregate the range, attach units,
   * project requested stats, return time-ordered buckets.
   */
 object MetricsQueryApi {
@@ -82,7 +82,7 @@ object MetricsQueryApi {
       nowMillis: Long = System.currentTimeMillis(),
       maxBatch: Int = MaxMetricsPerBatchQuery,
       catalogOverride: Option[DataFrame] = None): DataFrame = {
-    val r = resolveQuery(spark, p, nowMillis, maxBatch,
+    val r = resolveQuery(p, nowMillis, maxBatch,
       frameResolver(catalogOverride.getOrElse(Tables.catalog(spark, dir)), p))
     if (r.g.isFull) {
       // FULL serves the RAW SAMPLES themselves, not buckets (reference:
@@ -92,20 +92,16 @@ object MetricsQueryApi {
       // zooming into an incident window gets actual points with their
       // actual timestamps. No snapping: samples in [from, to) as-is.
       val raw = Tables.metricsRange(spark, dir, Some((r.fromMs, r.toMs)))
-        .filter(col("tenant_id") === p.tenantId)
-        .join(broadcast(r.names), Seq("tenant_id", "metric_name"))
-      return projectStats(rawAsStats(raw), r.select, r.perMetricDefaults)
-        .orderBy("metric_name", "bucket_ms")
+        .filter(r.keep)
+      return r.serve(rawAsStats(raw))
     }
     val gEff = r.g
     // snap so an unaligned start doesn't truncate the first window
     val snappedFrom = gEff.snap(r.fromMs)
     val pts = Tables.metricsRange(spark, dir, Some((snappedFrom, r.toMs)))
-      .filter(col("tenant_id") === p.tenantId)
-      .join(broadcast(r.names), Seq("tenant_id", "metric_name"))
+      .filter(r.keep)
     val agged = pts
-      .groupBy(col("tenant_id"), col("metric_name"), col("unit"),
-        col("rollup_type"),
+      .groupBy(col("tenant_id"), col("metric_name"),
         Tables.bucketMs(col("ts_ms"), gEff).as("bucket_ms"))
       .agg(
         count(col("value")).as("num_points"),
@@ -116,8 +112,7 @@ object MetricsQueryApi {
         var_pop(col("value")).as("var_v"),
         max(struct(col("ts_ms"), col("value"))).getField("value").as("latest_v"))
       .withColumn("rate", col("num_points") / lit(gEff.millis / 1000.0))
-    projectStats(agged, r.select, r.perMetricDefaults)
-      .orderBy("metric_name", "bucket_ms")
+    r.serve(agged)
   }
 
   /** The resolved prelude every read-path variant shares: datetime parse,
@@ -125,19 +120,60 @@ object MetricsQueryApi {
     * guard, and the stat-selection rules (explicit `select=` vs per-metric
     * defaults by rollup_type). */
   private final case class ResolvedQuery(
-      fromMs: Long, toMs: Long, g: Granularity,
-      names: DataFrame, select: Seq[String], perMetricDefaults: Boolean)
+      fromMs: Long, toMs: Long, g: Granularity, tenantId: String,
+      locators: Seq[(String, String, String)], select: Seq[String],
+      perMetricDefaults: Boolean) {
+
+    /** The in-scan filter for the resolved locators: the query's tenant
+      * and `metric_name IN (…)` over at most [[MaxMetricsPerBatchQuery]]
+      * names, already on the driver — no join, so no broadcast job, and
+      * the parquet scan can skip row groups by it. */
+    def keep: Column = col("tenant_id") === tenantId &&
+      col("metric_name").isin(locators.map(_._1): _*)
+
+    /** The read's output: `rows` (narrowed by [[keep]]) with each name's
+      * `unit` and `rollup_type` attached from literal maps keyed by name,
+      * projected to `stats` ([[projectStats]]) unless `project` is given,
+      * and ordered by (metric_name, bucket_ms). A read whose optimized
+      * plan is at most `spark.sql.autoBroadcastJoinThreshold` bytes (the
+      * size Spark already trusts to one task's memory) is ordered inside
+      * ONE partition — the same total order without the range sampling
+      * job and shuffle of a global sort, and an output every downstream
+      * window, aggregate or sort plans over without an exchange. Larger
+      * reads keep the parallel scan and a global `orderBy`; a threshold of
+      * -1 always takes that branch. The size comes from plan statistics:
+      * no Spark job. */
+    def serve(rows: DataFrame, stats: Seq[String] = select,
+        project: Option[DataFrame => DataFrame] = None): DataFrame = {
+      def byName(f: ((String, String, String)) => String): Column =
+        typedLit(locators.map(l => l._1 -> f(l)).toMap).apply(col("metric_name"))
+      val located = rows.withColumn("unit", byName(_._2))
+        .withColumn("rollup_type", byName(_._3))
+      val out = project.getOrElse(
+        (d: DataFrame) => projectStats(d, stats, perMetricDefaults))(located)
+      val threshold = out.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      if (threshold >= 0 &&
+          out.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
+        out.coalesce(1).sortWithinPartitions("metric_name", "bucket_ms")
+      else out.orderBy("metric_name", "bucket_ms")
+    }
+  }
 
   /** Glob → at most `n` cataloged (name, unit, rollup_type) rows of the
     * query's tenant. */
   private type Resolver = Int => Seq[(String, String, String)]
 
   /** Resolution over a catalog frame (tenant_id, metric_name, unit,
-    * rollup_type): one filtered, limited collect. */
+    * rollup_type): one filtered, limited collect of one row per name. A
+    * frame listing a name twice collapses to that name's max unit and min
+    * rollup_type, the rule [[storeCatalog]] applies to the persisted
+    * catalog: a name is one series, never one series per catalog row. */
   private def frameResolver(catalog: DataFrame, p: Params): Resolver = n =>
     catalog
       .filter(col("tenant_id") === p.tenantId &&
         col("metric_name").rlike(GlobPattern.toAnchoredRegex(p.metricGlob)))
+      .groupBy(col("tenant_id"), col("metric_name"))
+      .agg(max(col("unit")).as("unit"), min(col("rollup_type")).as("rollup_type"))
       .limit(n)
       .collect().toSeq
       .map(r => (r.getAs[String]("metric_name"), r.getAs[String]("unit"),
@@ -157,8 +193,8 @@ object MetricsQueryApi {
       case None => frameResolver(fallback, p)
     }
 
-  private def resolveQuery(spark: SparkSession, p: Params, nowMillis: Long,
-      maxBatch: Int, resolve: Resolver): ResolvedQuery = {
+  private def resolveQuery(p: Params, nowMillis: Long, maxBatch: Int,
+      resolve: Resolver): ResolvedQuery = {
     require(p.points.isDefined ^ p.resolution.isDefined,
       "exactly one of points= or resolution= required")
     // fail loud on unknown stat names: silently dropping a typo'd
@@ -175,16 +211,13 @@ object MetricsQueryApi {
         nowMillis = nowMillis))
 
     // resolve locators via discovery, then guard the batch width (O2).
-    // The guard caps the set at maxBatch rows, so resolve once and build a
-    // local broadcast side instead of re-running the catalog-derivation
-    // pipeline for count/type-lookup/join.
+    // The guard caps the set at maxBatch rows, so resolve once and keep
+    // the rows on the driver: the read filters and labels by them
+    // (ResolvedQuery.keep/serve) instead of re-running the
+    // catalog-derivation pipeline or joining against it.
     val resolved = resolve(maxBatch + 1)
     require(resolved.length <= maxBatch,
       s"batch query resolves > $maxBatch metrics")
-    import spark.implicits._
-    val names = resolved
-      .map { case (n, unit, rollupType) => (p.tenantId, n, unit, rollupType) }
-      .toDF("tenant_id", "metric_name", "unit", "rollup_type")
 
     // select= given → one uniform stat set; absent → per-metric defaults
     // by rollup_type, so keep the union of every resolved type's columns
@@ -197,19 +230,20 @@ object MetricsQueryApi {
           case Nil => defaultStats("basic")
           case u => u
         }
-    ResolvedQuery(fromMs, toMs, g, names, select, perMetricDefaults)
+    ResolvedQuery(fromMs, toMs, g, p.tenantId, resolved, select,
+      perMetricDefaults)
   }
 
   /** A raw sample as a one-point pseudo-rollup row, per the reference's
     * FULL-resolution stat mapping (BasicRollupsOutputSerializer.MetricStat
     * .convertRawSampleToObject, each enum arm): average/min/max/latest/
     * rate/sum → the sample value, variance → 0, numPoints → 1; the sample's
-    * own timestamp is the row's `bucket_ms`. Expects the joined frame
-    * carrying (tenant_id, metric_name, unit, rollup_type, ts_ms, value). */
+    * own timestamp is the row's `bucket_ms`. Expects a frame carrying
+    * (tenant_id, metric_name, ts_ms, value). */
   private def rawAsStats(raw: DataFrame): DataFrame = {
     val v = col("value").cast("double")
-    raw.select(col("tenant_id"), col("metric_name"), col("unit"),
-      col("rollup_type"), col("ts_ms").as("bucket_ms"),
+    raw.select(col("tenant_id"), col("metric_name"),
+      col("ts_ms").as("bucket_ms"),
       lit(1L).as("num_points"), v.as("sum_v"), v.as("average"),
       v.as("min_v"), v.as("max_v"), lit(0.0).as("var_v"),
       v.as("latest_v"), v.as("rate"))
@@ -352,7 +386,7 @@ object MetricsQueryApi {
       dirtyDays: Set[Long] = Set.empty,
       snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     graft.core.Instrumentation.global.inc("query.reads.basic")
-    val r = resolveQuery(spark, p, nowMillis, maxBatch,
+    val r = resolveQuery(p, nowMillis, maxBatch,
       catalogOverride.orElse(rawOverride.map(catalogFromRaw))
         .map(frameResolver(_, p))
         .getOrElse(storeResolver(spark, storeDir, p, snapshot)(
@@ -366,12 +400,8 @@ object MetricsQueryApi {
       // tier-only store (no metrics_full, no rawOverride) serves empty,
       // not a schema-inference crash.
       val raw = rawOverride.getOrElse(rawStoreOrEmpty(spark, storeDir))
-        .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs &&
-          col("tenant_id") === p.tenantId)
-        .select("tenant_id", "metric_name", "ts_ms", "value")
-        .join(broadcast(r.names), Seq("tenant_id", "metric_name"))
-      return projectStats(rawAsStats(raw), r.select, r.perMetricDefaults)
-        .orderBy("metric_name", "bucket_ms")
+        .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep)
+      return r.serve(rawAsStats(raw))
     }
     // only an EXPLICIT latest request is an error — with select= absent the
     // computed per-metric default union may carry `latest` merely because
@@ -388,7 +418,6 @@ object MetricsQueryApi {
     val tailStart = if (toMs % gEff.millis == 0) toMs else gEff.snap(toMs)
     val rangeDays: Seq[Long] =
       (snappedFrom - math.floorMod(snappedFrom, DayMs)) to (toMs - 1) by DayMs
-    val nameKeys = r.names.select("tenant_id", "metric_name")
 
     val tierPath = s"$storeDir/metrics_${gEff.name}"
     // snapshot-resolved read (graft.core.SnapshotStore): the file set is
@@ -415,9 +444,7 @@ object MetricsQueryApi {
         val slice = tier0
           .filter(col("ts_day").isin(servedDays: _*) &&
             col("bucket_ms") >= snappedFrom &&
-            col("bucket_ms") < tailStart &&
-            col("tenant_id") === p.tenantId)
-          .join(broadcast(nameKeys), Seq("tenant_id", "metric_name"), "left_semi")
+            col("bucket_ms") < tailStart && r.keep)
           .select(col("tenant_id"), col("metric_name"), col("bucket_ms"),
             col("num_points"), col("sum_v"), col("avg_v"),
             col("min_v"), col("max_v"), col("var_v"))
@@ -451,8 +478,7 @@ object MetricsQueryApi {
           else col("ts_ms") >= tailStart
         val raw = rawSrc
           .filter(col("ts_ms") >= snappedFrom && col("ts_ms") < toMs &&
-            (dayCond || tailCond) && col("tenant_id") === p.tenantId)
-          .join(broadcast(nameKeys), Seq("tenant_id", "metric_name"), "left_semi")
+            (dayCond || tailCond) && r.keep)
           .select("tenant_id", "metric_name", "ts_ms", "value")
         Some(rollupFromRaw(raw, gEff))
       }
@@ -462,11 +488,9 @@ object MetricsQueryApi {
     // so plain union — no anti-join needed
     val combined = (stored.toSeq ++ gapFilled.toSeq).reduce(_ unionByName _)
     val agged = combined
-      .join(broadcast(r.names), Seq("tenant_id", "metric_name"))
       .withColumnRenamed("avg_v", "average")
       .withColumn("rate", col("num_points") / lit(gEff.millis / 1000.0))
-    projectStats(agged, selEff, r.perMetricDefaults)
-      .orderBy("metric_name", "bucket_ms")
+    r.serve(agged, selEff)
   }
 
   /** The raw store, or an EMPTY frame of its query schema when retention
@@ -527,21 +551,18 @@ object MetricsQueryApi {
     val store = spark.read.parquet(path)
     // persisted catalog first (the snapshot), table-derivation fallback —
     // same discipline as the stored numeric reads
-    val r = resolveQuery(spark, p, nowMillis, maxBatch,
+    val r = resolveQuery(p, nowMillis, maxBatch,
       catalogOverride.map(frameResolver(_, p)).getOrElse(
         storeResolver(spark, storeDir, p, snapshot, Some("string"))(
           store.groupBy(col("tenant_id"), col("metric_name"))
             .agg(max(col("unit")).as("unit"))
             .withColumn("rollup_type", lit("string")))))
-    store
-      .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs &&
-        col("tenant_id") === p.tenantId)
-      .select("tenant_id", "metric_name", "ts_ms", "value_str", "is_bool")
-      .join(broadcast(r.names.select("tenant_id", "metric_name", "unit")),
-        Seq("tenant_id", "metric_name"))
-      .select(col("tenant_id"), col("metric_name"), col("unit"),
-        col("ts_ms").as("bucket_ms"), col("value_str"), col("is_bool"))
-      .orderBy("metric_name", "bucket_ms")
+    r.serve(
+      store.filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep)
+        .select("tenant_id", "metric_name", "ts_ms", "value_str", "is_bool"),
+      project = Some(_.select(col("tenant_id"), col("metric_name"),
+        col("unit"), col("ts_ms").as("bucket_ms"), col("value_str"),
+        col("is_bool"))))
   }
 
   // single source of truth with the cascade's dispatch — see
@@ -615,7 +636,7 @@ object MetricsQueryApi {
     require(preaggMerges.contains(kind),
       s"unknown pre-aggregated kind '$kind' (one of ${preaggMerges.keys.mkString(", ")})")
     graft.core.Instrumentation.global.inc(s"query.reads.$kind")
-    val r = resolveQuery(spark, p, nowMillis, maxBatch,
+    val r = resolveQuery(p, nowMillis, maxBatch,
       catalogOverride.map(frameResolver(_, p)).getOrElse(
         // pre-catalog stores derive the kind's locators from the parsed
         // flushes (statsd payloads carry no unit); that reads EMPTY once
@@ -635,15 +656,10 @@ object MetricsQueryApi {
       // single-slot merge the reference applies on write.
       val parsed = preaggRawOrEmpty(spark, storeDir)
         .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs &&
-          col("tenant_id") === p.tenantId && col("kind") === kind)
-        .join(broadcast(r.names.select("tenant_id", "metric_name")),
-          Seq("tenant_id", "metric_name"), "left_semi")
+          r.keep && col("kind") === kind)
       val tier = graft.operators.Preaggregated
         .tier1FromParsed(parsed, Granularity.FULL)(kind)
-      val agged = preaggToStats(tier, kind)
-        .join(broadcast(r.names), Seq("tenant_id", "metric_name"))
-      return projectStats(agged, r.select, r.perMetricDefaults)
-        .orderBy("metric_name", "bucket_ms")
+      return r.serve(preaggToStats(tier, kind))
     }
     val gEff = r.g
     val snappedFrom = gEff.snap(r.fromMs)
@@ -651,7 +667,6 @@ object MetricsQueryApi {
     val tailStart = if (toMs % gEff.millis == 0) toMs else gEff.snap(toMs)
     val rangeDays: Seq[Long] =
       (snappedFrom - math.floorMod(snappedFrom, DayMs)) to (toMs - 1) by DayMs
-    val nameKeys = r.names.select("tenant_id", "metric_name")
 
     val tierPath = s"$storeDir/preagg_${kind}_${gEff.name}"
     // snapshot-resolved read — the getRollupsStored reader-isolation,
@@ -667,9 +682,7 @@ object MetricsQueryApi {
         val slice = tier0
           .filter(col("ts_day").isin(servedDays: _*) &&
             col("bucket_ms") >= snappedFrom &&
-            col("bucket_ms") < tailStart &&
-            col("tenant_id") === p.tenantId)
-          .join(broadcast(nameKeys), Seq("tenant_id", "metric_name"), "left_semi")
+            col("bucket_ms") < tailStart && r.keep)
           .drop("ts_day")
         (covered, Some(slice))
       }
@@ -689,17 +702,12 @@ object MetricsQueryApi {
               (toMs - 1) - math.floorMod(toMs - 1, DayMs))
         val parsed = preaggRawOrEmpty(spark, storeDir)
           .filter(col("ts_ms") >= snappedFrom && col("ts_ms") < toMs &&
-            (dayCond || tailCond) &&
-            col("tenant_id") === p.tenantId && col("kind") === kind)
-          .join(broadcast(nameKeys), Seq("tenant_id", "metric_name"), "left_semi")
+            (dayCond || tailCond) && r.keep && col("kind") === kind)
         Some(preaggLadder(parsed, kind, gEff))
       }
 
     val combined = (stored.toSeq ++ gapFilled.toSeq).reduce(_ unionByName _)
-    val agged = preaggToStats(combined, kind)
-      .join(broadcast(r.names), Seq("tenant_id", "metric_name"))
-    projectStats(agged, r.select, r.perMetricDefaults)
-      .orderBy("metric_name", "bucket_ms")
+    r.serve(preaggToStats(combined, kind))
   }
 
   /** The reference's JSON response shape (S13,

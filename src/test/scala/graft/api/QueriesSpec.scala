@@ -15,8 +15,14 @@ class QueriesSpec extends AnyFunSuite with SparkSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  /** [[graft.core.Tables.spreadCpu]]'s fallbacks to its job-running
+    * `.rdd` probe, process-wide. */
+  private def rddProbes: Long =
+    graft.core.Instrumentation.global.count("tables.spread_cpu.rdd_probes")
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
+      val probes0 = rddProbes
       val df = fn(spark, dir)
       assert(df.columns.nonEmpty)
       // near-dup / similarity queries may legitimately return 0 rows at
@@ -25,7 +31,21 @@ class QueriesSpec extends AnyFunSuite with SparkSuite {
       if (!Set("q_dedup_minhash", "q_dedup_ngram", "q_dedup_simhash",
           "q_dedup_embed", "q_sim_range").contains(name))
         assert(n > 0, s"$name returned no rows")
+      // every spreadCpu call the query makes sizes its input from the
+      // unexecuted plan (staticPartitionCount), never by running it
+      assert(rddProbes === probes0,
+        s"$name: Tables.spreadCpu fell back to its .rdd probe")
     }
+  }
+
+  test("OptProbe's spreadCpu input sizes from the plan, never the .rdd " +
+    "probe") {
+    val probes0 = rddProbes
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+    // the one-row-group documents file scans below the parallelism: the
+    // spread applies, so the static count was really consulted
+    assert(!(graft.core.Tables.spreadCpu(docs) eq docs))
+    assert(rddProbes === probes0)
   }
 
   test("entry() smoke: flagship returns rows") {

@@ -19,15 +19,12 @@ class InstrumentationSpec extends AnyFunSuite with SparkSuite {
         org.apache.spark.sql.functions.lit(null).cast("int"))
       .withColumn("unit", org.apache.spark.sql.functions.lit("req"))
 
-  test("registry: counters, timers, listener isolation") {
+  test("registry: counters and listener isolation") {
     val r = new Instrumentation.Registry
     r.inc("a.b"); r.inc("a.b", 4L)
     assert(r.count("a.b") === 5L)
     assert(r.count("never") === 0L)
-    val out = r.time("t") { 42 }
-    assert(out === 42)
-    assert(r.count("t.calls") === 1L)
-    assert(r.snapshot().getOrElse("t.nanos", 0L) > 0L)
+    assert(r.snapshot() === Map("a.b" -> 5L))
     // a throwing listener must not break emission or the other listeners
     var seen = List.empty[Instrumentation.RollupEvent]
     r.addRollupListener(_ => throw new RuntimeException("boom"))

@@ -1934,17 +1934,67 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
         body.contains(""""id": "app.b""""), body)
       info(s"warm jobs: render ${renderJobs.mkString(" | ")}; views " +
         s"${viewsJobs.mkString(" | ")}; find ${findJobs.mkString(" | ")}")
-      // every job left is data plane: FULL render = the names broadcast
-      // and the collect; points= views = the tier and raw scans'
-      // broadcasts and the collect; find = none. The raw store reads with
-      // the writer's schema (no inference job), and the catalog
-      // resolution and the tier's day coverage run no job
-      assert((renderJobs.size, viewsJobs.size, findJobs.size) === ((2, 6, 0)),
+      // every job left is data plane: FULL render = the collect; points=
+      // views = the tail bucket's raw re-aggregation (its shuffle map stage
+      // runs as its own adaptive job) and the collect; find = none. The
+      // resolved names filter the scans in place (no broadcast job), a
+      // small read orders inside one partition (no range-sampling job),
+      // the raw store reads with the writer's schema (no inference job),
+      // and the catalog resolution and the tier's day coverage run no job
+      assert((renderJobs.size, viewsJobs.size, findJobs.size) === ((1, 2, 0)),
         s"render: $renderJobs; views: $viewsJobs; find: $findJobs")
       // no warm request reloaded the catalog; each one took the snapshot
       // exactly once (one fence check per request, shared by its lookups)
       assert(counter(base, "store.catalog.resolutions") === loads0)
       assert(counter(base, "store.catalog.cache_hits") - hits0 === 3)
+    } finally srv.stop()
+  }
+
+  test("warm nested renders and a batch views POST run pinned job " +
+    "counts: movingAverage(sumSeries), aliasByNode(highestMax), POST views") {
+    val day = 86400000L
+    val srv = new MetricsHttpServer(spark,
+      java.nio.file.Files.createTempDirectory("graft_http").toString,
+      nowMs = () => now, maxAgeMs = 3 * day)
+    srv.start()
+    val base = s"http://127.0.0.1:${srv.boundPort}"
+    try {
+      val hosts = Seq("svc.h1.mem", "svc.h2.mem", "svc.h3.mem")
+      val pts = for (n <- hosts; ts <- Seq(now - day - 3600000L,
+        now - 7200000L, now - 600000L)) yield (n, ts)
+      assert(post(s"$base/v2.0/acme/ingest", ingestBody(pts))
+        .statusCode() === 200)
+      val range = s"from=${(now - 2 * day) / 1000}&until=${now / 1000}"
+      def render(target: String) = s"$base/render?tenant=acme&target=" +
+        java.net.URLEncoder.encode(target, StandardCharsets.UTF_8) +
+        s"&$range&format=json"
+      val mavg = render("movingAverage(sumSeries(svc.*.mem),'1h')")
+      val top = render("aliasByNode(highestMax(svc.*.mem,2),1)")
+      val batch = s"$base/v2.0/acme/views?from=${(now - 2 * day) / 1000}" +
+        s"&to=${now / 1000}&points=100"
+      val names = hosts.take(2).map("\"" + _ + "\"").mkString("[", ",", "]")
+      // warm-up: the tenant's catalog snapshot and the tier memos
+      Seq(mavg, top).foreach(u => assert(get(u).statusCode() === 200, u))
+      assert(post(batch, names).statusCode() === 200)
+      var body = ""
+      val mavgJobs = jobsDuring { body = get(mavg).body() }
+      assert(body.contains("movingAverage(sumSeries(svc.*.mem),"), body)
+      val topJobs = jobsDuring { body = get(top).body() }
+      assert(body.contains(""""target": "h1"""") && !body.contains("h3"), body)
+      val batchJobs = jobsDuring { body = post(batch, names).body() }
+      assert(body.contains(""""metric": "svc.h1.mem"""") &&
+        body.contains(""""metric": "svc.h2.mem"""") && !body.contains("h3"),
+        body)
+      info(s"warm jobs: mavg ${mavgJobs.mkString(" | ")}; top " +
+        s"${topJobs.mkString(" | ")}; batch ${batchJobs.mkString(" | ")}")
+      // the resolved names filter each scan in place and each small read
+      // orders inside one partition, so every series operator above it
+      // plans without an exchange: movingAverage(sumSeries) = the collect;
+      // highestMax = its localCheckpoint, the ranking and the collect;
+      // the batch views read = the tail bucket's raw re-aggregation (its
+      // shuffle map stage runs as its own adaptive job) and the collect
+      assert((mavgJobs.size, topJobs.size, batchJobs.size) === ((1, 3, 2)),
+        s"mavg: $mavgJobs; top: $topJobs; batch: $batchJobs")
     } finally srv.stop()
   }
 

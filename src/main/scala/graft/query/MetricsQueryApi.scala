@@ -134,28 +134,21 @@ object MetricsQueryApi {
     /** The read's output: `rows` (narrowed by [[keep]]) with each name's
       * `unit` and `rollup_type` attached from literal maps keyed by name,
       * projected to `stats` ([[projectStats]]) unless `project` is given,
-      * and ordered by (metric_name, bucket_ms). A read whose optimized
-      * plan is at most `spark.sql.autoBroadcastJoinThreshold` bytes (the
-      * size Spark already trusts to one task's memory) is ordered inside
-      * ONE partition — the same total order without the range sampling
-      * job and shuffle of a global sort, and an output every downstream
-      * window, aggregate or sort plans over without an exchange. Larger
-      * reads keep the parallel scan and a global `orderBy`; a threshold of
-      * -1 always takes that branch. The size comes from plan statistics:
-      * no Spark job. */
+      * and ordered by (metric_name, bucket_ms) inside ONE partition — the
+      * same total order as a global sort without its range-sampling job
+      * and shuffle, and an output every downstream window, aggregate or
+      * sort plans over without an exchange. On a 10⁶-locator store it is
+      * no slower than a parallel scan under a global sort (docs/SCALE.md,
+      * "Where a warm read's driver time goes"). */
     def serve(rows: DataFrame, stats: Seq[String] = select,
         project: Option[DataFrame => DataFrame] = None): DataFrame = {
       def byName(f: ((String, String, String)) => String): Column =
         typedLit(locators.map(l => l._1 -> f(l)).toMap).apply(col("metric_name"))
       val located = rows.withColumn("unit", byName(_._2))
         .withColumn("rollup_type", byName(_._3))
-      val out = project.getOrElse(
+      project.getOrElse(
         (d: DataFrame) => projectStats(d, stats, perMetricDefaults))(located)
-      val threshold = out.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-      if (threshold >= 0 &&
-          out.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
-        out.coalesce(1).sortWithinPartitions("metric_name", "bucket_ms")
-      else out.orderBy("metric_name", "bucket_ms")
+        .coalesce(1).sortWithinPartitions("metric_name", "bucket_ms")
     }
   }
 
@@ -164,20 +157,21 @@ object MetricsQueryApi {
   private type Resolver = Int => Seq[(String, String, String)]
 
   /** Resolution over a catalog frame (tenant_id, metric_name, unit,
-    * rollup_type): one filtered, limited collect of one row per name. A
-    * frame listing a name twice collapses to that name's max unit and min
-    * rollup_type, the rule [[storeCatalog]] applies to the persisted
-    * catalog: a name is one series, never one series per catalog row. */
-  private def frameResolver(catalog: DataFrame, p: Params): Resolver = n =>
-    catalog
+    * rollup_type) that lists each name once: one filtered, limited
+    * collect. A frame listing a name twice is rejected — it names no one
+    * unit or rollup_type for the series. */
+  private def frameResolver(catalog: DataFrame, p: Params): Resolver = { n =>
+    val rows = catalog
       .filter(col("tenant_id") === p.tenantId &&
         col("metric_name").rlike(GlobPattern.toAnchoredRegex(p.metricGlob)))
-      .groupBy(col("tenant_id"), col("metric_name"))
-      .agg(max(col("unit")).as("unit"), min(col("rollup_type")).as("rollup_type"))
       .limit(n)
       .collect().toSeq
       .map(r => (r.getAs[String]("metric_name"), r.getAs[String]("unit"),
         r.getAs[String]("rollup_type")))
+    require(rows.map(_._1).distinct.size == rows.size,
+      "catalog lists a metric name more than once")
+    rows
+  }
 
   /** Resolution over the store's catalog snapshot when it has a complete
     * catalog (zero Spark jobs once the tenant is loaded), else over

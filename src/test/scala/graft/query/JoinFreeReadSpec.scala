@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The join-free read: the resolved locators filter the scan as
-  * `metric_name IN (…)` and label the rows from literal maps, and a read
-  * under the size gate orders inside one partition. Every case compares
+  * `metric_name IN (…)` and label the rows from literal maps, and the
+  * read orders inside one partition. Every case compares
   * the read, row for row and in order, with the join derivation it
   * replaced — the locators as a broadcast frame, semi-joined into the
   * scans, inner-joined back for unit and rollup_type, globally ordered. */
@@ -168,7 +168,7 @@ class JoinFreeReadSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("the pre-catalog frame resolver and a catalogOverride equal the " +
-    "join derivation; a name listed twice is one series, not two") {
+    "join derivation; an override listing a name twice is rejected") {
     val (store, rawOnly) = stores
     val p = params("t1", "app.t1.*")
     // no catalog, no tiers: resolution derives from the raw store and
@@ -177,63 +177,43 @@ class JoinFreeReadSpec extends AnyFunSuite with SparkSuite {
       ("app.t1.m2", "count", "basic"))
     assert(rows(MetricsQueryApi.getRollupsStored(spark, rawOnly, p,
       nowMillis = now)) === rows(storedByJoin(rawOnly, p, derived)))
-    // an override listing app.t1.m1 twice, under two units: the join
-    // served every m1 bucket twice, once per unit — two series for one
-    // name, each claiming the same points. The read now resolves the name
-    // once, to its max unit (the persisted catalog's rule)
-    val listed = Seq(("app.t1.m1", "count", "basic"),
-      ("app.t1.m1", "zz", "basic"), ("app.t1.m2", "count", "basic"))
-    val byJoin = rows(storedByJoin(store, p, listed))
-    val m1 = byJoin.filter(_.getString(1) == "app.t1.m1")
-    assert(m1.map(_.getLong(3)).distinct.size * 2 === m1.size,
-      "the join derivation serves each m1 bucket once per cataloged unit")
-    val got = rows(MetricsQueryApi.getRollupsStored(spark, store, p,
-      nowMillis = now, catalogOverride = Some(namesFrame("t1", listed))))
-    assert(got === byJoin.filterNot(r =>
-      r.getString(1) == "app.t1.m1" && r.getString(2) == "count"))
-    // the deduplicated resolution still counts names for the O2 guard
-    val wide = namesFrame("t3", (0 until 101).flatMap(i =>
-      Seq((f"app.t3.m$i%03d", "count", "basic"), (f"app.t3.m$i%03d", "x", "basic"))))
+    // the override's own units label the rows
+    val listed = Seq(("app.t1.m1", "zz", "basic"), ("app.t1.m2", "count", "basic"))
+    assert(rows(MetricsQueryApi.getRollupsStored(spark, store, p,
+      nowMillis = now, catalogOverride = Some(namesFrame("t1", listed)))) ===
+      rows(storedByJoin(store, p, listed)))
+    // a name listed twice names no one unit for its series (the join
+    // served it once per row): the read refuses it
+    val twice = listed :+ (("app.t1.m1", "count", "basic"))
     assert(intercept[IllegalArgumentException](MetricsQueryApi
-      .getRollupsStored(spark, store, params("t3", "app.t3.*"),
-        nowMillis = now, catalogOverride = Some(wide)))
-      .getMessage.contains("resolves > 100"))
-    assert(MetricsQueryApi.getRollupsStored(spark, store,
-      params("t3", "app.t3.*"), nowMillis = now,
-      catalogOverride = Some(wide.filter(col("metric_name") =!= "app.t3.m100")))
-      .select("metric_name").distinct().count() === 100L)
+      .getRollupsStored(spark, store, p, nowMillis = now,
+        catalogOverride = Some(namesFrame("t1", twice))))
+      .getMessage.contains("more than once"))
   }
 
-  test("the same read on either side of the size gate returns identical " +
-    "rows; above it the plan keeps its parallel scan and a global sort") {
+  test("a read orders inside one partition, whatever the broadcast " +
+    "threshold: one coalesce(1), no global sort, the join derivation's rows") {
     val (store, _) = stores
     val p = params("t3", "app.t3.*", toMs - 600000L - 1L)
-    def read() = MetricsQueryApi.getRollupsStored(spark, store, p,
-      nowMillis = now)
-    def coalesces(df: DataFrame) = df.queryExecution.sparkPlan.collect {
-      case c: CoalesceExec => c.numPartitions
-    }
-    def globalSorts(df: DataFrame) = df.queryExecution.sparkPlan.collect {
-      case s: SortExec if s.global => s
-    }
-    val small = read()
-    assert(coalesces(small) === Seq(1))
-    assert(globalSorts(small).isEmpty)
+    val want = rows(storedByJoin(store, p, snapshotResolved(store, "t3",
+      "app.t3.*"), toMs - 600000L - 1L))
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val before = spark.conf.getOption(key)
-    def above(threshold: String): Unit = {
-      spark.conf.set(key, threshold)
+    for (threshold <- Seq(None, Some("-1"), Some("1"))) {
+      threshold.foreach(spark.conf.set(key, _))
       try {
-        val large = read()
-        assert(coalesces(large).isEmpty, s"threshold $threshold")
-        assert(globalSorts(large).size === 1, s"threshold $threshold")
-        assert(rows(large) === rows(small), s"threshold $threshold")
+        val got = MetricsQueryApi.getRollupsStored(spark, store, p,
+          nowMillis = now)
+        val plan = got.queryExecution.sparkPlan
+        assert(plan.collect { case c: CoalesceExec => c.numPartitions } ===
+          Seq(1), s"threshold $threshold")
+        assert(plan.collect { case s: SortExec if s.global => s }.isEmpty,
+          s"threshold $threshold")
+        assert(rows(got) === want, s"threshold $threshold")
       } finally before match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
       }
     }
-    above("-1") // disabled: always the global sort
-    above("1") // a read larger than the threshold
   }
 }

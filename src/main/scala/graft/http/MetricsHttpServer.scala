@@ -6,9 +6,7 @@ import graft.operators.Discovery
 import graft.query.MetricsQueryApi
 import graft.streaming.IngestStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -65,7 +63,8 @@ import java.util.concurrent.atomic.AtomicLong
   *    `sumSeries`/`averageSeries`/`maxSeries`/`minSeries`/
   *    `percentileOfSeries` aggregations, per-series `summarize`
   *  - `GET /functions[/:name]` — graphite-web's render-function metadata
-  *    catalog (Grafana's query-editor picker; see [[RenderFunctions]])
+  *    catalog (Grafana's query-editor picker), generated from the render
+  *    table ([[Render]])
   *  - `GET /metrics/find?query=&tenant=` — the Graphite metric-tree
   *    browse (Grafana's picker; treejson shape — see [[metricsFind]])
   *  - `GET /v2.0/:tenant/alerts/episodes?from&until[&metric]` — closed
@@ -419,7 +418,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
   // Blueflood deployment) — same dispatcher, see [[renderView]]
   server.createContext("/render", (ex: HttpExchange) => handle(ex))
   // graphite-web's function-metadata catalog — Grafana's query editor
-  // fetches it to populate the function picker (see [[RenderFunctions]])
+  // fetches it to populate the function picker (see [[Render]])
   server.createContext("/functions", (ex: HttpExchange) => handle(ex))
   // Graphite metric-tree browse (Grafana's picker); the LONGER prefix
   // wins over the bare /metrics counters context below
@@ -503,9 +502,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
         case (List("functions"), "OPTIONS") | (List("functions", _), "OPTIONS") =>
           sendPreflight(ex)
         case (List("functions"), "GET") =>
-          sendJson(ex, 200, RenderFunctions.catalogJson)
+          sendJson(ex, 200, Render.catalogJson)
         case (List("functions", name), "GET") =>
-          RenderFunctions.one(name) match {
+          Render.one(name) match {
             case Some(body) => sendJson(ex, 200, body)
             case None => sendJson(ex, 404,
               errJson(s"unknown render function '$name'"))
@@ -558,7 +557,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       // to echo. Anything else is an internal failure: clients get a
       // generic body (raw Spark/Hadoop messages can leak filesystem paths),
       // the real exception goes to the server log. If a handler already
-      // responded before throwing, don't attempt a second send.
+      // responded before throwing, don't attempt a second send. A fatal
+      // VM error is not caught: it propagates once `finally` closes the
+      // exchange, instead of reading as a 500 from a healthy server.
       case e: PayloadTooLarge =>
         if (!responseSent(ex))
           sendJson(ex, 413, errJson(
@@ -570,7 +571,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
           // already responded: the failure would otherwise vanish entirely
           System.err.println(s"[MetricsHttpServer] post-response IAE on " +
             s"${ex.getRequestMethod} ${ex.getRequestURI}: $e")
-      case e: Throwable =>
+      case scala.util.control.NonFatal(e) =>
         System.err.println(s"[MetricsHttpServer] 500 on " +
           s"${ex.getRequestMethod} ${ex.getRequestURI}: $e")
         if (!responseSent(ex)) sendJson(ex, 500, errJson("internal error"))
@@ -1050,97 +1051,18 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     * Blueflood with a graphite-api finder producing exactly this JSON).
     * POST carries the same parameters as an
     * `application/x-www-form-urlencoded` body — Grafana's default, since
-    * dashboard queries outgrow URL limits. Targets repeat; each is one
-    * of:
-    *
-    *  - `<glob>` — raw serve, one response entry per matched series
-    *  - `lttb(<glob>[,buckets])` / `m4(<glob>[,buckets])` — per-series
-    *    decimation ([[graft.operators.Series.lttbExact]] /
-    *    [[graft.operators.Series.m4Downsample]])
-    *  - `sumSeries|averageSeries|maxSeries|minSeries|countSeries|
-    *    rangeOfSeries|stddevSeries(<glob>)` — cross-series aggregation
-    *    ([[graft.operators.Series.aggregateSeries]]); entry named by the
-    *    target expression (the Graphite convention)
-    *  - `groupByNode(<glob>,n[,"func"])` /
-    *    `groupByNodes(<glob>,"func",n1[,n2…])` — aggregate series sharing
-    *    the (dot-joined) name token selection, one entry NAMED by it
-    *    ([[graft.operators.Series.groupByNode]] / `groupByNodes`)
-    *  - `percentileOfSeries(<glob>,N)` —
-    *    [[graft.operators.Series.quantileOfSeries]]
-    *  - `summarize(<glob>,"<interval>"[,"<func>"])` — per-series
-    *    re-bucketing onto the display interval
-    *    ([[graft.operators.Series.summarize]]; func sum|avg|max|min|last)
-    *  - `derivative|nonNegativeDerivative|perSecond(<glob>)` — per-series
-    *    rate views off one lag pass ([[graft.operators.Series.derivatives]])
-    *  - `integral(<glob>)` — per-series running total
-    *    ([[graft.operators.Series.integral]])
-    *  - `movingAverage|movingSum|movingMax|movingMin(<glob>,"<interval>")`
-    *    and `movingWindow(<glob>,"<interval>"[,"<func>"])` (func
-    *    average|sum|max|min|stddev) — time-window smoothing; mean/sum/
-    *    stddev ride the prefix path
-    *    ([[graft.operators.Series.movingWindowPrefix]]), extremes the
-    *    frame path ([[graft.operators.Series.movingStats]])
-    *  - `timeShift(<glob>,"<interval>")` — the shifted window's data drawn
-    *    at the requested instants (week-over-week overlays)
-    *  - `keepLastValue|resample(<glob>,"<interval>")` — uniform-grid
-    *    alignment, forward-fill vs linear
-    *    ([[graft.operators.Series.resampleHold]] / `resampleLinear`),
-    *    bounded-grid contract enforced at the request level
-    *  - `scale|offset(<glob>,k)` / `absolute(<glob>)` — pointwise
-    *  - `asPercent(<glob>[,<totalExpr>])` — per-instant share across the
-    *    matched series, or of an explicit total expression (compose over
-    *    summarize/resample when timestamps are irregular)
-    *  - `divideSeries(<expr>,<divisor>)` / `diffSeries(<expr>,<sub>…)` /
-    *    `multiplySeries(<expr>,<factor>…)` — per-instant cross-series
-    *    arithmetic (error rates, headroom, composites); diff/multiply
-    *    REDUCE all matched series into one combined entry (graphite-web's
-    *    reduce), divisors must be a single-series single sample per
-    *    instant (ambiguity raises in-plan → 400), zero/missing
-    *    denominators null (F6)
-    *  - `transformNull(<expr>[,default])` — null fill;
-    *    `removeAboveValue|removeBelowValue(<expr>,t)` /
-    *    `removeAbovePercentile|removeBelowPercentile(<expr>,p)` —
-    *    threshold scrub to null datapoints; `nPercentile(<expr>,p)` —
-    *    per-series percentile line; `changed(<expr>)` — 0/1 change
-    *    indicator; `offsetToZero(<expr>)` — subtract each series' own
-    *    minimum
-    *  - `grep|exclude(<expr>,"regex")` — series-name filter;
-    *    `aliasSub(<expr>,"regex","replacement")` — display-name
-    *    substitution ($1 backreferences)
-    *  - `events("tags")` — event markers from the events store (value
-    *    1.0 at each matching instant; `events("")` for all in range)
-    *  - `holtWintersForecast|holtWintersConfidenceBands|
-    *    holtWintersAberration(<expr>[,season])` — the forecast family
-    *    over [[graft.operators.Anomaly.holtWintersBands]] (bands emit
-    *    two entries per series, Upper/Lower)
-    *  - `highestMax|highestAverage|highestCurrent|lowestAverage|lowestMax|
-    *    lowestCurrent(<glob>,k)` and
-    *    `averageAbove|averageBelow|maximumAbove|maximumBelow|currentAbove|
-    *    currentBelow(<glob>,t)` — whole-series selection
-    *    ([[graft.operators.Series.topSeries]]), the ≤k/<threshold pick
-    *    broadcast-joined back onto the points
-    *  - `alias(<glob>,"name")` / `aliasByNode(<glob>,n)` /
-    *    `aliasByMetric(<glob>)` — display naming (n may be negative,
-    *    counting from the end; aliasByMetric ≡ aliasByNode(-1))
-    *  - `sortByMaxima|sortByTotal|sortByMinima(<glob>)` — entry-list
-    *    ordering by a per-series stat; `limit(<expr>,n)` — first n series
-    *    of the (possibly sorted) list
-    *  - `sumSeriesWithWildcards|averageSeriesWithWildcards(<glob>,pos…)` —
-    *    aggregate series whose names match after dropping the wildcard
-    *    nodes ([[graft.operators.Series.aggregateWithWildcards]])
-    *  - `constantLine(v)` — reference line at from/mid/until;
-    *    `consolidateBy(<expr>,"func")` — pick the final maxDataPoints
-    *    consolidation statistic (average|sum|min|max|first|last)
-    *
-    * Any `<glob>` above may itself be another function expression —
-    * targets nest and compose as one lazy plan ([[evalRenderTarget]]).
+    * dashboard queries outgrow URL limits. Targets repeat; each is a
+    * metric glob (raw serve, one response entry per matched series) or a
+    * call of a function in the render table ([[Render]], listed at
+    * `GET /functions`), whose series arguments may themselves be function
+    * calls — targets nest and compose as one lazy plan ([[Render.eval]]).
     *
     * `from`/`until` take the full Graphite datetime grammar and default to
     * `-24h`/`now`; `maxDataPoints` maps onto the points-budget resolution
     * pick (absent → full resolution — decimation is explicit via lttb/m4)
     * AND, because a composed target can out-emit the picked resolution,
     * every finished series is consolidated down to ≤ maxDataPoints via its
-    * consolidateBy() statistic ([[consolidatePoints]], default average —
+    * consolidateBy() statistic ([[Render.consolidatePoints]], default average —
     * real Graphite's final consolidation). Globs resolve under the O2
     * batch cap ([[numericPoints]]);
     * the response is `[{"target", "datapoints": [[value|null, epoch_s]]}]`
@@ -1168,19 +1090,21 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     val resolution = if (points.isEmpty) Some(Granularity.FULL) else None
     val targets = pairs.collect { case ("target", v) => v }
     require(targets.nonEmpty, "at least one target= is required")
+    val src = Render.Source(spark, tenant, now,
+      (glob, f, u) => numericPoints(tenant, glob, isGlob = true, f, u,
+        points, resolution, now),
+      (fromMs, untilMs, rx) => searchEvents(tenant, fromMs, untilMs, rx))
     val entries = try {
       targets.flatMap { t0 =>
-        val se = evalRenderTarget(t0.trim, tenant, from, until, points,
-          resolution, now, depth = 0)
-        val collected =
-          collectSeries(se.df, "ts_ms", "value", se.singleName, se.nameOf)
+        val se = Render.eval(t0.trim, src, from, until)
+        val collected = Render.collectSeries(se)
         // FINAL maxDataPoints guarantee: the resolution pick bounds the
         // fetch, but a composed target (summarize, resample, full-res
         // fallback) can still emit more points than requested — real
         // Graphite consolidates the finished series down to the budget
         val capped = points.filter(_ > 0) match {
           case Some(mdp) => collected.map { case (n, dps) =>
-            n -> consolidatePoints(dps, mdp,
+            n -> Render.consolidatePoints(dps, mdp,
               se.consolidate.getOrElse("average"))
           }
           case None => collected
@@ -1196,8 +1120,8 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       // groupByNode index past a series' nodes) is OUR crafted, data-
       // dependent validation message — surface it as the 400 it is; any
       // other failure stays the generic 500 (raw engine messages can leak
-      // paths)
-      case e: Throwable =>
+      // paths; a fatal VM error propagates untouched)
+      case scala.util.control.NonFatal(e) =>
         Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
           .collectFirst {
             case r: org.apache.spark.SparkThrowable
@@ -1242,1539 +1166,6 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       }.mkString("[", ", ", "]")
       sendJson(ex, 200, body)
     }
-  }
-
-  /** One evaluated render-target subtree: a standardized
-    * `(tenant_id, metric_name, ts_ms, value)` frame plus its naming —
-    * `singleName` labels a cross-series aggregate by the subtree's own
-    * target text (the Graphite convention); `nameOf` maps a series name to
-    * its display name, composed outward by each wrapping function.
-    * `consolidate` is the series' consolidateBy() tag — the statistic the
-    * FINAL maxDataPoints consolidation uses (None → Graphite's default
-    * average). Every PER-SERIES wrapper (transforms, scrubs, selection,
-    * naming) threads it through, so Grafana's generated
-    * `movingAverage(consolidateBy(x,'max'),…)` nesting keeps the tag;
-    * cross-series combiners (sumSeries family, groupBy*, weightedAverage,
-    * diff/multiply/divide, percentileOfSeries) produce NEW series and
-    * reset it, as graphite-web's reduced series do. */
-  private case class SeriesExpr(df: DataFrame,
-      singleName: Option[String], nameOf: String => String,
-      consolidate: Option[String] = None) {
-    /** Total display-name function — what an ENCLOSING wrapper composes
-      * over (an aggregate's constant text, else the per-series name). */
-    def displayName: String => String = n => singleName.getOrElse(nameOf(n))
-  }
-
-  private val RenderFn = """(?s)^(\w+)\((.*)\)$""".r
-
-  /** Recursive render-target evaluator — targets NEST, as Graphite
-    * dashboards actually write them (`movingAverage(perSecond(app.*),
-    * "5min")`, `derivative(sumSeries(app.*))`): the first argument of any
-    * function is either a metric glob (the base fetch through the
-    * kind-routed [[numericPoints]] read) or another function expression,
-    * evaluated recursively. Every function consumes and produces the
-    * standardized frame, so the whole composition stays ONE lazy Catalyst
-    * plan — nothing materializes between stages, and the final
-    * [[collectSeries]] row cap bounds the only collect.
-    *
-    * Naming composes outward: per-series wrappers build
-    * `fn(<inner display name>[,args])`, cross-series aggregates pin the
-    * subtree's own target text, `alias`/`aliasByNode` replace it.
-    * `timeShift` re-evaluates its WHOLE subtree under the shifted
-    * [from, until] and draws the result at the requested instants.
-    * ARITHMETIC transforms (rates, integral, moving, resample,
-    * aggregates) drop null input values (Graphite's None-skipping);
-    * pointwise transforms (scale/offset/absolute) and whole-series
-    * selection take the raw frame — null arithmetic yields null and
-    * selection serves points unchanged — so each stage's own null output
-    * (a derivative's first point) still renders as null datapoints
-    * through them. */
-  private def evalRenderTarget(t: String, tenant: String, from: String,
-      until: String, points: Option[Int], resolution: Option[Granularity],
-      now: Long, depth: Int): SeriesExpr = {
-    require(depth <= 8, s"render target nests deeper than 8 functions: '$t'")
-    def recurse(sub: String, f: String = from, u: String = until) =
-      evalRenderTarget(sub.trim, tenant, f, u, points, resolution, now,
-        depth + 1)
-    t match {
-      case RenderFn(fn, argStr) =>
-        // split on commas at depth 0 only: commas inside '{a,b}' glob
-        // alternation AND inside nested 'fn(...)' calls stay part of
-        // their argument
-        val args = splitTargetArgs(argStr)
-        // events is the one function whose first argument is NOT a
-        // series expression: Graphite's bare events() (all annotations
-        // in range) is valid, so the glob requirement must not fire
-        require(fn == "events" || (args.nonEmpty && args(0).trim.nonEmpty),
-          s"target '$t' needs a metric glob or sub-expression")
-        // splitTargetArgs always yields >= 1 element (the trailing
-        // buffer), so args(0) is total; events() just never reads it
-        val arg0 = args(0).trim
-        // transforms consume non-null values only (a wrapped stage's null
-        // outputs — e.g. a derivative's first point — must not reach the
-        // next operator's arithmetic); the base fetch is already non-null
-        def inner: SeriesExpr = {
-          val in = recurse(arg0)
-          in.copy(df = in.df.filter(col("value").isNotNull))
-        }
-        def buckets(floor: Int): Int = {
-          val b = args.lift(1).map(a => a.trim.toIntOption.getOrElse(
-            throw new IllegalArgumentException(
-              s"buckets must be an integer in '$t'"))).getOrElse(200)
-          require(b >= floor, s"buckets must be >= $floor in '$t', got $b")
-          b
-        }
-        def ivlArg(what: String): String = args.lift(1).map(stripQuotes)
-          .getOrElse(throw new IllegalArgumentException(
-            s"""$fn needs a $what interval (e.g. "5min") in '$t'"""))
-        val ser = Seq(col("tenant_id"), col("metric_name"), col("ts_ms"))
-        fn match {
-          case "lttb" =>
-            val in = inner
-            in.copy(df = graft.operators.Series.lttbExact(in.df, buckets(3)))
-          case "m4" =>
-            val in = inner
-            in.copy(df = graft.operators.Series.m4Downsample(in.df, buckets(1)))
-          case "sumSeries" | "averageSeries" | "maxSeries" | "minSeries" |
-               "countSeries" | "rangeOfSeries" | "stddevSeries" =>
-            val stat = fn match {
-              case "sumSeries" => "sum"
-              case "averageSeries" => "mean"
-              case "maxSeries" => "max"
-              case "minSeries" => "min"
-              case "countSeries" => "count"
-              case "rangeOfSeries" => "range"
-              case _ => "stddev"
-            }
-            // the input frame is already exactly the matching series (the
-            // base fetch resolved the glob), so the operator's own filter
-            // runs match-all — which also makes composed inputs with
-            // synthetic names aggregate correctly
-            SeriesExpr(graft.operators.Series
-                .aggregateSeries(inner.df, "*", stat, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms"),
-              Some(t), identity)
-          case "percentileOfSeries" =>
-            val pct = args.lift(1).flatMap(_.trim.toDoubleOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"percentileOfSeries needs a percentile in '$t'"))
-            require(pct >= 0.0 && pct <= 100.0,
-              s"percentile must be in [0, 100] in '$t', got $pct")
-            SeriesExpr(graft.operators.Series
-                .quantileOfSeries(inner.df, "*", pct / 100.0, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms")
-                .withColumnRenamed("qvalue", "value"),
-              Some(t), identity)
-          case "summarize" =>
-            // summarize(<expr>,"<interval>"[,"<func>"]) — per-series
-            // re-bucketing onto the dashboard's display interval
-            val ivl = ivlArg("display")
-            val stat = args.lift(2).map(stripQuotes).getOrElse("sum")
-            val in = inner
-            in.copy(df = graft.operators.Series
-              .summarize(in.df, parseIntervalMs(ivl), stat)
-              .withColumnRenamed("bucket_ms", "ts_ms"))
-          case "derivative" | "nonNegativeDerivative" | "perSecond" =>
-            // one lag pass serves all three Graphite rate views
-            // ([[graft.operators.Series.derivatives]]); the first point
-            // of each series renders null, as Graphite draws it
-            val vCol = fn match {
-              case "derivative" => "delta_v"
-              case "nonNegativeDerivative" => "nn_delta"
-              case _ => "rate_per_s"
-            }
-            val in = inner
-            SeriesExpr(graft.operators.Series.derivatives(in.df)
-                .select(ser :+ col(vCol).as("value"): _*),
-              None, n => s"$fn(${in.displayName(n)})", in.consolidate)
-          case "integral" =>
-            val in = inner
-            SeriesExpr(graft.operators.Series.integral(in.df)
-                .select(ser :+ col("cumsum").as("value"): _*),
-              None, n => s"integral(${in.displayName(n)})", in.consolidate)
-          case "movingAverage" | "movingMax" | "movingMin" | "movingSum" |
-               "movingWindow" =>
-            // time-window smoothing (range frame [ts − w, ts]); the
-            // window is an interval string — point-count windows are a
-            // different frame this store's irregular timestamps would
-            // make misleading, so they are rejected loudly
-            val ivl = ivlArg("window")
-            val windowMs = parseIntervalMs(ivl)
-            val func = fn match {
-              case "movingWindow" =>
-                args.lift(2).map(stripQuotes).getOrElse("average") match {
-                  case "avg" | "mean" => "average"
-                  case f => f
-                }
-              case "movingAverage" => "average"
-              case "movingSum" => "sum"
-              case "movingMax" => "max"
-              case _ => "min"
-            }
-            // Graphite parity: the subtree is fetched with `from` pulled
-            // back by the window, so the first REQUESTED instants smooth
-            // over full windows instead of partial ones; the warmup rows
-            // are dropped from the output
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val in0 = recurse(arg0, s"${(fromMs - windowMs) / 1000}")
-            val in = in0.copy(df = in0.df.filter(col("value").isNotNull))
-            // mean/sum/stddev take the prefix-sum path (bit-identical to
-            // the frame form, flat in window width — a wide window over a
-            // dense series through the frame path is the O(points×frame)
-            // wall graft.Stress measures); extremes have no prefix form
-            // and keep the frame path
-            val smoothed = func match {
-              // withStd only when stddev is served: the squared-sum
-              // prefixes carry their own (narrower) overflow domain that
-              // plain average/sum requests must not pay
-              case "average" | "sum" | "stddev" => graft.operators.Series
-                .movingWindowPrefix(in.df, windowMs,
-                  withStd = func == "stddev")
-                .select(ser :+ col(func match {
-                  case "average" => "mavg"
-                  case "sum" => "msum"
-                  case _ => "mstd"
-                }).as("value"): _*)
-              case "max" | "min" => graft.operators.Series
-                .movingStats(in.df, windowMs)
-                .select(ser :+ col(if (func == "max") "mmax" else "mmin")
-                  .as("value"): _*)
-              case other => throw new IllegalArgumentException(
-                s"movingWindow func must be one of " +
-                  s"average|sum|max|min|stddev, got '$other'")
-            }
-            val shownName: String => String =
-              if (fn == "movingWindow") n =>
-                s"""movingWindow(${in.displayName(n)},"$ivl","$func")"""
-              else n => s"""$fn(${in.displayName(n)},"$ivl")"""
-            SeriesExpr(smoothed.filter(col("ts_ms") >= fromMs),
-              None, shownName, in.consolidate)
-          case "timeShift" =>
-            // evaluate the whole subtree under [from − shift,
-            // until − shift], draw at the REQUESTED instants — Graphite's
-            // semantics (last week's data under this week's cursor)
-            val ivl = ivlArg("shift")
-            val shiftMs = parseIntervalMs(ivl)
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            val in = recurse(arg0, s"${(fromMs - shiftMs) / 1000}",
-              s"${(untilMs - shiftMs) / 1000}")
-            SeriesExpr(in.df.withColumn("ts_ms", col("ts_ms") + lit(shiftMs)),
-              None, n => s"""timeShift(${in.displayName(n)},"$ivl")""",
-              in.consolidate)
-          case "keepLastValue" | "resample" =>
-            // alignment onto a uniform "<interval>" grid: keepLastValue
-            // forward-fills (step), resample interpolates (linear) — both
-            // under the bounded-grid contract, enforced at the REQUEST
-            // level before any query runs (the panel-route rule)
-            val ivl = ivlArg("grid")
-            val stepMs = parseIntervalMs(ivl)
-            val gridN = (graft.core.DateTimeParser.parseMillis(until, now) -
-              graft.core.DateTimeParser.parseMillis(from, now)) / stepMs + 1L
-            require(gridN <= graft.operators.Series.MaxGridPointsPerSeries,
-              s"$fn grid too fine: (until - from)/interval yields $gridN " +
-                s"points > ${graft.operators.Series.MaxGridPointsPerSeries}" +
-                " — widen the interval or narrow the range")
-            val in = inner
-            val rs =
-              if (fn == "keepLastValue")
-                graft.operators.Series.resampleHold(in.df, stepMs)
-              else graft.operators.Series.resampleLinear(in.df, stepMs)
-            SeriesExpr(rs, None, n => s"""$fn(${in.displayName(n)},"$ivl")""",
-              in.consolidate)
-          case "scale" | "offset" =>
-            val kStr = args.lift(1).map(_.trim).getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn needs a numeric constant in '$t'"))
-            val k = kStr.toDoubleOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn constant must be numeric in '$t', got '$kStr'"))
-            // pointwise: RAW inner — null arithmetic yields null, so a
-            // wrapped stage's null datapoints (a derivative's first
-            // point) still render as nulls instead of disappearing
-            val v = if (fn == "scale") col("value") * k else col("value") + k
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value", v),
-              None, n => s"$fn(${in.displayName(n)},$kStr)", in.consolidate)
-          case "absolute" =>
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value", abs(col("value"))),
-              None, n => s"absolute(${in.displayName(n)})", in.consolidate)
-          case "asPercent" =>
-            // per-INSTANT shares (the stacked-percentage view):
-            // one-arg form = value / Σ(matched series at the same ts);
-            // two-arg Graphite form asPercent(expr, totalExpr) divides by
-            // the TOTAL expression's per-instant sum instead (left join —
-            // instants the total lacks yield null). Instants must align
-            // for a share to be meaningful; compose over summarize/
-            // resample/keepLastValue when timestamps are irregular.
-            // Zero/NULL denominators yield null (the F6 safe-div rule).
-            val in = recurse(arg0)
-            val pct = when(col("__tot") =!= 0.0,
-              col("value") / col("__tot") * 100)
-            args.lift(1).map(_.trim) match {
-              case Some(totArg) =>
-                val totByTs = recurse(totArg).df
-                  .groupBy(col("tenant_id"), col("ts_ms"))
-                  .agg(sum(col("value")).as("__tot"))
-                SeriesExpr(in.df
-                    .join(totByTs, Seq("tenant_id", "ts_ms"), "left")
-                    .withColumn("value", pct).drop("__tot"),
-                  None, n => s"asPercent(${in.displayName(n)},$totArg)")
-              case None =>
-                val wTs = org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("tenant_id"), col("ts_ms"))
-                SeriesExpr(in.df
-                    .withColumn("__tot", sum(col("value")).over(wTs))
-                    .withColumn("value", pct).drop("__tot"),
-                  None, n => s"asPercent(${in.displayName(n)})")
-            }
-          case "highestMax" | "highestAverage" | "lowestAverage" |
-               "lowestMax" | "highestCurrent" | "lowestCurrent" |
-               "highestMin" | "lowestMin" | "mostDeviant" =>
-            // series SELECTION (Graphite's highest*/lowest* family): rank
-            // whole series by a per-series stat, keep k, serve those
-            // series' points unchanged (names pass through). The ≤k
-            // selection broadcast-joins back — the per-series stat table
-            // is one row per matched series, never the point stream
-            val k = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn needs a series count in '$t'"))
-            require(k > 0, s"series count must be positive in '$t', got $k")
-            val (stat, asc) = fn match {
-              case "highestMax" => ("max", false)
-              case "highestAverage" => ("mean", false)
-              case "lowestAverage" => ("mean", true)
-              case "highestCurrent" => ("last", false)
-              case "lowestCurrent" => ("last", true)
-              case "highestMin" => ("min", false)
-              case "lowestMin" => ("min", true)
-              // Graphite's mostDeviant: the k series with the highest
-              // population sigma over the range
-              case "mostDeviant" => ("stddev", false)
-              case _ => ("max", true)
-            }
-            // RAW inner (selection serves points UNCHANGED, nulls
-            // included; topSeries' aggregates ignore nulls themselves),
-            // materialized once — the frame feeds BOTH the ranking and
-            // the join probe side, and an expensive nested subtree must
-            // not re-run for each consumer (the CLAUDE.md
-            // materialize-once rule; render inputs are panel-bounded)
-            val in = recurse(arg0)
-            val inDf = in.df.localCheckpoint()
-            val sel = graft.operators.Series.topSeries(inDf, k, stat, asc)
-              .select(col("tenant_id"), col("metric_name"))
-            SeriesExpr(inDf.join(broadcast(sel),
-                Seq("tenant_id", "metric_name")),
-              in.singleName, in.nameOf, in.consolidate)
-          case "averageAbove" | "averageBelow" | "maximumAbove" |
-               "maximumBelow" | "minimumAbove" | "minimumBelow" |
-               "currentAbove" | "currentBelow" =>
-            // threshold SELECTION: keep series whose per-series stat
-            // clears the bound (same broadcast-semi-join shape)
-            val thr = args.lift(1).flatMap(_.trim.toDoubleOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn needs a numeric threshold in '$t'"))
-            val stat =
-              if (fn.startsWith("average")) "mean"
-              else if (fn.startsWith("maximum")) "max"
-              else if (fn.startsWith("minimum")) "min"
-              else "last"
-            // RAW inner + materialize-once, as in the highest*/lowest* arm
-            val in = recurse(arg0)
-            val inDf = in.df.localCheckpoint()
-            val cond =
-              if (fn.endsWith("Above")) col("stat_value") > thr
-              else col("stat_value") < thr
-            val sel = graft.operators.Series
-              .topSeries(inDf, Int.MaxValue, stat)
-              .filter(cond).select(col("tenant_id"), col("metric_name"))
-            SeriesExpr(inDf.join(broadcast(sel),
-                Seq("tenant_id", "metric_name")),
-              in.singleName, in.nameOf, in.consolidate)
-          case "groupByNode" =>
-            // groupByNode(<expr>, n[, "func"]) — aggregate series sharing
-            // dot-token n, one output series NAMED by the token (the
-            // legend-grouping workhorse); bucketMs=1 keeps served instants
-            // as-is (the sumSeries-arm convention)
-            val idx = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"groupByNode needs a node index in '$t'"))
-            val func = args.lift(2).map(stripQuotes).getOrElse("average")
-            val stat = func match {
-              case "average" | "avg" | "mean" => "mean"
-              case f => f
-            }
-            SeriesExpr(graft.operators.Series
-                .groupByNode(inner.df, idx, stat, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms"),
-              None, identity)
-          case "groupByNodes" =>
-            // groupByNodes(<expr>, "func", n1[, n2…]) — Graphite's
-            // multi-node form: the grouping key (and entry name) is the
-            // dot-joined token selection in the caller's order
-            val func = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"groupByNodes needs a callback function in '$t'"))
-            val stat = func match {
-              case "average" | "avg" | "mean" => "mean"
-              case f => f
-            }
-            val idxs = args.drop(2).map(a => a.trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"groupByNodes node indexes must be integers in '$t'")))
-            require(idxs.nonEmpty,
-              s"groupByNodes needs at least one node index in '$t'")
-            SeriesExpr(graft.operators.Series
-                .groupByNodes(inner.df, idxs, stat, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms"),
-              None, identity)
-          case "divideSeries" =>
-            // divideSeries(<dividend>, <divisor>) — each dividend series
-            // divided by the divisor's per-instant sample (error rates,
-            // ratios). The divisor must be ONE sample per instant —
-            // ambiguity raises IN-PLAN, never silently sums; zero/missing
-            // denominators yield null (the F6 safe-div rule). Instants
-            // must align — compose over summarize/keepLastValue when raw
-            // timestamps are irregular (the asPercent convention).
-            val divArg = args.lift(1).map(_.trim).getOrElse(
-              throw new IllegalArgumentException(
-                s"divideSeries needs a divisor series in '$t'"))
-            // RAW dividend: a wrapped stage's null datapoints render as
-            // null through pointwise arithmetic (the scale/offset rule);
-            // only the divisor side strips nulls
-            val in = recurse(arg0)
-            val (den, guarded, denTmp) = perInstantSample(
-              recurse(divArg).df, "divideSeries", "divisor", divArg, 0)
-            SeriesExpr(in.df
-                .join(den, Seq("tenant_id", "ts_ms"), "left")
-                .withColumn("value",
-                  when(guarded =!= 0.0, col("value") / guarded))
-                .drop(denTmp: _*),
-              None, n => s"divideSeries(${in.displayName(n)},$divArg)")
-          case "diffSeries" =>
-            // diffSeries(<expr>, <sub1>[, <sub2>…]) — graphite-web REDUCES
-            // the whole matched list to ONE combined series, so a
-            // multi-series first argument must not fan out into one entry
-            // per series. Minuend = the first argument's per-instant
-            // exact-DECIMAL sum (an all-null instant stays null — a
-            // DOCUMENTED divergence from safeDiff, whose first-non-null
-            // pick would let a subtrahend become the minuend); each
-            // subtrahend instant contributes its sum, a missing instant
-            // contributes 0 (Graphite's safeDiff). All sums run through
-            // DECIMAL(28,2) — the crossSeriesStat recipe —
-            // so output is partition-order invariant to the last ulp.
-            require(args.length >= 2,
-              s"diffSeries needs at least two arguments in '$t'")
-            val restArgs = args.drop(1).map(_.trim)
-            val dec = DecimalType(28, 2)
-            val minuend = recurse(arg0).df
-              .groupBy(col("tenant_id"), col("ts_ms"))
-              .agg(when(count(col("value")) > 0,
-                sum(col("value").cast(dec))).as("__min"))
-            val sub = restArgs.map(a => recurse(a).df
-                .filter(col("value").isNotNull)
-                .select(col("tenant_id"), col("ts_ms"), col("value")))
-              .reduce(_ unionByName _)
-              .groupBy(col("tenant_id"), col("ts_ms"))
-              .agg(sum(col("value").cast(dec)).as("__sub"))
-            SeriesExpr(minuend
-                .join(sub, Seq("tenant_id", "ts_ms"), "left")
-                .withColumn("value", (col("__min") -
-                  coalesce(col("__sub"), lit(0).cast(dec))).cast("double"))
-                .withColumn("metric_name", lit(t))
-                .select("tenant_id", "metric_name", "ts_ms", "value"),
-              Some(t), identity)
-          case "multiplySeries" =>
-            // multiplySeries(<f1>, <f2>[, <f3>…]) — graphite-web reduces
-            // ALL matched series (including several matched by one
-            // argument) into ONE combined series: per instant the product
-            // of every series' sample in flattened (argument, name) order,
-            // null whenever ANY of the target's series misses the instant
-            // or carries a null there (safeMul: any None → None). A series
-            // with two samples at one instant raises IN-PLAN (the
-            // divideSeries ambiguity contract — Graphite's normalized
-            // timelines cannot express it). The per-instant factor list is
-            // bounded by the target's series count, so the sorted fold is
-            // a dashboard-sized HOF, not a corpus-scale one.
-            require(args.length >= 2,
-              s"multiplySeries needs at least two arguments in '$t'")
-            val factorArgs = args.map(_.trim)
-            val flat = factorArgs.zipWithIndex.map { case (a, i) =>
-              recurse(a).df.select(col("tenant_id"), col("metric_name"),
-                col("ts_ms"), col("value"), lit(i).as("__arg"))
-            }.reduce(_ unionByName _)
-            // total distinct factor series per tenant — the presence bar
-            // every instant must clear (a series listed twice via two
-            // arguments multiplies twice, as Graphite's flattened list does)
-            val sTot = flat.groupBy(col("tenant_id"))
-              .agg(count_distinct(struct(col("__arg"), col("metric_name")))
-                .as("__stot"))
-            val perInstant = flat.groupBy(col("tenant_id"), col("ts_ms"))
-              .agg(
-                count_distinct(struct(col("__arg"), col("metric_name")))
-                  .as("__ns"),
-                count(lit(1)).as("__n"),
-                // left fold from 1.0 in sorted series order = Graphite's
-                // left-to-right float product (1.0·v0 is exact), and the
-                // sort makes it partition-order invariant
-                aggregate(sort_array(collect_list(struct(col("__arg"),
-                    col("metric_name"), col("value")))), lit(1.0),
-                  (acc, x) => acc * x.getField("value")).as("__prod"))
-            SeriesExpr(perInstant.join(broadcast(sTot), Seq("tenant_id"))
-                .withColumn("value",
-                  when(col("__n") > col("__ns"), raise_error(lit(
-                    s"multiplySeries: a factor in '$t' has more than one " +
-                      "sample at an instant — aggregate it first " +
-                      "(sumSeries)")).cast("double"))
-                  .when(col("__ns") === col("__stot"), col("__prod")))
-                .withColumn("metric_name", lit(t))
-                .select("tenant_id", "metric_name", "ts_ms", "value"),
-              Some(t), identity)
-          case "events" =>
-            // Graphite's events(*tags) target — event markers for chart
-            // overlays (drawAsInfinite style): value 1.0 at each matching
-            // event instant, ONE entry named by the target text. The
-            // arguments are TAGS filters, ANDed (every tag must appear in
-            // the event data — the getEvents substring contract), not a
-            // series expression; bare events() serves all in range.
-            val tags = args.map(a => stripQuotes(a.trim))
-              .filter(_.nonEmpty)
-            // AND of substring matches as one regex: DOTALL lookaheads
-            // from the scan position — rlike's find() accepts at index 0
-            // when every tag appears somewhere in the props string
-            // (event data may carry newlines); no tags → empty pattern,
-            // matches all
-            val rx =
-              if (tags.isEmpty) ""
-              else "(?s)" + tags.map(q =>
-                s"(?=.*${java.util.regex.Pattern.quote(q)})").mkString
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            val frame = searchEvents(tenant, fromMs, untilMs, rx)
-              .map(_.select(col("tenant_id"), lit(t).as("metric_name"),
-                col("ts_ms"), lit(1.0).as("value")))
-              .getOrElse(spark.range(0).select(lit("").as("tenant_id"),
-                lit(t).as("metric_name"), lit(0L).as("ts_ms"),
-                lit(1.0).as("value")))
-            SeriesExpr(frame, Some(t), identity)
-          case "exclude" | "grep" =>
-            // series-NAME regex filter (Graphite's exclude/grep):
-            // unanchored search against the stored series name; selection
-            // serves points unchanged (RAW inner, nulls included)
-            val pat = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn needs a regex in '$t'"))
-            try java.util.regex.Pattern.compile(pat) catch {
-              case e: java.util.regex.PatternSyntaxException =>
-                throw new IllegalArgumentException(
-                  s"$fn pattern does not compile: ${e.getMessage}")
-            }
-            val in = recurse(arg0)
-            val m = col("metric_name").rlike(pat)
-            SeriesExpr(in.df.filter(if (fn == "grep") m else !m),
-              in.singleName, in.nameOf, in.consolidate)
-          case "aliasSub" =>
-            // display-name regex substitution (Graphite's aliasSub);
-            // backreferences use Java's $1 syntax
-            val search = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"aliasSub needs a search regex in '$t'"))
-            val replace = args.lift(2).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"aliasSub needs a replacement in '$t'"))
-            val rx =
-              try new scala.util.matching.Regex(search)
-              catch {
-                case e: java.util.regex.PatternSyntaxException =>
-                  throw new IllegalArgumentException(
-                    s"aliasSub pattern does not compile: ${e.getMessage}")
-              }
-            val in = recurse(arg0)
-            SeriesExpr(in.df, None, { n =>
-              // replacement errors (a $9 with no group 9, a trailing
-              // backslash) only surface when a name actually matches —
-              // translate them to the 400 every other malformed-argument
-              // path reports, not a generic 500
-              try rx.replaceAllIn(in.displayName(n), replace)
-              catch {
-                case e: RuntimeException =>
-                  throw new IllegalArgumentException(
-                    s"aliasSub replacement '$replace' failed: ${e.getMessage}")
-              }
-            }, in.consolidate)
-          case "changed" =>
-            // 1 where a sample differs from its series' previous sample,
-            // else 0 (first points 0) — one lag pass, the derivatives
-            // ordering convention (ties on ts break by value)
-            val in = inner
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("tenant_id"), col("metric_name"))
-              .orderBy(col("ts_ms"), col("value"))
-            val prev = lag(col("value"), 1).over(w)
-            SeriesExpr(in.df.withColumn("value",
-                when(prev.isNull || prev === col("value"), lit(0.0))
-                  .otherwise(lit(1.0))),
-              None, n => s"changed(${in.displayName(n)})", in.consolidate)
-          case "offsetToZero" =>
-            // subtract each series' own minimum (baseline-to-zero view);
-            // RAW inner — null arithmetic keeps null datapoints
-            val in = recurse(arg0)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("tenant_id"), col("metric_name"))
-            SeriesExpr(in.df.withColumn("value",
-                col("value") - min(col("value")).over(w)),
-              None, n => s"offsetToZero(${in.displayName(n)})",
-              in.consolidate)
-          case "transformNull" =>
-            // pointwise null fill — RAW inner by definition (this is the
-            // one function ABOUT a wrapped stage's nulls)
-            val d = args.lift(1).map(a => a.trim.toDoubleOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"transformNull default must be numeric in '$t'")))
-              .getOrElse(0.0)
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value",
-                coalesce(col("value"), lit(d))),
-              None, n => s"transformNull(${in.displayName(n)},$d)",
-              in.consolidate)
-          case "removeAbovePercentile" | "removeBelowPercentile" |
-               "nPercentile" =>
-            // per-series percentile line: scrub past it (remove*) or draw
-            // it (nPercentile) — the clampOutliers shape: one per-series
-            // exact-percentile aggregation joined back on the identical
-            // key. The frame feeds BOTH the aggregate and the probe side,
-            // so materialize once (the highest*/lowest* rule).
-            val pct = args.lift(1).flatMap(_.trim.toDoubleOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn needs a percentile in '$t'"))
-            require(pct >= 0.0 && pct <= 100.0,
-              s"percentile must be in [0, 100] in '$t', got $pct")
-            val in = recurse(arg0) // RAW: null datapoints pass through
-            val inDf = in.df.localCheckpoint()
-            val q = inDf.filter(col("value").isNotNull)
-              .groupBy(col("tenant_id"), col("metric_name"))
-              .agg(percentile(col("value"), lit(pct / 100.0)).as("__pv"))
-            val joined = inDf.join(broadcast(q),
-              Seq("tenant_id", "metric_name"), "left")
-            val v = fn match {
-              case "nPercentile" => col("__pv")
-              case "removeAbovePercentile" =>
-                when(col("value") > col("__pv"),
-                  lit(null).cast("double")).otherwise(col("value"))
-              case _ =>
-                when(col("value") < col("__pv"),
-                  lit(null).cast("double")).otherwise(col("value"))
-            }
-            SeriesExpr(joined.withColumn("value", v).drop("__pv"),
-              None, n => s"$fn(${in.displayName(n)},$pct)", in.consolidate)
-          case "removeAboveValue" | "removeBelowValue" =>
-            // pointwise threshold scrub: offending values become null
-            // datapoints (the series keeps its instants — Graphite draws
-            // the gap); RAW inner, nulls pass through
-            val thr = args.lift(1).flatMap(_.trim.toDoubleOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn needs a numeric threshold in '$t'"))
-            val in = recurse(arg0)
-            val offending =
-              if (fn == "removeAboveValue") col("value") > thr
-              else col("value") < thr
-            SeriesExpr(in.df.withColumn("value",
-                when(offending, lit(null).cast("double"))
-                  .otherwise(col("value"))),
-              None, n => s"$fn(${in.displayName(n)},$thr)",
-              in.consolidate)
-          case "holtWintersForecast" | "holtWintersConfidenceBands" |
-               "holtWintersAberration" =>
-            // the Holt-Winters render family over the engine's triple-
-            // exponential scan ([[graft.operators.Anomaly.holtWintersBands]]):
-            // forecast, ±k·dev confidence bands (two series per input),
-            // aberration (deviation outside the bands). Optional second
-            // arg = season length in points (default 24 — daily seasons
-            // over hourly buckets); compose over summarize/keepLastValue
-            // first when serving irregular raw points (phases are
-            // positional, the operator's documented cadence contract).
-            val season = args.lift(1).map(a => a.trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"season must be an integer in '$t'"))).getOrElse(24)
-            require(season >= 1 && season <= 8192,
-              s"season must be in [1, 8192] in '$t', got $season")
-            val in = inner
-            val hw = graft.operators.Anomaly.holtWintersBands(in.df, season)
-            fn match {
-              case "holtWintersForecast" =>
-                SeriesExpr(hw.select(ser :+ col("forecast").as("value"): _*),
-                  None, n => s"holtWintersForecast(${in.displayName(n)})")
-              case "holtWintersAberration" =>
-                val ab = when(col("value") > col("upper"),
-                    col("value") - col("upper"))
-                  .when(col("value") < col("lower"),
-                    col("value") - col("lower"))
-                  .otherwise(lit(0.0))
-                SeriesExpr(hw.select(ser :+ ab.as("value"): _*),
-                  None, n => s"holtWintersAberration(${in.displayName(n)})")
-              case _ =>
-                // two series per input, as Graphite draws them; the
-                // suffix is stripped back out of the display name
-                val up = hw.select(col("tenant_id"),
-                  concat(col("metric_name"), lit("#hwupper"))
-                    .as("metric_name"),
-                  col("ts_ms"), col("upper").as("value"))
-                val lo = hw.select(col("tenant_id"),
-                  concat(col("metric_name"), lit("#hwlower"))
-                    .as("metric_name"),
-                  col("ts_ms"), col("lower").as("value"))
-                SeriesExpr(up.unionByName(lo), None, { n =>
-                  if (n.endsWith("#hwupper"))
-                    "holtWintersConfidenceUpper(" +
-                      s"${in.displayName(n.stripSuffix("#hwupper"))})"
-                  else if (n.endsWith("#hwlower"))
-                    "holtWintersConfidenceLower(" +
-                      s"${in.displayName(n.stripSuffix("#hwlower"))})"
-                  else in.displayName(n)
-                })
-            }
-          case "alias" =>
-            val name = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"alias needs a display name in '$t'"))
-            val in = recurse(arg0)
-            SeriesExpr(in.df, None, _ => name, in.consolidate)
-          case "aliasByNode" | "aliasByMetric" =>
-            // aliasByMetric is graphite-web's aliasByNode(expr, -1): the
-            // display name becomes the last dot-token of the series name
-            val idx =
-              if (fn == "aliasByMetric") -1
-              else args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-                throw new IllegalArgumentException(
-                  s"aliasByNode needs a node index in '$t'"))
-            val in = recurse(arg0)
-            SeriesExpr(in.df, None, { n0 =>
-              val n = in.displayName(n0)
-              val parts = n.split('.')
-              val i = if (idx < 0) parts.length + idx else idx
-              require(i >= 0 && i < parts.length,
-                s"$fn index $idx out of range for series '$n'")
-              parts(i)
-            }, in.consolidate)
-          case "sortByMaxima" | "sortByTotal" | "sortByMinima" =>
-            // series ORDERING (graphite-web's sortBy family): entries
-            // leave in per-series-stat order instead of name order. The
-            // stat rides along as a per-series __ord window column —
-            // [[collectSeries]] orders by it and limit() ranks by it; the
-            // whole composition stays one lazy plan, no extra pass.
-            // sortByMaxima/sortByTotal sort DESCENDING (largest first);
-            // sortByMinima sorts ascending by min and — graphite's own
-            // quirk — drops series whose max is not > 0. RAW inner:
-            // ordering serves points unchanged, nulls included.
-            val in = recurse(arg0)
-            val wSer = Window.partitionBy(col("tenant_id"),
-              col("metric_name"))
-            val dec = DecimalType(28, 2)
-            val sorted = fn match {
-              case "sortByMaxima" =>
-                // negate for descending; an all-null series' max is NULL
-                // and -NULL stays NULL → nulls-last in the entry order
-                in.df.withColumn("__ord", -max(col("value")).over(wSer))
-              case "sortByTotal" =>
-                // exact-DECIMAL per-series sum (the crossSeriesStat
-                // recipe): an ordering must not flip on partition order
-                in.df.withColumn("__ord",
-                  -sum(col("value").cast(dec)).over(wSer).cast("double"))
-              case _ =>
-                in.df
-                  .withColumn("__max", max(col("value")).over(wSer))
-                  .filter(col("__max") > 0.0).drop("__max")
-                  .withColumn("__ord", min(col("value")).over(wSer))
-            }
-            in.copy(df = sorted)
-          case "limit" =>
-            // limit(<expr>, n) — keep the FIRST n series of the list, in
-            // the list's own order: a preceding sortBy*'s __ord when
-            // present, name order (the collectSeries default) otherwise.
-            // Rank table is one row per series; broadcast back (the
-            // highest*/lowest* selection shape). Materialize-once: the
-            // frame feeds both the rank and the probe side.
-            val n = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"limit needs a series count in '$t'"))
-            require(n > 0, s"series count must be positive in '$t', got $n")
-            val in = recurse(arg0)
-            val inDf = in.df.localCheckpoint()
-            val ordCol =
-              if (inDf.columns.contains("__ord")) min(col("__ord"))
-              else min(lit(0.0))
-            val sel = inDf.groupBy(col("tenant_id"), col("metric_name"))
-              .agg(ordCol.as("__o"))
-              .withColumn("__rk", row_number().over(
-                Window.partitionBy(col("tenant_id"))
-                  .orderBy(col("__o").asc_nulls_last, col("metric_name"))))
-              .filter(col("__rk") <= n)
-              .select(col("tenant_id"), col("metric_name"))
-            in.copy(df = inDf.join(broadcast(sel),
-              Seq("tenant_id", "metric_name")))
-          case "sumSeriesWithWildcards" | "averageSeriesWithWildcards" =>
-            // aggregate series whose names match after REMOVING the
-            // wildcard node positions; entries named by the collapsed
-            // name ([[graft.operators.Series.aggregateWithWildcards]])
-            val stat = if (fn.startsWith("sum")) "sum" else "mean"
-            val idxs = args.drop(1).map(a => a.trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"$fn wildcard positions must be integers in '$t'")))
-            require(idxs.nonEmpty,
-              s"$fn needs at least one wildcard position in '$t'")
-            require(idxs.forall(_ >= 0),
-              s"$fn wildcard positions must be non-negative in '$t'")
-            SeriesExpr(graft.operators.Series
-                .aggregateWithWildcards(inner.df, idxs, stat, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms"),
-              None, identity)
-          case "constantLine" =>
-            // constantLine(value) — a reference line: the value drawn at
-            // from, midpoint, and until (graphite-web's three points), as
-            // a series NAMED by the value text. The first argument is a
-            // NUMBER, not a series expression (the events() exemption
-            // covers the glob requirement trivially — a number is
-            // non-empty). A three-row literal frame; alias() wraps it for
-            // a legend label.
-            val name = stripQuotes(arg0)
-            val v = name.toDoubleOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"constantLine needs a numeric value in '$t'"))
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            import spark.implicits._
-            SeriesExpr(Seq(fromMs, (fromMs + untilMs) / 2, untilMs).distinct
-                .map(ts => (tenant, name, ts, v))
-                .toDF("tenant_id", "metric_name", "ts_ms", "value"),
-              Some(name), identity)
-          case "group" =>
-            // group(a, b, ...) — graphite's plain list combiner: the
-            // union of every argument's series, points untouched. Each
-            // argument's DISPLAY NAMES (a nested scale/alias renames its
-            // series) are baked into the frame before the union via a
-            // panel-bounded broadcast rename table — one frame cannot
-            // carry per-argument nameOf functions
-            require(args.nonEmpty && args.head.trim.nonEmpty,
-              s"group needs at least one seriesList in '$t'")
-            import spark.implicits._
-            val frames = args.map { a =>
-              val in = recurse(a.trim)
-              val tbl = in.df.select("tenant_id", "metric_name").distinct()
-                .collect()
-                .map(r => (r.getString(0), r.getString(1),
-                  in.displayName(r.getString(1)))).toSeq
-                .toDF("tenant_id", "metric_name", "__gname")
-              in.df.select("tenant_id", "metric_name", "ts_ms", "value")
-                .join(broadcast(tbl), Seq("tenant_id", "metric_name"))
-                .select(col("tenant_id"),
-                  col("__gname").as("metric_name"), col("ts_ms"),
-                  col("value"))
-            }
-            SeriesExpr(frames.reduce(_ unionByName _), None, identity)
-          case "fallbackSeries" =>
-            // fallbackSeries(series, fallback) — serve the fallback when
-            // the primary matches NO series (graphite's dashboard
-            // placeholder; the emptiness probe runs on the panel-bounded
-            // frame the render path collects anyway)
-            val fbArg = args.lift(1).map(_.trim).getOrElse(
-              throw new IllegalArgumentException(
-                s"fallbackSeries needs a fallback seriesList in '$t'"))
-            val a = recurse(arg0)
-            if (a.df.isEmpty) recurse(fbArg) else a
-          case "round" =>
-            // round(series, precision=0) — pointwise rounding. HALF_UP
-            // (Spark's round), where graphite-web inherits python's
-            // half-even — documented in /functions; exact ties at the
-            // precision digit are the only divergence
-            val p = args.lift(1).map(a => a.trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"round precision must be an integer in '$t'"))).getOrElse(0)
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value", round(col("value"), p)),
-              in.singleName, n => s"round(${in.displayName(n)})",
-              in.consolidate)
-          case "cumulative" =>
-            // graphite's cumulative(series) ≡ consolidateBy(series,"sum")
-            val in = recurse(arg0)
-            SeriesExpr(in.df, None,
-              n => s"""consolidateBy(${in.displayName(n)},"sum")""",
-              Some("sum"))
-          case "consolidateBy" =>
-            // consolidateBy(<expr>, "func") — tag the series with the
-            // statistic the FINAL maxDataPoints consolidation uses
-            // (renderView's post-transform pass; default average). Pure
-            // metadata: the frame passes through untouched.
-            val func = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"""consolidateBy needs a function (e.g. "max") in '$t'"""))
-            val norm = func match {
-              case "avg" | "mean" => "average"
-              case f => f
-            }
-            require(Set("average", "sum", "min", "max", "first", "last")
-              .contains(norm), "consolidateBy function must be " +
-                s"average|sum|min|max|first|last in '$t', got '$func'")
-            val in = recurse(arg0)
-            SeriesExpr(in.df, None,
-              n => s"""consolidateBy(${in.displayName(n)},"$norm")""",
-              Some(norm))
-          case "hitcount" =>
-            // hitcount(<expr>, "interval") — per-second rates converted
-            // to absolute hits per display bucket with exact interval
-            // proration ([[graft.operators.Series.hitcount]]; gap-capped)
-            val ivl = ivlArg("bucket")
-            val bMs = parseIntervalMs(ivl)
-            val in = inner
-            SeriesExpr(graft.operators.Series
-                .hitcount(in.df, bMs, maxGapMs = math.max(3600000L, bMs))
-                .withColumnRenamed("bucket_ms", "ts_ms")
-                .withColumnRenamed("hits", "value"),
-              None, n => s"""hitcount(${in.displayName(n)},"$ivl")""",
-              in.consolidate)
-          case "sortByName" =>
-            // name order IS the collectSeries default — sortByName's job
-            // is to RESET any earlier sortBy*'s __ord
-            val in = recurse(arg0)
-            in.copy(df = if (in.df.columns.contains("__ord"))
-              in.df.drop("__ord") else in.df)
-          case "removeEmptySeries" =>
-            // drop series with zero non-null datapoints in the range
-            val in = recurse(arg0)
-            val wSer = Window.partitionBy(col("tenant_id"),
-              col("metric_name"))
-            in.copy(df = in.df
-              .withColumn("__nn", count(col("value")).over(wSer))
-              .filter(col("__nn") > 0).drop("__nn"))
-          case "logarithm" | "log" =>
-            // log base b (default 10); zero/negative values render null
-            // (Graphite's math-domain None)
-            val base = args.lift(1).flatMap(_.trim.toDoubleOption)
-              .getOrElse(10.0)
-            require(base > 0 && base != 1.0,
-              s"logarithm base must be > 0 and != 1 in '$t', got $base")
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value",
-                when(col("value") > 0, log(base, col("value")))),
-              None, n => s"log(${in.displayName(n)},$base)",
-              in.consolidate)
-          case "invert" =>
-            // pointwise 1/x; zero renders null (safeDiv)
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value",
-                when(col("value") =!= 0.0, lit(1.0) / col("value"))),
-              None, n => s"invert(${in.displayName(n)})", in.consolidate)
-          case "minMax" =>
-            // per-series [0,1] feature scaling; zero-range series render
-            // null (F6 safe-div) — Series.minMaxNormalize
-            val in = recurse(arg0)
-            SeriesExpr(graft.operators.Series.minMaxNormalize(in.df),
-              None, n => s"minMax(${in.displayName(n)})", in.consolidate)
-          case "stdev" =>
-            // stdev(<expr>, points) — trailing stddev over the last N
-            // samples (Series.stdevRows: one incremental prefix-pair
-            // WindowExec, never a re-aggregating ROWS frame)
-            val nPts = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"stdev needs a points count in '$t'"))
-            require(nPts > 0, s"stdev points must be positive in '$t'")
-            val in = recurse(arg0)
-            SeriesExpr(graft.operators.Series.stdevRows(in.df, nPts),
-              None, n => s"stdev(${in.displayName(n)},$nPts)",
-              in.consolidate)
-          case "movingMedian" =>
-            // movingMedian(<expr>, points | "interval") — trailing EXACT
-            // median over the last N samples (ROWS) or the last interval
-            // (RANGE, graphite's usual form). A rank statistic has no
-            // prefix form, so both run the render-sized bounded collect
-            // + one codegen'd sorted-buffer scan, never a per-row
-            // re-aggregated frame (Series.movingMedianRows/Time)
-            val winArg = args.lift(1).map(_.trim).getOrElse(
-              throw new IllegalArgumentException(
-                s"movingMedian needs a window in '$t'"))
-            val in = recurse(arg0)
-            winArg.toIntOption match {
-              case Some(nPts) =>
-                require(nPts > 0,
-                  s"movingMedian points must be positive in '$t'")
-                SeriesExpr(
-                  graft.operators.Series.movingMedianRows(in.df, nPts),
-                  None, n => s"movingMedian(${in.displayName(n)},$nPts)",
-                  in.consolidate)
-              case None =>
-                val ivl = stripQuotes(winArg)
-                val windowMs = parseIntervalMs(ivl)
-                SeriesExpr(
-                  graft.operators.Series.movingMedianTime(in.df, windowMs),
-                  None, n => s"""movingMedian(${in.displayName(n)},"$ivl")""",
-                  in.consolidate)
-            }
-          case "divideSeriesLists" =>
-            // positional pairing of two series lists (both sorted by
-            // name); unequal lengths raise IN-PLAN → a 400 here — the
-            // graphite contract (Series.divideSeriesLists)
-            val divArg = args.lift(1).map(_.trim).getOrElse(
-              throw new IllegalArgumentException(
-                s"divideSeriesLists needs a divisor seriesList in '$t'"))
-            val a = recurse(arg0)
-            val b = recurse(divArg)
-            // alignOuter: graphite-web None-parity — an instant present
-            // on only one side renders a null datapoint, never a silently
-            // thinned series (F6 null result either way)
-            SeriesExpr(graft.operators.Series.divideSeriesLists(
-                a.df.select("tenant_id", "metric_name", "ts_ms", "value"),
-                b.df.select("tenant_id", "metric_name", "ts_ms", "value"),
-                alignOuter = true),
-              None, identity)
-          case "timeSlice" =>
-            // timeSlice(<expr>, "start"[, "end"]) — values outside the
-            // window render null datapoints (Graphite keeps the grid)
-            val startArg = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"timeSlice needs a start time in '$t'"))
-            val sMs = graft.core.DateTimeParser.parseMillis(startArg, now)
-            val eMs = args.lift(2).map(a =>
-              graft.core.DateTimeParser.parseMillis(stripQuotes(a), now))
-              .getOrElse(now)
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value",
-                when(col("ts_ms") >= sMs && col("ts_ms") <= eMs,
-                  col("value"))),
-              None, n => s"timeSlice(${in.displayName(n)},$startArg)",
-              in.consolidate)
-          case "averageOutsidePercentile" =>
-            // keep series whose mean lies OUTSIDE the [100-n, n]
-            // percentile band of all the matched series' means
-            // (graphite-web folds n<50 to 100-n)
-            val n0 = args.lift(1).flatMap(_.trim.toDoubleOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"averageOutsidePercentile needs a percentile in '$t'"))
-            require(n0 >= 0 && n0 <= 100,
-              s"percentile must be in [0, 100] in '$t', got $n0")
-            val nn = if (n0 < 50) 100 - n0 else n0
-            val in = recurse(arg0)
-            val inDf = in.df.localCheckpoint()
-            val means = inDf.groupBy(col("tenant_id"), col("metric_name"))
-              .agg((sum(col("value").cast(DecimalType(28, 2))).cast("double")
-                / count(col("value"))).as("__m"))
-            val bands = means.groupBy(col("tenant_id")).agg(
-              expr(s"percentile(__m, ${(100 - nn) / 100.0})").as("__lo"),
-              expr(s"percentile(__m, ${nn / 100.0})").as("__hi"))
-            val sel = means.join(broadcast(bands), Seq("tenant_id"))
-              .filter(!(col("__m") > col("__lo") && col("__m") < col("__hi")))
-              .select(col("tenant_id"), col("metric_name"))
-            in.copy(df = inDf.join(broadcast(sel),
-              Seq("tenant_id", "metric_name")))
-          case "linearRegression" =>
-            // per-series least-squares fit served AT the input instants —
-            // the fit reuses Series.linearTrend's integer-exact
-            // accumulators (slope per minute over (ts-min) div 60000
-            // offsets), and the drawn line uses the same integer offsets
-            val in = inner
-            val inDf = in.df.localCheckpoint()
-            val fit = graft.operators.Series
-              .linearTrend(inDf, horizonS = 0.0, threshold = Double.MaxValue)
-              .select(col("tenant_id"), col("metric_name"),
-                col("slope_per_s"), col("intercept"))
-            val wSer = Window.partitionBy(col("tenant_id"),
-              col("metric_name"))
-            SeriesExpr(inDf
-                .withColumn("__min", min(col("ts_ms")).over(wSer))
-                .join(broadcast(fit), Seq("tenant_id", "metric_name"))
-                .withColumn("value", col("intercept") +
-                  col("slope_per_s") * lit(60.0) *
-                  floor((col("ts_ms") - col("__min")) / lit(60000L)))
-                .drop("__min", "slope_per_s", "intercept"),
-              None, n => s"linearRegression(${in.displayName(n)})",
-              in.consolidate)
-          case "weightedAverage" =>
-            // weightedAverage(<avgExpr>, <weightExpr>, n1[, n2…]) — pair
-            // the two lists by node tokens, serve Σ(a·w)/Σ(w) per instant
-            // ([[graft.operators.Series.weightedAverage]])
-            require(args.length >= 3,
-              s"weightedAverage needs two series lists and node indexes in '$t'")
-            val idxs = args.drop(2).map(a => a.trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"weightedAverage node indexes must be integers in '$t'")))
-            val aIn = recurse(arg0).df
-            val wIn = recurse(args(1).trim).df
-            SeriesExpr(graft.operators.Series
-                .weightedAverage(aIn, wIn, idxs, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms")
-                .drop("n_keys"),
-              Some(t), identity)
-          case "smartSummarize" =>
-            // smartSummarize(<expr>,"<interval>"[,"<func>"]) — summarize
-            // with buckets aligned to the REQUEST'S from instead of the
-            // epoch snap (graphite-web's exact difference between the
-            // two): bucket k covers [from + k·ivl, from + (k+1)·ivl)
-            val ivl = ivlArg("display")
-            val ivlMs = parseIntervalMs(ivl)
-            val stat = args.lift(2).map(stripQuotes).getOrElse("sum")
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val in = inner
-            val shifted = graft.operators.Series
-              .smartSummarize(in.df, fromMs, ivlMs, stat)
-              .withColumnRenamed("bucket_ms", "ts_ms")
-            SeriesExpr(shifted, None,
-              n => s"""smartSummarize(${in.displayName(n)},"$ivl","$stat")""",
-              in.consolidate)
-          case "integralByInterval" =>
-            // integralByInterval(<expr>,"<interval>") — running total
-            // RESET at each interval boundary (graphite's daily-counter
-            // view). Same exact-DECIMAL accumulation as integral(), the
-            // window additionally partitioned by the epoch-snapped bucket
-            val ivl = ivlArg("reset")
-            val ivlMs = parseIntervalMs(ivl)
-            val in = inner
-            SeriesExpr(graft.operators.Series
-                .integralByInterval(in.df, ivlMs),
-              None,
-              n => s"""integralByInterval(${in.displayName(n)},"$ivl")""",
-              in.consolidate)
-          case "timeStack" =>
-            // timeStack(<expr>,"<shiftUnit>"[,start[,end]]) — one entry
-            // per shift i in [start, end]: the subtree evaluated under
-            // [from − i·unit, until − i·unit], drawn at the requested
-            // instants (this week stacked over the previous N weeks).
-            // Each copy re-fetches like timeShift; the copy count is
-            // capped — every copy is a full subtree evaluation
-            val ivl = ivlArg("shift")
-            val unitMs = parseIntervalMs(ivl)
-            val start = args.lift(2).flatMap(_.trim.toIntOption).getOrElse(0)
-            val end = args.lift(3).flatMap(_.trim.toIntOption).getOrElse(7)
-            require(start >= 0 && end >= start,
-              s"timeStack needs 0 <= start <= end in '$t'")
-            require(end - start + 1 <= 16,
-              s"timeStack copies capped at 16 in '$t', got ${end - start + 1}")
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            val copies = (start to end).map { i =>
-              val shiftMs = i.toLong * unitMs
-              val sub = recurse(arg0, s"${(fromMs - shiftMs) / 1000}",
-                s"${(untilMs - shiftMs) / 1000}")
-              (i, sub, sub.df
-                .withColumn("ts_ms", col("ts_ms") + lit(shiftMs))
-                .withColumn("metric_name",
-                  concat(col("metric_name"), lit(s"#tstack$i"))))
-            }
-            val subByI = copies.map(c => c._1 -> c._2).toMap
-            SeriesExpr(copies.map(_._3).reduce(_ unionByName _), None, { n =>
-              val m = "#tstack(\\d+)$".r.findFirstMatchIn(n)
-              m.fold(n) { mm =>
-                val i = mm.group(1).toInt
-                val base = n.stripSuffix(s"#tstack$i")
-                // the shift renders in seconds: "-2·1d" has no single
-                // interval literal, "-172800s" always does
-                val secs = i.toLong * unitMs / 1000
-                s"""timeShift(${subByI(i).displayName(base)},"-${secs}s")"""
-              }
-            })
-          case "applyByNode" =>
-            // applyByNode(<glob>, n, "template"[, "newName"]) — for each
-            // distinct node-prefix (tokens 0..n) of the matched series,
-            // evaluate the template with '%' replaced by the prefix; the
-            // per-prefix results union into one entry list. The prefix
-            // set is a driver-side distinct over the MATCHED NAMES (one
-            // tiny job, bounded by the panel's series count) and capped:
-            // each prefix is a full subtree evaluation
-            val nodeN = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"applyByNode needs a node index in '$t'"))
-            require(nodeN >= 0, s"node index must be >= 0 in '$t'")
-            val template = args.lift(2).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"applyByNode needs a template in '$t'"))
-            val newName = args.lift(3).map(stripQuotes)
-            val prefixes = recurse(arg0).df
-              .select(array_join(slice(split(col("metric_name"), "\\."),
-                1, nodeN + 1), ".").as("__pre"))
-              .distinct().limit(65).collect().map(_.getString(0))
-              .sorted.toSeq
-            require(prefixes.length <= 64,
-              s"applyByNode matches > 64 node prefixes in '$t' — " +
-                "narrow the glob")
-            require(prefixes.nonEmpty,
-              s"applyByNode matched no series in '$t'")
-            val subs = prefixes.zipWithIndex.map { case (pre, i) =>
-              val sub = recurse(template.replace("%", pre))
-              (i, pre, sub, sub.df.withColumn("metric_name",
-                concat(lit(s"#abn$i#"), col("metric_name"))))
-            }
-            val byI = subs.map(s => s._1 -> (s._2, s._3)).toMap
-            SeriesExpr(subs.map(_._4).reduce(_ unionByName _), None, { n =>
-              "^#abn(\\d+)#".r.findFirstMatchIn(n).fold(n) { mm =>
-                val i = mm.group(1).toInt
-                val (pre, sub) = byI(i)
-                val base = n.stripPrefix(s"#abn$i#")
-                newName.fold(sub.displayName(base))(_.replace("%", pre))
-              }
-            })
-          case "mapSeries" =>
-            // mapSeries(<expr>, n[, n2…]) — graphite's grouped list; the
-            // grouping only MATERIALIZES inside reduceSeries (below),
-            // so standalone rendering serves the series unchanged
-            val idxs = args.drop(1).map(a => a.trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"mapSeries node indexes must be integers in '$t'")))
-            require(idxs.nonEmpty,
-              s"mapSeries needs at least one node index in '$t'")
-            recurse(arg0)
-          case "reduceSeries" =>
-            // reduceSeries(mapSeries(<glob>, m), "func", n, "k1", "k2") —
-            // pair series that agree on every name token EXCEPT node n
-            // (the practical content of the mapSeries grouping), match
-            // the two reduce keys at node n, and serve func(k1, k2) per
-            // instant; entries named with node n replaced by
-            // "reduce.<func>" (graphite-web's output shape). Supported
-            // reducers: asPercent, divideSeries, diffSeries — the
-            // two-argument reducers graphite ships
-            require(args.length == 5, "reduceSeries takes " +
-              s"(mapSeries, func, reduceNode, matcher1, matcher2) in '$t'")
-            val func = stripQuotes(args(1).trim)
-            require(Set("asPercent", "divideSeries", "diffSeries")
-              .contains(func),
-              s"reduceSeries func must be asPercent|divideSeries|" +
-                s"diffSeries in '$t', got '$func'")
-            val rn = args(2).trim.toIntOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"reduceSeries needs a reduce node index in '$t'"))
-            require(rn >= 0, s"reduce node must be >= 0 in '$t'")
-            val (m1, m2) = (stripQuotes(args(3).trim),
-              stripQuotes(args(4).trim))
-            // alignOuter: graphite-web None-parity for one-sided instants
-            SeriesExpr(graft.operators.Series
-                .reduceSeriesPairs(inner.df, rn, m1, m2, func,
-                  alignOuter = true),
-              None, identity)
-          case "stacked" | "secondYAxis" | "drawAsInfinite" | "lineWidth" |
-               "dashed" | "color" =>
-            // PRESENTATION tags — rendering is the dashboard's job on
-            // this JSON API, so the frame passes through untouched; the
-            // display name wraps exactly where graphite-web wraps it
-            // (stacked/secondYAxis/drawAsInfinite/dashed) and stays bare
-            // where graphite-web keeps it (lineWidth/color), so mixed
-            // dashboards never 400 on a cosmetic tag
-            val in = recurse(arg0)
-            val wrapName: String => String = fn match {
-              case "lineWidth" | "color" => in.displayName
-              case "stacked" if args.length > 1 => in.displayName
-              case "dashed" =>
-                val d = args.lift(1).flatMap(_.trim.toDoubleOption)
-                  .getOrElse(5.0)
-                n => s"dashed(${in.displayName(n)}, $d)"
-              case _ => n => s"$fn(${in.displayName(n)})"
-            }
-            SeriesExpr(in.df, None, wrapName, in.consolidate)
-          case "aggregate" =>
-            // aggregate(<expr>, "func") — graphite 1.1's general combiner
-            // (what Grafana's editor emits for sum/avg/... since 1.1);
-            // dispatches onto the same aggregateSeries machinery as the
-            // sumSeries family
-            val func = args.lift(1).map(stripQuotes).getOrElse(
-              throw new IllegalArgumentException(
-                s"aggregate needs a function name in '$t'"))
-            val stat = func match {
-              case "sum" | "total" => "sum"
-              case "avg" | "average" | "mean" => "mean"
-              case "max" => "max"
-              case "min" => "min"
-              case "count" => "count"
-              case "range" | "rangeOf" => "range"
-              case "stddev" => "stddev"
-              case other => throw new IllegalArgumentException(
-                s"aggregate func must be one of sum|avg|max|min|count|" +
-                  s"range|stddev in '$t', got '$other'")
-            }
-            SeriesExpr(graft.operators.Series
-                .aggregateSeries(inner.df, "*", stat, bucketMs = 1L)
-                .withColumnRenamed("bucket_ms", "ts_ms"),
-              Some(t), identity)
-          case "exponentialMovingAverage" =>
-            // exponentialMovingAverage(<expr>, n) — EMA with smoothing
-            // 2/(n+1) over the series' POINTS (graphite's integer form;
-            // its interval form assumes fixed-step storage, which this
-            // irregular store deliberately rejects — summarize/resample
-            // first). Runs the codegen EwmaScan the alert scorers use;
-            // seeded at the first sample.
-            val n = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                "exponentialMovingAverage needs an integer point count " +
-                  s"in '$t' (interval strings assume fixed-step storage " +
-                  "— summarize/keepLastValue first)"))
-            require(n >= 1, s"point count must be >= 1 in '$t', got $n")
-            val in = inner
-            SeriesExpr(graft.operators.Anomaly
-                .ewmaBands(in.df, alpha = 2.0 / (n + 1))
-                .select(ser :+ col("ewma").as("value"): _*),
-              None, n0 => s"exponentialMovingAverage(${in.displayName(n0)},$n)",
-              in.consolidate)
-          case "threshold" =>
-            // threshold(value[, "label"[, "color"]]) — a constantLine
-            // with a legend label (color is presentation, passed through)
-            val v = stripQuotes(arg0).toDoubleOption.getOrElse(
-              throw new IllegalArgumentException(
-                s"threshold needs a numeric value in '$t'"))
-            val name = args.lift(1).map(stripQuotes).filter(_.nonEmpty)
-              .getOrElse(stripQuotes(arg0))
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            import spark.implicits._
-            SeriesExpr(Seq(fromMs, (fromMs + untilMs) / 2, untilMs).distinct
-                .map(ts => (tenant, name, ts, v))
-                .toDF("tenant_id", "metric_name", "ts_ms", "value"),
-              Some(name), identity)
-          case "aggregateLine" =>
-            // aggregateLine(<expr>[, "func"]) — per-series horizontal
-            // line at the series' own stat, drawn at from/mid/until
-            // (graphite's three-point line); per-series stat table is one
-            // row per series, cross-joined with the 3 instants
-            val func = args.lift(1).map(stripQuotes).getOrElse("avg")
-            val stat = func match {
-              case "avg" | "average" | "mean" => "mean"
-              case "last" | "current" => "last"
-              case f => f
-            }
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            import spark.implicits._
-            val instants = Seq(fromMs, (fromMs + untilMs) / 2, untilMs)
-              .distinct.toDF("ts_ms")
-            val in = recurse(arg0)
-            val statTable = graft.operators.Series
-              .topSeries(in.df, Int.MaxValue, stat)
-              .select(col("tenant_id"), col("metric_name"),
-                col("stat_value").as("value"))
-            SeriesExpr(statTable.crossJoin(broadcast(instants))
-                .select("tenant_id", "metric_name", "ts_ms", "value"),
-              None,
-              n => s"""aggregateLine(${in.displayName(n)}, '$func')""")
-          case "identity" | "timeFunction" =>
-            // identity("name"[, step]) — epoch seconds drawn on a uniform
-            // grid (graphite's time ramp; step defaults 60 s), bounded by
-            // the panel grid cap like every grid generator here
-            val name = stripQuotes(arg0)
-            val stepS = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(60)
-            require(stepS >= 1, s"step must be >= 1 in '$t', got $stepS")
-            val fromMs = graft.core.DateTimeParser.parseMillis(from, now)
-            val untilMs = graft.core.DateTimeParser.parseMillis(until, now)
-            val n = (untilMs - fromMs) / (stepS * 1000L) + 1L
-            require(n <= graft.operators.Series.MaxGridPointsPerSeries,
-              s"identity grid too fine: $n points > " +
-                s"${graft.operators.Series.MaxGridPointsPerSeries} in '$t'")
-            SeriesExpr(spark.range(n).select(
-                lit(tenant).as("tenant_id"), lit(name).as("metric_name"),
-                (lit(fromMs) + col("id") * (stepS * 1000L)).as("ts_ms"),
-                ((lit(fromMs) + col("id") * (stepS * 1000L)) / 1000L)
-                  .cast("double").as("value")),
-              Some(name), identity)
-          case "delay" =>
-            // delay(<expr>, steps) — each series' values shifted by N
-            // points (negative = forward); vacated points render null.
-            // RAW inner: a wrapped stage's nulls shift along
-            val steps = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"delay needs an integer step count in '$t'"))
-            val in = recurse(arg0)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("tenant_id"), col("metric_name"))
-              .orderBy(col("ts_ms"), col("value"))
-            SeriesExpr(in.df.withColumn("value", lag(col("value"), steps).over(w)),
-              None, n => s"delay(${in.displayName(n)},$steps)",
-              in.consolidate)
-          case "isNonNull" =>
-            // pointwise presence flag (1.0 where a datapoint exists)
-            val in = recurse(arg0)
-            SeriesExpr(in.df.withColumn("value",
-                when(col("value").isNotNull, lit(1.0)).otherwise(lit(0.0))),
-              None, n => s"isNonNull(${in.displayName(n)})", in.consolidate)
-          case "pow" | "squareRoot" =>
-            // pointwise power; graphite's safePow renders None where the
-            // real-valued result is undefined (negative base under a
-            // fractional exponent), which Spark's pow signals as NaN
-            val k = fn match {
-              case "squareRoot" => 0.5
-              case _ => args.lift(1).flatMap(_.trim.toDoubleOption).getOrElse(
-                throw new IllegalArgumentException(
-                  s"pow needs a numeric exponent in '$t'"))
-            }
-            val in = recurse(arg0)
-            val p = pow(col("value"), lit(k))
-            SeriesExpr(in.df.withColumn("value", when(!isnan(p), p)),
-              None,
-              n => if (fn == "squareRoot") s"squareRoot(${in.displayName(n)})"
-                   else s"pow(${in.displayName(n)},$k)",
-              in.consolidate)
-          case "substr" =>
-            // substr(<expr>, start[, stop]) — display name sliced to the
-            // dot-node range [start, stop), stop 0 = end; negative
-            // indexes count from the end (graphite's python slicing)
-            val start = args.lift(1).flatMap(_.trim.toIntOption).getOrElse(0)
-            val stop = args.lift(2).flatMap(_.trim.toIntOption).getOrElse(0)
-            val in = recurse(arg0)
-            SeriesExpr(in.df, None, { n0 =>
-              // graphite slices the UNDERLYING node list of the fetched
-              // series; for composed names the display text slices
-              val parts = in.displayName(n0).split('.')
-              val s0 = if (start < 0) (parts.length + start) max 0 else start min parts.length
-              val s1 = if (stop == 0) parts.length
-                       else if (stop < 0) (parts.length + stop) max 0
-                       else stop min parts.length
-              if (s0 >= s1) "" else parts.slice(s0, s1).mkString(".")
-            }, in.consolidate)
-          case "verticalLine" =>
-            // verticalLine("ts"[, "label"]) — a single marker instant
-            // (the JSON API serves the point; drawing the vertical is the
-            // dashboard's job, the events() convention)
-            val tsArg = stripQuotes(arg0)
-            val tsMs = graft.core.DateTimeParser.parseMillis(tsArg, now)
-            val name = args.lift(1).map(stripQuotes).filter(_.nonEmpty)
-              .getOrElse(t)
-            import spark.implicits._
-            SeriesExpr(Seq((tenant, name, tsMs, 1.0))
-                .toDF("tenant_id", "metric_name", "ts_ms", "value"),
-              Some(name), identity)
-          case "interpolate" =>
-            // interpolate(<expr>) — null datapoints filled linearly
-            // between their nearest non-null neighbors WITHIN the series;
-            // leading/trailing nulls stay null (graphite's interpolate).
-            // Both lookups are incremental [unbounded, current] frames
-            // (the resampleImpl reversed-sort trick for the next side) —
-            // never a per-row forward re-aggregation
-            val in = recurse(arg0)
-            val fwd = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("tenant_id"), col("metric_name"))
-              .orderBy(col("ts_ms"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            val bwd = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("tenant_id"), col("metric_name"))
-              .orderBy(col("ts_ms").desc)
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            val pv = last(when(col("value").isNotNull, col("value")), true).over(fwd)
-            val pt = last(when(col("value").isNotNull, col("ts_ms")), true).over(fwd)
-            val nv = last(when(col("value").isNotNull, col("value")), true).over(bwd)
-            val nt = last(when(col("value").isNotNull, col("ts_ms")), true).over(bwd)
-            SeriesExpr(in.df.withColumn("value",
-                when(col("value").isNotNull, col("value"))
-                  .when(pv.isNotNull && nv.isNotNull && nt =!= pt,
-                    pv + (nv - pv) * (col("ts_ms") - pt) / (nt - pt))),
-              None, n => s"interpolate(${in.displayName(n)})",
-              in.consolidate)
-          case other => throw new IllegalArgumentException(
-            s"unknown render function '$other' in target '$t'")
-        }
-      case glob => // bare glob: raw serve through the kind-routed read
-        SeriesExpr(numericPoints(tenant, glob, isGlob = true, from, until,
-          points, resolution, now), None, identity)
-    }
-  }
-
-  /** Row-capped collect of a series frame into render entries:
-    * `(target name, [(value, epoch_s)])` — one entry per series when
-    * `singleName` is None, else one entry named by the target expression.
-    * The limit is pushed INTO the query (the [[seriesJson]] contract), so
-    * an over-budget render never reaches the facade heap. */
-  private def collectSeries(df: org.apache.spark.sql.DataFrame, tsCol: String,
-      vCol: String, singleName: Option[String],
-      nameOf: String => String = identity)
-      : Seq[(String, Seq[(Option[Double], Long)])] = {
-    val cap = MaxSeriesPanelPoints
-    // a sortBy*() stage leaves a per-series __ord column: the entry list
-    // then orders by it (nulls last — a dataless series never leads),
-    // name-then-ts otherwise (the default Graphite list order)
-    val ord: Seq[org.apache.spark.sql.Column] =
-      if (df.columns.contains("__ord"))
-        Seq(col("__ord").asc_nulls_last, col("metric_name"), col("ts"))
-      else Seq(col("metric_name"), col("ts"))
-    val rows = df.select(Seq(col("metric_name"),
-        col(tsCol).cast("long").as("ts"), col(vCol).cast("double").as("v")) ++
-        (if (df.columns.contains("__ord")) Seq(col("__ord")) else Nil): _*)
-      .orderBy(ord: _*)
-      .limit(cap + 1).collect()
-    require(rows.length <= cap,
-      s"render result exceeds $cap points — narrow the range, lower " +
-        "maxDataPoints, or decimate (lttb/m4)")
-    // grouped by the SERIES, renamed only at emit: two series that an
-    // alias() maps onto the same display name stay separate entries with
-    // their own time-ordered datapoints (the Graphite shape), never one
-    // entry with interleaved points
-    val out = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[(Option[Double], Long)]]
-    rows.foreach { r =>
-      val v = if (r.isNullAt(2)) None else Some(r.getDouble(2))
-      out.getOrElseUpdate(r.getString(0),
-        scala.collection.mutable.ArrayBuffer.empty) += ((v, r.getLong(1) / 1000L))
-    }
-    out.toSeq.map { case (n, b) => singleName.getOrElse(nameOf(n)) -> b.toSeq }
-  }
-
-  /** Graphite's final presentation-level consolidation: when a finished
-    * series carries more datapoints than maxDataPoints, consecutive runs
-    * of ceil(n/maxDataPoints) points collapse to one via the series'
-    * consolidateBy statistic (default average, None-skipping — an all-null
-    * run stays a null datapoint), timestamped at the run's first instant —
-    * graphite-web's exact consolidate() shape. Driver-side ON PURPOSE: it
-    * runs on the ALREADY row-capped [[collectSeries]] output (never the
-    * point stream), the same place graphite-web consolidates its fetched
-    * lists, so the panel cap bounds the work. */
-  private def consolidatePoints(dps: Seq[(Option[Double], Long)], maxN: Int,
-      func: String): Seq[(Option[Double], Long)] =
-    if (dps.length <= maxN) dps
-    else {
-      val factor = (dps.length + maxN - 1) / maxN
-      dps.grouped(factor).map { g =>
-        val vs = g.flatMap(_._1)
-        val v: Option[Double] =
-          if (vs.isEmpty) None
-          else Some(func match {
-            case "sum" => vs.sum
-            case "min" => vs.min
-            case "max" => vs.max
-            case "first" => vs.head
-            case "last" => vs.last
-            case _ => vs.sum / vs.size
-          })
-        (v, g.head._2)
-      }.toSeq
-    }
-
-  /** One-sample-per-instant pick of a render subexpression — the shared
-    * divisor/factor contract of divideSeries/multiplySeries: per
-    * (tenant, instant) the single non-null sample, with ambiguity raising
-    * IN-PLAN (surfaced as a 400 by renderView's USER_RAISED_EXCEPTION
-    * translation — the message shape and the F6 null rules live HERE so
-    * the two arms cannot drift). Returns the aggregated frame to
-    * left-join on (tenant_id, ts_ms), the guarded value column, and the
-    * temp columns to drop after the join. */
-  private def perInstantSample(df: org.apache.spark.sql.DataFrame,
-      fn: String, what: String, arg: String, idx: Int)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column,
-         Seq[String]) = {
-    val v = s"__pis_$idx"
-    val c = s"__pisn_$idx"
-    val lo = s"__pislo_$idx"
-    val hi = s"__pishi_$idx"
-    val m = s"__pism_$idx"
-    val g0 = df.filter(col("value").isNotNull)
-      .groupBy(col("tenant_id"), col("ts_ms"))
-      .agg(max(col("value")).as(v), count(lit(1)).as(c),
-        min(col("metric_name")).as(lo), max(col("metric_name")).as(hi))
-    // FRAME-WIDE multi-series detection: a multi-series divisor whose
-    // series have DISJOINT timestamps passes the per-instant count guard
-    // yet silently interleaves series into one denominator — graphite-web
-    // rejects a multi-series divisor outright. min/max name over the
-    // per-tenant window is a cheap exact distinct>1 test on the already
-    // instant-grouped (render-sized) frame.
-    val g = g0.withColumn(m,
-        min(col(lo)).over(Window.partitionBy(col("tenant_id"))) =!=
-          max(col(hi)).over(Window.partitionBy(col("tenant_id"))))
-      .drop(lo, hi)
-    val guarded = when(col(m) || col(c) > 1, raise_error(lit(
-        s"$fn: $what '$arg' has more than one sample at an instant or " +
-          "matches more than one series — aggregate it first (sumSeries)"))
-        .cast("double"))
-      .otherwise(col(v))
-    (g, guarded, Seq(v, c, m))
   }
 
   /** Kind-routed NUMERIC point read for one metric spec — the shared data
@@ -3006,69 +1397,6 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       }
       new String(out.toByteArray, StandardCharsets.UTF_8)
     } finally inflightReads.remove(ex)
-  }
-
-  /** Render-target argument split: commas inside `{...}` glob alternation,
-    * inside nested `fn(...)` sub-expressions, AND inside `"..."` quoted
-    * strings stay part of their argument ([[GlobPattern]] braces nest and
-    * calls nest, so depth is tracked, not toggled; quoted content is
-    * opaque — `alias(a.b,"p99, ms")` keeps its comma and an unbalanced
-    * paren inside quotes cannot corrupt the depth). */
-  private def splitTargetArgs(argStr: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var depth = 0
-    // quote char while inside a quoted run, else 0 — BOTH quote styles
-    // are opaque to the split (stripQuotes accepts both, so the splitter
-    // must too: events('release, hotfix') would otherwise shear at the
-    // comma and AND two garbage fragments). A quote only OPENS a run at a
-    // token boundary (argument start or right after , ( { or space): an
-    // unpaired apostrophe inside an unquoted token (app.o'brien.*) stays
-    // literal instead of swallowing commas and parens to the next one.
-    var quote: Char = 0
-    def atBoundary: Boolean =
-      sb.isEmpty || " ,({".contains(sb.charAt(sb.length - 1))
-    argStr.foreach {
-      case c @ ('"' | '\'') if quote == 0 && atBoundary =>
-        quote = c; sb.append(c)
-      case c if quote != 0 =>
-        if (c == quote) quote = 0
-        sb.append(c)
-      case c @ ('{' | '(') => depth += 1; sb.append(c)
-      case c @ ('}' | ')') => depth -= 1; sb.append(c)
-      case ',' if depth == 0 => out += sb.toString; sb.clear()
-      case c => sb.append(c)
-    }
-    out += sb.toString
-    out.toArray
-  }
-
-  /** Strip one layer of matching quotes — Graphite target args quote
-    * interval/func strings (`summarize(a.b,"1hour","sum")`). */
-  private def stripQuotes(s0: String): String = {
-    val s = s0.trim
-    if (s.length >= 2 && ((s.head == '"' && s.last == '"') ||
-        (s.head == '\'' && s.last == '\''))) s.substring(1, s.length - 1)
-    else s
-  }
-
-  /** Graphite interval grammar → millis: `<n><unit>`, unit one of
-    * s/sec/seconds, min/minutes, h/hour/hours, d/day/days, w/week/weeks. */
-  private def parseIntervalMs(ivl: String): Long = {
-    val Re = """(\d+)\s*(s|sec|seconds?|min|minutes?|h|hours?|d|days?|w|weeks?)""".r
-    ivl.trim match {
-      case Re(n, u) =>
-        val unit = u match {
-          case "s" | "sec" | "second" | "seconds" => 1000L
-          case "min" | "minute" | "minutes" => 60000L
-          case "h" | "hour" | "hours" => 3600000L
-          case "d" | "day" | "days" => 86400000L
-          case _ => 7L * 86400000L
-        }
-        n.toLong * unit
-      case other => throw new IllegalArgumentException(
-        s"bad interval '$other' — expected <n><s|min|h|d|w>")
-    }
   }
 
   /** `GET /metrics/find?query=<glob>&tenant=` — the Graphite metric-tree

@@ -1722,6 +1722,97 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
     } finally srv.stop()
   }
 
+  test("/functions is generated from the render table: every served " +
+    "alias is listed, and entries keep graphite-web's exact shape") {
+    val (srv, base, _) = startServer()
+    try {
+      val fc = get(s"$base/functions")
+      assert(fc.statusCode() === 200, fc.body())
+      // /render serves log as logarithm's alias, so the catalog lists it
+      assert(fc.body().contains(""""log": {"name": "log", """), fc.body())
+      val pinned = Seq(
+        "sumSeries" -> (
+          "{\"name\": \"sumSeries\", \"function\": \"sumSeries(seriesList)\", " +
+          "\"description\": \"per-instant sum across matched series\", " +
+          "\"group\": \"Combine\", \"module\": \"graft.render\", " +
+          "\"params\": [{\"name\": \"seriesList\", \"type\": \"seriesList\", " +
+          "\"required\": true}]}"),
+        "movingWindow" -> (
+          "{\"name\": \"movingWindow\", " +
+          "\"function\": \"movingWindow(seriesList, windowSize, func)\", " +
+          "\"description\": \"trailing time-window statistic (average|sum|max|min|stddev)\", " +
+          "\"group\": \"Calculate\", \"module\": \"graft.render\", " +
+          "\"params\": [{\"name\": \"seriesList\", \"type\": \"seriesList\", " +
+          "\"required\": true}, {\"name\": \"windowSize\", \"type\": \"string\", " +
+          "\"required\": true}, {\"name\": \"func\", \"type\": \"string\", " +
+          "\"required\": false}]}"),
+        "aliasByNode" -> (
+          "{\"name\": \"aliasByNode\", \"function\": \"aliasByNode(seriesList, " +
+          "nodes)\", " +
+          "\"description\": \"display name from a dot-node of the series name\", " +
+          "\"group\": \"Alias\", \"module\": \"graft.render\", " +
+          "\"params\": [{\"name\": \"seriesList\", \"type\": \"seriesList\", " +
+          "\"required\": true}, {\"name\": \"nodes\", \"type\": \"node\", " +
+          "\"required\": true}]}"),
+        "events" -> (
+          "{\"name\": \"events\", \"function\": \"events(tags)\", " +
+          "\"description\": \"event markers from the events store (tags ANDed; bare form serves all)\", " +
+          "\"group\": \"Special\", \"module\": \"graft.render\", " +
+          "\"params\": [{\"name\": \"tags\", \"type\": \"string\", " +
+          "\"required\": false}]}"))
+      for ((name, body) <- pinned) {
+        val r = get(s"$base/functions/$name")
+        assert(r.statusCode() === 200, r.body())
+        assert(r.body() === body)
+        assert(fc.body().contains(s""""$name": $body"""), name)
+      }
+    } finally srv.stop()
+  }
+
+  test("an optional render argument that is present but does not parse " +
+    "is a 400; an omitted one keeps its default") {
+    val (srv, base, _) = startServer()
+    try {
+      val t0 = now - 600000L
+      val recs = Seq("app.a" -> 1.0, "app.b" -> 2.0).map { case (n, v) =>
+        s"""{"metricName": "$n", "metricValue": $v,
+           | "collectionTime": $t0, "ttlInSeconds": 172800}""".stripMargin
+      }.mkString("[", ",", "]")
+      assert(post(s"$base/v2.0/acme/ingest", recs).statusCode() === 200)
+      def render(target: String) = get(s"$base/render?target=" +
+        java.net.URLEncoder.encode(target, "UTF-8") +
+        s"&from=${t0 / 1000 - 60}&until=${now / 1000}&tenant=acme")
+      for (t <- Seq("""log(app.a,"ten")""", """substr(app.*,"x")""",
+          """identity("t","x")""", """timeStack(app.a,"1d","x")""",
+          """dashed(app.a,"x")""")) {
+        val r = render(t)
+        assert(r.statusCode() === 400, s"$t: ${r.body()}")
+        assert(r.body().contains("got '"), s"$t: ${r.body()}")
+      }
+      // the defaults: base 10, the whole name, a 60 s step, shifts 0..7
+      // and dash length 5.0
+      val lg = render("log(app.a)")
+      assert(lg.statusCode() === 200 &&
+        lg.body().contains(""""target": "log(app.a,10.0)""""), lg.body())
+      val sb = render("substr(app.*)")
+      assert(sb.statusCode() === 200 &&
+        sb.body().contains(""""target": "app.b""""), sb.body())
+      val id = render("""identity("t")""")
+      val fromS = t0 / 1000 - 60
+      assert(id.statusCode() === 200 &&
+        id.body().contains(s", ${fromS + 60}]"), id.body())
+      // only the unshifted copy has data; start 8 past the default end
+      // 7 is refused
+      val ts = render("""timeStack(app.a,"1d")""")
+      assert(ts.statusCode() === 200 &&
+        ts.body().contains("-0s"), ts.body())
+      assert(render("""timeStack(app.a,"1d",8)""").statusCode() === 400)
+      val da = render("dashed(app.a)")
+      assert(da.statusCode() === 200 &&
+        da.body().contains(""""target": "dashed(app.a, 5.0)""""), da.body())
+    } finally srv.stop()
+  }
+
   test("RACE: stored-tier views reads racing live ingest (dirty-day " +
     "re-roll + cascade every batch) never 5xx and never lose the day") {
     val (srv, base, _) = startServer()

@@ -349,9 +349,8 @@ private[http] object Render {
     * series `pick` names, served UNCHANGED (nulls included). The frame is
     * materialized once — it feeds BOTH the pick and the join probe side,
     * and an expensive nested subtree must not re-run for each consumer
-    * (the CLAUDE.md materialize-once rule; render inputs are
-    * panel-bounded) — and the pick, one row per series, broadcast-joins
-    * back. */
+    * (render inputs are panel-bounded) — and the pick, one row per
+    * series, broadcast-joins back. */
   private def keepSeries(c: Call)(pick: DataFrame => DataFrame): SeriesExpr = {
     val in = c.raw
     val inDf = in.df.localCheckpoint()

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
+import graft.core.Sessions.flag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -40,25 +41,11 @@ object AlertDaemon {
       "usage: graft.AlertDaemon <inputDir> <storeDir> <checkpointDir> " +
         "[--gap s] [--watermark d] [--min-points n] [--threshold v] [--once]")
     val Seq(inputDir, storeDir, checkpointDir) = args.take(3).toSeq
-    def flagVal(name: String): Option[String] =
-      args.indexOf(name) match {
-        case -1 => None
-        case i =>
-          require(i + 1 < args.length, s"$name needs a value")
-          Some(args(i + 1))
-      }
-    val gapMs = flagVal("--gap").map(_.toLong).getOrElse(3600L) * 1000L
-    val watermark = flagVal("--watermark").getOrElse("10 minutes")
-    val minPoints = flagVal("--min-points").map(_.toInt).getOrElse(1)
-    val threshold = flagVal("--threshold").map(_.toDouble)
-    val spark = SparkSession.builder()
-      .appName("graft-alert-daemon")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val gapMs = flag(args, "--gap").map(_.toLong).getOrElse(3600L) * 1000L
+    val watermark = flag(args, "--watermark").getOrElse("10 minutes")
+    val minPoints = flag(args, "--min-points").map(_.toInt).getOrElse(1)
+    val threshold = flag(args, "--threshold").map(_.toDouble)
+    val spark = Sessions.local("graft-alert-daemon").getOrCreate()
     try {
       val schema = StructType.fromDDL(threshold match {
         case Some(_) =>

@@ -1,25 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // N>1 → per-query MEDIAN over N full rounds (round-robin, so JVM/JIT
     // drift spreads evenly across queries instead of biasing whichever
     // query runs first). The driver leaves this unset → single-run, same
     // output shape as always.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench").getOrCreate()
     // Warmup: JIT/codegen/parquet-footer caches, so the first timed query
     // isn't charged for JVM cold start.
     try {

@@ -1,8 +1,7 @@
 package graft
 
-import graft.core.Granularity
+import graft.core.{Granularity, Sessions}
 import graft.query.MetricsQueryApi
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end product demo: drives the whole engine the way a user would —
   * ingest a batch, run the rollup cascade, query through the API, print the
@@ -10,18 +9,8 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-demo")
+      .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
 
     println("== 1. ingest: batch of raw points -> day-partitioned store + 5m tier ==")
     val store = java.nio.file.Files.createTempDirectory("graft_demo").toString

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Plan inspection entry point: prints the formatted physical plan of the
   * named queries (or a default set) at the given sf dir — used to audit
@@ -11,15 +11,8 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_range_scan", "q_rollup_basic_5m", "q_tpch_q5", "q_units_join",
         "q_sim_topk", "q_pipeline_select", "q_decontaminate")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-explain")
+      .config("spark.log.level", "ERROR").getOrCreate()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -10,16 +11,7 @@ import org.apache.spark.sql.functions._
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-ingest-bench").getOrCreate()
     def tmp() = java.nio.file.Files.createTempDirectory("graft_ingest_bench").toString
     def points(s: SparkSession) = graft.streaming.IngestStream.withValidity(
       graft.core.Tables.metrics(s, sfDir)

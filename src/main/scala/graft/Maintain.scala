@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.Sessions
+import graft.core.Sessions.flag
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The unified maintenance pass — ops parity with the reference's
@@ -127,28 +129,14 @@ object Maintain {
       "usage: graft.Maintain <storeDir> [--quiesced] [--text-index p] " +
         "[--ivf p] [--now ms]")
     val storeDir = args(0)
-    def flagVal(name: String): Option[String] =
-      args.indexOf(name) match {
-        case -1 => None
-        case i =>
-          require(i + 1 < args.length, s"$name needs a value")
-          Some(args(i + 1))
-      }
-    val spark = SparkSession.builder()
-      .appName("graft-maintain")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-maintain").getOrCreate()
     try {
       val report = run(spark, storeDir,
-        nowMillis = flagVal("--now").map(_.toLong)
+        nowMillis = flag(args, "--now").map(_.toLong)
           .getOrElse(System.currentTimeMillis()),
         assumeQuiesced = args.contains("--quiesced"),
-        textIndexPath = flagVal("--text-index"),
-        ivfIndexPath = flagVal("--ivf"))
+        textIndexPath = flag(args, "--text-index"),
+        ivfIndexPath = flag(args, "--ivf"))
       println(report.summary)
     } finally spark.stop()
   }

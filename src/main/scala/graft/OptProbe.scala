@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Optimization-round instrumentation: run the named queries to completion
   * (same timed action as Bench — `count()`), then print the EXECUTED plan.
@@ -15,17 +15,8 @@ object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-optprobe")
+      .config("spark.log.level", "ERROR").getOrCreate()
     // Synthetic probes for pipelines whose bench queries checkpoint their
     // expensive lineage away before the final plan (minhash/span families):
     // these run the INNER stage as a plain uncheckpointed DataFrame so the

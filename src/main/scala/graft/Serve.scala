@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.Sessions
+import graft.core.Sessions.flag
 import graft.http.MetricsHttpServer
 import org.apache.spark.sql.SparkSession
 
@@ -103,24 +105,7 @@ object Serve {
       "usage: graft.Serve <storeDir> [--port n] [--maintain-every s] " +
         "[--max-age ms] [--max-future ms] [--cors] [--once]")
     val storeDir = args(0)
-    def flagVal(name: String): Option[String] =
-      args.indexOf(name) match {
-        case -1 => None
-        case i =>
-          require(i + 1 < args.length, s"$name needs a value")
-          Some(args(i + 1))
-      }
-    val spark = SparkSession.builder()
-      .appName("graft-serve")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-serve").getOrCreate()
     try {
       if (args.contains("--once")) {
         // offline maintenance window: quiesced compaction, one pass, exit
@@ -129,12 +114,12 @@ object Serve {
         return
       }
       val h = start(spark, storeDir,
-        port = flagVal("--port").map(_.toInt).getOrElse(20000),
+        port = flag(args, "--port").map(_.toInt).getOrElse(20000),
         maintainEverySec =
-          flagVal("--maintain-every").map(_.toLong).getOrElse(3600L),
-        maxAgeMs = flagVal("--max-age").map(_.toLong)
+          flag(args, "--maintain-every").map(_.toLong).getOrElse(3600L),
+        maxAgeMs = flag(args, "--max-age").map(_.toLong)
           .getOrElse(3L * 3600 * 1000),
-        maxFutureMs = flagVal("--max-future").map(_.toLong)
+        maxFutureMs = flag(args, "--max-future").map(_.toLong)
           .getOrElse(10L * 60 * 1000),
         corsEnabled = args.contains("--cors"),
         // the reference's ROLLUP_DELAY deployment shape: POSTs return
@@ -142,9 +127,9 @@ object Serve {
         // every --rollup-delay ms (serving repairs from raw meanwhile)
         deferRollups = args.contains("--defer-rollups"),
         rollupDelayMs =
-          flagVal("--rollup-delay").map(_.toLong).getOrElse(30000L))
+          flag(args, "--rollup-delay").map(_.toLong).getOrElse(30000L))
       println(s"[serve] listening on :${h.port}, store $storeDir " +
-        s"(maintenance every ${flagVal("--maintain-every").getOrElse("3600")} s)")
+        s"(maintenance every ${flag(args, "--maintain-every").getOrElse("3600")} s)")
       Runtime.getRuntime.addShutdownHook(new Thread(() => h.stop()))
       h.done.await()
     } finally spark.stop()

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Sessions
 import graft.operators.{Anomaly, Dedup, Series, TimeJoin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -42,15 +43,10 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val scale = args.headOption.map(_.toDouble).getOrElse(1.0)
     require(scale > 0, s"scale must be positive, got $scale")
-    val spark = SparkSession.builder()
-      .appName("graft-stress")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOTE: driver heap cannot be set here (the JVM is already running
-      // under sbt) — size it via the launcher (build.sbt run / javaOptions
-      // or SBT_OPTS) if a shape OOMs
-      .getOrCreate()
+    // NOTE: driver heap cannot be set here (the JVM is already running
+    // under sbt) — size it via the launcher (build.sbt run / javaOptions
+    // or SBT_OPTS) if a shape OOMs
+    val spark = Sessions.local("graft-stress").getOrCreate()
     try {
       val results = run(spark, scale)
       println("[stress] | shape/op | rows out | seconds |")

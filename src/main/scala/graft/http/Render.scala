@@ -1249,7 +1249,7 @@ private[http] object Render {
     presentation("lineWidth", "presentation tag (line width); data passes through",
       Seq(series, p("width", "float")))((_, d) => d),
     presentation("dashed", "presentation tag (dashed line); data passes through",
-      Seq(series, opt("dashLength", "integer"))) { (c, d) =>
+      Seq(series, opt("dashLength", "float"))) { (c, d) =>
       val w = c.optNum(1, "a numeric dash length").getOrElse(5.0)
       n => s"dashed(${d(n)}, $w)"
     },
@@ -1348,7 +1348,7 @@ private[http] object Render {
           pv + (nv - pv) * (col("ts_ms") - pt) / (nt - pt)), "")
     },
     Fn("substr", "Alias", "display name sliced to the dot-node range [start, stop); python-style negative indexes",
-        Seq(series, p("start", "node"), opt("stop", "node"))) { c =>
+        Seq(series, opt("start", "node"), opt("stop", "node"))) { c =>
       // substr(<expr>, start[, stop]) — display name sliced to the
       // dot-node range [start, stop), stop 0 = end; negative
       // indexes count from the end (graphite's python slicing)

@@ -268,29 +268,6 @@ object Rollups {
       .groupBy(col("tenant_id"), col("metric_name"), col("bucket_ms"))
       .agg(sum(col("partial_distinct")).as("distinct_count"))
 
-  /** Rollups-on-read repair: fill windows missing from the stored rollup
-    * tier by recomputing them from the finer/raw tier, then union
-    * (reference: outputs/handlers/RollupHandler.java:241-297 repairMetrics +
-    * 381-409 createRepairPoints; union at 250-287). The anti-join discovers
-    * uncovered windows relationally — Spark parallelism replaces the
-    * reference's repair thread pools. Always recompute-from-source, never
-    * read-modify-write (SURVEY §7.4 #3). */
-  def repairBasic(stored: DataFrame, raw: DataFrame, g: Granularity): DataFrame =
-    repairWith(stored, raw, g)(basicFromRaw)
-
-  /** Kind-generic rollups-on-read: works for any rollup builder with the
-    * standard (tenant_id, metric_name, bucket_ms) key — the reference
-    * dispatches repair per rollup type the same way
-    * (RollupRunnable.getRollupComputer:162-178 feeding repairMetrics). */
-  def repairWith(stored: DataFrame, raw: DataFrame, g: Granularity)(
-      rollupFromRaw: (DataFrame, Granularity) => DataFrame): DataFrame = {
-    val computed = rollupFromRaw(raw, g)
-    val missing = computed.join(
-      stored.select(col("tenant_id"), col("metric_name"), col("bucket_ms")),
-      Seq("tenant_id", "metric_name", "bucket_ms"), "left_anti")
-    stored.unionByName(missing)
-  }
-
   /** Stat projection (`select=` query param): keep only requested stats
     * (reference: PlotRequestParser.java:26-59 defaults, 127-145 parsing). */
   def statProjection(rollups: DataFrame, stats: Seq[String]): DataFrame = {

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Engine extensions: registers the custom expressions for SQL users, so
   * `spark.sql("SELECT dot_product(a, b) ...")` works next to the DataFrame
   * API. Install via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or config
+  * `Sessions.local(app).withExtensions(new GraftExtensions)` or config
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -19,8 +19,12 @@ object MetricsQueryApi {
     * enforced HttpMultiRollupsQueryHandler.java:110-114). */
   val MaxMetricsPerBatchQuery = 100
 
-  /** The ONE JSON string escaper — shared by the serializer and the HTTP
-    * facade so a future escaping fix cannot land on one and not the other. */
+  /** The ONE JSON string escaper — shared by the serializer, the HTTP
+    * facade and Verify's `oracle_sql.json`, so a future escaping fix cannot
+    * land on one and not the other. It escapes backslash, quote and ALL
+    * control chars (< 0x20): a tab or CR in builder-authored oracle SQL
+    * would otherwise make the correctness gate's `json.load` fail and
+    * silently zero the whole oracle comparison. */
   private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"

@@ -1,24 +1,15 @@
 package graft
 
+import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 
-/** Shared session for specs — one per suite, config matching Verify's. */
+/** Shared session for specs: graft's [[graft.core.Sessions.local]] at a
+  * fixed 4 cores, so no spec depends on the host's core count. */
 trait SparkSuite {
   lazy val spark: SparkSession = SparkSuite.session
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    Sessions.local("graft-test", cpus = 4).getOrCreate()
 }

@@ -1759,6 +1759,27 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
           "\"description\": \"event markers from the events store (tags ANDed; bare form serves all)\", " +
           "\"group\": \"Special\", \"module\": \"graft.render\", " +
           "\"params\": [{\"name\": \"tags\", \"type\": \"string\", " +
+          "\"required\": false}]}"),
+        // start is optional (/render serves substr(app.*) with start 0)
+        "substr" -> (
+          "{\"name\": \"substr\", \"function\": \"substr(seriesList, start, " +
+          "stop)\", " +
+          "\"description\": \"display name sliced to the dot-node range " +
+          "[start, stop); python-style negative indexes\", " +
+          "\"group\": \"Alias\", \"module\": \"graft.render\", " +
+          "\"params\": [{\"name\": \"seriesList\", \"type\": \"seriesList\", " +
+          "\"required\": true}, {\"name\": \"start\", \"type\": \"node\", " +
+          "\"required\": false}, {\"name\": \"stop\", \"type\": \"node\", " +
+          "\"required\": false}]}"),
+        // the evaluator reads a float dash length (dashed(app.a, 2.5))
+        "dashed" -> (
+          "{\"name\": \"dashed\", \"function\": \"dashed(seriesList, " +
+          "dashLength)\", " +
+          "\"description\": \"presentation tag (dashed line); data passes " +
+          "through\", " +
+          "\"group\": \"Graph\", \"module\": \"graft.render\", " +
+          "\"params\": [{\"name\": \"seriesList\", \"type\": \"seriesList\", " +
+          "\"required\": true}, {\"name\": \"dashLength\", \"type\": \"float\", " +
           "\"required\": false}]}"))
       for ((name, body) <- pinned) {
         val r = get(s"$base/functions/$name")

@@ -50,16 +50,6 @@ class RollupSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("repairBasic fills exactly the missing windows") {
-    val pts = Tables.metrics(spark, dir)
-    val full = Rollups.basicFromRaw(pts, Granularity.MIN_5)
-    val stored = full.filter(col("bucket_ms") < 1704500000000L)
-    val repaired = Rollups.repairBasic(stored, pts, Granularity.MIN_5)
-    assert(repaired.count() === full.count())
-    assert(repaired.select("tenant_id", "metric_name", "bucket_ms").distinct().count()
-      === full.count())
-  }
-
   test("stable variance merge survives huge-mean/small-spread data where expanded form cancels") {
     import spark.implicits._
     // values 1e8 + offsets {-1.5,-0.5,0.5,1.5}×2 ⇒ var_pop = 1.25; the
@@ -74,17 +64,6 @@ class RollupSpec extends AnyFunSuite with SparkSuite {
     val truth = raw.agg(org.apache.spark.sql.functions.var_pop($"value"))
       .collect()(0).getDouble(0)
     assert(math.abs(stable - truth) < 1e-6, s"stable=$stable truth=$truth")
-  }
-
-  test("kind-generic repair works for gauge and counter rollups") {
-    val pts = Tables.metrics(spark, dir)
-    for (builder <- Seq[(org.apache.spark.sql.DataFrame, Granularity) => org.apache.spark.sql.DataFrame](
-        Rollups.gaugeFromRaw, Rollups.counterFromRaw)) {
-      val full = builder(pts, Granularity.MIN_60)
-      val stored = full.filter(col("bucket_ms") < 1704500000000L)
-      val repaired = Rollups.repairWith(stored, pts, Granularity.MIN_60)(builder)
-      assert(repaired.count() === full.count())
-    }
   }
 
   test("gauge latest picks max-ts value") {

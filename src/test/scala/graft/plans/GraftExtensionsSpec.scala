@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +12,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // with the extensions applied.
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Sessions.local("graft-ext-test", cpus = 2)
+      .withExtensions(new GraftExtensions).getOrCreate()
   }
 
   test("dot_product and vec_norm usable from SQL") {

@@ -1298,8 +1298,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
         val nameCol = col("metric_name").isin(names: _*) &&
           col("tenant_id") === tenant
         def hits(table: String, famCol: org.apache.spark.sql.Column) =
-          if (!IngestStream.hasParquetData(spark, s"$storeDir/$table")) Nil
-          else spark.read.parquet(s"$storeDir/$table").filter(nameCol)
+          MetricsQueryApi.rawTable(spark, storeDir, table).filter(nameCol)
             .select(col("metric_name"), famCol.as("fam")).distinct()
             .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
         val all = hits("preagg_raw", col("kind")) ++

@@ -222,21 +222,18 @@ private[http] object Render {
     }
 
   /** Per-series percentile line: scrub past it (remove*) or draw it
-    * (nPercentile) — the clampOutliers shape: one per-series
-    * exact-percentile aggregation (`__pv`) joined back on the identical
-    * key. The frame feeds BOTH the aggregate and the probe side, so
-    * materialize once (the [[keepSeries]] rule). */
+    * (nPercentile) — each point against its series' exact percentile of
+    * the non-null values (`__pv`, NULL for an all-null series), a
+    * [[perSeries]] window column: the subtree is evaluated once, inside
+    * the render's one job (the [[keepSeries]] rule). */
   private def percentileScrub(name: String, desc: String)(v: => Column) =
     Fn(name, "Transform", desc, Seq(series, p("n", "float"))) { c =>
       val pct = c.pct(1)
       val in = c.raw // RAW: null datapoints pass through
-      val inDf = in.df.localCheckpoint()
-      val q = inDf.filter(col("value").isNotNull)
-        .groupBy(col("tenant_id"), col("metric_name"))
-        .agg(percentile(col("value"), lit(pct / 100.0)).as("__pv"))
-      val joined = inDf.join(broadcast(q),
-        Seq("tenant_id", "metric_name"), "left")
-      in.wrap(joined.withColumn("value", v).drop("__pv"))(
+      in.wrap(in.df
+          .withColumn("__pv",
+            percentile(col("value"), lit(pct / 100.0)).over(perSeries))
+          .withColumn("value", v).drop("__pv"))(
         d => s"$name($d,$pct)")
     }
 
@@ -335,28 +332,37 @@ private[http] object Render {
 
   /** Series SELECTION (Graphite's highest* and lowest* family): rank whole
     * series by a per-series stat, keep k, serve those series' points
-    * unchanged (names pass through). The ≤k selection broadcast-joins
-    * back — the per-series stat table is one row per matched series,
-    * never the point stream. */
+    * unchanged (names pass through). */
   private def selector(name: String, stat: String, asc: Boolean, desc: String) =
     Fn(name, "Filter Series", desc, Seq(series, p("n", "integer"))) { c =>
       val k = c.count(1)
-      // topSeries' aggregates ignore nulls themselves
-      keepSeries(c)(Series.topSeries(_, k, stat, asc))
+      // seriesStat's aggregates ignore nulls themselves
+      keepSeries(c)(topK(_, k, Series.seriesStat(stat, _.over(perSeries)), asc))
     }
 
-  /** Whole-series selection: the RAW first argument's points for the
-    * series `pick` names, served UNCHANGED (nulls included). The frame is
-    * materialized once — it feeds BOTH the pick and the join probe side,
-    * and an expensive nested subtree must not re-run for each consumer
-    * (render inputs are panel-bounded) — and the pick, one row per
-    * series, broadcast-joins back. */
+  /** Whole-series selection: the RAW first argument's points that `pick`
+    * keeps, served UNCHANGED (nulls included). `pick` filters the points
+    * by window columns — [[perSeries]] aggregates, then a per-tenant rank
+    * where it ranks — and drops them again. The subtree is evaluated
+    * ONCE and the pick runs inside the render's one job: the read under
+    * it is one partition, which every window plans over without an
+    * exchange — no checkpoint job, no broadcast job. */
   private def keepSeries(c: Call)(pick: DataFrame => DataFrame): SeriesExpr = {
     val in = c.raw
-    val inDf = in.df.localCheckpoint()
-    val sel = pick(inDf).select(col("tenant_id"), col("metric_name"))
-    in.copy(df = inDf.join(broadcast(sel), Seq("tenant_id", "metric_name")))
+    in.copy(df = pick(in.df))
   }
+
+  /** The points of each tenant's first `k` series by `stat`, a
+    * per-series window column, in [[Series.topSeries]]' order
+    * ([[Series.rankOrder]]: nulls last, ties by name): every point of a
+    * series shares its (stat, name), so the dense rank of a point is its
+    * series' rank. */
+  private def topK(df: DataFrame, k: Int, stat: Column,
+      ascending: Boolean): DataFrame =
+    df.withColumn("stat_value", stat)
+      .withColumn("__rk", dense_rank().over(Window.partitionBy(col("tenant_id"))
+        .orderBy(Series.rankOrder(ascending): _*)))
+      .filter(col("__rk") <= k).drop("stat_value", "__rk")
 
   /** Threshold SELECTION: keep series whose per-series stat clears the
     * bound. */
@@ -365,9 +371,10 @@ private[http] object Render {
     Fn(name, "Filter Series", desc, Seq(series, p("n", "float"))) { c =>
       val thr = c.num(1, "a numeric threshold")
       val cond =
-        if (above) col("stat_value") > thr
-        else col("stat_value") < thr
-      keepSeries(c)(Series.topSeries(_, Int.MaxValue, stat).filter(cond))
+        if (above) col("__stat") > thr
+        else col("__stat") < thr
+      keepSeries(c)(_.withColumn("__stat",
+        Series.seriesStat(stat, _.over(perSeries))).filter(cond).drop("__stat"))
     }
 
   /** Series-NAME regex filter (Graphite's exclude/grep): unanchored search
@@ -833,22 +840,19 @@ private[http] object Render {
     Fn("linearRegression", "Transform", "per-series least-squares fit drawn at the input instants",
         Seq(series)) { c =>
       // per-series least-squares fit served AT the input instants —
-      // the fit reuses Series.linearTrend's integer-exact
-      // accumulators (slope per minute over (ts-min) div 60000
-      // offsets), and the drawn line uses the same integer offsets
+      // Series.linearTrend's integer-exact accumulators (slope per
+      // minute over (ts-min) div 60000 offsets) as perSeries window
+      // columns, so the fit runs inside the render's one job; the drawn
+      // line uses the same integer offsets
       val in = c.inner
-      val inDf = in.df.localCheckpoint()
-      val fit = Series
-        .linearTrend(inDf, horizonS = 0.0, threshold = Double.MaxValue)
-        .select(col("tenant_id"), col("metric_name"),
-          col("slope_per_s"), col("intercept"))
-      in.wrap(inDf
-          .withColumn("__min", min(col("ts_ms")).over(perSeries))
-          .join(broadcast(fit), Seq("tenant_id", "metric_name"))
-          .withColumn("value", col("intercept") +
-            col("slope_per_s") * lit(60.0) *
-            floor((col("ts_ms") - col("__min")) / lit(60000L)))
-          .drop("__min", "slope_per_s", "intercept"))(
+      val fitted = in.df
+        .withColumn("min_ms", min(col("ts_ms")).over(perSeries))
+        .select(col("*") +: Series.trendSums(_.over(perSeries)): _*)
+        .withColumn("slope_per_min", Series.trendSlopePerMin)
+        .withColumn("value", Series.trendIntercept +
+          col("slope_per_min") / lit(60.0) * lit(60.0) *
+          floor((col("ts_ms") - col("min_ms")) / lit(60000L)))
+      in.wrap(fitted.select(in.df.columns.map(col).toIndexedSeq: _*))(
         d => s"linearRegression($d)")
     },
     grid("keepLastValue", "forward-fill onto a uniform grid")(
@@ -979,16 +983,19 @@ private[http] object Render {
       // (graphite-web folds n<50 to 100-n)
       val n0 = c.pct(1)
       val nn = if (n0 < 50) 100 - n0 else n0
-      keepSeries(c) { inDf =>
-        val means = inDf.groupBy(col("tenant_id"), col("metric_name"))
-          .agg((sum(col("value").cast(DecimalType(28, 2))).cast("double")
-            / count(col("value"))).as("__m"))
-        val bands = means.groupBy(col("tenant_id")).agg(
-          expr(s"percentile(__m, ${(100 - nn) / 100.0})").as("__lo"),
-          expr(s"percentile(__m, ${nn / 100.0})").as("__hi"))
-        means.join(broadcast(bands), Seq("tenant_id"))
-          .filter(!(col("__m") > col("__lo") && col("__m") < col("__hi")))
-      }
+      // the band is over the SERIES' means, one value each: the mean
+      // rides on one point per series into the per-tenant percentiles
+      val byTenant = Window.partitionBy(col("tenant_id"))
+      keepSeries(c)(_
+        .withColumn("__m", Series.seriesStat("mean", _.over(perSeries)))
+        .withColumn("__m1", when(row_number().over(
+          perSeries.orderBy(col("ts_ms"))) === 1, col("__m")))
+        .withColumn("__lo",
+          percentile(col("__m1"), lit((100 - nn) / 100.0)).over(byTenant))
+        .withColumn("__hi",
+          percentile(col("__m1"), lit(nn / 100.0)).over(byTenant))
+        .filter(!(col("__m") > col("__lo") && col("__m") < col("__hi")))
+        .drop("__m", "__m1", "__lo", "__hi"))
     },
     Fn("removeEmptySeries", "Filter Series", "drop series with zero non-null datapoints in range",
         Seq(series)) { c =>
@@ -1082,20 +1089,12 @@ private[http] object Render {
         Seq(series, p("n", "integer"))) { c =>
       // limit(<expr>, n) — keep the FIRST n series of the list, in
       // the list's own order: a preceding sortBy*'s __ord when
-      // present, name order (the collectSeries default) otherwise.
-      // The rank table is one row per series (keepSeries).
+      // present (ascending, nulls last), name order (the collectSeries
+      // default) otherwise
       val n = c.count(1)
-      keepSeries(c) { inDf =>
-        val ordCol =
-          if (inDf.columns.contains("__ord")) min(col("__ord"))
-          else min(lit(0.0))
-        inDf.groupBy(col("tenant_id"), col("metric_name"))
-          .agg(ordCol.as("__o"))
-          .withColumn("__rk", row_number().over(
-            Window.partitionBy(col("tenant_id"))
-              .orderBy(col("__o").asc_nulls_last, col("metric_name"))))
-          .filter(col("__rk") <= n)
-      }
+      keepSeries(c)(df => topK(df, n,
+        if (df.columns.contains("__ord")) min(col("__ord")).over(perSeries)
+        else lit(0.0), ascending = true))
     },
     // Combine (wildcard collapse)
     wildcards("sumSeriesWithWildcards", "sum", "sum series whose names match after dropping the wildcard node positions"),

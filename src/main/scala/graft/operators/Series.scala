@@ -146,52 +146,63 @@ object Series {
   def topSeries(points: DataFrame, k: Int, stat: String = "mean",
       ascending: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val statCol = stat match {
+    points.groupBy(col("tenant_id"), col("metric_name"))
+      .agg(seriesStat(stat).as("stat_value"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("tenant_id").orderBy(rankOrder(ascending): _*)))
+      .filter(col("rk") <= k)
+  }
+
+  /** The per-series statistic [[topSeries]] ranks by, over a frame's
+    * `value` (and `ts_ms` for `last`), with each aggregate through `agg`
+    * (identity under a groupBy, `.over(w)` as a per-series window
+    * column). */
+  def seriesStat(stat: String, agg: Column => Column = identity): Column =
+    stat match {
       // mean of the NON-NULL samples (Graphite's safeAvg): composed
       // render inputs carry null datapoints (a derivative's first point,
       // a removeAboveValue scrub) that the sum already skips — counting
       // them in the denominator would deflate every composed ranking
-      case "mean" => sum(col("value").cast(DecimalType(28, 2))).cast("double")
-        ./(count(col("value")))
-      case "sum" => sum(col("value").cast(DecimalType(28, 2))).cast("double")
-      case "max" => max(col("value"))
-      case "min" => min(col("value"))
-      case "count" => count(lit(1)).cast("double")
+      case "mean" => agg(sum(col("value").cast(DecimalType(28, 2))))
+        .cast("double")./(agg(count(col("value"))))
+      case "sum" => agg(sum(col("value").cast(DecimalType(28, 2)))).cast("double")
+      case "max" => agg(max(col("value")))
+      case "min" => agg(min(col("value")))
+      case "count" => agg(count(lit(1))).cast("double")
       // the most recent NON-NULL sample (Graphite's safeLast — a
       // scrubbed trailing point must not turn the rank stat NULL, which
       // asc-sorts FIRST and silently exits every current* threshold);
       // ties on ts_ms break by larger value so the rank input is
       // deterministic
-      case "last" => max(when(col("value").isNotNull,
-          struct(col("ts_ms"), col("value"))))
+      case "last" => agg(max(when(col("value").isNotNull,
+          struct(col("ts_ms"), col("value")))))
         .getField("value")
       // population stddev over the non-null samples (Graphite's
       // mostDeviant ranks by sigma) — the exact-sum/exact-sum-of-squares
       // recipe, 0-clamped where double cancellation goes fractionally
       // negative (the crossSeriesStat convention)
       case "stddev" =>
-        val n = count(col("value"))
-        val s = sum(col("value").cast(DecimalType(28, 2))).cast("double")
-        val sq = sum((col("value") * col("value"))
-          .cast(DecimalType(38, 8))).cast("double")
+        val n = agg(count(col("value")))
+        val s = agg(sum(col("value").cast(DecimalType(28, 2)))).cast("double")
+        val sq = agg(sum((col("value") * col("value"))
+          .cast(DecimalType(38, 8)))).cast("double")
         val v = (sq - s * s / n) / n
         when(v.isNull, lit(null).cast("double"))
           .when(v > 0.0, sqrt(v)).otherwise(lit(0.0))
       case other => throw new IllegalArgumentException(
         s"stat must be one of mean|sum|max|min|count|last|stddev, got '$other'")
     }
-    // NULLS LAST in both directions: an all-null series (stat_value NULL
-    // for last/mean/max/min) would otherwise asc-sort FIRST and consume
-    // top-k slots in every lowest*/ascending selection — dataless series
-    // must never outrank real ones
-    val ord = if (ascending) col("stat_value").asc_nulls_last
-      else col("stat_value").desc_nulls_last
-    points.groupBy(col("tenant_id"), col("metric_name"))
-      .agg(statCol.as("stat_value"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("tenant_id").orderBy(ord, col("metric_name"))))
-      .filter(col("rk") <= k)
-  }
+
+  /** [[topSeries]]' rank order over `stat_value`: NULLS LAST in both
+    * directions — an all-null series (stat_value NULL for
+    * last/mean/max/min) would otherwise asc-sort FIRST and consume top-k
+    * slots in every lowest (ascending) selection; dataless series must
+    * never outrank real ones — with ties broken by metric_name for a
+    * total order. */
+  def rankOrder(ascending: Boolean): Seq[Column] = Seq(
+    if (ascending) col("stat_value").asc_nulls_last
+    else col("stat_value").desc_nulls_last,
+    col("metric_name"))
 
   /** Cross-SERIES aggregation under a metric glob — Graphite's
     * `sumSeries`/`averageSeries`/`maxSeries` combinators (one synthetic
@@ -754,35 +765,16 @@ object Series {
     require(horizonS >= 0, s"horizonS must be non-negative, got $horizonS")
     val t0 = points.groupBy(col("tenant_id"), col("metric_name"))
       .agg(min(col("ts_ms")).as("min_ms"))
-    val dtMin = expr("(ts_ms - min_ms) div 60000L")
-    val dtDec = dtMin.cast(DecimalType(19, 0))
-    val vCents = (col("value").cast(DecimalType(18, 2)) * lit(100))
-      .cast(DecimalType(19, 0))
     val agg = points
       .join(t0, Seq("tenant_id", "metric_name"))
-      .withColumn("__dtm", dtMin)
-      .withColumn("__dt", dtDec)
-      .withColumn("__vc", vCents)
       .groupBy(col("tenant_id"), col("metric_name"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("min_ms")).as("min_ms"),
-        max(col("__dtm")).as("t_max_min"),
-        sum(col("__dtm")).cast("double").as("st"),
-        sum(col("__vc")).cast("double").as("sv_c"),
-        sum(col("__dt") * col("__dt")).cast("double").as("stt"),
-        sum(col("__dt") * col("__vc")).cast("double").as("stv_c"),
-        sum(col("__vc") * col("__vc")).cast("double").as("svv_c"))
-      .withColumn("sv", col("sv_c") / lit(100.0))
-      .withColumn("stv", col("stv_c") / lit(100.0))
-      .withColumn("svv", col("svv_c") / lit(10000.0))
+      .agg(min(col("min_ms")).as("min_ms"), trendSums(identity): _*)
     val varT = col("n") * col("stt") - col("st") * col("st")
     val varV = col("n") * col("svv") - col("sv") * col("sv")
     val cov = col("n") * col("stv") - col("st") * col("sv")
     agg
-      .withColumn("slope_per_min", when(varT > 0, cov / varT))
-      .withColumn("intercept",
-        (col("sv") - col("slope_per_min") * col("st")) / col("n"))
+      .withColumn("slope_per_min", trendSlopePerMin)
+      .withColumn("intercept", trendIntercept)
       .withColumn("slope_per_s", col("slope_per_min") / lit(60.0))
       .withColumn("slope_per_d", col("slope_per_min") * lit(1440.0))
       .withColumn("r2", when(varT > 0 && varV > 0,
@@ -796,6 +788,40 @@ object Series {
       .select("tenant_id", "metric_name", "n", "t_max_min", "slope_per_s",
         "slope_per_d", "intercept", "r2", "forecast_value", "reach_ts_ms")
   }
+
+  /** [[linearTrend]]'s exact least-squares accumulators over rows that
+    * carry their series' first instant `min_ms`, each aggregate through
+    * `agg` (identity under a groupBy, `.over(w)` as per-series window
+    * columns): `n`, `t_max_min` and the sums `st`, `sv`, `stt`, `stv`,
+    * `svv` of minute offsets `(ts_ms - min_ms) div 60000` and values, in
+    * exact DECIMAL cents before the scalar-double finish. */
+  private[graft] def trendSums(agg: Column => Column): Seq[Column] = {
+    val dtMin = expr("(ts_ms - min_ms) div 60000L")
+    val dtDec = dtMin.cast(DecimalType(19, 0))
+    val vCents = (col("value").cast(DecimalType(18, 2)) * lit(100))
+      .cast(DecimalType(19, 0))
+    Seq(
+      agg(count(lit(1))).as("n"),
+      agg(max(dtMin)).as("t_max_min"),
+      agg(sum(dtMin)).cast("double").as("st"),
+      (agg(sum(vCents)).cast("double") / lit(100.0)).as("sv"),
+      agg(sum(dtDec * dtDec)).cast("double").as("stt"),
+      (agg(sum(dtDec * vCents)).cast("double") / lit(100.0)).as("stv"),
+      (agg(sum(vCents * vCents)).cast("double") / lit(10000.0)).as("svv"))
+  }
+
+  /** The least-squares slope per minute over [[trendSums]]' columns
+    * (NULL for a series with one distinct minute). */
+  private[graft] def trendSlopePerMin: Column = {
+    val varT = col("n") * col("stt") - col("st") * col("st")
+    val cov = col("n") * col("stv") - col("st") * col("sv")
+    when(varT > 0, cov / varT)
+  }
+
+  /** The intercept at `min_ms` over [[trendSums]]' columns and a
+    * `slope_per_min` column. */
+  private[graft] def trendIntercept: Column =
+    (col("sv") - col("slope_per_min") * col("st")) / col("n")
 
   /** Per-series percentile clamp / outlier filter — Graphite's
     * `removeAbovePercentile` family with the clamped variant kept too:

@@ -1,10 +1,15 @@
 package graft.query
 
-import graft.core.{CatalogSnapshot, DateTimeParser, Granularity, GlobPattern, Tables}
+import graft.core.{CatalogSnapshot, DateTimeParser, Granularity, GlobPattern,
+  Instrumentation, SnapshotStore, Tables}
 import graft.operators.{Discovery, Rollups}
 import graft.streaming.IngestStream
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import java.util.concurrent.ConcurrentHashMap
 
 /** The user-facing query API — the §3.1 lifecycle as one facade
   * (reference: HttpRollupsQueryHandler.java:115-161 +
@@ -97,7 +102,7 @@ object MetricsQueryApi {
       // actual timestamps. No snapping: samples in [from, to) as-is.
       val raw = Tables.metricsRange(spark, dir, Some((r.fromMs, r.toMs)))
         .filter(r.keep)
-      return r.serve(rawAsStats(raw))
+      return r.serve(raw, derived = rawStats, bucket = col("ts_ms"))
     }
     val gEff = r.g
     // snap so an unaligned start doesn't truncate the first window
@@ -115,8 +120,7 @@ object MetricsQueryApi {
         max(col("value")).as("max_v"),
         var_pop(col("value")).as("var_v"),
         max(struct(col("ts_ms"), col("value"))).getField("value").as("latest_v"))
-      .withColumn("rate", col("num_points") / lit(gEff.millis / 1000.0))
-    r.serve(agged)
+    r.serve(agged, derived = Map("rate" -> rateOf(gEff)))
   }
 
   /** The resolved prelude every read-path variant shares: datetime parse,
@@ -135,25 +139,55 @@ object MetricsQueryApi {
     def keep: Column = col("tenant_id") === tenantId &&
       col("metric_name").isin(locators.map(_._1): _*)
 
-    /** The read's output: `rows` (narrowed by [[keep]]) with each name's
-      * `unit` and `rollup_type` attached from literal maps keyed by name,
-      * projected to `stats` ([[projectStats]]) unless `project` is given,
-      * and ordered by (metric_name, bucket_ms) inside ONE partition — the
-      * same total order as a global sort without its range-sampling job
-      * and shuffle, and an output every downstream window, aggregate or
-      * sort plans over without an exchange. On a 10⁶-locator store it is
-      * no slower than a parallel scan under a global sort (docs/SCALE.md,
+    /** The read's output in ONE projection over `rows` (narrowed by
+      * [[keep]]): `tenant_id`, `metric_name`, each name's `unit` looked up
+      * from literal arrays, `bucket` as `bucket_ms`, then `values`,
+      * ordered by (metric_name, bucket_ms) inside ONE partition — the same
+      * total order as a global sort without its range-sampling job and
+      * shuffle, and an output every downstream window, aggregate or sort
+      * plans over without an exchange. On a 10⁶-locator store it is no
+      * slower than a parallel scan under a global sort (docs/SCALE.md,
       * "Where a warm read's driver time goes"). */
-    def serve(rows: DataFrame, stats: Seq[String] = select,
-        project: Option[DataFrame => DataFrame] = None): DataFrame = {
-      def byName(f: ((String, String, String)) => String): Column =
-        typedLit(locators.map(l => l._1 -> f(l)).toMap).apply(col("metric_name"))
-      val located = rows.withColumn("unit", byName(_._2))
-        .withColumn("rollup_type", byName(_._3))
-      project.getOrElse(
-        (d: DataFrame) => projectStats(d, stats, perMetricDefaults))(located)
+    def project(rows: DataFrame, values: Seq[Column],
+        bucket: Column = col("bucket_ms")): DataFrame =
+      rows.select(Seq(col("tenant_id"), col("metric_name"),
+          // a cataloged unit may be null: the cast keeps the column a
+          // string when every resolved unit is
+          byName(locators.map(l => lit(l._2)), lit(null)).cast("string")
+            .as("unit"), bucket.as("bucket_ms")) ++ values: _*)
         .coalesce(1).sortWithinPartitions("metric_name", "bucket_ms")
+
+    /** [[project]] of the stat columns `stats` name: each is `derived`'s
+      * expression when it has one, else the rows' own column, else NULL —
+      * a selected stat the serving path doesn't carry (p50 on the basic
+      * store, say) degrades to a NULL column, never an unresolved-column
+      * analysis error. Per-metric defaults add the `stat_set` array naming
+      * each row's own stats (see the schema contract on [[getRollups]]). */
+    def serve(rows: DataFrame, stats: Seq[String] = select,
+        derived: Map[String, Column] = Map.empty,
+        bucket: Column = col("bucket_ms")): DataFrame = {
+      val values = stats.flatMap(statCols.get).distinct.map(c =>
+        derived.getOrElse(c,
+          if (rows.columns.contains(c)) col(c) else lit(null).cast("double"))
+          .as(c))
+      def statsOf(t: String) = array(defaultStats.getOrElse(t,
+        defaultStats("basic")).flatMap(statCols.get).map(lit): _*)
+      val statSet =
+        if (!perMetricDefaults) Nil
+        else Seq(byName(locators.map(l => statsOf(l._3)), statsOf("basic"))
+          .as("stat_set"))
+      project(rows, values ++ statSet, bucket)
     }
+
+    /** Per-row pick from `values`, one per resolved locator in order: the
+      * entry of the row's `metric_name` from literal arrays (a typed map
+      * literal would pay Scala reflection per request), `orElse` when
+      * none resolved. */
+    private def byName(values: Seq[Column], orElse: Column): Column =
+      if (locators.isEmpty) orElse
+      else get(array(values: _*), array_position(
+        array(locators.map(l => lit(l._1)): _*), col("metric_name"))
+        .cast("int") - 1)
   }
 
   /** Glob → at most `n` cataloged (name, unit, rollup_type) rows of the
@@ -236,43 +270,18 @@ object MetricsQueryApi {
     * FULL-resolution stat mapping (BasicRollupsOutputSerializer.MetricStat
     * .convertRawSampleToObject, each enum arm): average/min/max/latest/
     * rate/sum → the sample value, variance → 0, numPoints → 1; the sample's
-    * own timestamp is the row's `bucket_ms`. Expects a frame carrying
-    * (tenant_id, metric_name, ts_ms, value). */
-  private def rawAsStats(raw: DataFrame): DataFrame = {
+    * own timestamp is the row's `bucket_ms` (the caller's `bucket`). Stat
+    * columns over a frame carrying (tenant_id, metric_name, ts_ms,
+    * value). */
+  private val rawStats: Map[String, Column] = {
     val v = col("value").cast("double")
-    raw.select(col("tenant_id"), col("metric_name"),
-      col("ts_ms").as("bucket_ms"),
-      lit(1L).as("num_points"), v.as("sum_v"), v.as("average"),
-      v.as("min_v"), v.as("max_v"), lit(0.0).as("var_v"),
-      v.as("latest_v"), v.as("rate"))
+    Map("num_points" -> lit(1L), "sum_v" -> v, "average" -> v, "min_v" -> v,
+      "max_v" -> v, "var_v" -> lit(0.0), "latest_v" -> v, "rate" -> v)
   }
 
-  /** Shared stat projection: explicit `select=` keeps exactly those columns;
-    * per-metric defaults keep the union plus a `stat_set` array naming each
-    * row's own stats (see the schema contract on [[getRollups]]). */
-  private def projectStats(agged0: DataFrame, select: Seq[String],
-      perMetricDefaults: Boolean): DataFrame = {
-    val keep = Seq("tenant_id", "metric_name", "unit", "bucket_ms") ++
-      select.flatMap(statCols.get).distinct
-    // a selected stat the serving path doesn't carry (p50 on the basic
-    // store, say) degrades to a NULL column, matching preaggToStats'
-    // padding — never an unresolved-column analysis error
-    val agged = keep.filterNot(agged0.columns.contains)
-      .foldLeft(agged0)((d, c) => d.withColumn(c, lit(null).cast("double")))
-    if (!perMetricDefaults) agged.select(keep.map(col): _*)
-    else {
-      // per-row list of this metric's own stat columns, consumed by the
-      // serializer; the frame carries the union of columns
-      val statSet = defaultStats.foldLeft(
-          array(defaultStats("basic").flatMap(statCols.get).map(lit): _*)) {
-        case (els, (t, stats)) =>
-          when(col("rollup_type") === t,
-            array(stats.flatMap(statCols.get).map(lit): _*)).otherwise(els)
-      }
-      agged.withColumn("stat_set", statSet)
-        .select((keep :+ "stat_set").map(col): _*)
-    }
-  }
+  /** The per-second rate of a bucket at granularity `g`. */
+  private def rateOf(g: Granularity): Column =
+    col("num_points") / lit(g.millis / 1000.0)
 
   /** Catalog over an engine store (a directory produced by
     * [[graft.streaming.IngestStream]]): distinct locators plus their ingested
@@ -292,7 +301,7 @@ object MetricsQueryApi {
       .map(_.groupBy(col("tenant_id"), col("metric_name"))
         .agg(max(col("unit")).as("unit"),
           min(col("family")).as("rollup_type")))
-      .getOrElse(catalogFromRaw(spark.read.parquet(s"$storeDir/metrics_full")))
+      .getOrElse(catalogFromRaw(rawTable(spark, storeDir, "metrics_full")))
 
   /** `Discovery.globSearch` over [[storeCatalog]] — (metric_name, unit)
     * in name order, at most `limit` rows — served from `snapshot`, the
@@ -388,7 +397,7 @@ object MetricsQueryApi {
       catalogOverride.orElse(rawOverride.map(catalogFromRaw))
         .map(frameResolver(_, p))
         .getOrElse(storeResolver(spark, storeDir, p, snapshot)(
-          catalogFromRaw(spark.read.parquet(s"$storeDir/metrics_full")))))
+          catalogFromRaw(rawTable(spark, storeDir, "metrics_full")))))
     if (r.g.isFull) {
       // FULL reads the full-resolution store itself — raw samples with
       // their own timestamps (the reference's FULL read targets the
@@ -397,9 +406,9 @@ object MetricsQueryApi {
       // legitimate here — a raw sample is its own latest value. A
       // tier-only store (no metrics_full, no rawOverride) serves empty,
       // not a schema-inference crash.
-      val raw = rawOverride.getOrElse(rawStoreOrEmpty(spark, storeDir))
+      val raw = rawOverride.getOrElse(rawTable(spark, storeDir, "metrics_full"))
         .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep)
-      return r.serve(rawAsStats(raw))
+      return r.serve(raw, derived = rawStats, bucket = col("ts_ms"))
     }
     // only an EXPLICIT latest request is an error — with select= absent the
     // computed per-metric default union may carry `latest` merely because
@@ -457,7 +466,7 @@ object MetricsQueryApi {
         // bucket; a raw store wholly pruned by retention (tier-only store)
         // reads as EMPTY — the tiers serve what they cover, gaps serve
         // nothing, never a PATH_NOT_FOUND crash
-        val rawSrc = rawOverride.getOrElse(rawStoreOrEmpty(spark, storeDir))
+        val rawSrc = rawOverride.getOrElse(rawTable(spark, storeDir, "metrics_full"))
         val hasDay = rawSrc.columns.contains("ts_day")
         val dayCond =
           if (missingDays.isEmpty) lit(false)
@@ -478,47 +487,86 @@ object MetricsQueryApi {
           .filter(col("ts_ms") >= snappedFrom && col("ts_ms") < toMs &&
             (dayCond || tailCond) && r.keep)
           .select("tenant_id", "metric_name", "ts_ms", "value")
-        Some(rollupFromRaw(raw, gEff))
+        Some(rollupFromRaw(tailOnly(raw, missingDays), gEff))
       }
 
     // stored buckets and gap-filled buckets are disjoint by construction
     // (every tier window is day-contained and gap days exclude covered days),
     // so plain union — no anti-join needed
     val combined = (stored.toSeq ++ gapFilled.toSeq).reduce(_ unionByName _)
-    val agged = combined
-      .withColumnRenamed("avg_v", "average")
-      .withColumn("rate", col("num_points") / lit(gEff.millis / 1000.0))
-    r.serve(agged, selEff)
+    r.serve(combined, selEff,
+      derived = Map("average" -> col("avg_v"), "rate" -> rateOf(gEff)))
   }
 
-  /** The raw store, or an EMPTY frame of its query schema when retention
-    * has pruned the whole table (tier-only store) — the read paths degrade
-    * to tiers-only service instead of PATH_NOT_FOUND. */
-  private def rawStoreOrEmpty(spark: SparkSession, storeDir: String): DataFrame =
-    if (IngestStream.hasParquetData(spark, s"$storeDir/metrics_full"))
-      // the writer's own layout: no footer-sampling schema-inference job
-      spark.read.schema(IngestStream.rawStoreSchema)
-        .parquet(s"$storeDir/metrics_full")
-    else {
-      import spark.implicits._
-      Seq.empty[(String, String, Long, Double)]
-        .toDF("tenant_id", "metric_name", "ts_ms", "value")
-    }
+  /** A gap fill's raw input, in ONE partition when no day is missing: the
+    * fill is then the tail bucket alone, whose aggregate plans over one
+    * partition without an exchange — so no shuffle map stage runs as a
+    * job of its own, and the read stays one job. Missing days keep the
+    * parallel aggregate. */
+  private def tailOnly(raw: DataFrame, missingDays: Seq[Long]): DataFrame =
+    if (missingDays.isEmpty) raw.coalesce(1) else raw
 
-  /** The parsed-flush preagg store, or an empty frame of its schema when
-    * `preagg_raw` aged out at the finest-tier TTL while the coarser kind
-    * tiers (up to 1825d) still serve — same degrade contract as
-    * [[rawStoreOrEmpty]]. */
-  private def preaggRawOrEmpty(spark: SparkSession, storeDir: String): DataFrame =
-    if (IngestStream.hasParquetData(spark, s"$storeDir/preagg_raw"))
-      spark.read.schema(IngestStream.preaggRawSchema)
-        .parquet(s"$storeDir/preagg_raw")
-    else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.operators.Preaggregated.preaggSchema)
-      // the stored table carries its ts_day partition column; the reads'
-      // day predicates must resolve against the empty stand-in too
-      .withColumn("ts_day", lit(null).cast("long"))
+  /** The raw tables the read path serves from, each with its writer's
+    * schema (the `batch_id`/`ts_day` path levels included). */
+  private val rawSchemas: Map[String, StructType] = Map(
+    "metrics_full" -> IngestStream.rawStoreSchema,
+    "preagg_raw" -> IngestStream.preaggRawSchema,
+    "metrics_string" -> IngestStream.stringStoreSchema)
+
+  private final case class RawRelation(spark: SparkSession, version: Long,
+      fence: Seq[(String, Long)], atMillis: Long, df: DataFrame)
+  private val rawRelations = new ConcurrentHashMap[String, RawRelation]()
+
+  /** The ONE way the read path opens a raw table (`metrics_full`,
+    * `preagg_raw`, `metrics_string`): a relation with the writer's schema
+    * (no footer-sampling inference job), or an EMPTY frame of that schema
+    * when the table holds no batch — retention pruned it, or the store
+    * never ingested that kind — so the reads degrade to tiers-only service
+    * instead of PATH_NOT_FOUND.
+    *
+    * The relation is built once per (session, table fence) and reused, so
+    * a warm read pays one listing of the table root instead of a data-
+    * source lookup, a listing of every batch and day dir and the
+    * visible-parquet probes. The fence is the root's visible `batch_id=*`
+    * dirs with their mtimes: every writer changes it (a batch commit or
+    * replay renames a batch dir in, compaction swaps the dir set,
+    * retention deletes day dirs inside a batch dir and prunes emptied
+    * ones), and it is listed BEFORE a relation is built, so a relation is
+    * never older than its fence. In-process retention also bumps the
+    * table's [[SnapshotStore.version]], and [[SnapshotStore.cacheTtlMs]]
+    * bounds a relation's age as the backstop, as for the tier memo.
+    * Counted as `store.raw.resolutions` / `store.raw.cache_hits`. */
+  private[graft] def rawTable(spark: SparkSession, storeDir: String,
+      table: String): DataFrame = {
+    val schema = rawSchemas(table)
+    val root = new Path(s"$storeDir/$table")
+    val key = root.toString
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fence =
+      try fs.listStatus(root).toSeq.collect {
+          case st if st.isDirectory &&
+              st.getPath.getName.startsWith("batch_id=") =>
+            st.getPath.getName -> st.getModificationTime
+        }.sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val version = SnapshotStore.version(key)
+    val now = System.currentTimeMillis()
+    Option(rawRelations.get(key)).filter(e => (e.spark eq spark) &&
+        e.version == version && e.fence == fence &&
+        now - e.atMillis < SnapshotStore.cacheTtlMs) match {
+      case Some(e) =>
+        Instrumentation.global.inc("store.raw.cache_hits")
+        e.df
+      case None =>
+        Instrumentation.global.inc("store.raw.resolutions")
+        val df =
+          if (fence.isEmpty)
+            spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+          else spark.read.schema(schema).parquet(key)
+        rawRelations.put(key, RawRelation(spark, version, fence, now, df))
+        df
+    }
+  }
 
   /** String/boolean metric read — the reference's metrics_string CF serve
     * path (ABasicMetricsRW.java:19; serialized as `{"value": <raw>}` via
@@ -537,16 +585,7 @@ object MetricsQueryApi {
       catalogOverride: Option[DataFrame] = None,
       snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     graft.core.Instrumentation.global.inc("query.reads.string")
-    val path = s"$storeDir/metrics_string"
-    if (!IngestStream.hasParquetData(spark, path)) {
-      // a store that ingested no strings serves an empty result, not a
-      // schema-inference crash (same guard discipline as the tier reads)
-      import spark.implicits._
-      return Seq.empty[(String, String, String, Long, String, Boolean)]
-        .toDF("tenant_id", "metric_name", "unit", "bucket_ms", "value_str",
-          "is_bool")
-    }
-    val store = spark.read.parquet(path)
+    val store = rawTable(spark, storeDir, "metrics_string")
     // persisted catalog first (the snapshot), table-derivation fallback —
     // same discipline as the stored numeric reads
     val r = resolveQuery(p, nowMillis, maxBatch,
@@ -555,12 +594,9 @@ object MetricsQueryApi {
           store.groupBy(col("tenant_id"), col("metric_name"))
             .agg(max(col("unit")).as("unit"))
             .withColumn("rollup_type", lit("string")))))
-    r.serve(
-      store.filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep)
-        .select("tenant_id", "metric_name", "ts_ms", "value_str", "is_bool"),
-      project = Some(_.select(col("tenant_id"), col("metric_name"),
-        col("unit"), col("ts_ms").as("bucket_ms"), col("value_str"),
-        col("is_bool"))))
+    r.project(
+      store.filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep),
+      Seq(col("value_str"), col("is_bool")), bucket = col("ts_ms"))
   }
 
   // single source of truth with the cascade's dispatch — see
@@ -589,28 +625,26 @@ object MetricsQueryApi {
     * contract (reference serializer dispatch,
     * JSONBasicRollupsOutputSerializer.java:55-151: counter numPoints =
     * sampleCount and sum = accumulated count; timer scalars; gauge latest;
-    * set cardinality). Stats a family doesn't carry surface as NULL
-    * columns, so an explicit cross-family `select=` degrades to nulls
-    * instead of an analysis error. */
-  private def preaggToStats(df: DataFrame, kind: String): DataFrame = {
-    val keys = Seq(col("tenant_id"), col("metric_name"), col("bucket_ms"))
-    val mapped = kind match {
-      case "counter" => df.select(keys ++ Seq(
-        col("sample_count").as("num_points"), col("count").as("sum_v"),
-        col("rate")): _*)
-      case "gauge" => df.select(keys ++ Seq(
-        col("num_points"), col("latest_v"), col("min_v"), col("max_v")): _*)
-      case "timer" => df.select(keys ++ Seq(
-        col("count").as("num_points"), col("sum").as("sum_v"),
-        when(col("count") =!= 0, col("sum") / col("count")).as("average"),
-        col("min").as("min_v"), col("max").as("max_v"), col("rate"),
-        element_at(col("percentiles"), "50").as("p50"),
-        element_at(col("percentiles"), "95").as("p95")): _*)
-      case "set" => df.select(keys ++ Seq(
-        col("distinct_count").cast("long").as("num_points")): _*)
+    * set cardinality), as [[ResolvedQuery.serve]]'s `derived` columns.
+    * Stats a family doesn't carry surface as NULL columns, so an explicit
+    * cross-family `select=` degrades to nulls instead of an analysis
+    * error. */
+  private def preaggStats(kind: String): Map[String, Column] = {
+    val mapped: Map[String, Column] = kind match {
+      case "counter" => Map("num_points" -> col("sample_count"),
+        "sum_v" -> col("count"), "rate" -> col("rate"))
+      case "gauge" => Seq("num_points", "latest_v", "min_v", "max_v")
+        .map(c => c -> col(c)).toMap
+      case "timer" => Map("num_points" -> col("count"),
+        "sum_v" -> col("sum"),
+        "average" -> when(col("count") =!= 0, col("sum") / col("count")),
+        "min_v" -> col("min"), "max_v" -> col("max"), "rate" -> col("rate"),
+        "p50" -> element_at(col("percentiles"), "50"),
+        "p95" -> element_at(col("percentiles"), "95"))
+      case "set" => Map("num_points" -> col("distinct_count").cast("long"))
     }
-    statCols.values.toSeq.distinct.filterNot(mapped.columns.contains)
-      .foldLeft(mapped)((d, c) => d.withColumn(c, lit(null).cast("double")))
+    statCols.values.map(c =>
+      c -> mapped.getOrElse(c, lit(null).cast("double"))).toMap
   }
 
   /** STORE-BACKED read for a pre-aggregated family — the kind-dispatched
@@ -641,7 +675,7 @@ object MetricsQueryApi {
         // retention prunes preagg_raw, while the coarser kind tiers can
         // outlive it by years — why the persisted catalog comes first
         storeResolver(spark, storeDir, p, snapshot, Some(kind), Some("unknown"))(
-          preaggRawOrEmpty(spark, storeDir).filter(col("kind") === kind)
+          rawTable(spark, storeDir, "preagg_raw").filter(col("kind") === kind)
             .select("tenant_id", "metric_name").distinct()
             .withColumn("unit", lit("unknown"))
             .withColumn("rollup_type", lit(kind)))))
@@ -652,12 +686,12 @@ object MetricsQueryApi {
       // tier1FromParsed at FULL is the identity bucketing (bucket_ms =
       // ts_ms), merging only exact-timestamp duplicate flushes — the same
       // single-slot merge the reference applies on write.
-      val parsed = preaggRawOrEmpty(spark, storeDir)
+      val parsed = rawTable(spark, storeDir, "preagg_raw")
         .filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs &&
           r.keep && col("kind") === kind)
       val tier = graft.operators.Preaggregated
         .tier1FromParsed(parsed, Granularity.FULL)(kind)
-      return r.serve(preaggToStats(tier, kind))
+      return r.serve(tier, derived = preaggStats(kind))
     }
     val gEff = r.g
     val snappedFrom = gEff.snap(r.fromMs)
@@ -698,14 +732,14 @@ object MetricsQueryApi {
           else col("ts_ms") >= tailStart &&
             col("ts_day").between(tailStart - math.floorMod(tailStart, DayMs),
               (toMs - 1) - math.floorMod(toMs - 1, DayMs))
-        val parsed = preaggRawOrEmpty(spark, storeDir)
+        val parsed = rawTable(spark, storeDir, "preagg_raw")
           .filter(col("ts_ms") >= snappedFrom && col("ts_ms") < toMs &&
             (dayCond || tailCond) && r.keep && col("kind") === kind)
-        Some(preaggLadder(parsed, kind, gEff))
+        Some(preaggLadder(tailOnly(parsed, missingDays), kind, gEff))
       }
 
     val combined = (stored.toSeq ++ gapFilled.toSeq).reduce(_ unionByName _)
-    r.serve(preaggToStats(combined, kind))
+    r.serve(combined, derived = preaggStats(kind))
   }
 
   /** The reference's JSON response shape (S13,

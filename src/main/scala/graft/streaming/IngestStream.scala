@@ -805,6 +805,20 @@ object IngestStream {
     StructField("batch_id", LongType),
     StructField("ts_day", LongType)))
 
+  /** `metrics_string`'s on-disk schema, fixed by
+    * [[processTypedBatchFused]]'s string arm: the read path states it for
+    * the same reason as [[rawStoreSchema]]. */
+  private[graft] val stringStoreSchema = StructType(Seq(
+    StructField("tenant_id", StringType),
+    StructField("metric_name", StringType),
+    StructField("ts_ms", LongType),
+    StructField("value_str", StringType),
+    StructField("ttl_seconds", IntegerType),
+    StructField("unit", StringType),
+    StructField("is_bool", BooleanType),
+    StructField("batch_id", LongType),
+    StructField("ts_day", LongType)))
+
   private def rollDirtyDays(spark: SparkSession, storeDir: String,
       dirtyDays: Array[Long]): Unit = {
     val full = spark.read.schema(rawStoreSchema)

@@ -234,10 +234,17 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
       assert(m.body().contains(""""http.responses.200""""), m.body())
     } finally srv.stop()
     // an internal failure must yield a GENERIC 500 body — a views read
-    // against a store with no data tables throws AnalysisException
-    // (PATH_NOT_FOUND names the store path — exactly what must NOT leak)
+    // over a raw file that is not parquet fails the scan with an error
+    // naming the file under the store path — exactly what must NOT leak
+    // (a store with no data tables serves an empty result instead)
     val (srv2, base2, store2) = startServer()
     try {
+      assert(get(s"$base2/v2.0/acme/views/x?from=0&to=1&points=10").body() ===
+        """{"metrics": []}""")
+      val junk = java.nio.file.Paths.get(store2, "metrics_full", "batch_id=1",
+        "ts_day=0", "part-00000.parquet")
+      java.nio.file.Files.createDirectories(junk.getParent)
+      java.nio.file.Files.writeString(junk, "not a parquet file")
       val e = get(s"$base2/v2.0/acme/views/x?from=0&to=1&points=10")
       assert(e.statusCode() === 500, e.body())
       assert(e.body() === """{"errors": [{"message": "internal error"}]}""",
@@ -2047,12 +2054,14 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
       info(s"warm jobs: render ${renderJobs.mkString(" | ")}; views " +
         s"${viewsJobs.mkString(" | ")}; find ${findJobs.mkString(" | ")}")
       // every job left is data plane: FULL render = the collect; points=
-      // views = the tail bucket's raw re-aggregation (its shuffle map stage
-      // runs as its own adaptive job) and the collect; find = none. The
-      // resolved names filter the scans in place (no broadcast job), a
-      // small read orders inside one partition (no range-sampling job),
-      // the raw store reads with the writer's schema (no inference job),
-      // and the catalog resolution and the tier's day coverage run no job
+      // views (a 20m read: the facade rolls only the 5m tier, so both days
+      // are missing from the tier) = the missing days' parallel raw
+      // re-aggregation (its shuffle map stage runs as its own adaptive
+      // job) and the collect; find = none. The resolved names filter the
+      // scans in place (no broadcast job), a small read orders inside one
+      // partition (no range-sampling job), the raw store reads with the
+      // writer's schema (no inference job), and the catalog resolution and
+      // the tier's day coverage run no job
       assert((renderJobs.size, viewsJobs.size, findJobs.size) === ((1, 2, 0)),
         s"render: $renderJobs; views: $viewsJobs; find: $findJobs")
       // no warm request reloaded the catalog; each one took the snapshot
@@ -2102,11 +2111,67 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
       // the resolved names filter each scan in place and each small read
       // orders inside one partition, so every series operator above it
       // plans without an exchange: movingAverage(sumSeries) = the collect;
-      // highestMax = its localCheckpoint, the ranking and the collect;
-      // the batch views read = the tail bucket's raw re-aggregation (its
-      // shuffle map stage runs as its own adaptive job) and the collect
-      assert((mavgJobs.size, topJobs.size, batchJobs.size) === ((1, 3, 2)),
+      // highestMax ranks by window columns over that partition = the
+      // collect; the batch views read (20m, both days missing from the
+      // tier) = the missing days' parallel raw re-aggregation (its shuffle
+      // map stage runs as its own adaptive job) and the collect
+      assert((mavgJobs.size, topJobs.size, batchJobs.size) === ((1, 1, 2)),
         s"mavg: $mavgJobs; top: $topJobs; batch: $batchJobs")
+    } finally srv.stop()
+  }
+
+  test("warm reads with a tail bucket and the checkpoint-free render " +
+    "families run one job each: points= and batch views with an unaligned " +
+    "to, percentileScrub, linearRegression, limit, averageOutsidePercentile") {
+    val day = 86400000L
+    val srv = new MetricsHttpServer(spark,
+      java.nio.file.Files.createTempDirectory("graft_http").toString,
+      nowMs = () => now, maxAgeMs = 3 * day)
+    srv.start()
+    val base = s"http://127.0.0.1:${srv.boundPort}"
+    try {
+      val hosts = Seq("tl.h1.mem", "tl.h2.mem", "tl.h3.mem")
+      val pts = for (n <- hosts; ts <- Seq(now - 7200000L, now - 3000000L,
+        now - 600000L, now - 200000L)) yield (n, ts)
+      assert(post(s"$base/v2.0/acme/ingest", ingestBody(pts))
+        .statusCode() === 200)
+      // a 4 h range at points=50 reads the 5m tier, which the POST rolled:
+      // every day is covered and `to` ends 90 s into a bucket, so the only
+      // raw repair is the tail bucket
+      val range = s"from=${(now - 4 * 3600000L) / 1000}&to=${(now - 90000L) / 1000}"
+      val views = s"$base/v2.0/acme/views/tl.h1.mem?$range&points=50"
+      val batch = s"$base/v2.0/acme/views?$range&points=50"
+      val names = hosts.take(2).map("\"" + _ + "\"").mkString("[", ",", "]")
+      def render(target: String) = s"$base/render?tenant=acme&target=" +
+        java.net.URLEncoder.encode(target, StandardCharsets.UTF_8) +
+        s"&from=${(now - 4 * 3600000L) / 1000}&until=${now / 1000}&format=json"
+      val renders = Seq(
+        "removeAbovePercentile(tl.*.mem,50)", "removeBelowPercentile(tl.*.mem,50)",
+        "nPercentile(tl.*.mem,50)", "linearRegression(tl.*.mem)",
+        "limit(tl.*.mem,2)", "averageOutsidePercentile(tl.*.mem,60)")
+        .map(render)
+      // warm-up: the tenant's catalog snapshot, the tier and raw memos
+      (views +: renders).foreach(u => assert(get(u).statusCode() === 200, u))
+      assert(post(batch, names).statusCode() === 200)
+      var body = ""
+      val viewsJobs = jobsDuring { body = get(views).body() }
+      assert(body.contains(""""metric": "tl.h1.mem""""), body)
+      val batchJobs = jobsDuring { body = post(batch, names).body() }
+      assert(body.contains(""""metric": "tl.h2.mem"""") && !body.contains("h3"),
+        body)
+      val renderJobs = renders.map { u =>
+        jobsDuring { body = get(u).body() }.size -> body }
+      info(s"warm jobs: views $viewsJobs; batch $batchJobs; renders " +
+        renderJobs.map(_._1).mkString(", "))
+      // the tail bucket aggregates inside the read's one partition (no
+      // exchange, so no adaptive shuffle-map job): each read is its collect
+      assert((viewsJobs.size, batchJobs.size) === ((1, 1)),
+        s"views: $viewsJobs; batch: $batchJobs")
+      // per-series percentiles, the fit, the rank and the band are window
+      // columns over the read's partition: no checkpoint or broadcast job
+      renderJobs.zip(renders).foreach { case ((n, b), u) =>
+        assert(n === 1 && b.contains(""""target""""), s"$u: $n jobs, $b")
+      }
     } finally srv.stop()
   }
 

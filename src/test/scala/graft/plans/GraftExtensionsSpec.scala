@@ -4,16 +4,25 @@ import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Own session (withExtensions) — deliberately not SparkSuite's. */
+/** Own session (withExtensions) — deliberately not SparkSuite's session,
+  * but on its context: a JVM has one SparkContext, so the suite's is made
+  * first and this session's master is whatever that context runs. */
 class GraftExtensionsSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = {
+    graft.SparkSuite.session
     // getOrCreate returns any active session, ignoring withExtensions —
     // clear the handles so a NEW session (sharing the context) is built
     // with the extensions applied.
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    Sessions.local("graft-ext-test", cpus = 2)
+    Sessions.local("graft-ext-test", cpus = 4)
       .withExtensions(new GraftExtensions).getOrCreate()
+  }
+
+  test("the extensions session shares the suite's local[4] context") {
+    assert(spark.sparkContext eq graft.SparkSuite.session.sparkContext)
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark ne graft.SparkSuite.session)
   }
 
   test("dot_product and vec_norm usable from SQL") {

@@ -6,6 +6,8 @@ import graft.operators.Rollups
 import graft.streaming.IngestStream
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the read, row for row and in order, with the join derivation it
   * replaced — the locators as a broadcast frame, semi-joined into the
   * scans, inner-joined back for unit and rollup_type, globally ordered. */
-class JoinFreeReadSpec extends AnyFunSuite with SparkSuite {
+class JoinFreeReadSpec extends AnyFunSuite with SparkSuite
+    with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val day0 = 1704240000000L // 2024-01-03 00:00 UTC
@@ -205,8 +208,12 @@ class JoinFreeReadSpec extends AnyFunSuite with SparkSuite {
         val got = MetricsQueryApi.getRollupsStored(spark, store, p,
           nowMillis = now)
         val plan = got.queryExecution.sparkPlan
+        // the serve's coalesce(1) over the union, and the tail bucket's
+        // under its aggregate (`to` is unaligned): no exchange anywhere
         assert(plan.collect { case c: CoalesceExec => c.numPartitions } ===
-          Seq(1), s"threshold $threshold")
+          Seq(1, 1), s"threshold $threshold")
+        assert(collect(got.queryExecution.executedPlan) {
+          case e: ShuffleExchangeExec => e }.isEmpty, s"threshold $threshold")
         assert(plan.collect { case s: SortExec if s.global => s }.isEmpty,
           s"threshold $threshold")
         assert(rows(got) === want, s"threshold $threshold")

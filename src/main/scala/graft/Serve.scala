@@ -22,8 +22,13 @@ import java.util.concurrent.atomic.AtomicBoolean
   * switches to the reference's ROLLUP_DELAY shape (POSTs return after
   * the raw write, a background roller drains the dirty-day set every
   * `--rollup-delay` ms, and stored reads repair pending days from raw —
-  * serving stays exact either way). The cascade serves every coarser
-  * tier from the stored ladder.
+  * serving stays exact either way). Statsd (aggregated) POSTs cascade
+  * through every preagg tier. Numeric POSTs re-roll only the 5m tier
+  * (`IngestStream.rollDirtyDays`), and nothing here cascades it further
+  * ([[Maintain.run]] does not call `rollupCascadeFor`): a numeric read
+  * at 20m or coarser recomputes its days from raw, and once retention
+  * drops a day's raw (5 days) and 5m rows (10 days), no coarser numeric
+  * tier holds that day.
   *
   * `usage: runMain graft.Serve <storeDir> [--port n] [--maintain-every s]
   * [--max-age ms] [--max-future ms] [--cors] [--once]

@@ -34,9 +34,12 @@ import java.util.concurrent.ConcurrentHashMap
   * for a tenant runs one tenant-filtered Spark read. `SnapshotStore`'s
   * staleness TTL is the backstop for a same-millisecond in-place rewrite.
   *
-  * A store without a `_complete` catalog holding parquet data has no
-  * snapshot ([[tenant]] returns None): callers keep deriving locators
-  * from the raw tables, as `IngestStream.metricCatalog` does. */
+  * This is the ONE locator source of every store read: a store with no
+  * `_complete` catalog holding parquet data serves an empty tenant while
+  * it holds no locator-bearing data (a virgin store — its first batch
+  * writes the catalog and the marker), and fails loudly once it does
+  * ([[requireCovered]]; the facade runs [[graft.streaming.IngestStream
+  * .rebuildCatalog]] at open, so it never reaches that state). */
 object CatalogSnapshot {
 
   /** One resolved locator as discovery and the read path see it. */
@@ -178,18 +181,19 @@ object CatalogSnapshot {
     leaves.sorted ++ marks
   }
 
-  /** The tenant's snapshot of `storeDir`'s catalog, or None when the
-    * store has no complete catalog. Validates the fence first, so the
-    * result reflects every catalog write committed before this call. */
-  def tenant(spark: SparkSession, storeDir: String,
-      tenantId: String): Option[Tenant] = {
+  private val emptyTenant = new Tenant(Array.empty, Array.empty, Array.empty)
+
+  /** `storeDir`'s current catalog generation, keyed by the qualified
+    * catalog root; a fence change or an expired TTL starts a new one. */
+  private def generation(spark: SparkSession,
+      storeDir: String): (String, Generation) = {
     val root0 = new Path(s"$storeDir/metric_catalog")
     val fs = root0.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = fs.makeQualified(root0)
     val key = root.toString
     val fence = fenceOf(fs, root)
     val now = System.currentTimeMillis()
-    val gen = Option(generations.get(key))
+    key -> Option(generations.get(key))
       .filter(g => g.fence == fence &&
         now - g.atMillis < SnapshotStore.cacheTtlMs)
       .getOrElse {
@@ -199,17 +203,46 @@ object CatalogSnapshot {
         generations.put(key, g)
         g
       }
-    if (!gen.servable) return None
+  }
+
+  /** Whether `storeDir` holds locator-bearing data that no servable
+    * `_complete` catalog covers — a store written before the catalog
+    * existed, or by raw [[graft.streaming.IngestStream.writeRaw]]. */
+  def uncovered(spark: SparkSession, storeDir: String): Boolean =
+    !generation(spark, storeDir)._2.servable &&
+      graft.streaming.IngestStream.storeHasData(spark, storeDir)
+
+  /** Fails, naming the remedy, when `storeDir` is [[uncovered]]. */
+  def requireCovered(spark: SparkSession, storeDir: String): Unit =
+    if (uncovered(spark, storeDir)) throw notCovered(storeDir)
+
+  private def notCovered(storeDir: String) = new IllegalStateException(
+    s"store $storeDir holds data its metric_catalog does not cover " +
+      "(no _complete marker): run IngestStream.rebuildCatalog on it " +
+      "once before serving it")
+
+  /** The tenant's snapshot of `storeDir`'s catalog — empty for a store
+    * that holds no data yet; fails ([[requireCovered]]) for one whose
+    * data no complete catalog covers. Validates the fence first, so the
+    * result reflects every catalog write committed before this call. */
+  def tenant(spark: SparkSession, storeDir: String,
+      tenantId: String): Tenant = {
+    val (key, gen) = generation(spark, storeDir)
+    if (!gen.servable) {
+      if (graft.streaming.IngestStream.storeHasData(spark, storeDir))
+        throw notCovered(storeDir)
+      return emptyTenant
+    }
     Option(gen.tenants.get(tenantId)) match {
       case Some(t) =>
         Instrumentation.global.inc("store.catalog.cache_hits")
-        Some(t)
+        t
       case None =>
         // computed outside the map: a racing request may load the same
         // tenant twice, never block other tenants behind a Spark read
         val t = load(spark, key, tenantId)
         Instrumentation.global.inc("store.catalog.resolutions")
-        Some(Option(gen.tenants.putIfAbsent(tenantId, t)).getOrElse(t))
+        Option(gen.tenants.putIfAbsent(tenantId, t)).getOrElse(t)
     }
   }
 

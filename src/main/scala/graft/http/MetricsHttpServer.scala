@@ -21,8 +21,10 @@ import java.util.concurrent.atomic.AtomicLong
   * [[IngestStream.parseJsonTyped]]/[[IngestStream.processTypedBatchFused]] for
   * writes, [[MetricsQueryApi]] stored reads (kind-routed exactly like the
   * reference's rollup_type dispatch, `MetricsRWDelegator.java:79-113`),
-  * [[Discovery]] for search — so HTTP adds routing, per-record error
-  * responses, and status-code semantics, never a second data path.
+  * the store's [[graft.core.CatalogSnapshot]] for metric search and
+  * [[Discovery.eventSearch]] for events — so HTTP adds routing,
+  * per-record error responses, and status-code semantics, never a second
+  * data path.
   *
   * Routes (reference parity):
   *  - `POST /v2.0/:tenant/ingest` — array of `{metricName, metricValue,
@@ -120,6 +122,20 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     * ZKShardLockManager.java, reduced to the single-writer store
     * contract). Heartbeat runs on the reaper executor at TTL/3. */
   private val writerLease = graft.core.WriterLease.acquire(spark, storeDir)
+
+  /** Every read resolves its locators from the store's `_complete`
+    * catalog ([[graft.core.CatalogSnapshot]]), so a store whose data no
+    * complete catalog covers — written before the catalog existed, or by
+    * raw [[IngestStream.writeRaw]] — has its catalog rebuilt here, once,
+    * under the lease, before any request is served; counted as
+    * `store.catalog.rebuilds`. A store with no data skips it: its first
+    * POST writes the catalog and its coverage marker. */
+  if (CatalogSnapshot.uncovered(spark, storeDir)) {
+    graft.core.WriterLease.withLease(writerLease) {
+      IngestStream.rebuildCatalog(spark, storeDir)
+    }
+    graft.core.Instrumentation.global.inc("store.catalog.rebuilds")
+  }
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   private val pool = Executors.newFixedThreadPool(8)
@@ -812,17 +828,16 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       resolution, select)
     val now = nowMs()
     val snap = catalogSnapshot(tenant)
-    val kind = routeKind(snap, tenant, names)
-    val frame = kind match {
+    val frame = routeKind(snap, names) match {
       case "string" =>
         MetricsQueryApi.getStringPoints(spark, storeDir, p, now,
-          snapshot = snap)
+          snapshot = Some(snap))
       case "basic" =>
         MetricsQueryApi.getRollupsStored(spark, storeDir, p, now,
-          dirtyDays = pendingBasic, snapshot = snap)
+          dirtyDays = pendingBasic, snapshot = Some(snap))
       case k =>
         MetricsQueryApi.getPreaggStored(spark, storeDir, p, k, now,
-          dirtyDays = pendingPreagg, snapshot = snap)
+          dirtyDays = pendingPreagg, snapshot = Some(snap))
     }
     sendJson(ex, 200, MetricsQueryApi.toJsonResponse(frame))
   }
@@ -1186,12 +1201,11 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     val kind =
       if (isGlob) {
         val cap = MetricsQueryApi.MaxMetricsPerBatchQuery
-        val resolved = MetricsQueryApi.searchCatalog(spark, storeDir, snap,
-          tenant, name, cap + 1).map(_._1)
+        val resolved = snap.search(name, cap + 1).map(_.name)
         require(resolved.length <= cap,
           s"batch query resolves > $cap metrics")
-        routeKind(snap, tenant, resolved)
-      } else routeKind(snap, tenant, Seq(name))
+        routeKind(snap, resolved)
+      } else routeKind(snap, Seq(name))
     require(kind != "string",
       s"series functions require a numeric metric; '$name' is a string metric")
     val (statName, valueCol) = kind match {
@@ -1205,9 +1219,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       from, to, points, resolution, Seq(statName))
     val frame = kind match {
       case "basic" => MetricsQueryApi.getRollupsStored(spark, storeDir, p, now,
-        dirtyDays = pendingBasic, snapshot = snap)
+        dirtyDays = pendingBasic, snapshot = Some(snap))
       case k => MetricsQueryApi.getPreaggStored(spark, storeDir, p, k, now,
-        dirtyDays = pendingPreagg, snapshot = snap)
+        dirtyDays = pendingPreagg, snapshot = Some(snap))
     }
     frame.select(col("tenant_id"), col("metric_name"),
         col("bucket_ms").cast("long").as("ts_ms"),
@@ -1260,9 +1274,9 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     * reference serves each locator from its own column family; a single
     * library call cannot, and silently dropping the minority family would
     * be a lying 200. */
-  private def routeKind(snap: Option[CatalogSnapshot.Tenant], tenant: String,
+  private def routeKind(snap: CatalogSnapshot.Tenant,
       names: Seq[String]): String = {
-    val known = probeFamilies(snap, tenant, names)
+    val known = probeFamilies(snap, names)
     known.collectFirst { case (n, fs) if fs.size > 1 =>
       throw new IllegalArgumentException(
         s"metric '$n' has data in multiple families (${fs.mkString(", ")})" +
@@ -1277,46 +1291,25 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
   }
 
   /** The tenant's catalog snapshot, fence-checked once per request and
-    * passed to every catalog lookup the request makes; None for a store
-    * without a complete catalog. */
-  private def catalogSnapshot(tenant: String): Option[CatalogSnapshot.Tenant] =
+    * passed to every catalog lookup the request makes. */
+  private def catalogSnapshot(tenant: String): CatalogSnapshot.Tenant =
     CatalogSnapshot.tenant(spark, storeDir, tenant)
 
-  /** Every family each of `names` is known under (unknown names absent) —
-    * multi-membership is the caller's ambiguity signal, not silently
-    * collapsed. Served from the catalog snapshot; stores predating the
-    * catalog fall back to probing the raw tables themselves (isin
-    * pushdown over preagg_raw / metrics_string / metrics_full — correct,
-    * but three table scans at 100 TB, which is exactly why the catalog
-    * exists). */
-  private def probeFamilies(snap: Option[CatalogSnapshot.Tenant],
-      tenant: String, names: Seq[String]): Map[String, Set[String]] =
-    snap match {
-      case Some(snap) =>
-        names.map(n => n -> snap.familiesOf(n)).filter(_._2.nonEmpty).toMap
-      case None =>
-        val nameCol = col("metric_name").isin(names: _*) &&
-          col("tenant_id") === tenant
-        def hits(table: String, famCol: org.apache.spark.sql.Column) =
-          MetricsQueryApi.rawTable(spark, storeDir, table).filter(nameCol)
-            .select(col("metric_name"), famCol.as("fam")).distinct()
-            .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
-        val all = hits("preagg_raw", col("kind")) ++
-          hits("metrics_string", lit("string")) ++
-          hits("metrics_full", lit("basic"))
-        all.groupBy(_._1).map { case (n, fs) => n -> fs.map(_._2).toSet }
-    }
+  /** Every family each of `names` is cataloged under (unknown names
+    * absent) — multi-membership is the caller's ambiguity signal, not
+    * silently collapsed. A snapshot lookup: no table is opened. */
+  private def probeFamilies(snap: CatalogSnapshot.Tenant,
+      names: Seq[String]): Map[String, Set[String]] =
+    names.map(n => n -> snap.familiesOf(n)).filter(_._2.nonEmpty).toMap
 
   private def metricsSearch(ex: HttpExchange, tenant: String): Unit = {
     val q = queryParams(ex).get("query") match {
       case Some(v) => v
       case None => sendJson(ex, 400, errJson("query= is required")); return
     }
-    val rows = MetricsQueryApi.searchCatalog(spark, storeDir,
-      catalogSnapshot(tenant), tenant, q)
-    val body = rows.map { case (name, unit) =>
-      s"""{"metric": ${jStr(name)}, "unit": ${jStr(
-        Option(unit).getOrElse("unknown"))}}""" }.mkString("[", ", ", "]")
+    val body = catalogSnapshot(tenant).search(q).map { l =>
+      s"""{"metric": ${jStr(l.name)}, "unit": ${jStr(
+        Option(l.unit).getOrElse("unknown"))}}""" }.mkString("[", ", ", "]")
     sendJson(ex, 200, body)
   }
 
@@ -1325,8 +1318,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       case Some(v) => v
       case None => sendJson(ex, 400, errJson("query= is required")); return
     }
-    val body = MetricsQueryApi.browseCatalog(spark, storeDir,
-        catalogSnapshot(tenant), tenant, q)
+    val body = catalogSnapshot(tenant).browse(q)
       .map { case (name, complete) => s"""{${jStr(name)}: $complete}""" }
       .mkString("[", ", ", "]")
     sendJson(ex, 200, body)
@@ -1403,7 +1395,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     * the picker). One level per call, exactly graphite-web's contract:
     * entries are the next-level nodes under the query, `leaf`/`expandable`
     * merged per node (a prefix can be BOTH a complete name and a parent).
-    * Backed by [[MetricsQueryApi.browseCatalog]] — the same browse the
+    * Backed by the catalog snapshot's browse — the same browse the
     * v2.0 `metric_name/search` route serves, re-shaped to Graphite
     * treejson. */
   private def metricsFind(ex: HttpExchange): Unit = {
@@ -1412,11 +1404,11 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       throw new IllegalArgumentException("tenant= is required"))
     val query = q.getOrElse("query",
       throw new IllegalArgumentException("query= is required"))
-    // row-capped like every other facade collect (limit pushed into the
-    // query): a '*'-ish browse level on a million-locator store must 400
-    // on the budget, not pull the level into the facade heap
-    val rows = MetricsQueryApi.browseCatalog(spark, storeDir,
-      catalogSnapshot(tenant), tenant, query, MaxSeriesPanelPoints + 1)
+    // row-capped like every other facade response: a '*'-ish browse
+    // level on a million-locator store must 400 on the budget, not render
+    // the whole level
+    val rows = catalogSnapshot(tenant).browse(query)
+      .take(MaxSeriesPanelPoints + 1)
     require(rows.length <= MaxSeriesPanelPoints,
       s"browse level exceeds $MaxSeriesPanelPoints nodes — narrow the query")
     // merge the (name, is_complete) pairs: leaf = any complete,

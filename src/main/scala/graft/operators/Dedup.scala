@@ -493,27 +493,6 @@ object Dedup {
       .select("doc_id_1", "doc_id_2", "jaccard")
   }
 
-  /** [[ngramJaccardPairs]] with a document-frequency prune on CANDIDATE
-    * GENERATION: shingles appearing in more than `maxDf` documents
-    * (stopword n-grams) are dropped from the pair-producing equi-join —
-    * they are precisely the hot join keys whose bucket is quadratic in df —
-    * and surviving pairs are then verified with the exact Jaccard over the
-    * FULL shingle sets, so any pair that still qualifies gets exactly the
-    * same score as the unpruned baseline. Only pairs whose entire overlap
-    * is pruned shingles can be lost; at a meaningful threshold those are
-    * stopword-only overlaps, not near-duplicates. */
-  def ngramJaccardPairsPruned(docs: DataFrame, k: Int = 3,
-      threshold: Double = 0.5, maxDf: Long = 100L): DataFrame = {
-    val sh = shingleRows(docs, k)
-    val dfs = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val rare = sh.join(dfs.filter(col("df") <= maxDf).select("sh"), "sh")
-    val candidates = rare.as("a").join(rare.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"))
-      .distinct()
-    verifyJaccard(candidates, docs, k, threshold)
-  }
-
   /** EXACT maximal shared word spans between document pairs — the
     * relational form of exact-substring dedup (Lee et al., "Deduplicating
     * Training Data Makes Language Models Better", ACL 2022, which uses a

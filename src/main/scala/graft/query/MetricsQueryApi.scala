@@ -2,12 +2,12 @@ package graft.query
 
 import graft.core.{CatalogSnapshot, DateTimeParser, Granularity, GlobPattern,
   Instrumentation, SnapshotStore, Tables}
-import graft.operators.{Discovery, Rollups}
+import graft.operators.Rollups
 import graft.streaming.IngestStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.util.concurrent.ConcurrentHashMap
 
@@ -211,19 +211,18 @@ object MetricsQueryApi {
     rows
   }
 
-  /** Resolution over the store's catalog snapshot when it has a complete
-    * catalog (zero Spark jobs once the tenant is loaded), else over
-    * `fallback`. `snapshot` is the one the caller already took for this
-    * request, if any; `family` narrows to one family's locators (its name
-    * is their rollup_type); `unit` replaces the cataloged unit. */
+  /** Resolution over the store's catalog snapshot (zero Spark jobs once
+    * the tenant is loaded). `snapshot` is the one the caller already took
+    * for this request, if any; `family` narrows to one family's locators
+    * (its name is their rollup_type); `unit` replaces the cataloged unit. */
   private def storeResolver(spark: SparkSession, storeDir: String, p: Params,
       snapshot: Option[CatalogSnapshot.Tenant], family: Option[String] = None,
-      unit: Option[String] = None)(fallback: => DataFrame): Resolver =
-    snapshot.orElse(CatalogSnapshot.tenant(spark, storeDir, p.tenantId)) match {
-      case Some(snap) => n => snap.search(p.metricGlob, n, family)
-        .map(l => (l.name, unit.getOrElse(l.unit), l.family))
-      case None => frameResolver(fallback, p)
-    }
+      unit: Option[String] = None): Resolver = {
+    val snap = snapshot.getOrElse(
+      CatalogSnapshot.tenant(spark, storeDir, p.tenantId))
+    n => snap.search(p.metricGlob, n, family)
+      .map(l => (l.name, unit.getOrElse(l.unit), l.family))
+  }
 
   private def resolveQuery(p: Params, nowMillis: Long, maxBatch: Int,
       resolve: Resolver): ResolvedQuery = {
@@ -284,61 +283,28 @@ object MetricsQueryApi {
     col("num_points") / lit(g.millis / 1000.0)
 
   /** Catalog over an engine store (a directory produced by
-    * [[graft.streaming.IngestStream]]): distinct locators plus their ingested
-    * unit. Served from the PERSISTED catalog dimension the ingest path
-    * maintains ([[graft.streaming.IngestStream.metricCatalog]] — the
-    * reference's metrics_metadata CF + ES discovery index, SURVEY §1.1)
-    * whenever the store has one: a metadata read of O(distinct locators)
-    * rows, covering ALL ingested families like the reference's ES index
-    * (one row per locator even when it spans families — `rollup_type`
-    * takes the lexicographic min, ambiguity being the read path's problem
-    * to flag, [[graft.http.MetricsHttpServer]] routeKind). Stores written
-    * before the catalog existed (or via raw [[graft.streaming.IngestStream
-    * .writeRaw]]) fall back to deriving basic locators by scanning the
-    * name/unit columns of the raw store. */
-  def storeCatalog(spark: SparkSession, storeDir: String): DataFrame =
-    graft.streaming.IngestStream.metricCatalog(spark, storeDir)
+    * [[graft.streaming.IngestStream]]) as a frame: one row per locator
+    * (tenant_id, metric_name, unit, rollup_type), read from the PERSISTED
+    * catalog dimension the ingest path maintains
+    * ([[graft.streaming.IngestStream.metricCatalog]] — the reference's
+    * metrics_metadata CF + ES discovery index, SURVEY §1.1): a metadata
+    * read of O(distinct locators) rows, covering ALL ingested families
+    * like the reference's ES index (one row per locator even when it
+    * spans families — `rollup_type` takes the lexicographic min,
+    * ambiguity being the read path's problem to flag,
+    * [[graft.http.MetricsHttpServer]] routeKind). The read path resolves
+    * from the same rows through [[CatalogSnapshot]]; like it, this is
+    * empty for a store with no data and fails for one whose data no
+    * complete catalog covers ([[CatalogSnapshot.requireCovered]]). */
+  def storeCatalog(spark: SparkSession, storeDir: String): DataFrame = {
+    CatalogSnapshot.requireCovered(spark, storeDir)
+    IngestStream.metricCatalog(spark, storeDir)
       .map(_.groupBy(col("tenant_id"), col("metric_name"))
         .agg(max(col("unit")).as("unit"),
           min(col("family")).as("rollup_type")))
-      .getOrElse(catalogFromRaw(rawTable(spark, storeDir, "metrics_full")))
-
-  /** `Discovery.globSearch` over [[storeCatalog]] — (metric_name, unit)
-    * in name order, at most `limit` rows — served from `snapshot`, the
-    * tenant's [[CatalogSnapshot]], when the store has a complete catalog
-    * (None derives it from the raw tables). */
-  def searchCatalog(spark: SparkSession, storeDir: String,
-      snapshot: Option[CatalogSnapshot.Tenant], tenant: String, glob: String,
-      limit: Int = Int.MaxValue): Seq[(String, String)] =
-    snapshot match {
-      case Some(snap) => snap.search(glob, limit).map(l => (l.name, l.unit))
-      case None => collectUpTo(Discovery.globSearch(
-          storeCatalog(spark, storeDir), tenant, glob), limit)
-        .map(r => (r.getString(0), r.getString(1)))
-    }
-
-  /** `Discovery.metricNameBrowse` over [[storeCatalog]] — (name,
-    * is_complete_name) in name order, at most `limit` rows — served from
-    * `snapshot` as [[searchCatalog]] is. */
-  def browseCatalog(spark: SparkSession, storeDir: String,
-      snapshot: Option[CatalogSnapshot.Tenant], tenant: String, query: String,
-      limit: Int = Int.MaxValue): Seq[(String, Boolean)] =
-    snapshot match {
-      case Some(snap) => snap.browse(query).take(limit)
-      case None => collectUpTo(Discovery.metricNameBrowse(
-          storeCatalog(spark, storeDir), tenant, query), limit)
-        .map(r => (r.getString(0), r.getBoolean(1)))
-    }
-
-  private def collectUpTo(df: DataFrame, limit: Int): Seq[org.apache.spark.sql.Row] =
-    (if (limit < Int.MaxValue) df.limit(limit) else df).collect().toSeq
-
-  private def catalogFromRaw(raw: DataFrame): DataFrame = {
-    val unitCol =
-      if (raw.columns.contains("unit")) max(col("unit")) else max(lit("unknown"))
-    raw.groupBy(col("tenant_id"), col("metric_name"))
-      .agg(unitCol.as("unit"))
-      .withColumn("rollup_type", lit("basic"))
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(Seq("tenant_id", "metric_name", "unit", "rollup_type")
+          .map(StructField(_, StringType)))))
   }
 
   private val DayMs = 86400000L
@@ -375,9 +341,11 @@ object MetricsQueryApi {
     * `rawOverride` points the gap fill at a raw source other than the
     * store's own `metrics_full` — e.g. a view over an external full-
     * resolution table when only the rollup tiers are materialized in
-    * `storeDir` (the reference's pluggable MetricsRW the same way). A source
-    * without a `ts_day` column gets per-day `ts_ms` range predicates
-    * instead of partition pruning.
+    * `storeDir` (the reference's pluggable MetricsRW the same way). It
+    * feeds only the gap fill: locators still resolve from the store's
+    * catalog, or from `catalogOverride`. A source without a `ts_day`
+    * column gets per-day `ts_ms` range predicates instead of partition
+    * pruning.
     *
     * `dirtyDays` names days the caller KNOWS hold raw points newer than
     * the stored tier (the facade's deferred-rollup pending set — the
@@ -394,10 +362,8 @@ object MetricsQueryApi {
       snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     graft.core.Instrumentation.global.inc("query.reads.basic")
     val r = resolveQuery(p, nowMillis, maxBatch,
-      catalogOverride.orElse(rawOverride.map(catalogFromRaw))
-        .map(frameResolver(_, p))
-        .getOrElse(storeResolver(spark, storeDir, p, snapshot)(
-          catalogFromRaw(rawTable(spark, storeDir, "metrics_full")))))
+      catalogOverride.map(frameResolver(_, p))
+        .getOrElse(storeResolver(spark, storeDir, p, snapshot)))
     if (r.g.isFull) {
       // FULL reads the full-resolution store itself — raw samples with
       // their own timestamps (the reference's FULL read targets the
@@ -585,17 +551,11 @@ object MetricsQueryApi {
       catalogOverride: Option[DataFrame] = None,
       snapshot: Option[CatalogSnapshot.Tenant] = None): DataFrame = {
     graft.core.Instrumentation.global.inc("query.reads.string")
-    val store = rawTable(spark, storeDir, "metrics_string")
-    // persisted catalog first (the snapshot), table-derivation fallback —
-    // same discipline as the stored numeric reads
     val r = resolveQuery(p, nowMillis, maxBatch,
       catalogOverride.map(frameResolver(_, p)).getOrElse(
-        storeResolver(spark, storeDir, p, snapshot, Some("string"))(
-          store.groupBy(col("tenant_id"), col("metric_name"))
-            .agg(max(col("unit")).as("unit"))
-            .withColumn("rollup_type", lit("string")))))
+        storeResolver(spark, storeDir, p, snapshot, Some("string"))))
     r.project(
-      store.filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep),
+      rawTable(spark, storeDir, "metrics_string").filter(col("ts_ms") >= r.fromMs && col("ts_ms") < r.toMs && r.keep),
       Seq(col("value_str"), col("is_bool")), bucket = col("ts_ms"))
   }
 
@@ -668,17 +628,10 @@ object MetricsQueryApi {
     require(preaggMerges.contains(kind),
       s"unknown pre-aggregated kind '$kind' (one of ${preaggMerges.keys.mkString(", ")})")
     graft.core.Instrumentation.global.inc(s"query.reads.$kind")
+    // statsd payloads carry no unit: the kind's locators read "unknown"
     val r = resolveQuery(p, nowMillis, maxBatch,
       catalogOverride.map(frameResolver(_, p)).getOrElse(
-        // pre-catalog stores derive the kind's locators from the parsed
-        // flushes (statsd payloads carry no unit); that reads EMPTY once
-        // retention prunes preagg_raw, while the coarser kind tiers can
-        // outlive it by years — why the persisted catalog comes first
-        storeResolver(spark, storeDir, p, snapshot, Some(kind), Some("unknown"))(
-          rawTable(spark, storeDir, "preagg_raw").filter(col("kind") === kind)
-            .select("tenant_id", "metric_name").distinct()
-            .withColumn("unit", lit("unknown"))
-            .withColumn("rollup_type", lit(kind)))))
+        storeResolver(spark, storeDir, p, snapshot, Some(kind), Some("unknown"))))
     if (r.g.isFull) {
       // FULL serves each ingested flush as its own point (the reference's
       // RollupType.classOf returns the preagg rollup class itself at FULL —

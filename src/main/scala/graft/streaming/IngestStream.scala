@@ -589,7 +589,7 @@ object IngestStream {
     * the ~30-table glob probe. */
   private val storeNonVirgin =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def storeHasData(spark: SparkSession, storeDir: String): Boolean =
+  private[graft] def storeHasData(spark: SparkSession, storeDir: String): Boolean =
     storeNonVirgin.contains(storeDir) || {
       val r = locatorTables.exists(t => hasParquetData(spark, s"$storeDir/$t"))
       if (r) storeNonVirgin.add(storeDir)
@@ -601,9 +601,8 @@ object IngestStream {
     * None when the store predates the catalog OR the catalog lacks its
     * `_complete` coverage marker (a catalog born mid-life covers only the
     * batches since the upgrade; serving it would hide every older locator,
-    * so callers fall back to deriving locators from the raw tables until
-    * [[rebuildCatalog]] closes the gap and writes the marker). Size is
-    * O(distinct locators), broadcastable. */
+    * so reads of such a store fail until [[rebuildCatalog]] closes the gap
+    * and writes the marker). Size is O(distinct locators), broadcastable. */
   def metricCatalog(spark: SparkSession, storeDir: String): Option[DataFrame] = {
     val marker = new org.apache.hadoop.fs.Path(
       s"$storeDir/metric_catalog/_complete")
@@ -682,11 +681,15 @@ object IngestStream {
     * retention-pruned data (the reference's locator index has the same
     * property, aged by its own TTL), and stores written before the catalog
     * existed (or via raw [[writeRaw]]) that have no catalog at all. One
-    * scan of the name/unit/kind columns of `metrics_full` /
-    * `metrics_string` / `preagg_raw` — the O(table) cost the per-batch
-    * catalog exists to amortize away, paid deliberately here in an
-    * offline maintenance window (schedule with [[graft.operators
-    * .Retention.enforce]], whose partition drops create the staleness).
+    * scan of the name/unit/kind columns of every locator-bearing table —
+    * the O(table) cost the per-batch catalog exists to amortize away,
+    * paid deliberately: in an offline maintenance window (schedule with
+    * [[graft.operators.Retention.enforce]], whose partition drops create
+    * the staleness), and once when [[graft.http.MetricsHttpServer]] opens
+    * a store whose data no `_complete` catalog covers — every store read
+    * resolves locators from the catalog alone
+    * ([[graft.core.CatalogSnapshot]]), so such a store fails reads until
+    * this has run.
     *
     * Crash contract: the rebuilt rows land under `src=rebuild` with an id
     * above every existing dir BEFORE any old dir is deleted, so every
@@ -726,7 +729,13 @@ object IngestStream {
           derived(s"metrics_${g.name}", lit("basic"))) ++
         (for (k <- preaggKinds; g <- Granularity.rollupTiers)
           yield derived(s"preagg_${k}_${g.name}", lit(k))).flatten
-    if (parts.isEmpty) { fs.delete(root, true); return }
+    if (parts.isEmpty) {
+      // no data left: the store is virgin again, and its next batch's
+      // catalog is complete from birth
+      fs.delete(root, true)
+      storeNonVirgin.remove(storeDir)
+      return
+    }
     val rows = parts.reduce(_ unionByName _)
       .groupBy("tenant_id", "metric_name", "family")
       .agg(max("unit").as("unit"))

@@ -76,7 +76,7 @@ class CatalogSnapshotSpec extends AnyFunSuite with SparkSuite {
            glob <- globsFor(seed)) {
         val want = Discovery.globSearch(catalog, tenant, glob).collect()
           .map(r => (r.getString(0), r.getString(1))).toSeq
-        val snap = CatalogSnapshot.tenant(spark, store, tenant).get
+        val snap = CatalogSnapshot.tenant(spark, store, tenant)
         val got = snap.search(glob)
         assert(got.map(l => (l.name, l.unit)) === want,
           s"seed $seed tenant $tenant glob '$glob'")
@@ -99,7 +99,7 @@ class CatalogSnapshotSpec extends AnyFunSuite with SparkSuite {
       for (tenant <- Seq("t1", "t2"); q <- queries) {
         val want = Discovery.metricNameBrowse(catalog, tenant, q).collect()
           .map(r => (r.getString(0), r.getBoolean(1))).toSeq
-        val got = CatalogSnapshot.tenant(spark, store, tenant).get.browse(q)
+        val got = CatalogSnapshot.tenant(spark, store, tenant).browse(q)
         // Spark orders by name only, so a name that is both complete and a
         // parent may come in either order: compare names in order, and rows
         assert(got.map(_._1) === want.map(_._1), s"tenant $tenant query '$q'")
@@ -116,7 +116,7 @@ class CatalogSnapshotSpec extends AnyFunSuite with SparkSuite {
       .toDF("tenant_id", "metric_name", "family", "unit").coalesce(1)
       .write.parquet(s"$store/metric_catalog/src=numeric/batch_id=0")
     fs.create(new Path(s"$store/metric_catalog/_complete"), true).close()
-    val snap = CatalogSnapshot.tenant(spark, store, "t1").get
+    val snap = CatalogSnapshot.tenant(spark, store, "t1")
     assert(snap.search("svc.*") ===
       Seq(CatalogSnapshot.Locator("svc.lat", "s", "counter")))
     assert(snap.search("svc.*", family = Some("gauge")) ===
@@ -135,7 +135,7 @@ class CatalogSnapshotSpec extends AnyFunSuite with SparkSuite {
       .toDF("tenant_id", "metric_name", "family", "unit").coalesce(1)
       .write.parquet(s"$store/metric_catalog/src=numeric/batch_id=0")
     fs.create(new Path(s"$store/metric_catalog/_complete"), true).close()
-    val snap = CatalogSnapshot.tenant(spark, store, "t1").get
+    val snap = CatalogSnapshot.tenant(spark, store, "t1")
     assert(snap.search("cap.*", cap + 1).size === cap + 1)
     assert(snap.search("cap.n0*", cap + 1).size === cap)
     assert(Discovery.globSearch(MetricsQueryApi.storeCatalog(spark, store),
@@ -149,14 +149,33 @@ class CatalogSnapshotSpec extends AnyFunSuite with SparkSuite {
     assert(read("cap.n0*").collect().isEmpty)
   }
 
-  test("a store without a _complete catalog has no snapshot") {
+  test("without a _complete catalog, a store with no data serves empty " +
+    "and a store with data fails naming rebuildCatalog") {
     val store = java.nio.file.Files.createTempDirectory("graft_csnap4").toString
-    assert(CatalogSnapshot.tenant(spark, store, "t1").isEmpty)
+    def read() = MetricsQueryApi.getRollupsStored(spark, store,
+      MetricsQueryApi.Params("t1", "*", "1704067200", "1704070800",
+        resolution = Some(Granularity.MIN_5)), nowMillis = 1704070800000L)
+    // empty store: an empty tenant, an empty catalog, an empty read
+    assert(CatalogSnapshot.tenant(spark, store, "t1").size === 0)
+    assert(MetricsQueryApi.storeCatalog(spark, store).collect().isEmpty)
+    assert(read().collect().isEmpty)
+    // unmarked catalog rows over no data: still nothing to cover
     Seq(("t1", "a", "basic", "ms"))
       .toDF("tenant_id", "metric_name", "family", "unit").coalesce(1)
       .write.parquet(s"$store/metric_catalog/src=numeric/batch_id=0")
-    assert(CatalogSnapshot.tenant(spark, store, "t1").isEmpty)
+    assert(CatalogSnapshot.tenant(spark, store, "t1").size === 0)
+    // data the catalog does not cover: every library read fails loudly
+    graft.streaming.IngestStream.writeRaw(
+      Seq(("t1", "a", 1704067200000L, 1.0, 86400, "ms")).toDF("tenant_id",
+        "metric_name", "ts_ms", "value", "ttl_seconds", "unit"), store, 0L)
+    for (e <- Seq(
+        intercept[IllegalStateException](CatalogSnapshot.tenant(spark, store, "t1")),
+        intercept[IllegalStateException](MetricsQueryApi.storeCatalog(spark, store)),
+        intercept[IllegalStateException](read())))
+      assert(e.getMessage.contains("IngestStream.rebuildCatalog"), e.getMessage)
     fs.create(new Path(s"$store/metric_catalog/_complete"), true).close()
-    assert(CatalogSnapshot.tenant(spark, store, "t1").map(_.size) === Some(1))
+    assert(CatalogSnapshot.tenant(spark, store, "t1").size === 1)
+    assert(read().collect().map(_.getAs[String]("metric_name")).toSet ===
+      Set("a"))
   }
 }

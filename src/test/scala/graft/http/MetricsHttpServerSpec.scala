@@ -2221,4 +2221,88 @@ class MetricsHttpServerSpec extends AnyFunSuite with SparkSuite {
         after)
     } finally srv.stop()
   }
+
+  /** The same points as a raw-only store (raw write, no catalog) and as a
+    * store built by `processBatch` (catalog complete from birth). */
+  private def rawOnlyAndIngested(): (String, String) = {
+    import spark.implicits._
+    val pts = (for (n <- Seq("app.r.x", "app.r.y"); i <- 0 until 6)
+      yield ("acme", n, now - 3600000L + i * 300000L,
+        i.toDouble + n.length, 86400, "req"))
+      .toDF("tenant_id", "metric_name", "ts_ms", "value", "ttl_seconds", "unit")
+    def dir() = java.nio.file.Files.createTempDirectory("graft_http").toString
+    val (rawOnly, ingested) = (dir(), dir())
+    graft.streaming.IngestStream.writeRaw(pts, rawOnly, 0L)
+    graft.streaming.IngestStream.processBatch(
+      graft.streaming.IngestStream.withValidity(pts, 0L, Long.MaxValue), ingested)
+    (rawOnly, ingested)
+  }
+
+  /** `f` against a facade serving `store`, stopped afterwards. */
+  private def serving[T](store: String)(f: String => T): T = {
+    val srv = new MetricsHttpServer(spark, store, nowMs = () => now)
+    srv.start()
+    try f(s"http://127.0.0.1:${srv.boundPort}") finally srv.stop()
+  }
+
+  private def rebuilds: Long =
+    graft.core.Instrumentation.global.count("store.catalog.rebuilds")
+
+  test("a raw-only store has its catalog rebuilt once at open: the first " +
+    "search and views reads are served by the snapshot and equal those " +
+    "of the same points ingested through processBatch") {
+    val (rawOnly, ingested) = rawOnlyAndIngested()
+    val search = "/v2.0/acme/metrics/search?query=app.r.*"
+    val views = s"/v2.0/acme/views/app.r.x?from=${(now - 7200000L) / 1000}" +
+      s"&to=${now / 1000}&resolution=5m"
+    val before = rebuilds
+    val got = serving(rawOnly) { base =>
+      assert(counter(base, "store.catalog.rebuilds") === before + 1)
+      val loads0 = counter(base, "store.catalog.resolutions")
+      val raw0 = counter(base, "store.raw.resolutions") +
+        counter(base, "store.raw.cache_hits")
+      var found = ""
+      val searchJobs = jobsDuring { found = get(base + search).body() }
+      // the search loads the tenant's snapshot (its one job) and opens no
+      // raw table: nothing derives locators from the data
+      assert(counter(base, "store.catalog.resolutions") === loads0 + 1)
+      assert(searchJobs.size === 1, searchJobs)
+      assert(counter(base, "store.raw.resolutions") +
+        counter(base, "store.raw.cache_hits") === raw0)
+      val hits0 = counter(base, "store.catalog.cache_hits")
+      val viewed = get(base + views).body()
+      assert(counter(base, "store.catalog.cache_hits") === hits0 + 1)
+      assert(counter(base, "store.catalog.resolutions") === loads0 + 1)
+      (found, viewed)
+    }
+    assert(got._1.contains(""""metric": "app.r.y""""), got._1)
+    assert(got._2.contains(""""metric": "app.r.x""""), got._2)
+    assert(got === serving(ingested)(base =>
+      (get(base + search).body(), get(base + views).body())))
+    assert(rebuilds === before + 1, "the processBatch store needs no rebuild")
+  }
+
+  test("store.catalog.rebuilds stays 0 for a second facade on a rebuilt " +
+    "store and for a facade on a virgin store") {
+    val (rawOnly, _) = rawOnlyAndIngested()
+    val before = rebuilds
+    serving(rawOnly)(base =>
+      assert(counter(base, "store.catalog.rebuilds") === before + 1))
+    serving(rawOnly)(base =>
+      assert(counter(base, "store.catalog.rebuilds") === before + 1))
+    val virgin = java.nio.file.Files.createTempDirectory("graft_http").toString
+    serving(virgin) { base =>
+      assert(counter(base, "store.catalog.rebuilds") === before + 1)
+      // a virgin store serves an empty catalog; its first POST writes the
+      // catalog and its coverage marker
+      assert(get(s"$base/v2.0/acme/metrics/search?query=*").body() === "[]")
+      assert(post(s"$base/v2.0/acme/ingest",
+        ingestBody(Seq("app.v.x" -> (now - 600000L)))).statusCode() === 200)
+    }
+    serving(virgin) { base =>
+      assert(counter(base, "store.catalog.rebuilds") === before + 1)
+      assert(get(s"$base/v2.0/acme/metrics/search?query=*").body()
+        .contains(""""metric": "app.v.x""""))
+    }
+  }
 }

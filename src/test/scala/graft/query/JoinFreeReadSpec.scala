@@ -45,13 +45,15 @@ class JoinFreeReadSpec extends AnyFunSuite with SparkSuite
   }
 
   /** A store through the production ingest path (its catalog is complete
-    * from birth), and a raw-only twin with no catalog and no tiers. */
+    * from birth), and a raw-only twin with no tiers whose catalog a
+    * rebuild derives from its raw table. */
   private lazy val stores: (String, String) = {
     val store = java.nio.file.Files.createTempDirectory("graft_jfr_").toString
     val rawOnly = java.nio.file.Files.createTempDirectory("graft_jfr_raw_").toString
     IngestStream.processBatch(IngestStream.withValidity(points, 0L,
       Long.MaxValue), store)
     IngestStream.writeRaw(points, rawOnly, 0L)
+    IngestStream.rebuildCatalog(spark, rawOnly)
     (store, rawOnly)
   }
 
@@ -102,7 +104,7 @@ class JoinFreeReadSpec extends AnyFunSuite with SparkSuite
 
   private def snapshotResolved(store: String, tenant: String,
       glob: String): Seq[(String, String, String)] =
-    CatalogSnapshot.tenant(spark, store, tenant).get
+    CatalogSnapshot.tenant(spark, store, tenant)
       .search(glob, MetricsQueryApi.MaxMetricsPerBatchQuery + 1)
       .map(l => (l.name, l.unit, l.family))
 
@@ -170,14 +172,15 @@ class JoinFreeReadSpec extends AnyFunSuite with SparkSuite
       nowMillis = now)) === rows(fullByJoin))
   }
 
-  test("the pre-catalog frame resolver and a catalogOverride equal the " +
-    "join derivation; an override listing a name twice is rejected") {
+  test("a rebuilt raw-only store and a catalogOverride equal the join " +
+    "derivation; an override listing a name twice is rejected") {
     val (store, rawOnly) = stores
     val p = params("t1", "app.t1.*")
-    // no catalog, no tiers: resolution derives from the raw store and
+    // no tiers: the rebuilt catalog resolves the raw store's locators and
     // every bucket recomputes from raw
     val derived = Seq(("app.t1.m1", "count", "basic"),
       ("app.t1.m2", "count", "basic"))
+    assert(snapshotResolved(rawOnly, "t1", "app.t1.*") === derived)
     assert(rows(MetricsQueryApi.getRollupsStored(spark, rawOnly, p,
       nowMillis = now)) === rows(storedByJoin(rawOnly, p, derived)))
     // the override's own units label the rows

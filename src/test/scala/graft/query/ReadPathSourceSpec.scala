@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** Source checks on the warm read path's fixed costs: no checkpoint job in
   * the render table, no reflective map literal in the read's projection,
-  * and one place that opens the raw tables. */
+  * one place that opens the raw tables, and one locator source — the
+  * catalog snapshot, with no discovery job and no raw-table derivation. */
 class ReadPathSourceSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala",
@@ -43,5 +44,25 @@ class ReadPathSourceSpec extends AnyFunSuite {
       "\"metrics_full\" -> IngestStream.rawStoreSchema,",
       "\"preagg_raw\" -> IngestStream.preaggRawSchema,",
       "\"metrics_string\" -> IngestStream.stringStoreSchema)"))
+  }
+
+  test("the read path resolves locators only from the catalog snapshot") {
+    val files = Seq("query/MetricsQueryApi.scala", "http/MetricsHttpServer.scala")
+    // no discovery job: the one Discovery call left is the event search,
+    // over the events table, which names no locator
+    val discovery = files.flatMap(f => lines(f).flatMap(l =>
+      ("Discovery" + "\\.\\w+").r.findAllIn(l)).map(f -> _))
+    assert(discovery.distinct === Seq("http/MetricsHttpServer.scala" -> ("Discovery" +
+      ".eventSearch")))
+    // no locator derivation from a raw table
+    assert(files.forall(f => !lines(f).exists(_.contains("catalog" + "FromRaw"))))
+    // the family probe is a snapshot lookup: its body opens no table
+    val server = lines("http/MetricsHttpServer.scala")
+    val start = server.indexWhere(_.contains("def probe" + "Families("))
+    assert(start >= 0)
+    val body = server.drop(start).takeWhile(l => !l.trim.isEmpty)
+    assert(body.exists(_.contains("familiesOf")), body.mkString("\n"))
+    assert(!body.exists(l => Seq("raw" + "Table", "spark" + ".read",
+      "hasParquet" + "Data").exists(l.contains)), body.mkString("\n"))
   }
 }

@@ -35,7 +35,8 @@ class StoredReadSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** Build a store through the production ingest path (raw write + dirty-day
-    * 5m roll + cascade), and a tier-less twin holding only raw. */
+    * 5m roll + cascade), and a tier-less twin holding only raw, with the
+    * catalog a rebuild derives from it: the raw-recompute reference. */
   private def buildStores(): (String, String) = {
     val store = java.nio.file.Files.createTempDirectory("graft_srs_").toString
     val rawOnly = java.nio.file.Files.createTempDirectory("graft_srs_raw_").toString
@@ -43,6 +44,7 @@ class StoredReadSpec extends AnyFunSuite with SparkSuite {
     IngestStream.processBatch(validated, store)
     IngestStream.rollupCascadeFor(spark, store)
     IngestStream.writeRaw(points, rawOnly, 0L)
+    IngestStream.rebuildCatalog(spark, rawOnly)
     (store, rawOnly)
   }
 

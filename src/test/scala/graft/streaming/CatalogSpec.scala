@@ -208,8 +208,8 @@ class CatalogSpec extends AnyFunSuite with SparkSuite {
       "tier-only data must block the virgin-store coverage marker")
   }
 
-  test("a catalog born mid-life is NOT served: pre-catalog locators keep " +
-    "resolving from the raw tables until a rebuild marks coverage") {
+  test("a catalog born mid-life is NOT served: reads fail naming " +
+    "rebuildCatalog until a rebuild marks coverage") {
     val store = java.nio.file.Files.createTempDirectory("graft_cat5").toString
     // pre-upgrade shape: raw data with no catalog (direct writeRaw)
     val old = Seq(("t1", "old.metric", day0 + 1000L, 1.0))
@@ -223,15 +223,22 @@ class CatalogSpec extends AnyFunSuite with SparkSuite {
       "the batch wrote catalog rows")
     assert(IngestStream.metricCatalog(spark, store).isEmpty,
       "an unmarked (partial) catalog must not be served")
-    // storeCatalog still resolves the PRE-catalog locator via raw fallback
-    val names = graft.query.MetricsQueryApi.storeCatalog(spark, store)
-      .select("metric_name").collect().map(_.getString(0)).toSet
-    assert(names === Set("old.metric", "new.metric"))
+    // no read derives the pre-catalog locator: each fails, naming the fix
+    val e = intercept[IllegalStateException](
+      graft.query.MetricsQueryApi.storeCatalog(spark, store))
+    assert(e.getMessage.contains("rebuildCatalog"), e.getMessage)
+    assert(intercept[IllegalStateException](graft.core.CatalogSnapshot
+      .tenant(spark, store, "t1")).getMessage.contains("rebuildCatalog"))
     // rebuild closes the gap and marks coverage; catalog now serves
     IngestStream.rebuildCatalog(spark, store)
     assert(IngestStream.metricCatalog(spark, store).isDefined)
     assert(catalogRows(store).map(_._1).toSet ===
       Set("old.metric", "new.metric"))
+    val names = graft.query.MetricsQueryApi.storeCatalog(spark, store)
+      .select("metric_name").collect().map(_.getString(0)).toSet
+    assert(names === Set("old.metric", "new.metric"))
+    assert(graft.core.CatalogSnapshot.tenant(spark, store, "t1")
+      .search("*").map(_.name) === Seq("new.metric", "old.metric"))
   }
 
   test("facade-style epoch-seeded batch ids fold like any other small dir") {

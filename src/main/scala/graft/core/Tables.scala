@@ -27,8 +27,8 @@ object Tables {
     * (r13 opt, guide §2.5 "input skew" / §6 input split size): a parquet
     * scan cannot split below the row-group, so a small-file table (one
     * row group) scans as ONE task — and every expensive projection fused
-    * above it (regex normalization, shingle explode, 128 min-hash partial
-    * aggregates, media decode) runs single-threaded while the rest of the
+    * above it (regex normalization, shingle explode, the MinHash signature
+    * kernel, media decode) runs single-threaded while the rest of the
     * cluster idles. When the input's scan parallelism is below the
     * session's `defaultParallelism`, redistribute the (narrow, pre-explode)
     * rows round-robin first; the exchange moves only the tiny base table

@@ -156,10 +156,19 @@ object TextFunctions {
     // on a null-free string array) without leaving codegen
     md5(concat_ws(" ", sort_array(array_distinct(words(text)))))
 
-  // MinHash signatures and LSH band keys deliberately have NO expression-
-  // level (higher-order-function) form here: nested HOFs evaluate
-  // interpreted and re-evaluate argument subtrees per lambda invocation,
-  // which made a 128-hash signature quadratic per document. The engine's
-  // MinHash is relational — see Dedup.minhashNearDups (shingle explode →
-  // codegen'd min aggregates over a mod-p affine family → band equi-join).
+  /** MinHash signature (ARRAY<BIGINT> of `numHashes` values) of a shingle
+    * array via the codegen'd [[MinhashSignature]] kernel; null for an empty
+    * array. `minhashSignature(wordKGrams(words(text), k), n)` is one
+    * document's signature in one fused pass — no shingle rows, no
+    * aggregate (see `Dedup.minhashSignatures`). */
+  def minhashSignature(grams: Column, numHashes: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(MinhashSignature(
+      org.apache.spark.sql.graft.ColumnBridge.expression(grams), numHashes))
+
+  /** The `bands` LSH band keys of a signature array via the codegen'd
+    * [[MinhashBandKeys]] kernel: band j's key equals
+    * `xxhash64(concat_ws(",", <its values> cast string))`. */
+  def minhashBandKeys(sig: Column, bands: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(MinhashBandKeys(
+      org.apache.spark.sql.graft.ColumnBridge.expression(sig), bands))
 }

@@ -148,11 +148,9 @@ object Dedup {
         concat_ws(" ", (0 until k).map(j => col(s"w$j")): _*).as("sh"))
   }
 
-  /** Distinct (or raw) word-k-shingle SETS per doc as rows. */
-  def shingleRows(docs: DataFrame, k: Int, distinct: Boolean = true): DataFrame = {
-    val sh = posShingleRows(docs, k).drop("pos")
-    if (distinct) sh.distinct() else sh
-  }
+  /** Distinct word-k-shingle SETS per doc as rows. */
+  def shingleRows(docs: DataFrame, k: Int): DataFrame =
+    posShingleRows(docs, k).drop("pos").distinct()
 
   /** Winnowed rolling-hash document fingerprints — the MOSS selection
     * scheme (Schleimer, Wilkerson & Aiken, "Winnowing: Local Algorithms for
@@ -233,57 +231,65 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Per-document MinHash signature (m0..m{numHashes-1}) — RELATIONAL
-    * minhash: explode shingles once, then numHashes codegen'd `min`
-    * aggregates (h·a_i+b_i mod p) with map-side partial aggregation.
-    * Deliberately NOT nested higher-order functions: HOFs evaluate
-    * interpreted (CodegenFallback) and re-evaluate their argument
-    * expressions per lambda invocation, which turns a sig→bands→hash
-    * composition into per-doc quadratic re-computation of the shingle
-    * pipeline. Flat aggregates keep the whole thing in Tungsten codegen and
-    * scale with shuffle partial-merge like any other aggregation.
+  /** One MinHash signature array per document: (doc_id, sig), `sig` an
+    * ARRAY<BIGINT> of `numHashes` values and never null — a document with
+    * no complete k-shingle has no row.
+    *
+    * The signature is the codegen'd [[graft.functions.MinhashSignature]]
+    * kernel over the document's `wordKGrams` array: one fused pass per doc
+    * row, no shingle rows. A doc_id on several rows (a re-crawled document)
+    * is ONE document: its rows' signatures merge by element-wise min, which
+    * is the signature of the union of their shingle sets. The merge is a
+    * doc-grain aggregate (one signature array per row); at one row per id
+    * it takes the guarded branch and never evaluates the element-wise fold.
     *
     * `maxShingleDf` prunes shingles present in more than that many
-    * DOCUMENTS from signature input — stopword n-grams ("of the and" in
+    * DOCUMENTS from the signature input — stopword n-grams ("of the and" in
     * every doc) otherwise minhash to hot values that produce oversized band
-    * buckets; since the prune applies to CANDIDATE GENERATION only (verify
+    * buckets. Since the prune applies to CANDIDATE GENERATION only (verify
     * is exact Jaccard over the full shingle sets), it trades recall only
-    * for pairs whose entire overlap is corpus-stopword shingles.
+    * for pairs whose entire overlap is corpus-stopword shingles. That arm
+    * explodes the shingles once, drops the hot ones, and collects each
+    * doc's survivors before the same kernel signs them. */
+  private def signatureArrays(docs: DataFrame, k: Int, numHashes: Int,
+      maxShingleDf: Option[Long]): DataFrame = maxShingleDf match {
+    case None =>
+      docs
+        .select(col("doc_id"),
+          minhashSignature(wordKGrams(words(col("text")), k), numHashes).as("sig"))
+        .groupBy(col("doc_id")).agg(collect_list(col("sig")).as("sigs"))
+        .filter(size(col("sigs")) > 0)
+        .select(col("doc_id"),
+          when(size(col("sigs")) === 1, col("sigs")(0)).otherwise(
+            transform(col("sigs")(0), (_, i) =>
+              array_min(transform(col("sigs"), s => s(i))))).as("sig"))
+    case Some(t) =>
+      val sh = posShingleRows(docs, k).drop("pos")
+      val cold = sh.distinct().groupBy(col("sh")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= t).select("sh")
+      sh.join(cold, "sh")
+        .groupBy(col("doc_id")).agg(collect_list(col("sh")).as("grams"))
+        .select(col("doc_id"), minhashSignature(col("grams"), numHashes).as("sig"))
+  }
+
+  /** Per-document MinHash signature table (doc_id, m0..m{numHashes-1}) —
+    * the stored layout: [[signatureArrays]] with the array spread over one
+    * BIGINT column per hash. Values are (h·a_i + b_i) mod (2³¹−1) with
+    * h = xxhash64(shingle) & 0x7FFFFFFF, bit-identical to the relational
+    * `min(pmod(h·a_i + b_i, p))` aggregate it replaces.
     *
     * This is the table to persist at 100 TB (one narrow row per doc): write
     * it once with [[writeMinhashSignatures]] and feed every later dedup run
     * from [[minhashNearDupsFromSignatures]] instead of re-shingling the
-    * corpus. (At bench scale the inline 4-way recompute measures faster
-    * than caching — column pruning keeps each branch narrower than the
-    * materialized base — so [[minhashNearDups]] stays inline by default.) */
+    * corpus. [[minhashNearDups]] bands straight from the arrays and never
+    * builds these columns. */
   def minhashSignatures(
       docs: DataFrame,
       k: Int = 3,
       numHashes: Int = 128,
-      maxShingleDf: Option[Long] = None): DataFrame = {
-    // distinct=false: min over duplicate shingles is unchanged — saves a
-    // 500k-row shuffle (the verify side dedups via collect_set).
-    val base = shingleRows(docs, k, distinct = false)
-    val shingled0 = maxShingleDf.fold(base) { t =>
-      val dfs = shingleRows(docs, k).groupBy(col("sh"))
-        .agg(count(lit(1)).as("df"))
-      base.join(dfs.filter(col("df") <= t).select("sh"), "sh")
-    }
-    val shingled = shingled0
-      .withColumn("h", xxhash64(col("sh")).bitwiseAND(lit(0x7FFFFFFFL)))
-    // h_i(x) = (a_i·x + b_i) mod p, p = 2^31-1 (Mersenne prime): a proper
-    // universal family. Without the modular reduction the affine map is
-    // monotonic, every h_i selects the same argmin shingle, and the 128
-    // "independent" hashes collapse to one.
-    val rnd = new scala.util.Random(42L)
-    val coeffs = Seq.fill(numHashes)(
-      (rnd.nextInt(Int.MaxValue).toLong + 1L, rnd.nextInt(Int.MaxValue).toLong))
-    val p = 2147483647L
-    val sigAggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * a + b, lit(p))).as(s"m$i")
-    }
-    shingled.groupBy(col("doc_id")).agg(sigAggs.head, sigAggs.tail: _*)
-  }
+      maxShingleDf: Option[Long] = None): DataFrame =
+    signatureArrays(docs, k, numHashes, maxShingleDf).select(
+      col("doc_id") +: (0 until numHashes).map(i => col("sig")(i).as(s"m$i")): _*)
 
   /** Persist the signature table — the once-per-corpus pass of the 100 TB
     * dedup pipeline. */
@@ -292,10 +298,10 @@ object Dedup {
     minhashSignatures(docs, k, numHashes, maxShingleDf)
       .write.mode("overwrite").parquet(path)
 
-  /** Band-key rows (doc_id, band, key) of a signature table — the shared
-    * LSH bucketing of [[minhashCandidates]] and [[incrementalNearDups]]. */
-  private def bandKeyRows(sig: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
+  /** Band-key rows (doc_id, band, key) of signature arrays (doc_id, sig):
+    * one codegen'd [[graft.functions.MinhashBandKeys]] call per doc,
+    * exploded with band positions — the LSH bucketing of every caller. */
+  private def bandRows(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     // bands must tile the signature exactly: bands > numHashes would make
     // every band key the hash of "" (the self-join degenerates to a full
     // n² cross product with no error), and a non-dividing count silently
@@ -303,14 +309,16 @@ object Dedup {
     // 1-(1-t^r)^b curve
     require(bands >= 1 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPer = numHashes / bands
-    val bandKeyCols = (0 until bands).map { bnd =>
-      xxhash64(concat_ws(",",
-        (0 until rowsPer).map(r => col(s"m${bnd * rowsPer + r}").cast("string")): _*))
-    }
     sig.select(col("doc_id"),
-      posexplode(array(bandKeyCols: _*)).as(Seq("band", "key")))
+      posexplode(minhashBandKeys(col("sig"), bands)).as(Seq("band", "key")))
   }
+
+  /** Band-key rows of a stored signature table (doc_id, m0..m{n-1}). */
+  private def bandKeyRows(sig: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    bandRows(sig.select(col("doc_id"),
+      array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig")),
+      numHashes, bands)
 
   /** The LSH candidate self-join shape — one place, so a future change to
     * the candidate join (e.g. a hot-bucket cap) lands on every caller at
@@ -329,24 +337,32 @@ object Dedup {
       bands: Int = 32): DataFrame =
     bandSelfJoin(bandKeyRows(sig, numHashes, bands)).distinct()
 
+  /** One distinct-shingle set per document: (doc_id, shingles), from one
+    * `array_distinct(wordKGrams(...))` projection per doc row. A doc_id on
+    * several rows gets the union of their sets (a doc-grain merge, never a
+    * shingle-grain one); a document with no complete k-shingle has no row. */
+  private[operators] def shingleSets(docs: DataFrame, k: Int): DataFrame =
+    docs.groupBy(col("doc_id"))
+      .agg(array_distinct(flatten(collect_list(
+        array_distinct(wordKGrams(words(col("text")), k))))).as("shingles"))
+      .filter(size(col("shingles")) > 0)
+
   /** Exact-Jaccard verification of candidate pairs against the corpus's
     * full (unpruned) shingle sets. The candidate PAIR table — tiny
     * (banded/bucketed survivors) but carrying the whole candidate
     * pipeline as lineage — materializes once, for two reasons: the plan
     * below consumes it three times (participant ids + both join sides),
     * and the participant semi-join prunes the corpus BEFORE the shingle
-    * collect_set pass, so verification costs O(|participants|), not
+    * sets are built, so verification costs O(|participants|), not
     * O(corpus) — the incrementalNearDups discipline applied to every
-    * caller. (The corpus-side gram stream itself is never materialized —
-    * the measured-slower trade recorded on minhashNearDups.) */
+    * caller. */
   private def verifyJaccard(candidates: DataFrame, docs: DataFrame, k: Int,
       threshold: Double): DataFrame = {
     val cands = candidates.localCheckpoint()
     val ids = cands.select(col("doc_id_1").as("doc_id"))
       .union(cands.select(col("doc_id_2").as("doc_id"))).distinct()
     val touched = docs.join(ids, Seq("doc_id"), "left_semi")
-    val sh = shingleRows(touched, k, distinct = false)
-      .groupBy(col("doc_id")).agg(collect_set(col("sh")).as("shingles"))
+    val sh = shingleSets(touched, k)
     // materialize the (even tinier) verified pairs, then RELEASE the
     // candidate blocks deterministically: incrementalNearDups calls this
     // per micro-batch, and without the unpersist each batch leaks one
@@ -375,14 +391,11 @@ object Dedup {
     * 1-(1-0.8⁴)³² ≈ 1-5e-8 — candidate generation is effectively lossless
     * at the threshold, and false candidates die in the exact verify.
     *
-    * The plan fans out 4 ways (both self-join sides + both shingle-set
-    * lookups) and recomputes the shingle pipeline per branch; measured
-    * locally that this window-lead form beats both persisting the base
-    * (cache materializes wider rows than any branch needs) and the
-    * expression-form shingles (explode(wordShingles) — the interpreted
-    * per-index split re-eval costs more than the window shuffle: 8.2s vs
-    * 5.3s at sf0.1). At 100 TB write the signatures out once
-    * ([[writeMinhashSignatures]]) and run
+    * Per document the candidate side is two codegen'd kernels in one
+    * projection (signature, then band keys) and a posexplode of the 32
+    * keys; the 128 signature columns are never built. The verify side
+    * reads only candidate participants. At 100 TB write the signatures out
+    * once ([[writeMinhashSignatures]]) and run
     * [[minhashNearDupsFromSignatures]]. */
   def minhashNearDups(
       docs: DataFrame,
@@ -392,8 +405,8 @@ object Dedup {
       threshold: Double = 0.8,
       maxShingleDf: Option[Long] = None): DataFrame = {
     // spread ONCE at entry (r13 opt, Tables.spreadCpu): a single-row-group
-    // corpus scans as one task, serializing the shingle+128-min-hash map
-    // phase AND the verify side's collect_set pass on one core. The shared
+    // corpus scans as one task, serializing the signature kernel AND the
+    // verify side's shingle-set pass on one core. The shared
     // round-robin exchange is materialized once (AQE stage reuse) and both
     // the signature branch and the verify semi-join stream from it.
     // (r13 note — checkpointing the band-key table instead was measured
@@ -402,8 +415,8 @@ object Dedup {
     // nothing and cost two job rounds. Don't retry.)
     val d = graft.core.Tables.spreadCpu(docs)
     verifyJaccard(
-      minhashCandidates(minhashSignatures(d, k, numHashes, maxShingleDf),
-        numHashes, bands),
+      bandSelfJoin(bandRows(signatureArrays(d, k, numHashes, maxShingleDf),
+        numHashes, bands)).distinct(),
       d, k, threshold)
   }
 
@@ -447,9 +460,9 @@ object Dedup {
       threshold: Double = 0.8): DataFrame = {
     // the new batch's signatures feed three join scans (self-join twice,
     // new×old once); materialize the tiny band-key table once instead of
-    // re-running the 128-minhash shingle pass per scan
-    val nb = bandKeyRows(
-      minhashSignatures(graft.core.Tables.spreadCpu(newDocs), k, numHashes,
+    // re-running the signature kernel per scan
+    val nb = bandRows(
+      signatureArrays(graft.core.Tables.spreadCpu(newDocs), k, numHashes,
         None),
       numHashes, bands).localCheckpoint()
     val ob = bandKeyRows(oldSig, numHashes, bands)
@@ -974,7 +987,7 @@ object Dedup {
       org.apache.spark.sql.catalyst.expressions.Literal(expectedGrams),
       org.apache.spark.sql.catalyst.expressions.Literal(numBits))
       .toAggregateExpression())
-    val bfPlan = shingleRows(flagged.filter(!col("is_test")), k, distinct = false)
+    val bfPlan = posShingleRows(flagged.filter(!col("is_test")), k)
       .agg(bfAgg.as("bf")) // bloom insertion is idempotent: no distinct pass
       .queryExecution.analyzed
     val testGrams = shingleRows(flagged.filter(col("is_test")), k)

@@ -2,6 +2,13 @@ package graft.operators
 
 import graft.SparkSuite
 import graft.core.Tables
+import graft.functions.TextFunctions.wordKGrams
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectList, CollectSet}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -76,6 +83,155 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSuite {
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
       assert(fast === ref, s"k=$k mismatch")
     }
+  }
+
+  /** The relational MinHash the fused kernel replaced, kept as the
+    * independent reference: one `min(pmod(h·a_i + b_i, 2³¹−1))` aggregate
+    * per hash over shingle rows (doc_id, sh), grouped by doc_id, with the
+    * (a_i, b_i) drawn from Random(42) here. */
+  private def referenceAggregate(rows: DataFrame): DataFrame = {
+    val rnd = new scala.util.Random(42L)
+    val coeffs = Seq.fill(128)(
+      (rnd.nextInt(Int.MaxValue).toLong + 1L, rnd.nextInt(Int.MaxValue).toLong))
+    val aggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(col("h") * a + b, lit(2147483647L))).as(s"m$i")
+    }
+    rows.withColumn("h", xxhash64(col("sh")).bitwiseAND(lit(0x7FFFFFFFL)))
+      .groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  private def referenceSignatures(d: DataFrame): DataFrame =
+    referenceAggregate(Dedup.posShingleRows(d, 3))
+
+  private def sigRows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  private val edgeDocs = Seq(
+    (9001L, "one two"),                 // fewer than k words
+    (9002L, "one two three"),           // exactly k
+    (9003L, ""),                        // empty text
+    (9004L, null.asInstanceOf[String]), // null text
+    (9005L, "a b c a b c a b c a b c"), // repeated shingles
+    (9006L, "Crème brûlée, naïve café — über straße"), // non-ASCII
+    (9007L, "alpha beta gamma delta epsilon"),
+    (9007L, "delta epsilon zeta eta theta"), // a repeated doc_id
+    (9008L, "x y"), (9008L, "p q r s"))      // repeat: one row has no shingle
+
+  test("fused minhashSignatures == the 128-min shingle aggregate, row for row") {
+    import spark.implicits._
+    val edge = edgeDocs.toDF("doc_id", "text")
+    for (corpus <- Seq(docs.select("doc_id", "text"), edge)) {
+      val fused = sigRows(Dedup.minhashSignatures(corpus))
+      assert(fused.nonEmpty)
+      assert(fused === sigRows(referenceSignatures(corpus)))
+    }
+    // a repeated doc_id is one document: one row, whose signature is the
+    // reference's min over both rows' shingles (asserted above)
+    assert(Dedup.minhashSignatures(edge).filter(col("doc_id") === 9007L)
+      .count() === 1L)
+    // docs with no complete k-shingle get no row
+    assert(Dedup.minhashSignatures(edge)
+      .filter(col("doc_id").isin(9001L, 9003L, 9004L)).count() === 0L)
+    // the stored layout's schema is unchanged
+    assert(Dedup.minhashSignatures(docs.limit(0)).schema ===
+      referenceSignatures(docs.limit(0)).schema)
+  }
+
+  test("the signature kernel hashes non-ASCII shingles like xxhash64") {
+    import spark.implicits._
+    // split on spaces only: normalization would strip the non-ASCII bytes
+    val raw = Seq((1L, "日本語 の テキスト です ね"), (2L, "Grüße aus Köln und Straße"))
+      .toDF("doc_id", "text")
+    val grams = wordKGrams(split(col("text"), " "), 3)
+    val fused = raw.select(col("doc_id") +: (0 until 128).map(i =>
+      graft.functions.TextFunctions.minhashSignature(grams, 128)(i).as(s"m$i")): _*)
+    val ref = referenceAggregate(raw.select(col("doc_id"), explode(grams).as("sh")))
+    assert(sigRows(fused) === sigRows(ref))
+  }
+
+  test("band keys == xxhash64(concat_ws(',', m_i cast string)) per band") {
+    import spark.implicits._
+    val edge = edgeDocs.toDF("doc_id", "text")
+    for (corpus <- Seq(docs.select("doc_id", "text"), edge)) {
+      val sig = Dedup.minhashSignatures(corpus)
+      val ms = (0 until 128).map(i => col(s"m$i"))
+      val out = sig.select(
+        graft.functions.TextFunctions.minhashBandKeys(array(ms: _*), 32).as("fused"),
+        array((0 until 32).map(b => xxhash64(concat_ws(",",
+          ms.slice(b * 4, b * 4 + 4).map(_.cast("string")): _*))): _*).as("ref"))
+        .collect()
+      assert(out.nonEmpty)
+      out.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
+    }
+    // concat_ws skips a null element; so does the kernel
+    val withNull = Seq((Some(7L), None: Option[Long], Some(9L), Some(11L)))
+      .toDF("a", "b", "c", "d")
+      .select(
+        graft.functions.TextFunctions.minhashBandKeys(
+          array(col("a"), col("b"), col("c"), col("d")), 2).as("fused"),
+        array(xxhash64(concat_ws(",", col("a").cast("string"), col("b").cast("string"))),
+          xxhash64(concat_ws(",", col("c").cast("string"), col("d").cast("string"))))
+          .as("ref"))
+      .collect()(0)
+    assert(withNull.getSeq[Long](0) === withNull.getSeq[Long](1))
+  }
+
+  test("shingle sets == collect_set over shingle rows, repeated doc_id merged") {
+    import spark.implicits._
+    for (corpus <- Seq(docs.select("doc_id", "text"), edgeDocs.toDF("doc_id", "text"))) {
+      def sets(df: DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+      val ref = Dedup.posShingleRows(corpus, 3).groupBy("doc_id")
+        .agg(collect_set(col("sh")))
+      assert(sets(Dedup.shingleSets(corpus, 3)) === sets(ref))
+    }
+  }
+
+  /** Every node of an executed (adaptive) plan, query stages included. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
+  private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    planNodes(df.queryExecution.executedPlan)
+  }
+
+  /** Shingle-grain work in an executed plan: a Generate (the shingle
+    * explode) or an aggregate as wide as a 128-hash signature. */
+  private def shingleGrain(nodes: Seq[SparkPlan]): Seq[SparkPlan] =
+    nodes.filter {
+      case _: GenerateExec => true
+      case a: BaseAggregateExec => a.output.size > 2
+      case _ => false
+    }
+
+  test("plan pin: signatures and shingle sets are built without shingle rows") {
+    // the signature: no explode, no 129-field aggregate; the only aggregate
+    // is the doc-grain merge of one signature array per doc row, behind at
+    // most one shuffle (on doc_id)
+    val sig = executedNodes(Dedup.minhashSignatures(docs))
+    assert(shingleGrain(sig).isEmpty, sig.mkString("\n"))
+    assert(sig.count(_.isInstanceOf[ShuffleExchangeExec]) <= 1)
+    val aggs = sig.collect { case a: BaseAggregateExec => a }
+    assert(aggs.forall(_.aggregateExpressions.forall(
+      _.aggregateFunction.isInstanceOf[CollectList])))
+    // the check bites on the relational form it replaced
+    assert(shingleGrain(executedNodes(referenceSignatures(docs))).nonEmpty)
+
+    // the verify side: no explode and no collect_set over shingle rows
+    def collectSets(nodes: Seq[SparkPlan]) = nodes.collect {
+      case a: BaseAggregateExec => a.aggregateExpressions
+        .filter(_.aggregateFunction.isInstanceOf[CollectSet])
+    }.flatten
+    val sets = executedNodes(Dedup.shingleSets(docs, 3))
+    assert(sets.collect { case g: GenerateExec => g }.isEmpty)
+    assert(collectSets(sets).isEmpty)
+    val parentSets = executedNodes(Dedup.posShingleRows(docs, 3)
+      .groupBy("doc_id").agg(collect_set(col("sh"))))
+    assert(collectSets(parentSets).nonEmpty)
   }
 
   test("incrementalNearDups == full-corpus pairs touching the new batch; no self-pairs") {

@@ -23,16 +23,17 @@ import java.util.concurrent.ConcurrentHashMap
   * `max(unit)`, `min(family)`) is derived per name from consecutive rows.
   *
   * Generation: the catalog's FENCE is the set of `src=<s>/batch_id=<n>` leaf
-  * dirs with their mtimes plus the `_complete` and `_version` files'
-  * mtimes — stat'd on EVERY request (one glob + two stats, the listing a
-  * `hasParquetData(metric_catalog)` probe already makes). Any catalog
-  * write adds a leaf dir or rewrites one (moving its mtime); compaction
-  * and rebuild add and delete leaves; rebuild also rewrites `_version`.
-  * So an append, compaction or rebuild by ANY process — through the
-  * facade's lock or not — is visible at the next request. A fence change
+  * dirs with their mtimes, the `_complete` file's mtime and the root's
+  * `_version` stamp — stat'd on EVERY request (one glob + two stats, the
+  * listing a `hasParquetData(metric_catalog)` probe already makes). Any
+  * catalog write adds a leaf dir or rewrites one (moving its mtime);
+  * compaction and rebuild add and delete leaves; rebuild also bumps
+  * `_version`. So an append, compaction or rebuild by ANY process —
+  * through the facade's lock or not — is visible at the next request. A
+  * generation is valid exactly while its fence is unchanged
+  * ([[SnapshotStore]]'s "Memo fences" gives the argument); a fence change
   * starts a new generation whose tenants load lazily: the first request
-  * for a tenant runs one tenant-filtered Spark read. `SnapshotStore`'s
-  * staleness TTL is the backstop for a same-millisecond in-place rewrite.
+  * for a tenant runs one tenant-filtered Spark read.
   *
   * This is the ONE locator source of every store read: a store with no
   * `_complete` catalog holding parquet data serves an empty tenant while
@@ -161,30 +162,30 @@ object CatalogSnapshot {
   /** One catalog generation: the fence it was taken at and its tenants,
     * each loaded on first use. `servable = false` marks a store whose
     * catalog lacks coverage or data — no tenant ever loads. */
-  private final class Generation(val fence: Seq[(String, Long)],
-      val atMillis: Long, val servable: Boolean) {
+  private final class Generation(val fence: (Seq[(String, Long)], Long),
+      val servable: Boolean) {
     val tenants = new ConcurrentHashMap[String, Tenant]()
   }
   private val generations = new ConcurrentHashMap[String, Generation]()
 
   /** The catalog's fence: every `src=<s>/batch_id=<n>` leaf dir and the
-    * `_complete` / `_version` files, each with its mtime (absent files
-    * are simply missing from the list). */
-  private def fenceOf(fs: FileSystem, root: Path): Seq[(String, Long)] = {
+    * `_complete` file, each with its mtime (an absent marker is simply
+    * missing from the list), and the root's `_version` stamp. */
+  private def fenceOf(fs: FileSystem, root: Path): (Seq[(String, Long)], Long) = {
     val leaves = Option(fs.globStatus(new Path(root, "src=*/batch_id=*")))
       .getOrElse(Array.empty).toSeq
       .map(s => s.getPath.toString -> s.getModificationTime)
-    val marks = Seq("_complete", "_version").flatMap { f =>
-      try Some(f -> fs.getFileStatus(new Path(root, f)).getModificationTime)
-      catch { case _: java.io.FileNotFoundException => None }
-    }
-    leaves.sorted ++ marks
+    val complete =
+      try Seq("_complete" ->
+        fs.getFileStatus(new Path(root, "_complete")).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    (leaves.sorted ++ complete, SnapshotStore.versionStamp(fs, root))
   }
 
   private val emptyTenant = new Tenant(Array.empty, Array.empty, Array.empty)
 
   /** `storeDir`'s current catalog generation, keyed by the qualified
-    * catalog root; a fence change or an expired TTL starts a new one. */
+    * catalog root; a fence change starts a new one. */
   private def generation(spark: SparkSession,
       storeDir: String): (String, Generation) = {
     val root0 = new Path(s"$storeDir/metric_catalog")
@@ -192,13 +193,10 @@ object CatalogSnapshot {
     val root = fs.makeQualified(root0)
     val key = root.toString
     val fence = fenceOf(fs, root)
-    val now = System.currentTimeMillis()
-    key -> Option(generations.get(key))
-      .filter(g => g.fence == fence &&
-        now - g.atMillis < SnapshotStore.cacheTtlMs)
+    key -> Option(generations.get(key)).filter(_.fence == fence)
       .getOrElse {
-        val g = new Generation(fence, now,
-          fence.exists(_._1 == "_complete") &&
+        val g = new Generation(fence,
+          fence._1.exists(_._1 == "_complete") &&
             SnapshotStore.hasVisibleParquet(fs, root))
         generations.put(key, g)
         g

@@ -49,16 +49,10 @@ import java.util.concurrent.atomic.AtomicLong
   * table's retention age (the 1440m tier retains ~1825 days; a 1-hour
   * dashboard panel must not pay thousands of metadata RPCs). A serving hot
   * loop additionally opts into the process-local resolution memo
-  * (`useCache = true`): one full resolution is cached per publish
-  * generation, keyed by an in-process version counter ([[invalidate]] —
-  * bumped by every [[publish]] and by retention), double-checked against
-  * the `_version` fence file every publish rewrites (one metadata RPC —
-  * EXACT for publishes by OTHER processes, which become visible at the
-  * reader's next request rather than after a TTL; pre-fence tables fall
-  * back to the root dir's mtime) and bounded by a staleness TTL
-  * (`SPARK_GRAFT_SNAPSHOT_TTL_MS`, default 30 s) as the backstop for
-  * out-of-band mutations that bypass [[publish]] (retention day-drops in
-  * a foreign process).
+  * (`useCache = true`): one full resolution is cached per fence — the root
+  * dir's mtime and the `_version` file every publish rewrites — and is
+  * valid exactly while that fence is unchanged (see "Memo fences" below).
+  * [[invalidate]] drops it in process.
   *
   * Guarantees (stated precisely; AtomicServeSpec races them):
   *  - a read NEVER sees a torn day: every day it serves is one complete
@@ -87,7 +81,29 @@ import java.util.concurrent.atomic.AtomicLong
   * need no swap) read through the plain-layout fallback unchanged. A
   * pre-existing PLAIN table is migrated by the first publish
   * ([[ensureGenLayout]] wraps loose day files into `gen=0` — metadata-only
-  * renames, to be run with serving paused, once). */
+  * renames, to be run with serving paused, once).
+  *
+  * Memo fences. The read path's three metadata memos — this resolution
+  * memo, [[graft.core.CatalogSnapshot]] and
+  * [[graft.query.MetricsQueryApi.rawTable]] — each keep an entry exactly
+  * while its fence is unchanged, with no clock. Each fence is a listing
+  * plus the root's `_version` stamp ([[versionStamp]]): a tier's root dir
+  * mtime; the catalog's `src=<s>/batch_id=<n>` leaves with their mtimes and
+  * its `_complete` marker; a raw table's `batch_id=*` dirs with their
+  * mtimes. No backstop is needed, because every write moves a fence:
+  *  - every writer of a store is serialized under its writer lease;
+  *  - a compaction, catalog rebuild, batch commit or replay changes the
+  *    leaf path set or a leaf's mtime;
+  *  - every other change — a publish into an existing day, a retention
+  *    drop ([[graft.operators.Retention.enforce]]), a catalog rebuild —
+  *    bumps `_version` ([[bumpVersion]]), and a failed bump throws;
+  *  - successive bumps of one table are separated by a parquet write or a
+  *    retention pass, so they never share a millisecond mtime;
+  *  - a replay rewrites identical rows.
+  * The one change no fence sees is an in-place rewrite within the
+  * millisecond of the previous one, which the single-writer rule
+  * excludes. Object stores with fake dir mtimes need their own committer
+  * anyway (docs/SCALE.md). */
 object SnapshotStore {
 
   private val GenRe = "^gen=(\\d+)$".r
@@ -100,25 +116,18 @@ object SnapshotStore {
     sys.env.get("SPARK_GRAFT_SNAPSHOT_GRACE_MS").map(_.toLong)
       .getOrElse(15L * 60 * 1000)
 
-  private[graft] def cacheTtlMs: Long =
-    sys.env.get("SPARK_GRAFT_SNAPSHOT_TTL_MS").map(_.toLong)
-      .getOrElse(30000L)
-
   // ---- process-local resolution memo ---------------------------------
-  // version counter per table root: bumped by publish() and invalidate();
-  // a cached resolution is valid only at the version it was taken at
-  private val versions = new ConcurrentHashMap[String, AtomicLong]()
-  private final case class Resolved(version: Long, atMillis: Long,
-      fence: (Long, Long), state: State)
+  // a cached resolution is valid exactly while its fence is unchanged
+  private final case class Resolved(fence: (Long, Long), state: State)
   private val memo = new ConcurrentHashMap[String, Resolved]()
-  // the constructed full-winners DataFrame per (root, version, session):
+  // the constructed full-winners DataFrame per (resolution, session):
   // reusing the frame reuses its file index, so a cache hit pays ZERO
   // listings at plan time (a fresh spark.read would re-list every leaf
   // dir's files per query — the dominant planning cost on object
-  // stores). The frame is immutable for the generation's lifetime, which
+  // stores). The frame is immutable for the resolution's lifetime, which
   // is exactly the snapshot guarantee.
   private val dfMemo =
-    new ConcurrentHashMap[String, (Long, SparkSession, DataFrame)]()
+    new ConcurrentHashMap[String, (Resolved, SparkSession, DataFrame)]()
 
   // per-root resolution tally (tests assert "one resolution per publish
   // generation" without racing the process-global Instrumentation keys)
@@ -142,16 +151,11 @@ object SnapshotStore {
 
   private def rootKey(root: String): String = new Path(root).toString
 
-  /** Current publish version of a table root (process-local). */
-  def version(root: String): Long =
-    versions.computeIfAbsent(rootKey(root), _ => new AtomicLong(0L)).get()
-
-  /** Drop the cached resolution for `root` and bump its version — called
-    * by every [[publish]] and by any code path that mutates the table's
-    * day set out of band (retention's day drops). */
+  /** Drop this process's cached resolution for `root`, so the next
+    * memoized read resolves afresh — called by every [[publish]] and by
+    * retention's day drops, which also bump the cross-process fence. */
   def invalidate(root: String): Unit = {
     val k = rootKey(root)
-    versions.computeIfAbsent(k, _ => new AtomicLong(0L)).incrementAndGet()
     memo.remove(k)
     dfMemo.remove(k)
     ()
@@ -160,41 +164,45 @@ object SnapshotStore {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Cross-process publish fence: a tiny `_version` file at the table
-    * root, rewritten by every [[publish]]. The memo's staleness
-    * double-check stats THIS file in addition to the root directory's
-    * mtime — dir mtimes move only on direct-child creation/deletion (a
+  /** Cross-process fence file: a tiny `_version` file at a table or
+    * catalog root, rewritten after every write no listing shows (see the
+    * class doc). Dir mtimes move only on direct-child creation/deletion (a
     * publish into an EXISTING day creates no direct child) and are
     * fake/zero on object stores, while a freshly PUT object carries a
-    * real timestamp everywhere. With the fence, a foreign process's
-    * publish is visible to a memoized reader at its NEXT request, not
-    * after the staleness TTL. (Sub-millisecond back-to-back foreign
-    * publishes can still coalesce under mtime granularity — a real
-    * publish stages a parquet write, so that window is theoretical; the
-    * TTL remains the backstop.) */
+    * real timestamp everywhere. */
   private def versionFile(root: Path) = new Path(root, "_version")
 
-  private def bumpVersionFile(fs: FileSystem, root: Path): Unit =
+  /** Rewrite `root`'s `_version` file, so every memo fenced on it sees the
+    * write at its next request — the one writer of a `_version` file.
+    * Runs after the write it announces is committed, and throws if it
+    * cannot: with no clock behind the fences, a lost bump would leave
+    * other processes' memos on the old state until the table's next
+    * write. */
+  private[graft] def bumpVersion(fs: FileSystem, root: Path): Unit =
     try {
       val out = fs.create(versionFile(root), true)
-      out.write(java.util.UUID.randomUUID().toString
+      try out.write(java.util.UUID.randomUUID().toString
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    } catch { case _: java.io.IOException => }
+      finally out.close()
+    } catch {
+      case e: java.io.IOException => throw new java.io.IOException(
+        s"$root: the write is already committed, but its _version fence " +
+          "could not be bumped, so other processes' read memos will not " +
+          "see it until the next write", e)
+    }
 
-  /** The memo fence for `root`: (root DIR mtime, `_version` file mtime).
-    * The dir mtime catches out-of-band direct-child mutations (a day dir
+  /** `root`'s `_version` file mtime; 0 while it has none. */
+  private[graft] def versionStamp(fs: FileSystem, root: Path): Long =
+    try fs.getFileStatus(versionFile(root)).getModificationTime
+    catch { case _: java.io.FileNotFoundException => 0L }
+
+  /** The memo fence for a tier `root`: (root DIR mtime, `_version`
+    * stamp). The dir mtime catches direct-child mutations (a day dir
     * deleted or created without [[publish]] — the PreaggStoredReadSpec
-    * shape); the `_version` mtime catches foreign-process publishes into
-    * EXISTING days, which move no dir mtime at all. Both must match for a
-    * memo hit. A pre-fence table (no `_version` yet) contributes 0 for
-    * the file component — the dir mtime alone, the r10 behavior. */
-  private def fenceOf(fs: FileSystem, root: Path): (Long, Long) = {
-    val vf = versionFile(root)
-    val vm = try fs.getFileStatus(vf).getModificationTime
-             catch { case _: java.io.FileNotFoundException => 0L }
-    (fs.getFileStatus(root).getModificationTime, vm)
-  }
+    * shape); the stamp catches publishes into EXISTING days, which move
+    * no dir mtime at all. */
+  private def fenceOf(fs: FileSystem, root: Path): (Long, Long) =
+    (fs.getFileStatus(root).getModificationTime, versionStamp(fs, root))
 
   private def dayDirs(fs: FileSystem, root: Path) =
     if (!fs.exists(root)) Array.empty[Path]
@@ -368,8 +376,8 @@ object SnapshotStore {
         .foreach(d => fs.delete(d, true))
     }
     fs.delete(staging, true)
-    bumpVersionFile(fs, rootPath)
     invalidate(root)
+    bumpVersion(fs, rootPath)
     Instrumentation.global.inc("store.snapshot.publishes")
     Instrumentation.global.inc("store.snapshot.days", committed.size.toLong)
     committed
@@ -450,9 +458,8 @@ object SnapshotStore {
     *
     * `days`: restrict resolution to these ts_day values — planning lists
     * only the overlapping day dirs. `useCache = true` additionally serves
-    * from the process-local memo (see class doc for its validity rules);
-    * only a table whose every writer runs in (or invalidates from) this
-    * process should opt in — the Serve deployment's facade does. */
+    * from the process-local memo, which sees every writer's next commit,
+    * in any process (class doc, "Memo fences"). */
   def read(spark: SparkSession, root: String,
       days: Option[Seq[Long]] = None,
       useCache: Boolean = false): Option[DataFrame] =
@@ -485,21 +492,13 @@ object SnapshotStore {
       return buildDf(spark, root, state, None).map(_ -> covered(state))
     }
     val k = rootKey(root)
-    val v = version(root)
-    val now = System.currentTimeMillis()
     val fence = fenceOf(fs, rootPath)
-    val cached = Option(memo.get(k)).filter(e =>
-      e.version == v && now - e.atMillis < cacheTtlMs &&
-        e.fence == fence)
+    val cached = Option(memo.get(k)).filter(_.fence == fence)
     val entry = cached.getOrElse {
       countResolution(k)
       // cache the FULL resolution so every later range prunes from memory
-      val e = Resolved(v, now, fence, resolve(fs, rootPath, None))
+      val e = Resolved(fence, resolve(fs, rootPath, None))
       memo.put(k, e)
-      // the frame cache is only as fresh as the RESOLUTION it was built
-      // from: a rebuild (TTL expiry, out-of-band root-mtime change) must
-      // drop it even when the version counter never moved
-      dfMemo.remove(k)
       e
     }
     if (cached.isDefined)
@@ -507,17 +506,17 @@ object SnapshotStore {
     entry.state match {
       case Winners(byDay) =>
         // with the full winners set in hand, the range check is a map
-        // lookup; the FRAME is built once per (generation, session) over
+        // lookup; the FRAME is built once per (resolution, session) over
         // all winners — a cache hit reuses its file index (zero plan-time
         // listings) and the caller's ts_day filter prunes partitions
         val overlaps = daySet.fold(true)(ds => byDay.exists { case (d, _) =>
           d.stripPrefix("ts_day=").toLongOption.forall(ds.contains) })
         if (!overlaps) return None
         val full = Option(dfMemo.get(k)) match {
-          case Some((ver, sess, df)) if ver == v && (sess eq spark) => df
+          case Some((res, sess, df)) if (res eq entry) && (sess eq spark) => df
           case _ =>
             val df = buildDf(spark, root, entry.state, None).get
-            dfMemo.put(k, (v, spark, df))
+            dfMemo.put(k, (entry, spark, df))
             df
         }
         Some(daySet.fold(full)(ds =>

@@ -112,9 +112,13 @@ object Retention {
           // O(partition dirs), so running it every enforce costs nothing.
           pruneEmptied(fs, root)
           // day drops mutate the served day set out of band of publish():
-          // drop any process-local snapshot-resolution memo for the table
-          if (dropped.nonEmpty)
+          // drop this process's resolution memo for the table and bump
+          // its _version fence for every other process's memos (a pruned
+          // root needs no bump: its absence is the change)
+          if (dropped.nonEmpty) {
             graft.core.SnapshotStore.invalidate(s"$storeDir/$table")
+            if (fs.exists(root)) graft.core.SnapshotStore.bumpVersion(fs, root)
+          }
           if (dropped.isEmpty) None else Some(table -> dropped.distinct.sorted)
         }
     }.toMap

@@ -398,12 +398,11 @@ object MetricsQueryApi {
     // can never serve this query a missing or partial day. Resolution is
     // range-pruned (only rangeDays' dirs are listed — planning cost
     // scales with the query, not the tier's retention age) and memoized
-    // per publish generation. useCache is safe for MULTI-process
-    // deployments too (a separate ingest JVM feeding the same store):
-    // the memo's validity check stats the _version fence file every
-    // publish rewrites, so a foreign publish is visible at this reader's
-    // NEXT request — the 30 s TTL remains only as the backstop for
-    // writers that bypass SnapshotStore.publish entirely
+    // per fence. useCache is safe for MULTI-process deployments too (a
+    // separate ingest JVM feeding the same store): the memo's fence is the
+    // tier root's mtime and the _version file every publish and retention
+    // drop bumps, so any writer's change is visible at this reader's NEXT
+    // request
     // dirty (pending re-roll) days are excluded from BOTH the covered set
     // and the served slice: they fall into missingDays below and recompute
     // from raw — the repair that keeps deferred-rollup serving exact. The
@@ -479,8 +478,8 @@ object MetricsQueryApi {
     "preagg_raw" -> IngestStream.preaggRawSchema,
     "metrics_string" -> IngestStream.stringStoreSchema)
 
-  private final case class RawRelation(spark: SparkSession, version: Long,
-      fence: Seq[(String, Long)], atMillis: Long, df: DataFrame)
+  private final case class RawRelation(spark: SparkSession,
+      fence: (Seq[(String, Long)], Long), df: DataFrame)
   private val rawRelations = new ConcurrentHashMap[String, RawRelation]()
 
   /** The ONE way the read path opens a raw table (`metrics_full`,
@@ -491,45 +490,43 @@ object MetricsQueryApi {
     * instead of PATH_NOT_FOUND.
     *
     * The relation is built once per (session, table fence) and reused, so
-    * a warm read pays one listing of the table root instead of a data-
-    * source lookup, a listing of every batch and day dir and the
+    * a warm read pays one listing of the table root and one stat instead
+    * of a data-source lookup, a listing of every batch and day dir and the
     * visible-parquet probes. The fence is the root's visible `batch_id=*`
-    * dirs with their mtimes: every writer changes it (a batch commit or
-    * replay renames a batch dir in, compaction swaps the dir set,
-    * retention deletes day dirs inside a batch dir and prunes emptied
-    * ones), and it is listed BEFORE a relation is built, so a relation is
-    * never older than its fence. In-process retention also bumps the
-    * table's [[SnapshotStore.version]], and [[SnapshotStore.cacheTtlMs]]
-    * bounds a relation's age as the backstop, as for the tier memo.
-    * Counted as `store.raw.resolutions` / `store.raw.cache_hits`. */
+    * dirs with their mtimes plus the table's `_version` stamp: every
+    * writer changes it (a batch commit or replay renames a batch dir in,
+    * compaction swaps the dir set, retention deletes day dirs inside a
+    * batch dir, prunes emptied ones and bumps `_version`), and it is read
+    * BEFORE a relation is built, so a relation is never older than its
+    * fence. A relation is valid exactly while its fence is unchanged
+    * ([[SnapshotStore]]'s "Memo fences"). Counted as
+    * `store.raw.resolutions` / `store.raw.cache_hits`. */
   private[graft] def rawTable(spark: SparkSession, storeDir: String,
       table: String): DataFrame = {
     val schema = rawSchemas(table)
     val root = new Path(s"$storeDir/$table")
     val key = root.toString
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fence =
+    val batches =
       try fs.listStatus(root).toSeq.collect {
           case st if st.isDirectory &&
               st.getPath.getName.startsWith("batch_id=") =>
             st.getPath.getName -> st.getModificationTime
         }.sorted
       catch { case _: java.io.FileNotFoundException => Nil }
-    val version = SnapshotStore.version(key)
-    val now = System.currentTimeMillis()
-    Option(rawRelations.get(key)).filter(e => (e.spark eq spark) &&
-        e.version == version && e.fence == fence &&
-        now - e.atMillis < SnapshotStore.cacheTtlMs) match {
+    val fence = (batches, SnapshotStore.versionStamp(fs, root))
+    Option(rawRelations.get(key))
+        .filter(e => (e.spark eq spark) && e.fence == fence) match {
       case Some(e) =>
         Instrumentation.global.inc("store.raw.cache_hits")
         e.df
       case None =>
         Instrumentation.global.inc("store.raw.resolutions")
         val df =
-          if (fence.isEmpty)
+          if (batches.isEmpty)
             spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
           else spark.read.schema(schema).parquet(key)
-        rawRelations.put(key, RawRelation(spark, version, fence, now, df))
+        rawRelations.put(key, RawRelation(spark, fence, df))
         df
     }
   }

@@ -429,36 +429,16 @@ object IngestStream {
     ()
   }
 
-  /** Cross-process catalog-memo fence — the snapshot `_version` discipline
-    * applied to the catalog root: [[rebuildCatalog]] rewrites
-    * `metric_catalog/_version`; [[writeCatalogLocators]] stats it before
-    * trusting [[catalogSeen]], so a rebuild from a separate ops JVM
-    * invalidates THIS process's memo at its next ingest rather than at
-    * restart. Fence mtime the memo was built against, per store root;
-    * 0 = no fence file yet (pre-fence store — in-process
-    * [[invalidateCatalogMemo]] still covers the common case). */
+  /** Cross-process catalog-memo fence: [[rebuildCatalog]] bumps the
+    * catalog root's `_version` ([[graft.core.SnapshotStore.bumpVersion]]);
+    * [[writeCatalogLocators]] reads its stamp before trusting
+    * [[catalogSeen]], so a rebuild from a separate ops JVM invalidates
+    * THIS process's memo at its next ingest rather than at restart. The
+    * stamp the memo was built against, per store root; 0 = no fence file
+    * yet (pre-fence store — in-process [[invalidateCatalogMemo]] still
+    * covers the common case). */
   private val catalogSeenFence =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def catalogFencePath(storeDir: String) =
-    new org.apache.hadoop.fs.Path(s"$storeDir/metric_catalog/_version")
-
-  private def catalogFenceMtime(spark: SparkSession, storeDir: String): Long = {
-    val p = catalogFencePath(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.getFileStatus(p).getModificationTime
-    catch { case _: java.io.FileNotFoundException => 0L }
-  }
-
-  private def bumpCatalogFence(spark: SparkSession, storeDir: String): Unit =
-    try {
-      val p = catalogFencePath(storeDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      out.write(java.util.UUID.randomUUID().toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    } catch { case _: java.io.IOException => }
 
   /** Whether a batch's distinct locators may travel to the driver as
     * observed metrics: at most [[CatalogMemoBatchCap]] rows, read off the
@@ -511,7 +491,9 @@ object IngestStream {
     // rebuildCatalog in a SEPARATE ops JVM may have dropped aged-out
     // locators this memo still believes written; trusting it would skip
     // the catalog row of a re-ingested locator until facade restart
-    val fence = catalogFenceMtime(spark, storeDir)
+    val catalog = new org.apache.hadoop.fs.Path(s"$storeDir/metric_catalog")
+    val fence = graft.core.SnapshotStore.versionStamp(
+      catalog.getFileSystem(spark.sparkContext.hadoopConfiguration), catalog)
     val prevFence = catalogSeenFence.put(storeDir, fence)
     if (prevFence != null && prevFence.longValue() != fence)
       catalogSeen.remove(storeDir)
@@ -774,10 +756,10 @@ object IngestStream {
     // the rebuild derives from LIVE data, so locators whose every row
     // aged out just left the catalog — the seen-locator memo must forget
     // them or a later re-ingest would skip re-writing a live locator.
-    // In-process: direct invalidation; OTHER processes' memos: the fence
-    // file bump below, statted by their next writeCatalogLocators
+    // In-process: direct invalidation; OTHER processes' memos (and every
+    // CatalogSnapshot): the fence bump below
     invalidateCatalogMemo(storeDir)
-    bumpCatalogFence(spark, storeDir)
+    graft.core.SnapshotStore.bumpVersion(fs, root)
   }
 
   /** The raw-store write: day-partitioned parquet under an overwrite

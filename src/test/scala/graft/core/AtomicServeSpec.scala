@@ -264,7 +264,7 @@ class AtomicServeSpec extends AnyFunSuite with SparkSuite {
       useCache = true).get.count() === 2)
     assert(resolutions === r0 + 1,
       "reads within one publish generation must reuse the cached resolution")
-    // a publish bumps the version: exactly one fresh resolution after
+    // a publish moves the fence: exactly one fresh resolution after
     SnapshotStore.publish(gen(3, 3.0), root)
     assert(SnapshotStore.read(spark, root, useCache = true).get
       .filter(col("ts_day") === Day0)
@@ -274,12 +274,11 @@ class AtomicServeSpec extends AnyFunSuite with SparkSuite {
 
   test("cross-process fence: a FOREIGN publish (separate memo key, same " +
     "physical table — two facades on one store) is visible to a memoized " +
-    "reader at its NEXT request, not after the staleness TTL") {
+    "reader at its NEXT request, through its _version fence") {
     // a symlinked second path gives the same physical directory a
-    // different SnapshotStore root key: its version counter and memo are
-    // independent, exactly a publish from another JVM — the reader's
-    // in-process invalidation never fires, only the _version fence can
-    // surface the change
+    // different SnapshotStore root key: its memo is independent, exactly
+    // a publish from another JVM — the reader's in-process invalidation
+    // never fires, only the _version fence can surface the change
     val base = java.nio.file.Files.createTempDirectory("graft_snap_fence")
     val real = base.resolve("t")
     java.nio.file.Files.createDirectory(real)
@@ -294,7 +293,7 @@ class AtomicServeSpec extends AnyFunSuite with SparkSuite {
       .select("value").distinct().as[Double].collect().toSeq === Seq(1.0))
     assert(resolutions === r0, "second read must be memoized")
     // the foreign publish rewrites the shared _version file (new mtime);
-    // this process's version counter for `root` never moves
+    // nothing in this process invalidates `root`
     SnapshotStore.publish(gen(3, 9.0), link.toString)
     assert(SnapshotStore.read(spark, root, useCache = true).get
       .select("value").distinct().as[Double].collect().toSeq === Seq(9.0),
